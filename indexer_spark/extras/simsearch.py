@@ -78,11 +78,18 @@ def _rows_matrix(vs, dim: int) -> np.ndarray:
 def _list_col_matrix(col, n_rows: int, dim: int):
     """(n_rows, dim) float64 matrix straight from an Arrow list column's
     flattened value buffer (zero per-row work). Returns None when the
-    column has nulls or ragged lengths (flatten length would not be
-    n_rows * dim) — callers fall back to the row-wise path."""
-    flat = col.flatten()
-    if len(flat) != n_rows * dim or col.null_count:
+    column has nulls or any row whose length (from the offsets buffer)
+    is not ``dim`` — callers fall back to the row-wise path. Checking
+    only the flattened total would let ragged rows whose lengths sum to
+    n_rows * dim reshape silently into wrong rows."""
+    if col.null_count or len(col) != n_rows:
         return None
+    offsets = getattr(col, "offsets", None)  # fixed-size lists have none
+    lens = (np.diff(offsets.to_numpy()) if offsets is not None
+            else np.full(len(col), col.type.list_size))
+    if not (lens == dim).all():
+        return None
+    flat = col.flatten()
     m = flat.to_numpy(zero_copy_only=False)
     return m.astype(np.float64, copy=False).reshape(n_rows, dim)
 

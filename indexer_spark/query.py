@@ -30,6 +30,7 @@ from __future__ import annotations
 import math
 import os
 from collections import Counter
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -38,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .build import (
     _postings_path,
     _term_stats_path,
+    _tok_path,
     read_manifest,
     read_stats,
 )
@@ -164,6 +166,15 @@ class _DecodedLRU:
                     continue
                 old = self._d.pop(k)
                 self._bytes -= sum(a.nbytes for a in old)
+
+    def discard(self, key) -> None:
+        """Drop ``key`` (and any pin on it), keeping the byte count exact;
+        an absent key is a no-op."""
+        with self._lock:
+            old = self._d.pop(key, None)
+            if old is not None:
+                self._bytes -= sum(a.nbytes for a in old)
+            self._pins.pop(key, None)
 
     def pin(self, key) -> bool:
         """Take one pin share on a RESIDENT entry (False if absent —
@@ -1187,6 +1198,8 @@ def _narrow_wire(a: np.ndarray) -> np.ndarray:
     pickled wire bytes ~3-6x; _warm_install_entries widens back to the
     int64 the decoders produce, so installed entries are value- AND
     dtype-identical to a lazy decode_block_slice."""
+    if a.size and int(a.min()) < 0:
+        return a  # unsigned narrowing would wrap a negative value
     m = int(a.max()) if a.size else 0
     for dt in (np.uint8, np.uint16, np.uint32):
         if m <= np.iinfo(dt).max:
@@ -1228,6 +1241,238 @@ def _warm_install_entries(payload, block_size: int,
     return warmed
 
 
+#: byte budget of _CHUNK_CACHE. Every column chunk the serving paths of
+#: a 25,000-turn index touch (term_stats, postings, tok) fits in ~5 MB.
+CHUNK_CACHE_BYTES = 64 << 20
+
+# decoded parquet column chunks behind the driver point reads, keyed
+# (path, mtime_ns, size, row_group, column). A separate instance, so
+# _DECODED_CACHE keeps holding decoded postings only.
+_CHUNK_CACHE = _DecodedLRU(CHUNK_CACHE_BYTES)
+
+
+class _File(NamedTuple):
+    """One parquet file of a _FileIndex."""
+    path: str
+    shard: int | None        # hive partition value (None: unpartitioned)
+    ident: tuple[int, int]   # (mtime_ns, size) when the footer was read
+    md: object               # pyarrow.parquet.FileMetaData
+    names: frozenset         # stored column names
+    ranges: list             # per row group: (min, max) of the key,
+    #                          None (no stats: always read) or False (empty)
+
+
+def _stale(path: str) -> FileNotFoundError:
+    return FileNotFoundError(
+        f"{path} changed or vanished since the reader's snapshot")
+
+
+class _FileIndex:
+    """Footer index of one parquet table, read once per reader snapshot:
+    the files in ``pyarrow.dataset`` discovery order, each with its
+    identity (mtime_ns, size), footer, hive ``shard`` value and
+    per-row-group min/max of the ``key`` column. A point read prunes
+    files by shard and row groups by key range, takes the decoded column
+    chunks from _CHUNK_CACHE (reading misses single-threaded), and keeps
+    the rows a ``pc.is_in`` (or range) mask selects — the same rows in
+    the same order as ``dataset.to_table(filter=...)``, without paying
+    for a dataset scan plan per call."""
+
+    def __init__(self, root: str, key: str, partitioned: bool):
+        import pyarrow.dataset as pads
+        import pyarrow.parquet as pq
+
+        ds = pads.dataset(root, format="parquet",
+                          partitioning="hive" if partitioned else None)
+        self.schema = ds.schema
+        self.key = key
+        self.files: list[_File] = []
+        for frag in ds.get_fragments():
+            shard = pads.get_partition_keys(
+                frag.partition_expression).get("shard")
+            # identity and footer from ONE open handle, so they describe
+            # the same file even if the path is replaced meanwhile
+            with open(frag.path, "rb") as fh:
+                st = os.fstat(fh.fileno())
+                md = pq.read_metadata(fh)
+            names = md.schema.names
+            ci = names.index(key) if key in names else None
+            ranges = []
+            for rg in range(md.num_row_groups):
+                rgm = md.row_group(rg)
+                s = rgm.column(ci).statistics if ci is not None else None
+                if rgm.num_rows == 0:
+                    ranges.append(False)  # nothing to read
+                elif s is not None and s.has_min_max:
+                    ranges.append((s.min, s.max))
+                else:
+                    ranges.append(None)  # no stats: always read
+            self.files.append(_File(frag.path, shard,
+                                    (st.st_mtime_ns, st.st_size), md,
+                                    frozenset(names), ranges))
+
+    def read(self, columns: list[str], keys=None, shard_keys=None,
+             key_range=None):
+        """Rows of ``columns`` whose key is in ``keys`` (sorted), or in
+        ``shard_keys[shard]`` (sorted, per hive shard; other shards are
+        skipped), or in the half-open ``key_range`` (lo, hi); all rows
+        when no filter is given. Raises FileNotFoundError when a file the
+        read touches is gone or changed — also on a full cache hit."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        filtered = keys is not None or shard_keys is not None \
+            or key_range is not None
+        plan = []
+        for f in self.files:
+            vals = keys
+            if shard_keys is not None:
+                vals = shard_keys.get(f.shard)
+                if not vals:
+                    continue
+            if filtered and self.key not in f.names:
+                continue  # key column absent: no row can match
+            rgs = []
+            for rg, r in enumerate(f.ranges):
+                if r is False:
+                    continue
+                if r is not None:
+                    lo, hi = r
+                    if vals is not None:
+                        i = bisect.bisect_left(vals, lo)
+                        if i == len(vals) or vals[i] > hi:
+                            continue
+                    elif key_range is not None and (
+                            hi < key_range[0] or lo >= key_range[1]):
+                        continue
+                rgs.append(rg)
+            if rgs:
+                plan.append((f, vals, rgs))
+        for f, _, _ in plan:
+            try:
+                st = os.stat(f.path)
+            except OSError:
+                raise _stale(f.path) from None
+            if (st.st_mtime_ns, st.st_size) != f.ident:
+                raise _stale(f.path)
+        schema = pa.schema([self.schema.field(c) for c in columns])
+        parts = []
+        for f, vals, rgs in plan:
+            vset = None
+            for rg in rgs:
+                n, mask = f.md.row_group(rg).num_rows, None
+                if filtered:
+                    kc = _chunks(f, rg, [self.key])[0]
+                    if key_range is not None:
+                        mask = pc.and_(
+                            pc.greater_equal(kc, key_range[0]),
+                            pc.less(kc, key_range[1]))
+                    else:
+                        if vset is None:
+                            vset = pa.array(vals, kc.type)
+                        mask = pc.is_in(kc, value_set=vset)
+                    n = mask.true_count
+                    if not n:
+                        continue
+                stored = [c for c in columns if c in f.names]
+                got = pa.Table.from_arrays(_chunks(f, rg, stored),
+                                           names=stored)
+                if mask is not None:
+                    got = got.filter(mask)  # one call for all columns
+                cols = []
+                for field in schema:
+                    if field.name in f.names:
+                        a = got.column(field.name)
+                        if a.type != field.type:
+                            a = a.cast(field.type)
+                    elif field.name == "shard" and f.shard is not None:
+                        # hive partition value, without a validity
+                        # bitmap (as the dataset scan returns it)
+                        a = pa.array(np.full(
+                            n, f.shard, field.type.to_pandas_dtype()),
+                            field.type)
+                    else:  # a column this older file lacks
+                        a = pa.nulls(n, field.type)
+                    cols.append(a)
+                parts.append(pa.Table.from_arrays(cols, schema=schema))
+        if not parts:
+            return schema.empty_table()
+        return pa.concat_tables(parts)
+
+
+def _chunks(f: _File, rg: int, columns: list[str]) -> list:
+    """Decoded column chunks of row group ``rg`` of ``f``: hits from
+    _CHUNK_CACHE, misses read single-threaded (and cached) through a
+    handle whose identity is re-checked against the file index."""
+    keys = [(f.path, *f.ident, rg, c) for c in columns]
+    out = [_CHUNK_CACHE.get(k) for k in keys]
+    miss = [c for c, hit in zip(columns, out) if hit is None]
+    if miss:
+        import pyarrow.parquet as pq
+
+        try:
+            fh = open(f.path, "rb")
+        except OSError:
+            raise _stale(f.path) from None
+        with fh:
+            st = os.fstat(fh.fileno())
+            if (st.st_mtime_ns, st.st_size) != f.ident:
+                raise _stale(f.path)
+            tbl = pq.ParquetFile(fh, metadata=f.md).read_row_group(
+                rg, columns=miss, use_threads=False)
+        for c in miss:
+            col = tbl.column(c)
+            arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+            _CHUNK_CACHE.put((f.path, *f.ident, rg, c), (arr,))
+            out[columns.index(c)] = (arr,)
+    return [hit[0] for hit in out]
+
+
+class _PointReads:
+    """The driver's snapshot-scoped point-read layer: one lazily built
+    _FileIndex per table (term_stats by term, postings by term with hive
+    shard pruning, tok by local_idx within a shard). An IndexReader
+    drops it on every snapshot refresh."""
+
+    _TABLES = {
+        "term_stats": (_term_stats_path, "term", False),
+        "postings": (_postings_path, "term", True),
+        "tok": (_tok_path, "local_idx", True),
+    }
+
+    def __init__(self, index_dir: str):
+        self.index_dir = index_dir
+        self._idx: dict[str, _FileIndex] = {}
+        self._lock = _threading.Lock()
+
+    def __getitem__(self, table: str) -> _FileIndex:
+        fi = self._idx.get(table)
+        if fi is None:
+            with self._lock:
+                fi = self._idx.get(table)
+                if fi is None:
+                    path_of, key, partitioned = self._TABLES[table]
+                    fi = self._idx[table] = _FileIndex(
+                        path_of(self.index_dir), key, partitioned)
+        return fi
+
+
+# term_stats columns the dictionary lookups read (when present)
+_TS_COLS = ("term", "df", "nbytes", "poss_nbytes")
+
+
+def _rows_by_term(pdf: pd.DataFrame) -> dict[str, set]:
+    """term -> {(shard, df, payload_len)} of a postings read, for
+    IndexReader._publish_cached."""
+    out: dict[str, set] = {}
+    for t, sh, df, docs in zip(pdf["term"], pdf["shard"], pdf["df"],
+                               pdf["docs"]):
+        out.setdefault(t, set()).add((int(sh), int(df), len(docs)))
+    return out
+
+
 class IndexReader:
     """Query handle over an index directory (MainIndex analog,
     tree.rs:251-265 — but stateless: all state is in tables + stats)."""
@@ -1260,19 +1505,20 @@ class IndexReader:
         # mutations of ONE index; the dir identity separates different
         # indexes living in the same session (epochs alone collide there)
         self._epoch = (index_dir, int(self.stats.get("epoch", 0)))
-        # lazily-built pyarrow dataset handles: constructing a dataset
-        # lists the directory — per-query at 10^5 shard dirs that listing
-        # would dominate the fast path, so build each handle once
-        self._ts_ds = None
-        self._post_ds = None
+        # driver point reads (term_stats, postings, tok) go through one
+        # snapshot-scoped footer index + decoded chunk cache: each table's
+        # directory is listed and its footers read once per snapshot,
+        # not per query (_refresh_snapshot drops it)
+        self._reads = _PointReads(index_dir)
         # term -> {(shard, df, payload_len)} rows known to be decoded in
         # _DECODED_CACHE: lets repeat/warmed queries score WITHOUT the
         # per-query parquet payload read (see _fast_from_cache). Bounded
         # (insertion-order eviction): the underlying LRU evicts by bytes,
         # so an unbounded bookkeeping dict on a long-lived server would
         # accumulate tuples for every distinct query term ever seen.
-        self._cached_terms: dict[str, set[tuple[int, int, int]]] = {}
+        self._cached_terms: dict[str, frozenset[tuple[int, int, int]]] = {}
         self._cached_terms_max = 65_536
+        self._cached_terms_lock = _threading.Lock()
         # warm_hot_terms raises the process-global decoded-cache cap;
         # the raise is refcounted at module level (see _cache_cap_acquire)
         # so the LAST closing reader restores the genuine pre-raise cap
@@ -1390,6 +1636,7 @@ class IndexReader:
         if stale:
             _DECODED_CACHE.unpin(stale)
             self._pinned_keys -= stale
+        self._reads = _PointReads(self.index_dir)
         self._df_cache.clear()
         self._nbytes_cache.clear()
         self._poss_nbytes_cache.clear()
@@ -1411,72 +1658,58 @@ class IndexReader:
             if ab > 0 and avgdl_now > ab
         }
 
-    def _ts_table(self, **kw):
-        """term_stats read through the cached dataset handle, with a
-        one-shot handle rebuild if the index was mutated underneath a
-        long-lived reader (dynamic overwrite replaces part files, so a
-        pinned file listing can 404). The rebuild re-reads stats.json and
-        refreshes the epoch/derived caches (_refresh_snapshot) so the
-        reader serves the NEW snapshot consistently instead of scoring
-        new files with old parameters."""
-        import pyarrow.dataset as pads
-
+    def _with_reads(self, fn):
+        """Run ``fn(point_reads)`` with a one-shot snapshot refresh: a
+        mutation underneath a long-lived reader (dynamic overwrite
+        replaces part files) makes a read raise FileNotFoundError; the
+        refresh re-reads stats.json, the epoch and every derived cache
+        and drops the point-read layer, so the retry serves the NEW
+        snapshot consistently instead of scoring new files with old
+        parameters."""
         for attempt in (0, 1):
-            if self._ts_ds is None:
-                self._ts_ds = pads.dataset(
-                    _term_stats_path(self.index_dir), format="parquet"
-                )
             try:
-                return self._ts_ds.to_table(**kw)
-            except (FileNotFoundError, OSError):
-                self._ts_ds = None
+                return fn(self._reads)
+            except OSError:
                 if attempt:
                     raise
                 self._refresh_snapshot()
 
-    def _post_table(self, **kw):
-        """Postings read through the cached dataset handle; same one-shot
-        rebuild-on-mutation + snapshot refresh behavior as _ts_table."""
-        import pyarrow.dataset as pads
-
-        for attempt in (0, 1):
-            if self._post_ds is None:
-                self._post_ds = pads.dataset(
-                    _postings_path(self.index_dir), format="parquet",
-                    partitioning="hive",
-                )
-            try:
-                return self._post_ds.to_table(**kw)
-            except (FileNotFoundError, OSError):
-                self._post_ds = None
-                if attempt:
-                    raise
-                self._refresh_snapshot()
+    def _post_table(self, columns: list[str], terms):
+        """Postings rows of ``terms`` (every shard, dataset row order)
+        through the point-read layer."""
+        keys = sorted(set(terms))
+        return self._with_reads(
+            lambda r: r["postings"].read(columns, keys=keys))
 
     def global_dfs(self, terms: list[str]) -> dict[str, int]:
         """Per-term global df (pass 1 of the reference search,
         tree.rs:395-416). Served driver-side straight from the
-        range-partitioned, term-sorted term_stats parquet via pyarrow —
-        predicate pushdown prunes row groups, so this is a metadata-sized
-        read, not a Spark job (a query-latency win at any scale; the
-        10^12-doc deployment would front this with the same dictionary
-        files behind a lookup service)."""
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            import pyarrow.dataset as pads
+        range-partitioned, term-sorted term_stats parquet through the
+        point-read layer — row-group term ranges prune the read to a
+        metadata-sized one, not a Spark job (a query-latency win at any
+        scale; the 10^12-doc deployment would front this with the same
+        dictionary files behind a lookup service)."""
 
-            if self._ts_ds is None:
-                self._ts_ds = pads.dataset(
-                    _term_stats_path(self.index_dir), format="parquet"
-                )
-            ds = self._ts_ds
-            if "term" not in ds.schema.names:  # zero-postings index
+        def lookup(reads):
+            out, missing = {}, []
+            for t in terms:
+                v = self._df_cache.get(t)
+                if v is None:
+                    missing.append(t)
+                else:
+                    out[t] = v
+            if not missing:
+                return out
+            ts = reads["term_stats"]
+            names = ts.schema.names
+            if "term" not in names:  # zero-postings index
                 for t in missing:
-                    self._df_cache[t] = 0
-                return {t: self._df_cache[t] for t in terms}
-            self._has_nbytes = "nbytes" in ds.schema.names
-            self._has_poss_nbytes = "poss_nbytes" in ds.schema.names
-            tbl = self._ts_table(filter=pads.field("term").isin(missing))
+                    out[t] = self._df_cache[t] = 0
+                return out
+            self._has_nbytes = "nbytes" in names
+            self._has_poss_nbytes = "poss_nbytes" in names
+            tbl = ts.read([c for c in _TS_COLS if c in names],
+                          keys=sorted(set(missing)))
             tlist = tbl.column("term").to_pylist()
             found = dict(
                 zip(tlist, (int(x) for x in tbl.column("df").to_pylist()))
@@ -1497,15 +1730,17 @@ class IndexReader:
                 for t in missing:
                     self._poss_nbytes_cache[t] = pnb.get(t, 0)
             for t in missing:
-                self._df_cache[t] = found.get(t, 0)
-        return {t: self._df_cache[t] for t in terms}
+                out[t] = self._df_cache[t] = found.get(t, 0)
+            return out
+
+        return self._with_reads(lookup)
 
     def expand_prefix(self, prefix: str,
                       cap: int | None = None) -> list[str]:
         """Dictionary terms starting with ``prefix``, for the boolean
-        language's ``word*`` atoms. A range predicate [prefix, prefix+
-        U+10FFFF) on the term-sorted term_stats parquet — row-group
-        min/max stats prune this to a metadata-sized read, same as
+        language's ``word*`` atoms. A range read [prefix, prefix+
+        U+10FFFF) of the term-sorted term_stats parquet — row-group
+        min/max ranges prune this to a metadata-sized read, same as
         global_dfs; never a Spark job, never a postings read. Capped at
         ``cap`` (default boolquery.MAX_PREFIX_EXPANSIONS) highest-df
         terms via the shared cap_expansions rule. The scan's (df,
@@ -1517,22 +1752,23 @@ class IndexReader:
         hit = self._prefix_cache.get(key)
         if hit is not None:
             return hit
-        import pyarrow.dataset as pads
 
-        if self._ts_ds is None:
-            self._ts_ds = pads.dataset(
-                _term_stats_path(self.index_dir), format="parquet"
+        def scan(reads):
+            ts = reads["term_stats"]
+            names = ts.schema.names
+            if "term" not in names:  # zero-postings index
+                return names, None
+            return names, ts.read(
+                [c for c in _TS_COLS if c in names],
+                key_range=(prefix, prefix + "\U0010ffff"),
             )
-        ds = self._ts_ds
-        if "term" not in ds.schema.names:  # zero-postings index
+
+        names, tbl = self._with_reads(scan)
+        if tbl is None:
             self._prefix_cache[key] = []
             return []
-        self._has_nbytes = "nbytes" in ds.schema.names
-        self._has_poss_nbytes = "poss_nbytes" in ds.schema.names
-        tbl = self._ts_table(
-            filter=(pads.field("term") >= prefix)
-            & (pads.field("term") < prefix + "\U0010ffff")
-        )
+        self._has_nbytes = "nbytes" in names
+        self._has_poss_nbytes = "poss_nbytes" in names
         terms = tbl.column("term").to_pylist()
         dfs = [int(x) for x in tbl.column("df").to_pylist()]
         nbs = (
@@ -1557,17 +1793,23 @@ class IndexReader:
         self._prefix_cache[key] = out
         return out
 
-    def _record_cached(self, term: str, row: tuple[int, int, int]) -> None:
-        """Record a decoded (term, shard) row for _fast_from_cache, with
-        insertion-order eviction past the bookkeeping cap (the decoded
-        LRU itself stays byte-bounded regardless — an evicted bookkeeping
-        entry merely sends that term back through the reading path)."""
-        s = self._cached_terms.get(term)
-        if s is None:
-            while len(self._cached_terms) >= self._cached_terms_max:
-                del self._cached_terms[next(iter(self._cached_terms))]
-            s = self._cached_terms[term] = set()
-        s.add(row)
+    def _publish_cached(self, rows_by_term: dict) -> None:
+        """Publish each term's COMPLETE set of decoded (shard, df,
+        payload_len) rows for _fast_from_cache in ONE assignment, at the
+        end of a reading pass: a concurrent request that sees a term in
+        _cached_terms treats its row set as every shard of the term, so
+        a set filled shard by shard would let it score from a subset.
+        Insertion-order eviction past the bookkeeping cap (the decoded
+        LRU itself stays byte-bounded regardless — an evicted
+        bookkeeping entry merely sends that term back through the
+        reading path)."""
+        cached = self._cached_terms
+        with self._cached_terms_lock:  # check-then-evict across threads
+            for term, rows in rows_by_term.items():
+                if term not in cached:
+                    while cached and len(cached) >= self._cached_terms_max:
+                        del cached[next(iter(cached))]
+                cached[term] = frozenset(rows)
 
     def _top_terms(self, n_terms: int) -> list[tuple[str, int, int]]:
         """Hottest terms by compressed payload size, ranked inside
@@ -1575,17 +1817,17 @@ class IndexReader:
         on a large dictionary that materialization is avoidable driver
         memory/CPU). Returns [(term, df, nbytes)] descending."""
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
 
-        if self._ts_ds is None:
-            self._ts_ds = pads.dataset(
-                _term_stats_path(self.index_dir), format="parquet"
-            )
-        ds = self._ts_ds
-        if "term" not in ds.schema.names or "nbytes" not in ds.schema.names:
+        def scan(reads):
+            ts = reads["term_stats"]
+            if not {"term", "nbytes"} <= set(ts.schema.names):
+                return None
+            return ts.read(["term", "df", "nbytes"])
+
+        tbl = self._with_reads(scan)
+        if tbl is None:
             return []
         self._has_nbytes = True
-        tbl = self._ts_table(columns=["term", "df", "nbytes"])
         top = tbl.take(
             pc.select_k_unstable(
                 tbl, k=min(n_terms, tbl.num_rows),
@@ -1646,15 +1888,11 @@ class IndexReader:
         rows = self._top_terms(n_terms)
         if not rows:
             return 0
-        import pyarrow.dataset as pads
-
         epoch = self._epoch
         block_size = int(self.stats["block_size"])
         terms = [t for t, _, _ in rows]
         tbl = self._post_table(
-            columns=["shard", "term", "df", "docs", "tfs", "dls"],
-            filter=pads.field("term").isin(terms),
-        )
+            ["shard", "term", "df", "docs", "tfs", "dls"], terms)
         by_term: dict[str, list] = {}
         for sh, t, df, docs, tfs, dls in zip(
             tbl.column("shard").to_pylist(), tbl.column("term").to_pylist(),
@@ -1751,8 +1989,6 @@ class IndexReader:
         processes have their own module instance and keep the default
         cap. At 10^12 docs a serving node warms from the same term_stats
         ranking."""
-        import pyarrow.dataset as pads
-
         rows = self._top_terms(n_terms)
         if not rows:
             return 0
@@ -1793,11 +2029,6 @@ class IndexReader:
             with _CACHE_CAP_LOCK:
                 if want_cap > _DECODED_CACHE.max_bytes:
                     _DECODED_CACHE.max_bytes = want_cap
-        if self._post_ds is None:
-            self._post_ds = pads.dataset(
-                _postings_path(self.index_dir), format="parquet",
-                partitioning="hive",
-            )
         st = self.stats
         warmed, spent = 0, 0
         proj = 40 if raw else 16  # bytes/posting across the stored slots
@@ -1809,8 +2040,8 @@ class IndexReader:
         # decode; a budget break merely leaves some prefetched rows
         # unused (the adaptive default budget is sized to hold them all).
         ptbl_all = self._post_table(
-            columns=["shard", "term", "df", "docs", "tfs", "dls"],
-            filter=pads.field("term").isin([t for t, _, _ in rows]),
+            ["shard", "term", "df", "docs", "tfs", "dls"],
+            [t for t, _, _ in rows],
         )
         rows_by_term: dict[str, list] = {}
         for sh, t_r, df_r, docs, tfs, dls in zip(
@@ -1834,6 +2065,7 @@ class IndexReader:
                 break
             self._df_cache[t] = int(df)
             self._nbytes_cache[t] = int(nb or 0)
+            decoded = set()
             for sh, df_r, docs, tfs, dls in rows_by_term.get(t, ()):
                 base = (self._epoch, int(sh), t, int(df_r), len(docs))
                 need_norm = _DECODED_CACHE.get(base + (-2,)) is None
@@ -1857,7 +2089,9 @@ class IndexReader:
                     if (slot_key not in self._pinned_keys
                             and _DECODED_CACHE.pin(slot_key)):
                         self._pinned_keys.add(slot_key)
-                self._record_cached(t, (int(sh), int(df_r), len(docs)))
+                decoded.add((int(sh), int(df_r), len(docs)))
+            if decoded:
+                self._publish_cached({t: decoded})
             warmed += 1
         return warmed
 
@@ -1876,13 +2110,15 @@ class IndexReader:
         raw tf, not the BM25 normalization)."""
         if self.fast_path_bytes <= 0:
             return None
-        if any(t not in self._cached_terms for t in present):
+        # one read per term: another thread may evict between reads
+        known = {t: self._cached_terms.get(t) for t in present}
+        if any(v is None for v in known.values()):
             return None
         slot = -2 if kind == "bm25" else -1
         by_shard: dict[int, tuple[list, list]] = {}
         for t in sorted(present):  # sorted-term order pins float order
             w = weights[t]
-            for sh, df, ln in sorted(self._cached_terms[t]):
+            for sh, df, ln in sorted(known[t]):
                 hit = _DECODED_CACHE.get((self._epoch, sh, t, df, ln, slot))
                 if hit is None:
                     return None  # evicted: take the read path
@@ -1947,12 +2183,8 @@ class IndexReader:
         if sum(self._nbytes_cache.get(t, 0) for t in uncovered) \
                 > self.fast_path_bytes:
             return None
-        import pyarrow.dataset as pads
-
         tbl = self._post_table(
-            columns=["shard", "term", "df", "docs", "tfs", "dls"],
-            filter=pads.field("term").isin(uncovered),
-        )
+            ["shard", "term", "df", "docs", "tfs", "dls"], uncovered)
         pdf = tbl.to_pandas()
         by_term: dict[str, list] = {}
         for row in pdf.itertuples():
@@ -1960,6 +2192,7 @@ class IndexReader:
         st = self.stats
         k1, b_, avgdl = st["k1"], st["b"], st["avgdl"]
         by_shard: dict[int, tuple[list, list]] = {}
+        decoded: dict[str, set] = {}
         for t in sorted(present):  # sorted-term order pins float order
             w = weights[t]
             if t in covered:
@@ -1985,8 +2218,9 @@ class IndexReader:
                 idc, scc = by_shard.setdefault(int(row.shard), ([], []))
                 idc.append(hit[0])
                 scc.append((w, hit[1]))
-                self._record_cached(
-                    t, (int(row.shard), int(row.df), len(row.docs)))
+                decoded.setdefault(t, set()).add(
+                    (int(row.shard), int(row.df), len(row.docs)))
+        self._publish_cached(decoded)
         uids, sums = _aggregate_scores_sharded(by_shard, k, require_all)
         uids, sums = _topk_merge(uids, sums, k)
         self.last_path = "fast"
@@ -2006,18 +2240,9 @@ class IndexReader:
         total = sum(self._nbytes_cache.get(t, 0) for t in present)
         if total > self.fast_path_bytes:
             return None
-        import pyarrow.dataset as pads
-
-        if self._post_ds is None:
-            self._post_ds = pads.dataset(
-                _postings_path(self.index_dir), format="parquet",
-                partitioning="hive",
-            )
         # shard included: the decoded-postings cache keys on it
         tbl = self._post_table(
-            columns=["shard", "term", "df", "docs", "tfs", "dls"],
-            filter=pads.field("term").isin(present),
-        )
+            ["shard", "term", "df", "docs", "tfs", "dls"], present)
         pdf = tbl.to_pandas()
         out = scorer(pdf)
         # record EVERY matched row so repeat queries can skip the parquet
@@ -2027,10 +2252,7 @@ class IndexReader:
         # then silently score from a subset of its shards. With the full
         # list, any evicted entry is a get() miss -> clean fallback to
         # the reading path.
-        for row in pdf.itertuples():
-            self._record_cached(
-                row.term, (int(row.shard), int(row.df), len(row.docs))
-            )
+        self._publish_cached(_rows_by_term(pdf))
         self.last_path = "fast"
         return [
             (int(d), float(s))
@@ -2083,10 +2305,11 @@ class IndexReader:
         if total > self.fast_path_bytes:
             return None
         # cache-fed replay: all terms' rows known from a previous read
-        if all(t in self._cached_terms for t in present):
+        known = {t: self._cached_terms.get(t) for t in present}
+        if all(v is not None for v in known.values()):
             rows = []
             for t in present:
-                for sh, df_r, plen in sorted(self._cached_terms[t]):
+                for sh, df_r, plen in sorted(known[t]):
                     rows.append((sh, t, df_r, plen))
             spdf = pd.DataFrame(
                 rows, columns=["shard", "term", "df", "plen"]
@@ -2099,25 +2322,11 @@ class IndexReader:
                 return self._run_shard_groups(spdf, scorer, k, label)
             except _FastCacheMiss:
                 pass  # evicted somewhere: take the reading path
-        import pyarrow.dataset as pads
-
-        if self._post_ds is None:
-            self._post_ds = pads.dataset(
-                _postings_path(self.index_dir), format="parquet",
-                partitioning="hive",
-            )
-        tbl = self._post_table(
-            columns=cols,
-            filter=pads.field("term").isin(present),
-        )
-        pdf = tbl.to_pandas()
+        pdf = self._post_table(cols, present).to_pandas()
         # record rows so repeats can replay from the cache (same
         # bookkeeping _fast_scored uses; unconditional for the same
         # partial-entry reason)
-        for row in pdf.itertuples():
-            self._record_cached(
-                row.term, (int(row.shard), int(row.df), len(row.docs))
-            )
+        self._publish_cached(_rows_by_term(pdf))
         return self._run_shard_groups(pdf, scorer, k, label)
 
     #: thread the per-shard fast-path scorer only up to this many shard
@@ -2935,28 +3144,28 @@ class IndexReader:
         self, hits: list[tuple[int, float]]
     ) -> list[dict]:
         """Driver-side resolve for serving paths: doc_ids -> (shard,
-        local_idx) via the stats map, then a pyarrow point-read of the
-        matched tok shard dirs (shard partition pruning + local_idx
-        row-group stats — k rows, metadata-sized IO, no Spark job).
-        Same output rows as resolve(), list-of-dict instead of a
-        DataFrame."""
-        from .build import _tok_path, locate_doc_ids
+        local_idx) via the stats map, then a point read of the matched
+        tok rows (shard pruning + local_idx row-group ranges — k rows,
+        metadata-sized IO, no Spark job). Same output rows as resolve(),
+        list-of-dict instead of a DataFrame."""
+        from .build import locate_doc_ids
 
         if not hits:
             return []
-        import pyarrow.dataset as pads
 
-        loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
-        shards = sorted({s for s, _ in loc.values()})
-        locals_ = sorted({li for _, li in loc.values()})
-        ds = pads.dataset(
-            _tok_path(self.index_dir), format="parquet", partitioning="hive"
-        )
-        tbl = ds.to_table(
-            columns=["shard", "local_idx", "conv_id", "turn_idx"],
-            filter=pads.field("shard").isin(shards)
-            & pads.field("local_idx").isin(locals_),
-        )
+        def lookup(reads):
+            # located inside the retry: a refresh re-reads the stats map
+            loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
+            want: dict[int, set] = {}
+            for s, li in loc.values():
+                want.setdefault(s, set()).add(li)
+            tbl = reads["tok"].read(
+                ["shard", "local_idx", "conv_id", "turn_idx"],
+                shard_keys={s: sorted(v) for s, v in want.items()},
+            )
+            return loc, tbl
+
+        loc, tbl = self._with_reads(lookup)
         by_key = {
             (int(s), int(li)): (c, int(t))
             for s, li, c, t in zip(

@@ -539,6 +539,10 @@ def test_warm_wire_narrowing_roundtrip():
         assert w.dtype == want_dt, (hi, w.dtype)
         assert np.array_equal(w.astype(np.int64), a)
     assert _narrow_wire(np.array([], dtype=np.int64)).dtype == np.uint8
+    # a negative element passes through unchanged instead of wrapping
+    neg = np.array([3, -1, 200], dtype=np.int64)
+    w = _narrow_wire(neg)
+    assert w.dtype == np.int64 and np.array_equal(w, neg)
 
     d = np.arange(0, 300, dtype=np.int64) * 7  # spans two 128-blocks
     tf = (d % 250) + 1
@@ -556,9 +560,8 @@ def test_warm_wire_narrowing_roundtrip():
                 assert g.dtype == np.int64
                 assert np.array_equal(g, want)
     finally:
-        with _DECODED_CACHE._lock:
-            for bi in range(3):
-                _DECODED_CACHE._d.pop(key + (bi,), None)
+        for bi in range(3):
+            _DECODED_CACHE.discard(key + (bi,))
 
 
 def test_parse_bytes():

@@ -200,6 +200,10 @@ def test_vector_matrix_helpers_match_rowwise():
     assert _list_col_matrix(null_col, 2, 2) is None
     ragged = pa.array([[1.0, 2.0], [3.0]], type=pa.list_(pa.float64()))
     assert _list_col_matrix(ragged, 2, 2) is None
+    # ragged rows whose lengths sum to n_rows * dim are refused too
+    same_total = pa.array([[1, 2, 3], [4, 5, 6, 7, 8]],
+                          type=pa.list_(pa.float64()))
+    assert _list_col_matrix(same_total, 2, 4) is None
     # ragged pandas rows raise — even when lengths sum to n*dim, which a
     # bare concatenate+reshape would silently mis-shape
     import pytest
