@@ -44,6 +44,7 @@ from .build import (
     read_stats,
 )
 from .compress import (
+    BLOCK_SIZE,
     decode_block_slice,
     decode_positions,
     decode_positions_select,
@@ -428,14 +429,15 @@ def _make_exhaustive_scorer(
             from indexer_spark.query import _DECODED_CACHE as cache
         pdf = pdf.sort_values("term", kind="stable")
         has_shard = "shard" in pdf.columns
-        id_chunks, sc_chunks = [], []
+        # pass 1: cache lookups; the rows that miss batch-decode
+        looked, misses = [], []
         for row in pdf.itertuples():
             shard_id = int(row.shard) if has_shard else -1
             base_key = (
                 (epoch, shard_id, row.term, int(row.df), len(row.docs))
                 if cache is not None else None
             )
-            w = weights[row.term]
+            hit = cached = None
             if kind == "bm25" and base_key is not None:
                 # the tf-normalization part is QUERY-INDEPENDENT (idf is
                 # the only per-query factor), so cache (doc_ids, normpart)
@@ -443,16 +445,24 @@ def _make_exhaustive_scorer(
                 # pays only the weighted accumulate, not decode or the
                 # BM25 arithmetic. avgdl/k1/b changes bump the epoch.
                 hit = cache.get(base_key + (-2,))
-                if hit is not None:
-                    d, normpart = hit
-                    id_chunks.append(d)
-                    sc_chunks.append(w * normpart)
-                    continue
-            cached = cache.get(base_key + (-1,)) if base_key else None
+            if hit is None and base_key is not None:
+                cached = cache.get(base_key + (-1,))
+            miss = None
+            if hit is None and cached is None:
+                miss = len(misses)
+                misses.append((row.docs, row.tfs, row.dls, row.df))
+            looked.append((weights[row.term], base_key, hit, cached, miss))
+        decoded = _decode_rows(misses)
+        # pass 2: contributions in sorted-term order (pins float order)
+        id_chunks, sc_chunks = [], []
+        for w, base_key, hit, cached, miss in looked:
+            if hit is not None:
+                d, normpart = hit
+                id_chunks.append(d)
+                sc_chunks.append(w * normpart)
+                continue
             if cached is None:
-                cached = decode_postings(
-                    row.docs, row.tfs, row.dls, int(row.df)
-                )
+                cached = decoded[miss]
                 # bm25 repeats only ever read the compact -2 normpart
                 # entry below — storing the raw tuple too would spend
                 # ~60% of cache capacity on entries nothing reads
@@ -635,6 +645,66 @@ class _FastCacheMiss(Exception):
     the caller falls back to the (always-correct) reading path."""
 
 
+def _decode_rows(rows: list) -> list:
+    """Decode many postings rows, batching the small ones.
+
+    ``rows`` holds (docs, tfs, dls, df) payloads; returns one
+    (doc_ids, tfs, dls) tuple per row, in row order. A ``None`` docs
+    payload (a cache-fed pass whose entry was evicted) raises
+    _FastCacheMiss. A query touches ~12 rows of ~12 postings, where the
+    fixed numpy cost of a decode_postings call (~100 us), not the varint
+    work, was the cost: so rows of at most BLOCK_SIZE postings have each
+    varint stream joined, up to BLOCK_SIZE rows at a time, and decoded
+    in ONE call. Larger rows decode on their own, as before: joining
+    them only adds copies, and temporaries that outgrow the CPU cache
+    (measured 1.4-1.6x slower from ~4k postings per row). The cap on
+    rows per batch bounds a batch's temporaries at a few MB however
+    many terms a prefix query expands to.
+
+    A row's first doc gap is absolute, so the joined doc cumsum carries
+    every earlier row's last doc id — subtracting the running total at
+    the row's start restores the row's own ids exactly. Before the
+    joined decode, every row must end on a value boundary and hold
+    exactly df values, so a malformed row still fails loudly instead
+    of bleeding into its neighbour. Every returned array owns its
+    memory (the decoded LRU counts ``nbytes``, and a view would pin the
+    whole joined buffer)."""
+    if any(r[0] is None for r in rows):
+        raise _FastCacheMiss()
+    out: list = [None] * len(rows)
+    small = []
+    for i, (docs, tfs, dls, df) in enumerate(rows):
+        if int(df) > BLOCK_SIZE:
+            out[i] = decode_postings(docs, tfs, dls, int(df))
+        else:
+            small.append(i)
+    for c in range(0, len(small), BLOCK_SIZE):
+        batch = small[c:c + BLOCK_SIZE]
+        if len(batch) == 1:
+            docs, tfs, dls, df = rows[batch[0]]
+            out[batch[0]] = decode_postings(docs, tfs, dls, int(df))
+            continue
+        dfs = np.fromiter((int(rows[i][3]) for i in batch), dtype=np.int64,
+                          count=len(batch))
+        ends = np.cumsum(dfs)
+        streams = []
+        for j in range(3):
+            lens = np.fromiter((len(rows[i][j]) for i in batch),
+                               dtype=np.int64, count=len(batch))
+            buf = b"".join(rows[i][j] for i in batch)
+            last = (np.frombuffer(buf, dtype=np.uint8) & 0x80) == 0
+            tail = np.cumsum(lens)[lens > 0] - 1
+            if ((lens > 0) != (dfs > 0)).any() or not last[tail].all() or (
+                    np.cumsum(last)[tail] != ends[lens > 0]).any():
+                raise ValueError("postings row does not hold df varints")
+            streams.append(buf)
+        d, tf, dl = decode_postings(*streams, int(ends[-1]))
+        for i, s, e in zip(batch, (ends - dfs).tolist(), ends.tolist()):
+            base = d[s - 1] if s else 0
+            out[i] = (d[s:e] - base, tf[s:e].copy(), dl[s:e].copy())
+    return out
+
+
 def _decode_merged_terms(pdf: pd.DataFrame, epoch, positional: bool):
     """Decode every postings row of ``pdf`` (cache-aware, slot -1) and
     MERGE same-term rows across shards into one entry per term with
@@ -657,7 +727,7 @@ def _decode_merged_terms(pdf: pd.DataFrame, epoch, positional: bool):
     pdf = pdf.sort_values(
         ["term", "shard"] if has_shard else ["term"], kind="stable"
     )
-    per_term: dict[str, list] = {}
+    looked, misses = [], []
     for row in pdf.itertuples():
         shard_id = int(row.shard) if has_shard else -1
         plen = len(row.docs) if row.docs is not None else int(row.plen)
@@ -666,17 +736,23 @@ def _decode_merged_terms(pdf: pd.DataFrame, epoch, positional: bool):
             if cache is not None else None
         )
         cached = cache.get(base_key + (-1,)) if base_key else None
+        miss = None
         if cached is None:
-            if row.docs is None:  # cache-fed pass, entry evicted
-                raise _FastCacheMiss()
-            cached = decode_postings(
-                row.docs, row.tfs, row.dls, int(row.df)
-            )
+            # a None payload (cache-fed pass, entry evicted) raises
+            # _FastCacheMiss inside the batch decode
+            miss = len(misses)
+            misses.append((row.docs, row.tfs, row.dls, row.df))
+        poss_raw = getattr(row, "poss", None) if positional else None
+        looked.append((row.term, base_key, cached, poss_raw, miss))
+    decoded = _decode_rows(misses)
+    per_term: dict[str, list] = {}
+    for term, base_key, cached, poss_raw, miss in looked:
+        if cached is None:
+            cached = decoded[miss]
             if base_key is not None:
                 cache.put(base_key + (-1,), cached)
         docs, tfs, dls = cached
-        poss_raw = getattr(row, "poss", None) if positional else None
-        per_term.setdefault(row.term, []).append(
+        per_term.setdefault(term, []).append(
             (docs, tfs, dls, poss_raw, base_key)
         )
     entries: dict[str, dict] = {}
@@ -717,10 +793,11 @@ def _entry_positions(entry: dict, sel: np.ndarray, cache):
         praw, tfs, key, n = rows[0]
         return _positions_for(praw, tfs, sel, key, cache, n)
     bounds = entry["bounds"]
-    row_of = np.searchsorted(bounds, sel, side="right") - 1
+    # ascending sel: each row's docs are one contiguous run of it
+    cuts = np.searchsorted(sel, bounds)
     pos_parts = []
     for i, (praw, tfs, key, n) in enumerate(rows):
-        lsel = sel[row_of == i] - bounds[i]
+        lsel = sel[cuts[i]:cuts[i + 1]] - bounds[i]
         p, _st = _positions_for(praw, tfs, lsel, key, cache, n)
         pos_parts.append(p)
     pos = (
@@ -2191,6 +2268,19 @@ class IndexReader:
             by_term.setdefault(row.term, []).append(row)
         st = self.stats
         k1, b_, avgdl = st["k1"], st["b"], st["avgdl"]
+        looked: dict[str, list] = {}
+        misses = []
+        for t in uncovered:  # cache lookups; the misses batch-decode
+            for row in by_term.get(t, ()):
+                base = (self._epoch, int(row.shard), t, int(row.df),
+                        len(row.docs))
+                hit = _DECODED_CACHE.get(base + (slot,))
+                miss = None
+                if hit is None:
+                    miss = len(misses)
+                    misses.append((row.docs, row.tfs, row.dls, row.df))
+                looked.setdefault(t, []).append((row, base, hit, miss))
+        fresh = _decode_rows(misses)
         by_shard: dict[int, tuple[list, list]] = {}
         decoded: dict[str, set] = {}
         for t in sorted(present):  # sorted-term order pins float order
@@ -2201,13 +2291,9 @@ class IndexReader:
                     idc.append(hit[0])
                     scc.append((w, hit[1]))  # normpart (bm25) or tf
                 continue
-            for row in by_term.get(t, ()):
-                base = (self._epoch, int(row.shard), t, int(row.df),
-                        len(row.docs))
-                hit = _DECODED_CACHE.get(base + (slot,))
+            for row, base, hit, miss in looked.get(t, ()):
                 if hit is None:
-                    d, tfv, dl = decode_postings(
-                        row.docs, row.tfs, row.dls, int(row.df))
+                    d, tfv, dl = fresh[miss]
                     if kind == "bm25":
                         normpart = _bm25_normpart(
                             tfv.astype(np.float64), dl, k1, b_, avgdl)
@@ -2270,16 +2356,13 @@ class IndexReader:
         — the measured whole-index ratio at 2M turns was poss ~0.6x, so
         the estimate errs toward the distributed plan, never toward an
         unbounded driver read). Then a pyarrow point-read of ``cols``
-        (default includes the poss column) and the SAME per-shard scorer
-        a distributed task would run — shards scored CONCURRENTLY on the
-        _score_threads() pool when groups are few and heavy (shard
-        outputs are independent: doc-range sharding means no doc appears
-        in two shards, so the merge is order-insensitive and results
-        stay bit-identical to the serial loop; at many tiny groups the
-        GIL makes threads a net LOSS — measured 0.47 s serial vs 1.2 s
-        on 4 threads over 306 groups at 20M turns — so the pool only
-        engages up to FAST_PHRASE_THREAD_MAX_GROUPS) — with the
-        standard (score desc, doc_id asc) top-k merge.
+        (default includes the poss column) scored by the SAME scorer a
+        distributed task runs per shard, called ONCE on the whole
+        matched frame (_score_frame): it merges each term's shard rows
+        into one sorted doc array and batch-decodes the uncached rows
+        (_decode_rows), so the pass costs the same few numpy calls
+        whether the terms span 1 shard or 300. The answer is the
+        (score desc, doc_id asc) top-k.
 
         Repeats skip the parquet read entirely: every reading pass
         records its rows in the _cached_terms bookkeeping, and a later
@@ -2319,7 +2402,7 @@ class IndexReader:
             if "poss" in cols:
                 spdf["poss"] = None
             try:
-                return self._run_shard_groups(spdf, scorer, k, label)
+                return self._score_frame(spdf, scorer, k, label)
             except _FastCacheMiss:
                 pass  # evicted somewhere: take the reading path
         pdf = self._post_table(cols, present).to_pandas()
@@ -2327,36 +2410,18 @@ class IndexReader:
         # bookkeeping _fast_scored uses; unconditional for the same
         # partial-entry reason)
         self._publish_cached(_rows_by_term(pdf))
-        return self._run_shard_groups(pdf, scorer, k, label)
+        return self._score_frame(pdf, scorer, k, label)
 
-    #: thread the per-shard fast-path scorer only up to this many shard
-    #: groups: at the default 32 MB admission budget, more groups than
-    #: this means < ~0.5 MB of payload per group, where per-group GIL
-    #: time dominates and the pool measurably loses to the serial loop
-    FAST_PHRASE_THREAD_MAX_GROUPS = 64
-
-    def _run_shard_groups(self, pdf, scorer, k: int, label: str) -> list:
-        groups = [g for _, g in pdf.groupby("shard", sort=False)]
-        if 1 < len(groups) <= self.FAST_PHRASE_THREAD_MAX_GROUPS:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(_score_threads()) as ex:
-                outs = list(ex.map(scorer, groups))
-        else:
-            # many small groups: ONE merged whole-index evaluation —
-            # the scorers merge same-term rows across shards (globally
-            # sorted doc ranges), so a single pass replaces hundreds of
-            # per-group python fixed costs (measured 0.47 s serial loop
-            # over 306 groups at 20M turns; the merged pass removes it)
-            outs = [scorer(pdf)]
-        outs = [o for o in outs if len(o)]
-        if not outs:
-            self.last_path = label
-            return []
-        allout = pd.concat(outs, ignore_index=True)
+    def _score_frame(self, pdf, scorer, k: int, label: str) -> list:
+        # ONE scorer call on the whole matched frame: the scorers merge
+        # same-term rows across shards into globally sorted doc arrays
+        # (_decode_merged_terms, which fails loudly on overlapping shard
+        # ranges), so a query costs the same few numpy calls whether its
+        # terms span 1 shard or 300
+        out = scorer(pdf)
         uids, sums = _topk_merge(
-            allout["doc_id"].to_numpy(np.int64),
-            allout["score"].to_numpy(np.float64), k,
+            out["doc_id"].to_numpy(np.int64),
+            out["score"].to_numpy(np.float64), k,
         )
         self.last_path = label
         return [(int(d), float(s)) for d, s in zip(uids, sums)]

@@ -8,7 +8,8 @@ Endpoint parity with the reference:
                           locations ("conv_id\tturn_idx\tscore"), or
                           "Zero matches!" — the reference returns
                           newline-joined file paths; (conv_id, turn_idx)
-                          is this engine's document identity
+                          is this engine's document identity; a bad
+                          query is a 400, a server fault a 500
 Extras beyond the reference:
 - ``GET /search?q=...&k=10&mode=pruned&tfidf=0&window=8&snippets=160
   &facets=role&role=assistant`` -> JSON
@@ -17,7 +18,8 @@ Extras beyond the reference:
   only | near — terms co-occur within `window` tokens, positional
   indexes only | bool — boolean query language: AND / OR / NOT,
   parentheses, quoted phrases; see boolquery.py)
-- ``GET /stats``       -> index stats JSON
+- ``GET /stats``       -> index stats JSON, plus ``warm_error`` (why
+                          start-up warming failed, or null)
 
 Serving path: IndexReader's driver fast path scores small matched sets
 without a Spark job (sub-50 ms warm), and resolve_local point-reads the
@@ -63,13 +65,16 @@ class QueryServer:
         self.source_path = source_path
         self._source_ds = None
         self.reader = IndexReader(spark, index_dir)
+        # why warming failed ("Type: message"), or None; GET /stats shows
+        # it, so a server that silently serves cold can be told apart
+        self.warm_error: str | None = None
         if warm_hot_terms:
             try:
                 # pre-decode the hottest posting lists: the first user
                 # query for a hot term shouldn't pay its decode
                 self.reader.warm_hot_terms(warm_hot_terms)
-            except Exception:
-                pass  # serving still works cold
+            except Exception as e:  # serving still works cold
+                self.warm_error = f"{type(e).__name__}: {e}"
         self.host, self.port, self.k_default = host, port, k_default
         # serving-layer RESULT cache (distinct from the decoded-postings
         # LRU below it, which caches work, not answers): repeat requests
@@ -195,8 +200,9 @@ class QueryServer:
                     self._send(200, _PAGE, "text/html")
                 elif url.path == "/stats":
                     self._send(200, json.dumps({
-                        k: v for k, v in server_self.reader.stats.items()
-                        if not isinstance(v, dict)  # omit bulky maps
+                        **{k: v for k, v in server_self.reader.stats.items()
+                           if not isinstance(v, dict)},  # omit bulky maps
+                        "warm_error": server_self.warm_error,
                     }))
                 elif url.path == "/search":
                     qs = parse_qs(url.query)
@@ -267,6 +273,10 @@ class QueryServer:
                     rows = server_self._search(
                         q, server_self.k_default, "pruned", False
                     )
+                except ValueError as e:
+                    # the client's query is at fault: 400, as on /search
+                    self._send(400, str(e), "text/plain")
+                    return
                 except Exception as e:
                     self._send(500, str(e), "text/plain")
                     return

@@ -1,0 +1,200 @@
+"""The driver's one-pass scoring of phrase / near / bool queries: every
+shard's rows go through ONE scorer call (same-term rows merged across
+shards) with a batched postings decode, and must equal the distributed
+per-shard plan."""
+
+import numpy as np
+import pandas as pd
+import pyarrow.dataset as pads
+import pytest
+
+import indexer_spark.query as Q
+from indexer_spark.build import (
+    BuildConfig,
+    append_index,
+    build_index,
+    compact_index,
+    read_stats,
+)
+from indexer_spark.compress import decode_postings, encode_postings
+from indexer_spark.lexer import tokenize
+from indexer_spark.query import IndexReader
+from indexer_spark.synth import gen_transcripts
+
+
+def _random_rows(rng, n_rows, max_df=300):
+    rows, want = [], []
+    for i in range(n_rows):
+        df = 1 if i % 3 == 0 else int(rng.integers(2, max_df))
+        gaps = rng.integers(1, 1 << int(rng.integers(1, 40)), size=df)
+        first = 0 if i % 4 == 0 else int(rng.integers(0, 1 << 35))
+        docs = first + np.concatenate(([0], np.cumsum(gaps[1:])))
+        tfs = rng.integers(1, 1 << int(rng.integers(1, 20)), size=df)
+        dls = rng.integers(1, 1 << 16, size=df)
+        d_b, tf_b, dl_b, _ = encode_postings(docs, tfs, dls, avgdl=10.0)
+        rows.append((d_b, tf_b, dl_b, df))
+        want.append((docs, tfs, dls))
+    return rows, want
+
+
+def test_decode_rows_matches_per_row_decode():
+    """Rows on both sides of BLOCK_SIZE postings, and more small rows
+    than one batch holds."""
+    rng = np.random.default_rng(3)
+    for n_rows in (1, 2, 7, 40, 400):
+        rows, want = _random_rows(rng, n_rows)
+        got = Q._decode_rows(rows)
+        assert len(got) == n_rows
+        for (d_b, tf_b, dl_b, df), g, w in zip(rows, got, want):
+            ref = decode_postings(d_b, tf_b, dl_b, df)
+            for a, r, orig in zip(g, ref, w):
+                assert a.dtype == r.dtype == np.int64
+                np.testing.assert_array_equal(a, r)
+                np.testing.assert_array_equal(a, orig)
+                # owns its memory: the decoded LRU's nbytes accounting
+                # must not be pinning a shared joined buffer
+                assert a.base is None and a.flags.owndata
+    assert Q._decode_rows([]) == []
+
+
+def test_decode_rows_batches_small_rows(monkeypatch):
+    """Rows of at most BLOCK_SIZE postings share one decode call per
+    BLOCK_SIZE rows; a larger row gets a call of its own."""
+    rows, _ = _random_rows(np.random.default_rng(7), 300, Q.BLOCK_SIZE)
+    big, _ = _random_rows(np.random.default_rng(8), 3, 4 * Q.BLOCK_SIZE)
+    big = [r for r in big if r[3] > Q.BLOCK_SIZE]
+    calls = []
+    real = Q.decode_postings
+    monkeypatch.setattr(
+        Q, "decode_postings", lambda *a: calls.append(a[3]) or real(*a))
+    Q._decode_rows(rows + big)
+    assert len(calls) == 3 + len(big) and big
+
+
+def test_decode_rows_lru_accounting_is_exact():
+    rows, _ = _random_rows(np.random.default_rng(4), 12)
+    cache = Q._DecodedLRU(1 << 30)
+    for i, tup in enumerate(Q._decode_rows(rows)):
+        cache.put(("k", i), tup)
+    assert cache._bytes == sum(24 * r[3] for r in rows)
+
+
+def test_decode_rows_cache_fed_none_row_raises():
+    rows, _ = _random_rows(np.random.default_rng(5), 4)
+    rows[2] = (None, None, None, rows[2][3])
+    with pytest.raises(Q._FastCacheMiss):
+        Q._decode_rows(rows)
+
+
+def test_decode_rows_rejects_misaligned_rows():
+    """Rows whose varint counts only balance in total must still fail:
+    the joined decode alone cannot see row boundaries."""
+    rows, _ = _random_rows(np.random.default_rng(6), 3, Q.BLOCK_SIZE)
+    (d0, t0, l0, n0), (d1, t1, l1, n1) = rows[0], rows[1]
+    # move one value of the first row into the second: totals unchanged
+    moved = [(d0, t0, l0, n0 + 1), (d1, t1, l1, n1 - 1), rows[2]]
+    with pytest.raises(ValueError):
+        Q._decode_rows(moved)
+    # a row cut inside its last varint (continuation bit left set)
+    cut = [(d0 + b"\x80", t0, l0, n0), rows[1]]
+    with pytest.raises(ValueError):
+        Q._decode_rows(cut)
+
+
+CFG = dict(shard_docs=256, block_size=32, id_partitions=4, positions=True)
+
+
+def _partial_terms(index_dir):
+    """Terms present in some shards but not all (df >= 3), mid-df first."""
+    tbl = pads.dataset(f"{index_dir}/postings", format="parquet",
+                       partitioning="hive").to_table(
+        columns=["shard", "term", "df"]).to_pandas()
+    n_shards = tbl["shard"].nunique()
+    per = tbl.groupby("term").agg(n=("shard", "nunique"), df=("df", "sum"))
+    cand = per[(per["n"] > 1) & (per["n"] < n_shards) & (per["df"] >= 3)]
+    terms = list(cand.sort_values("df").index)
+    mid = len(terms) // 2
+    return terms[mid:] + terms[:mid]
+
+
+def _queries(corpus, partial_terms):
+    rng = np.random.default_rng(11)
+    texts = [t for t in corpus["text"].tolist() if t]
+    pairs = []
+    for i in rng.permutation(len(texts)):
+        w = [x for x in texts[int(i)].split() if x.isalpha()]
+        if len(w) >= 4:
+            pairs.append(w)
+        if len(pairs) == 3:
+            break
+    # a raw word that lexes to a partial-shard term, with its neighbours
+    around = None
+    for term in partial_terms:
+        for t in texts:
+            words = t.split()
+            js = [j for j, x in enumerate(words) if tokenize(x) == [term]]
+            if js:
+                around = words[max(js[0] - 1, 0): js[0] + 2]
+                partial = words[js[0]]
+                break
+        if around:
+            break
+    assert around, "no partial-shard term occurs as a raw word"
+    out = [("phrase", f"{w[0]} {w[1]}") for w in pairs]
+    out += [("phrase", " ".join(around))]
+    out += [("near", f"{w[0]} {w[3]}") for w in pairs]
+    out += [("near", f"{partial} {pairs[0][0]}")]
+    out += [
+        ("bool", f'"{pairs[0][0]} {pairs[0][1]}" OR {pairs[1][2]}'),
+        ("bool", f"{pairs[1][0]} AND NOT {pairs[2][1]}"),
+        ("bool", f"{partial} OR {pairs[2][0]}"),
+        ("bool", f"({partial} OR {pairs[0][2]}) AND NOT {pairs[1][1]}"),
+    ]
+    return out
+
+
+def _check_state(spark, index_dir, corpus, state):
+    assert read_stats(index_dir)["n_shards"] >= 4, state
+    queries = _queries(corpus, _partial_terms(index_dir))
+    fast = IndexReader(spark, index_dir)
+    n_hit = 0
+    try:
+        for mode, q in queries:
+            if mode == "bool":
+                plan = fast.search_bool_df(q, k=10)
+            else:
+                plan = fast.search_df(q, k=10, mode=mode)
+            want = [] if plan is None else [
+                (r["doc_id"], r["score"]) for r in plan.collect()]
+            for rep in ("read", "replay"):  # parquet, then cache-fed
+                got = fast.search(q, k=10, mode=mode)
+                why = (state, q, rep)
+                assert fast.last_path == f"fast_{mode}", why
+                assert [d for d, _ in got] == [d for d, _ in want], why
+                np.testing.assert_allclose(
+                    [s for _, s in got], [s for _, s in want],
+                    rtol=0, atol=1e-9)
+            n_hit += bool(want)
+    finally:
+        fast.close()
+    assert n_hit >= 6, state  # queries are sliced from real docs
+
+
+def test_merged_pass_equals_distributed_plan(spark, tmp_path_factory):
+    """As built, after append_index and after compaction: phrase, near
+    and bool answers of the driver route (first read and cache-fed
+    replay) equal the distributed per-shard plan. This pins the
+    shard-order / doc-range assumption the merge relies on
+    (_decode_merged_terms fails loudly if it breaks)."""
+    base = gen_transcripts(900, seed=21)
+    extra = gen_transcripts(400, seed=22)
+    extra["conv_id"] = "zz_" + extra["conv_id"]
+    d = str(tmp_path_factory.mktemp("merged_pass"))
+    build_index(spark, spark.createDataFrame(base), d, BuildConfig(**CFG))
+    _check_state(spark, d, base, "built")
+    append_index(spark, spark.createDataFrame(extra), d)
+    both = pd.concat([base, extra], ignore_index=True)
+    _check_state(spark, d, both, "appended")
+    out = str(tmp_path_factory.mktemp("merged_pass_compact"))
+    compact_index(spark, d, out, BuildConfig(**CFG))
+    _check_state(spark, out, both, "compacted")

@@ -66,6 +66,70 @@ def test_serve_post_query_protocol(served):
         assert r.read().decode() == "Zero matches!"
 
 
+def _post(port, q):
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{port}/query", data=q.encode(), method="POST")
+    with urllib.request.urlopen(req) as r:
+        return r.status, r.read().decode()
+
+
+def test_serve_post_query_client_errors_are_400(served, monkeypatch):
+    """POST /query always runs a pruned query, whose parser raises no
+    ValueError, so the real boolean parser is put behind the endpoint:
+    a malformed bool query must come back as a 400, like on /search,
+    and any other failure stays a 500."""
+    srv, port, pdf, _ = served
+    import urllib.error
+
+    real = srv._search
+    monkeypatch.setattr(
+        srv, "_search", lambda q, k, _mode, tfidf: real(q, k, "bool", tfidf))
+    for q, needle in (
+        ("lemon AND (zest", "parenthesis"),
+        ("NOT lemon", "pure-negative"),
+    ):
+        with pytest.raises(urllib.error.HTTPError) as exc:
+            _post(port, q)
+        assert exc.value.code == 400, q
+        assert needle in exc.value.read().decode()
+    # a well-formed bool query is answered through the same handler
+    w = pdf["text"].iloc[0].split()
+    status, body = _post(port, f"{w[0]} OR {w[1]}")
+    assert status == 200 and body != "Zero matches!"
+
+    def broken(*_a, **_k):
+        raise RuntimeError("reader fault")
+
+    monkeypatch.setattr(srv, "_search", broken)
+    with pytest.raises(urllib.error.HTTPError) as exc:
+        _post(port, "lemon")
+    assert exc.value.code == 500
+    assert "reader fault" in exc.value.read().decode()
+
+
+def test_serve_records_warm_failure(spark, served, monkeypatch):
+    """A failed start-up warm leaves the server serving cold, and says
+    why in GET /stats instead of swallowing the error."""
+    _, port, pdf, d = served
+    assert json.loads(_get(port, "/stats")[1])["warm_error"] is None
+
+    def failing_warm(self, *_a, **_k):
+        raise OSError("postings unreadable")
+
+    monkeypatch.setattr(IndexReader, "warm_hot_terms", failing_warm)
+    srv = QueryServer(spark, d, port=0)
+    try:
+        assert srv.warm_error == "OSError: postings unreadable"
+        port2 = srv.start()
+        stats = json.loads(_get(port2, "/stats")[1])
+        assert stats["warm_error"] == "OSError: postings unreadable"
+        assert stats["n_docs"] == 300
+        q = pdf["text"].iloc[0].split()[0]
+        assert json.loads(_get(port2, f"/search?q={q}&k=3")[1])["hits"]
+    finally:
+        srv.stop()
+
+
 def test_serve_stats_and_404(served):
     _, port, _, _ = served
     status, body = _get(port, "/stats")
