@@ -562,9 +562,16 @@ def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
     # static overwrite: this is always a fresh dir (build_index removes
     # stale data), and the dynamic-overwrite commit's per-partition
     # staging+moves are pure fixed cost here (the appenders that DO need
-    # dynamic pass it explicitly)
+    # dynamic pass it explicitly).
+    # Every tok and postings writer sorts by (shard, key): the driver
+    # point reads (query._FileIndex) search each file's key, so it must
+    # be strictly increasing within a file. Led by the partition column,
+    # this order also satisfies the sort Spark plans under a partitioned
+    # write, so that sort (which can interleave rows of one shard when
+    # it spills) is not added on top.
     (
-        tok.write.partitionBy("shard")
+        tok.sortWithinPartitions("shard", "local_idx")
+        .write.partitionBy("shard")
         .option("partitionOverwriteMode", "static")
         .mode("overwrite")
         .parquet(_tok_path(index_dir))
@@ -860,7 +867,9 @@ def _stage_postings(
             )
             t1 = time.time()
             (
-                built.write.partitionBy("shard")
+                # (shard, term) order: see _stage_ids
+                built.sortWithinPartitions("shard", "term")
+                .write.partitionBy("shard")
                 .option("partitionOverwriteMode", overwrite_mode)
                 .option("parquet.block.size", str(cfg.row_group_bytes))
                 .mode("overwrite")
@@ -1167,6 +1176,7 @@ def compact_index(
             reassign,
             schema=TOK_SCHEMA_POS if cfg.positions else TOK_SCHEMA,
         )
+        .sortWithinPartitions("shard", "local_idx")  # see _stage_ids
         .write.partitionBy("shard")
         .option("partitionOverwriteMode", "static")
         .mode("overwrite")
@@ -1332,7 +1342,8 @@ def append_index(
         schema=TOK_SCHEMA_POS if cfg.positions else TOK_SCHEMA,
     )
     (
-        tok.write.partitionBy("shard")
+        tok.sortWithinPartitions("shard", "local_idx")  # see _stage_ids
+        .write.partitionBy("shard")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
         .parquet(_tok_path(index_dir))
@@ -1564,6 +1575,9 @@ def update_index(
     (
         sub.mapInPandas(retok,
                         schema=TOK_SCHEMA_POS if pos_on else TOK_SCHEMA)
+        # the shuffle interleaves the splits of a shard's input file
+        # (see _stage_ids for the order)
+        .sortWithinPartitions("shard", "local_idx")
         .write.partitionBy("shard")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")

@@ -1322,9 +1322,10 @@ def _warm_install_entries(payload, block_size: int,
 #: a 25,000-turn index touch (term_stats, postings, tok) fits in ~5 MB.
 CHUNK_CACHE_BYTES = 64 << 20
 
-# decoded parquet column chunks behind the driver point reads, keyed
-# (path, mtime_ns, size, row_group, column). A separate instance, so
-# _DECODED_CACHE keeps holding decoded postings only.
+# what the driver point reads keep per (path, mtime_ns, size,
+# row_group): the decoded parquet column chunks (keyed by column), the
+# searchable key copy and the conformed row-group tables. A separate
+# instance, so _DECODED_CACHE keeps holding decoded postings only.
 _CHUNK_CACHE = _DecodedLRU(CHUNK_CACHE_BYTES)
 
 
@@ -1335,8 +1336,18 @@ class _File(NamedTuple):
     ident: tuple[int, int]   # (mtime_ns, size) when the footer was read
     md: object               # pyarrow.parquet.FileMetaData
     names: frozenset         # stored column names
-    ranges: list             # per row group: (min, max) of the key,
-    #                          None (no stats: always read) or False (empty)
+    lows: list               # key min of each row group with statistics,
+    highs: list              # its key max (both ascending: checked),
+    bounded: list            # and its row-group number
+    unbounded: list          # non-empty row groups without statistics
+
+
+class _SortedKeys(NamedTuple):
+    """Searchable copy of one row group's key chunk, checked strictly
+    increasing when it was made. ``nbytes`` also counts the str objects
+    of a string key, so _CHUNK_CACHE accounts what the copy holds."""
+    keys: np.ndarray
+    nbytes: int
 
 
 def _stale(path: str) -> FileNotFoundError:
@@ -1344,16 +1355,33 @@ def _stale(path: str) -> FileNotFoundError:
         f"{path} changed or vanished since the reader's snapshot")
 
 
+def _unsorted(path: str, key: str) -> ValueError:
+    return ValueError(
+        f"{path}: key column {key!r} is not strictly increasing; every "
+        "index writer sorts it within a file, so this file was not "
+        "written by one")
+
+
 class _FileIndex:
     """Footer index of one parquet table, read once per reader snapshot:
     the files in ``pyarrow.dataset`` discovery order, each with its
-    identity (mtime_ns, size), footer, hive ``shard`` value and
-    per-row-group min/max of the ``key`` column. A point read prunes
-    files by shard and row groups by key range, takes the decoded column
-    chunks from _CHUNK_CACHE (reading misses single-threaded), and keeps
-    the rows a ``pc.is_in`` (or range) mask selects — the same rows in
-    the same order as ``dataset.to_table(filter=...)``, without paying
-    for a dataset scan plan per call."""
+    identity (mtime_ns, size), footer, hive ``shard`` value and the
+    per-row-group min/max of the ``key`` column.
+
+    Every index writer sorts ``key`` strictly within a file (term_stats
+    and postings by term, tok by local_idx), so a point read addresses
+    rows instead of masking them: files are pruned by shard, row groups
+    by a bisect over their key bounds, and the requested keys become row
+    indices by ``np.searchsorted`` over a searchable copy of the row
+    group's key chunk — a ``key_range`` read is one slice. The copy is
+    made, and the chunk checked strictly increasing, on first use; so
+    is the row group's table conformed to the dataset schema (casts, the
+    hive ``shard`` column, nulls for columns an older file lacks). Both
+    live in _CHUNK_CACHE beside the decoded column chunks. A file whose
+    keys are out of order or repeated raises ValueError naming it, as
+    soon as the reader indexes its footer or first searches that chunk.
+    The result is the same rows in the same order as
+    ``dataset.to_table(filter=...)``, without a scan plan per call."""
 
     def __init__(self, root: str, key: str, partitioned: bool):
         import pyarrow.dataset as pads
@@ -1363,6 +1391,7 @@ class _FileIndex:
                           partitioning="hive" if partitioned else None)
         self.schema = ds.schema
         self.key = key
+        self._conform: dict[tuple, tuple] = {}  # columns -> (schema, sig)
         self.files: list[_File] = []
         for frag in ds.get_fragments():
             shard = pads.get_partition_keys(
@@ -1374,31 +1403,34 @@ class _FileIndex:
                 md = pq.read_metadata(fh)
             names = md.schema.names
             ci = names.index(key) if key in names else None
-            ranges = []
+            lows, highs, bounded, unbounded = [], [], [], []
             for rg in range(md.num_row_groups):
                 rgm = md.row_group(rg)
                 s = rgm.column(ci).statistics if ci is not None else None
                 if rgm.num_rows == 0:
-                    ranges.append(False)  # nothing to read
-                elif s is not None and s.has_min_max:
-                    ranges.append((s.min, s.max))
-                else:
-                    ranges.append(None)  # no stats: always read
+                    continue  # nothing to read
+                if s is None or not s.has_min_max:
+                    unbounded.append(rg)  # no stats: always read
+                    continue
+                if highs and highs[-1] >= s.min:
+                    raise _unsorted(frag.path, key)
+                lows.append(s.min)
+                highs.append(s.max)
+                bounded.append(rg)
             self.files.append(_File(frag.path, shard,
                                     (st.st_mtime_ns, st.st_size), md,
-                                    frozenset(names), ranges))
+                                    frozenset(names), lows, highs, bounded,
+                                    unbounded))
 
     def read(self, columns: list[str], keys=None, shard_keys=None,
              key_range=None):
-        """Rows of ``columns`` whose key is in ``keys`` (sorted), or in
-        ``shard_keys[shard]`` (sorted, per hive shard; other shards are
-        skipped), or in the half-open ``key_range`` (lo, hi); all rows
-        when no filter is given. Raises FileNotFoundError when a file the
-        read touches is gone or changed — also on a full cache hit."""
-        import bisect
-
+        """Rows of ``columns`` whose key is in ``keys`` (sorted,
+        distinct), or in ``shard_keys[shard]`` (sorted, distinct, per
+        hive shard; other shards are skipped), or in the half-open
+        ``key_range`` (lo, hi); all rows when no filter is given. Raises
+        FileNotFoundError when a file the read touches is gone or
+        changed — also on a full cache hit."""
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         filtered = keys is not None or shard_keys is not None \
             or key_range is not None
@@ -1411,20 +1443,7 @@ class _FileIndex:
                     continue
             if filtered and self.key not in f.names:
                 continue  # key column absent: no row can match
-            rgs = []
-            for rg, r in enumerate(f.ranges):
-                if r is False:
-                    continue
-                if r is not None:
-                    lo, hi = r
-                    if vals is not None:
-                        i = bisect.bisect_left(vals, lo)
-                        if i == len(vals) or vals[i] > hi:
-                            continue
-                    elif key_range is not None and (
-                            hi < key_range[0] or lo >= key_range[1]):
-                        continue
-                rgs.append(rg)
+            rgs = _row_groups(f, vals, key_range)
             if rgs:
                 plan.append((f, vals, rgs))
         for f, _, _ in plan:
@@ -1434,49 +1453,133 @@ class _FileIndex:
                 raise _stale(f.path) from None
             if (st.st_mtime_ns, st.st_size) != f.ident:
                 raise _stale(f.path)
-        schema = pa.schema([self.schema.field(c) for c in columns])
+        cols = tuple(columns)
+        conform = self._conform.get(cols)
+        if conform is None:
+            schema = pa.schema([self.schema.field(c) for c in cols])
+            conform = self._conform[cols] = (schema, schema.to_string())
+        schema = conform[0]
+        hive = schema.get_field_index("shard")
         parts = []
         for f, vals, rgs in plan:
-            vset = None
             for rg in rgs:
-                n, mask = f.md.row_group(rg).num_rows, None
-                if filtered:
-                    kc = _chunks(f, rg, [self.key])[0]
-                    if key_range is not None:
-                        mask = pc.and_(
-                            pc.greater_equal(kc, key_range[0]),
-                            pc.less(kc, key_range[1]))
-                    else:
-                        if vset is None:
-                            vset = pa.array(vals, kc.type)
-                        mask = pc.is_in(kc, value_set=vset)
-                    n = mask.true_count
-                    if not n:
-                        continue
-                stored = [c for c in columns if c in f.names]
-                got = pa.Table.from_arrays(_chunks(f, rg, stored),
-                                           names=stored)
-                if mask is not None:
-                    got = got.filter(mask)  # one call for all columns
-                cols = []
-                for field in schema:
-                    if field.name in f.names:
-                        a = got.column(field.name)
-                        if a.type != field.type:
-                            a = a.cast(field.type)
-                    elif field.name == "shard" and f.shard is not None:
-                        # hive partition value, without a validity
-                        # bitmap (as the dataset scan returns it)
-                        a = pa.array(np.full(
-                            n, f.shard, field.type.to_pandas_dtype()),
-                            field.type)
-                    else:  # a column this older file lacks
-                        a = pa.nulls(n, field.type)
-                    cols.append(a)
-                parts.append(pa.Table.from_arrays(cols, schema=schema))
+                if not filtered:
+                    parts.append(_conformed(f, rg, *conform))
+                    continue
+                ks = _sorted_keys(f, rg, self.key)
+                if key_range is not None:
+                    lo, hi = np.searchsorted(ks, key_range)
+                    if hi > lo:
+                        parts.append(_conformed(f, rg, *conform).slice(
+                            lo, hi - lo))
+                    continue
+                want = np.asarray(vals, dtype=ks.dtype)
+                pos = np.searchsorted(ks, want)
+                rows = pos[ks[np.minimum(pos, ks.size - 1)] == want]
+                if not rows.size:
+                    continue
+                # a gather, not a slice, even for one run of rows: take
+                # builds the buffers a filter does (validity bitmaps
+                # included), so result sizes stay those of a dataset scan
+                tbl = _conformed(f, rg, *conform)
+                if hive >= 0 and "shard" not in f.names:
+                    # ...except the constant hive column, sliced to stay
+                    # without a bitmap, as the dataset scan returns it
+                    got = tbl.remove_column(hive).take(rows)
+                    parts.append(got.add_column(
+                        hive, schema.field(hive),
+                        tbl.column(hive).slice(0, rows.size)))
+                else:
+                    parts.append(tbl.take(rows))
         if not parts:
             return schema.empty_table()
         return pa.concat_tables(parts)
+
+
+def _row_groups(f: _File, vals, key_range) -> list[int]:
+    """Row groups of ``f`` that may hold a key of ``vals`` (sorted) or of
+    the half-open ``key_range``, or every non-empty one when neither is
+    given, in file order. Bisects the sorted row-group bounds, so the
+    cost follows the keys and row groups that meet, not the file."""
+    import bisect
+
+    if key_range is not None:
+        picked = f.bounded[bisect.bisect_left(f.highs, key_range[0]):
+                           bisect.bisect_left(f.lows, key_range[1])]
+    elif vals is None:
+        picked = list(f.bounded)
+    else:
+        picked, i, j = [], 0, 0
+        while j < len(vals):
+            # first row group whose max reaches the next wanted key
+            i = bisect.bisect_left(f.highs, vals[j], i)
+            if i == len(f.highs):
+                break
+            if f.lows[i] <= vals[j]:
+                picked.append(f.bounded[i])
+                j = bisect.bisect_right(vals, f.highs[i], j)
+            else:  # skip the keys that fall between row groups
+                j = bisect.bisect_left(vals, f.lows[i], j)
+    if f.unbounded:
+        picked = sorted(picked + f.unbounded)
+    return picked
+
+
+def _sorted_keys(f: _File, rg: int, key: str) -> np.ndarray:
+    """Searchable copy of row group ``rg``'s ``key`` chunk, cached in
+    _CHUNK_CACHE and checked strictly increasing on the way in (raises
+    ValueError naming the file otherwise). The chunk itself comes from
+    _chunks on every call, so the row groups a read touches are exactly
+    the ones that pass through it."""
+    import sys
+
+    kc = _chunks(f, rg, [key])[0]
+    ck = (f.path, *f.ident, rg, key, "sorted")
+    hit = _CHUNK_CACHE.get(ck)
+    if hit is not None:
+        return hit[0].keys
+    ks = kc.to_numpy(zero_copy_only=False)
+    if kc.null_count or not np.all(ks[1:] > ks[:-1]):
+        raise _unsorted(f.path, key)
+    nbytes = ks.nbytes
+    if ks.dtype == object:
+        nbytes += sum(map(sys.getsizeof, ks))
+    _CHUNK_CACHE.put(ck, (_SortedKeys(ks, nbytes),))
+    return ks
+
+
+def _conformed(f: _File, rg: int, schema, sig: str):
+    """Row group ``rg`` of ``f`` as a table of ``schema`` (``sig`` is its
+    string form, the cheap-to-hash half of the cache key): stored
+    columns cast to the dataset type, the hive ``shard`` value filled in
+    and columns this older file lacks as nulls. Built once per (file,
+    row group, schema) and cached in _CHUNK_CACHE."""
+    import pyarrow as pa
+
+    ck = (f.path, *f.ident, rg, sig, "table")
+    hit = _CHUNK_CACHE.get(ck)
+    if hit is not None:
+        return hit[0]
+    n = f.md.row_group(rg).num_rows
+    stored = [fld.name for fld in schema if fld.name in f.names]
+    got = dict(zip(stored, _chunks(f, rg, stored)))
+    cols = []
+    for field in schema:
+        if field.name in got:
+            a = got[field.name]
+            if a.type != field.type:
+                a = a.cast(field.type)
+        elif field.name == "shard" and f.shard is not None:
+            # hive partition value, without a validity bitmap (as the
+            # dataset scan returns it)
+            a = pa.array(np.full(n, f.shard, field.type.to_pandas_dtype()),
+                         field.type)
+        else:  # a column this older file lacks
+            a = pa.nulls(n, field.type)
+        cols.append(a)
+    tbl = pa.Table.from_arrays(cols, schema=schema)
+    _CHUNK_CACHE.put(ck, (tbl,))
+    return tbl
 
 
 def _chunks(f: _File, rg: int, columns: list[str]) -> list:
@@ -2670,20 +2773,7 @@ class IndexReader:
         if hits == []:
             return []
         if hits is not None and len(hits) <= self.FACET_DRIVER_MAX_DOCS:
-            from .build import _tok_path, locate_doc_ids
-
-            import pyarrow.dataset as pads
-
-            loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
-            shards = sorted({s for s, _ in loc.values()})
-            locals_ = sorted({li for _, li in loc.values()})
-            ds = pads.dataset(_tok_path(self.index_dir), format="parquet",
-                              partitioning="hive")
-            tbl = ds.to_table(
-                columns=["shard", "local_idx", by],
-                filter=pads.field("shard").isin(shards)
-                & pads.field("local_idx").isin(locals_),
-            )
+            loc, tbl = self._tok_rows(hits, [by])
             val_of = {
                 (int(s), int(li)): v
                 for s, li, v in zip(tbl.column("shard").to_pylist(),
@@ -2788,20 +2878,7 @@ class IndexReader:
         if hits == []:
             return []
         if hits is not None and len(hits) <= self.FACET_DRIVER_MAX_DOCS:
-            from .build import _tok_path, locate_doc_ids
-
-            import pyarrow.dataset as pads
-
-            loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
-            ds = pads.dataset(_tok_path(self.index_dir), format="parquet",
-                              partitioning="hive")
-            tbl = ds.to_table(
-                columns=["shard", "local_idx"] + cols,
-                filter=pads.field("shard").isin(
-                    sorted({s for s, _ in loc.values()}))
-                & pads.field("local_idx").isin(
-                    sorted({li for _, li in loc.values()})),
-            )
+            loc, tbl = self._tok_rows(hits, cols)
             attr = {
                 (int(s), int(li)): vals
                 for s, li, *vals in zip(
@@ -3205,18 +3282,12 @@ class IndexReader:
         out = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
         return [(r["doc_id"], r["score"]) for r in out.collect()]
 
-    def resolve_local(
-        self, hits: list[tuple[int, float]]
-    ) -> list[dict]:
-        """Driver-side resolve for serving paths: doc_ids -> (shard,
-        local_idx) via the stats map, then a point read of the matched
-        tok rows (shard pruning + local_idx row-group ranges — k rows,
-        metadata-sized IO, no Spark job). Same output rows as resolve(),
-        list-of-dict instead of a DataFrame."""
+    def _tok_rows(self, hits: list[tuple[int, float]], columns: list[str]):
+        """doc_id -> (shard, local_idx) via the stats map, then one point
+        read of ``columns`` of the matched tok rows (shard pruning +
+        local_idx addressing — k rows, metadata-sized IO, no Spark job).
+        Returns (locations, table with shard and local_idx first)."""
         from .build import locate_doc_ids
-
-        if not hits:
-            return []
 
         def lookup(reads):
             # located inside the retry: a refresh re-reads the stats map
@@ -3225,12 +3296,22 @@ class IndexReader:
             for s, li in loc.values():
                 want.setdefault(s, set()).add(li)
             tbl = reads["tok"].read(
-                ["shard", "local_idx", "conv_id", "turn_idx"],
+                ["shard", "local_idx", *columns],
                 shard_keys={s: sorted(v) for s, v in want.items()},
             )
             return loc, tbl
 
-        loc, tbl = self._with_reads(lookup)
+        return self._with_reads(lookup)
+
+    def resolve_local(
+        self, hits: list[tuple[int, float]]
+    ) -> list[dict]:
+        """Driver-side resolve for serving paths: one tok point read of
+        the matched rows (_tok_rows). Same output rows as resolve(),
+        list-of-dict instead of a DataFrame."""
+        if not hits:
+            return []
+        loc, tbl = self._tok_rows(hits, ["conv_id", "turn_idx"])
         by_key = {
             (int(s), int(li)): (c, int(t))
             for s, li, c, t in zip(

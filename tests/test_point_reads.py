@@ -293,3 +293,213 @@ def test_concurrent_first_touch_stress(spark, small_rg_index):
     with Q._CHUNK_CACHE._lock:
         assert Q._CHUNK_CACHE._bytes == sum(
             a.nbytes for v in Q._CHUNK_CACHE._d.values() for a in v)
+        kinds = {type(v[0]).__name__ for v in Q._CHUNK_CACHE._d.values()}
+    # decoded chunks, searchable key copies and conformed row groups
+    assert {"_SortedKeys", "Table"} <= kinds, kinds
+
+
+def test_key_range_reads_match_dataset(spark, small_rg_index):
+    """A key_range read is a slice of each covering row group: the same
+    rows, in the same order, as the dataset scan, over postings files
+    with several row groups and over term_stats."""
+    vocab = _vocab(small_rg_index)
+    post = _dataset(small_rg_index, "postings")
+    ts = _dataset(small_rg_index, "term_stats")
+    r = IndexReader(spark, small_rg_index)
+    try:
+        for lo, hi in [(vocab[0], vocab[len(vocab) // 4]),
+                       (vocab[len(vocab) // 3], vocab[-1] + "\U0010ffff"),
+                       (vocab[7], vocab[7] + "\U0010ffff"),
+                       (vocab[9], vocab[9]),
+                       ("zzzz", "zzzz\U0010ffff")]:
+            filt = (pads.field("term") >= lo) & (pads.field("term") < hi)
+            want = post.to_table(columns=POST_COLS, filter=filt)
+            got = r._reads["postings"].read(POST_COLS, key_range=(lo, hi))
+            assert got.schema == want.schema
+            assert got.equals(want), (lo, hi)
+            want = ts.to_table(columns=["term", "df", "nbytes"], filter=filt)
+            got = r._reads["term_stats"].read(["term", "df", "nbytes"],
+                                              key_range=(lo, hi))
+            assert got.equals(want), (lo, hi)
+    finally:
+        r.close()
+
+
+def _write_table(path, pdf, row_group_size=None):
+    import pyarrow as pa
+
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path,
+                   row_group_size=row_group_size)
+
+
+@pytest.mark.parametrize("key,vals,rg_size", [
+    ("term", ["apple", "cherry", "banana"], None),   # out of order
+    ("term", ["apple", "banana", "banana"], None),   # duplicate key
+    ("term", ["apple", "cherry", "banana", "date"], 2),  # across groups
+    ("local_idx", [0, 2, 1], None),
+    ("local_idx", [0, 1, 1, 2], 2),
+])
+def test_unsorted_key_chunk_raises(tmp_path, key, vals, rg_size):
+    """A file whose key is not strictly increasing fails loudly, naming
+    the file — within one row group (at the first read of the chunk) and
+    across row groups (when its footer is indexed)."""
+    import pandas as pd
+
+    root = str(tmp_path / "table")
+    path = os.path.join(root, "shard=0", "part-0.parquet")
+    _write_table(path, pd.DataFrame({key: vals, "df": range(len(vals))}),
+                 rg_size)
+
+    def read():
+        fi = Q._FileIndex(root, key, partitioned=True)
+        return fi.read([key, "df"], shard_keys={0: sorted(set(vals))[:1]})
+
+    with pytest.raises(ValueError, match="part-0.parquet"):
+        read()
+    with pytest.raises(ValueError, match="part-0.parquet"):
+        read()  # also once the chunk is cached
+
+
+def test_sorted_hand_written_file_reads_by_address(tmp_path):
+    """A sorted hand-written file with several row groups reads the same
+    rows as the dataset scan: keys that miss, keys in one row group,
+    keys spread over row groups, a range and a full read."""
+    import pandas as pd
+
+    root = str(tmp_path / "table")
+    terms = [f"t{i:03d}" for i in range(0, 200, 2)]
+    pdf = pd.DataFrame({"term": terms, "df": range(len(terms))})
+    _write_table(os.path.join(root, "part-0.parquet"), pdf, 16)
+    ds = pads.dataset(root, format="parquet")
+    fi = Q._FileIndex(root, "term", partitioned=False)
+    assert len(fi.files[0].bounded) == 7
+    for keys in (["t000"], ["t001", "t005"], ["t010", "t012", "t014"],
+                 ["t004", "t040", "t041", "t150", "t198", "t199"],
+                 terms):
+        want = ds.to_table(columns=["term", "df"],
+                           filter=pads.field("term").isin(keys))
+        assert fi.read(["term", "df"], keys=sorted(keys)).equals(want), keys
+    want = ds.to_table(filter=(pads.field("term") >= "t031")
+                       & (pads.field("term") < "t101"))
+    assert fi.read(["term", "df"], key_range=("t031", "t101")).equals(want)
+    assert fi.read(["df", "term"]).equals(ds.to_table(columns=["df", "term"]))
+
+
+def test_point_read_cache_entries_are_accounted(tmp_path):
+    """A filtered read caches the key chunk, its searchable copy (whose
+    size counts the str objects it holds) and the conformed row group;
+    _CHUNK_CACHE's byte count stays the sum of its entries' nbytes."""
+    import pandas as pd
+
+    root = str(tmp_path / "table")
+    path = os.path.join(root, "part-0.parquet")
+    terms = [f"term{i:04d}" for i in range(300)]
+    _write_table(path, pd.DataFrame({"term": terms, "df": range(300)}))
+    fi = Q._FileIndex(root, "term", partitioned=False)
+    assert fi.read(["term", "df"], keys=["term0007"]).num_rows == 1
+    with Q._CHUNK_CACHE._lock:
+        mine = [v[0] for k, v in Q._CHUNK_CACHE._d.items() if k[0] == path]
+        assert Q._CHUNK_CACHE._bytes == sum(
+            a.nbytes for v in Q._CHUNK_CACHE._d.values() for a in v)
+    sk = [e for e in mine if isinstance(e, Q._SortedKeys)]
+    assert len(sk) == 1 and list(sk[0].keys) == terms
+    assert sk[0].nbytes == sk[0].keys.nbytes + sum(
+        sys.getsizeof(t) for t in terms)
+    assert len(mine) == 4  # term and df chunks, key copy, conformed table
+
+
+def test_update_keeps_tok_files_sorted(spark, tmp_path):
+    """update_index rewrites an affected shard's tok file through a hash
+    shuffle; with small input splits the shard's rows reach the writer
+    from several tasks. The rewritten file must still be strictly
+    local_idx-sorted, and resolve_local must equal resolve."""
+    from indexer_spark.build import update_index
+
+    a = gen_transcripts(600, seed=41)
+    sa = a.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    d = str(tmp_path / "upd")
+    conf = spark.conf
+    prior = {k: conf.get(k, None) for k in (
+        "parquet.block.size", "spark.sql.files.maxPartitionBytes",
+        "spark.sql.files.openCostInBytes")}
+
+    def restore():
+        for k, v in prior.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+
+    try:
+        conf.set("parquet.block.size", str(8 << 10))  # many row groups
+        build_index(spark, spark.createDataFrame(a), d,
+                    BuildConfig(block_size=32, id_partitions=2))
+        restore()
+        tok_files = _dataset(d, "tok").files
+        assert max(pq.ParquetFile(f).metadata.num_row_groups
+                   for f in tok_files) > 2
+        conf.set("spark.sql.files.maxPartitionBytes", str(8 << 10))
+        conf.set("spark.sql.files.openCostInBytes", "0")
+        idx = [3, 150, 299]
+        changed = spark.createDataFrame(
+            [(sa["conv_id"][i], int(sa["turn_idx"][i]), "zzupd " * 3)
+             for i in idx],
+            "conv_id string, turn_idx int, text string")
+        update_index(spark, changed, d)
+    finally:
+        restore()
+    for f in _dataset(d, "tok").files:
+        li = pq.read_table(f, columns=["local_idx"]).column(
+            "local_idx").to_numpy()
+        assert np.all(np.diff(li) > 0), f
+    r = IndexReader(spark, d)
+    try:
+        hits = r.search("zzupd", 10)
+        assert sorted(h[0] for h in hits) == idx
+        hits += r.search(sa["text"][200].split()[0], 10)
+        want = sorted(
+            (row["conv_id"], row["turn_idx"], row["doc_id"])
+            for row in r.resolve(hits).collect())
+        got = sorted((x["conv_id"], x["turn_idx"], x["doc_id"])
+                     for x in r.resolve_local(hits))
+        assert got == want and len(got) == len(hits)
+    finally:
+        r.close()
+
+
+def test_facets_refresh_after_append(spark, tmp_path):
+    """facet_counts and search_where read tok through the point-read
+    layer: a reader that served them before append_index answers them
+    after it like a fresh reader, for old and appended turns alike."""
+    full = gen_transcripts(800, seed=51)  # one vocabulary for a and b
+    a, b = full.iloc[:500], full.iloc[500:].copy()
+    b["conv_id"] = "zz_" + b["conv_id"]
+    d = str(tmp_path / "facets")
+    cfg = BuildConfig(block_size=32, id_partitions=2)
+    build_index(spark, spark.createDataFrame(a), d, cfg)
+    words = a["text"].iloc[0].split()
+    q, q0 = words[1], words[3]
+    where = {"role": ["user", "assistant"]}
+    old = IndexReader(spark, d)
+    try:
+        # the old snapshot's tok and term_stats footers get indexed
+        assert old.facet_counts(q0, by="role")
+        assert old.search_where(q0, where)
+        append_index(spark, spark.createDataFrame(b), d, cfg)
+        fresh = IndexReader(spark, d)
+        try:
+            for term in (q, q0):
+                for by in ("role", "conv_id"):
+                    got = old.facet_counts(term, by=by, k=10_000)
+                    assert got == fresh.facet_counts(term, by=by, k=10_000)
+                convs = [v for v, _ in got]
+                assert any(v.startswith("zz_") for v in convs)
+                assert any(not v.startswith("zz_") for v in convs)
+                for w in (where, {"role": "user"}):
+                    got = old.search_where(term, w, k=20)
+                    assert got and got == fresh.search_where(term, w, k=20)
+        finally:
+            fresh.close()
+    finally:
+        old.close()
