@@ -1322,10 +1322,11 @@ def _warm_install_entries(payload, block_size: int,
 #: a 25,000-turn index touch (term_stats, postings, tok) fits in ~5 MB.
 CHUNK_CACHE_BYTES = 64 << 20
 
-# what the driver point reads keep per (path, mtime_ns, size,
-# row_group): the decoded parquet column chunks (keyed by column), the
-# searchable key copy and the conformed row-group tables. A separate
-# instance, so _DECODED_CACHE keeps holding decoded postings only.
+# what the driver point reads keep: per (path, mtime_ns, size,
+# row_group, dataset types), the row group's columns decoded so far,
+# conformed to those types; per (path, mtime_ns, size, row_group, key,
+# "sorted"), the searchable copy of a string key. A separate instance,
+# so _DECODED_CACHE keeps holding decoded postings only.
 _CHUNK_CACHE = _DecodedLRU(CHUNK_CACHE_BYTES)
 
 
@@ -1336,30 +1337,27 @@ class _File(NamedTuple):
     ident: tuple[int, int]   # (mtime_ns, size) when the footer was read
     md: object               # pyarrow.parquet.FileMetaData
     names: frozenset         # stored column names
-    lows: list               # key min of each row group with statistics,
-    highs: list              # its key max (both ascending: checked),
-    bounded: list            # and its row-group number
-    unbounded: list          # non-empty row groups without statistics
+    ranges: list             # per row group: (min, max) of the key,
+    #                          None (no stats: always read) or False (empty)
 
 
 class _SortedKeys(NamedTuple):
-    """Searchable copy of one row group's key chunk, checked strictly
-    increasing when it was made. ``nbytes`` also counts the str objects
-    of a string key, so _CHUNK_CACHE accounts what the copy holds."""
+    """Searchable numpy copy of one row group's string key column.
+    ``nbytes`` also counts its str objects, so _CHUNK_CACHE accounts
+    what the copy holds."""
     keys: np.ndarray
     nbytes: int
+
+
+class UnsortedIndexError(RuntimeError):
+    """An index file whose key column is not strictly increasing within
+    a row group. A data fault of the index, not of the query: rewrite
+    the index with compact_index, whose writers sort every file."""
 
 
 def _stale(path: str) -> FileNotFoundError:
     return FileNotFoundError(
         f"{path} changed or vanished since the reader's snapshot")
-
-
-def _unsorted(path: str, key: str) -> ValueError:
-    return ValueError(
-        f"{path}: key column {key!r} is not strictly increasing; every "
-        "index writer sorts it within a file, so this file was not "
-        "written by one")
 
 
 class _FileIndex:
@@ -1370,20 +1368,21 @@ class _FileIndex:
 
     Every index writer sorts ``key`` strictly within a file (term_stats
     and postings by term, tok by local_idx), so a point read addresses
-    rows instead of masking them: files are pruned by shard, row groups
-    by a bisect over their key bounds, and the requested keys become row
-    indices by ``np.searchsorted`` over a searchable copy of the row
-    group's key chunk — a ``key_range`` read is one slice. The copy is
-    made, and the chunk checked strictly increasing, on first use; so
-    is the row group's table conformed to the dataset schema (casts, the
-    hive ``shard`` column, nulls for columns an older file lacks). Both
-    live in _CHUNK_CACHE beside the decoded column chunks. A file whose
-    keys are out of order or repeated raises ValueError naming it, as
-    soon as the reader indexes its footer or first searches that chunk.
-    The result is the same rows in the same order as
-    ``dataset.to_table(filter=...)``, without a scan plan per call."""
+    rows instead of masking them: files are pruned by shard and row
+    groups by their key range, and the requested keys become row indices
+    by ``np.searchsorted`` over the row group's key column (in place for
+    an integer key, through a cached copy for a string key) — a
+    ``key_range`` read is one slice. Each row group is decoded once into
+    a cached table conformed to the dataset types (casts, nulls for
+    columns an older file lacks), and its key is checked strictly
+    increasing as it is decoded: a row group whose keys are out of order
+    or repeated raises UnsortedIndexError naming the file. The rows
+    taken get the hive ``shard`` column, so the result is the same rows
+    in the same order as ``dataset.to_table(filter=...)``, without a
+    scan plan per call."""
 
     def __init__(self, root: str, key: str, partitioned: bool):
+        import pyarrow as pa
         import pyarrow.dataset as pads
         import pyarrow.parquet as pq
 
@@ -1391,7 +1390,16 @@ class _FileIndex:
                           partitioning="hive" if partitioned else None)
         self.schema = ds.schema
         self.key = key
-        self._conform: dict[tuple, tuple] = {}  # columns -> (schema, sig)
+        # the dataset types cached row groups are conformed to: part of
+        # their cache key, so a snapshot that infers other types (from
+        # another first file) never gets tables cast for the old ones
+        self._sig = ds.schema.to_string(show_field_metadata=False,
+                                        show_schema_metadata=False)
+        self._key_schema = (pa.schema([ds.schema.field(key)])
+                            if key in ds.schema.names else None)
+        # columns -> (their schema, it without the hive column, the
+        # hive column's index or -1)
+        self._schemas: dict[tuple, tuple] = {}
         self.files: list[_File] = []
         for frag in ds.get_fragments():
             shard = pads.get_partition_keys(
@@ -1403,24 +1411,19 @@ class _FileIndex:
                 md = pq.read_metadata(fh)
             names = md.schema.names
             ci = names.index(key) if key in names else None
-            lows, highs, bounded, unbounded = [], [], [], []
+            ranges = []
             for rg in range(md.num_row_groups):
                 rgm = md.row_group(rg)
                 s = rgm.column(ci).statistics if ci is not None else None
                 if rgm.num_rows == 0:
-                    continue  # nothing to read
-                if s is None or not s.has_min_max:
-                    unbounded.append(rg)  # no stats: always read
-                    continue
-                if highs and highs[-1] >= s.min:
-                    raise _unsorted(frag.path, key)
-                lows.append(s.min)
-                highs.append(s.max)
-                bounded.append(rg)
+                    ranges.append(False)  # nothing to read
+                elif s is not None and s.has_min_max:
+                    ranges.append((s.min, s.max))
+                else:
+                    ranges.append(None)  # no stats: always read
             self.files.append(_File(frag.path, shard,
                                     (st.st_mtime_ns, st.st_size), md,
-                                    frozenset(names), lows, highs, bounded,
-                                    unbounded))
+                                    frozenset(names), ranges))
 
     def read(self, columns: list[str], keys=None, shard_keys=None,
              key_range=None):
@@ -1430,6 +1433,8 @@ class _FileIndex:
         ``key_range`` (lo, hi); all rows when no filter is given. Raises
         FileNotFoundError when a file the read touches is gone or
         changed — also on a full cache hit."""
+        import bisect
+
         import pyarrow as pa
 
         filtered = keys is not None or shard_keys is not None \
@@ -1443,7 +1448,20 @@ class _FileIndex:
                     continue
             if filtered and self.key not in f.names:
                 continue  # key column absent: no row can match
-            rgs = _row_groups(f, vals, key_range)
+            rgs = []
+            for rg, r in enumerate(f.ranges):
+                if r is False:
+                    continue
+                if r is not None:
+                    lo, hi = r
+                    if vals is not None:
+                        i = bisect.bisect_left(vals, lo)
+                        if i == len(vals) or vals[i] > hi:
+                            continue
+                    elif key_range is not None and (
+                            hi < key_range[0] or lo >= key_range[1]):
+                        continue
+                rgs.append(rg)
             if rgs:
                 plan.append((f, vals, rgs))
         for f, _, _ in plan:
@@ -1454,142 +1472,104 @@ class _FileIndex:
             if (st.st_mtime_ns, st.st_size) != f.ident:
                 raise _stale(f.path)
         cols = tuple(columns)
-        conform = self._conform.get(cols)
-        if conform is None:
+        hit = self._schemas.get(cols)
+        if hit is None:
             schema = pa.schema([self.schema.field(c) for c in cols])
-            conform = self._conform[cols] = (schema, schema.to_string())
-        schema = conform[0]
-        hive = schema.get_field_index("shard")
+            hive = schema.get_field_index("shard")
+            hit = self._schemas[cols] = (
+                schema, schema.remove(hive) if hive >= 0 else schema, hive)
+        schema, inner, hive = hit
         parts = []
         for f, vals, rgs in plan:
+            fill = hive >= 0 and f.shard is not None \
+                and "shard" not in f.names
+            stored = inner if fill else schema
             for rg in rgs:
                 if not filtered:
-                    parts.append(_conformed(f, rg, *conform))
-                    continue
-                ks = _sorted_keys(f, rg, self.key)
-                if key_range is not None:
-                    lo, hi = np.searchsorted(ks, key_range)
-                    if hi > lo:
-                        parts.append(_conformed(f, rg, *conform).slice(
-                            lo, hi - lo))
-                    continue
-                want = np.asarray(vals, dtype=ks.dtype)
-                pos = np.searchsorted(ks, want)
-                rows = pos[ks[np.minimum(pos, ks.size - 1)] == want]
-                if not rows.size:
-                    continue
-                # a gather, not a slice, even for one run of rows: take
-                # builds the buffers a filter does (validity bitmaps
-                # included), so result sizes stay those of a dataset scan
-                tbl = _conformed(f, rg, *conform)
-                if hive >= 0 and "shard" not in f.names:
-                    # ...except the constant hive column, sliced to stay
-                    # without a bitmap, as the dataset scan returns it
-                    got = tbl.remove_column(hive).take(rows)
-                    parts.append(got.add_column(
-                        hive, schema.field(hive),
-                        tbl.column(hive).slice(0, rows.size)))
+                    got = _row_group(f, rg, stored, self._sig, self.key)
                 else:
-                    parts.append(tbl.take(rows))
+                    ks = _sorted_keys(f, rg, self._key_schema, self._sig)
+                    if key_range is not None:
+                        lo, hi = np.searchsorted(ks, key_range)
+                        if hi <= lo:
+                            continue
+                        got = _row_group(f, rg, stored, self._sig,
+                                         self.key).slice(lo, hi - lo)
+                    else:
+                        want = np.asarray(vals, dtype=ks.dtype)
+                        pos = np.searchsorted(ks, want)
+                        rows = pos[ks[np.minimum(pos, ks.size - 1)] == want]
+                        if not rows.size:
+                            continue
+                        # a gather, not a slice, even for one run of rows:
+                        # take builds the buffers a filter does (validity
+                        # bitmaps included), so result sizes stay those
+                        # of a dataset scan
+                        got = _row_group(f, rg, stored, self._sig,
+                                         self.key).take(rows)
+                if fill:
+                    # hive partition value, without a validity bitmap
+                    # (as the dataset scan returns it)
+                    field = schema.field(hive)
+                    got = got.add_column(hive, field, pa.array(np.full(
+                        got.num_rows, f.shard, field.type.to_pandas_dtype()),
+                        field.type))
+                parts.append(got)
         if not parts:
             return schema.empty_table()
         return pa.concat_tables(parts)
 
 
-def _row_groups(f: _File, vals, key_range) -> list[int]:
-    """Row groups of ``f`` that may hold a key of ``vals`` (sorted) or of
-    the half-open ``key_range``, or every non-empty one when neither is
-    given, in file order. Bisects the sorted row-group bounds, so the
-    cost follows the keys and row groups that meet, not the file."""
-    import bisect
-
-    if key_range is not None:
-        picked = f.bounded[bisect.bisect_left(f.highs, key_range[0]):
-                           bisect.bisect_left(f.lows, key_range[1])]
-    elif vals is None:
-        picked = list(f.bounded)
-    else:
-        picked, i, j = [], 0, 0
-        while j < len(vals):
-            # first row group whose max reaches the next wanted key
-            i = bisect.bisect_left(f.highs, vals[j], i)
-            if i == len(f.highs):
-                break
-            if f.lows[i] <= vals[j]:
-                picked.append(f.bounded[i])
-                j = bisect.bisect_right(vals, f.highs[i], j)
-            else:  # skip the keys that fall between row groups
-                j = bisect.bisect_left(vals, f.lows[i], j)
-    if f.unbounded:
-        picked = sorted(picked + f.unbounded)
-    return picked
-
-
-def _sorted_keys(f: _File, rg: int, key: str) -> np.ndarray:
-    """Searchable copy of row group ``rg``'s ``key`` chunk, cached in
-    _CHUNK_CACHE and checked strictly increasing on the way in (raises
-    ValueError naming the file otherwise). The chunk itself comes from
-    _chunks on every call, so the row groups a read touches are exactly
-    the ones that pass through it."""
+def _sorted_keys(f: _File, rg: int, key_schema, sig: str) -> np.ndarray:
+    """Searchable keys of row group ``rg`` (``key_schema`` holds the key
+    field; _row_group checked them strictly increasing when it decoded
+    them). An integer key is searched in place, as a view of the cached
+    column; a string key through a copy of its str objects, cached in
+    _CHUNK_CACHE."""
     import sys
 
-    kc = _chunks(f, rg, [key])[0]
-    ck = (f.path, *f.ident, rg, key, "sorted")
+    import pyarrow as pa
+
+    key = key_schema.field(0)
+    if pa.types.is_integer(key.type):
+        return _row_group(f, rg, key_schema, sig, key.name).column(
+            0).chunk(0).to_numpy()
+    ck = (f.path, *f.ident, rg, key.name, "sorted")
     hit = _CHUNK_CACHE.get(ck)
     if hit is not None:
         return hit[0].keys
-    ks = kc.to_numpy(zero_copy_only=False)
-    if kc.null_count or not np.all(ks[1:] > ks[:-1]):
-        raise _unsorted(f.path, key)
-    nbytes = ks.nbytes
-    if ks.dtype == object:
-        nbytes += sum(map(sys.getsizeof, ks))
-    _CHUNK_CACHE.put(ck, (_SortedKeys(ks, nbytes),))
+    ks = _row_group(f, rg, key_schema, sig, key.name).column(0).to_numpy()
+    _CHUNK_CACHE.put(ck, (_SortedKeys(
+        ks, ks.nbytes + sum(map(sys.getsizeof, ks))),))
     return ks
 
 
-def _conformed(f: _File, rg: int, schema, sig: str):
-    """Row group ``rg`` of ``f`` as a table of ``schema`` (``sig`` is its
-    string form, the cheap-to-hash half of the cache key): stored
-    columns cast to the dataset type, the hive ``shard`` value filled in
-    and columns this older file lacks as nulls. Built once per (file,
-    row group, schema) and cached in _CHUNK_CACHE."""
+def _row_group(f: _File, rg: int, schema, sig: str, key: str):
+    """Row group ``rg`` of ``f`` as a table of ``schema`` (fields of the
+    dataset schema whose string form is ``sig``): stored columns cast to
+    the dataset type, columns this older file lacks as nulls.
+    _CHUNK_CACHE keeps one table per row group, of every column read so
+    far; a read that needs columns it lacks reads just those
+    (single-threaded, through a handle whose identity is re-checked
+    against the file index) and replaces it with the wider table, which
+    shares the columns already held. The ``key`` column is checked
+    strictly increasing as it is decoded (raises UnsortedIndexError
+    naming the file otherwise)."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    ck = (f.path, *f.ident, rg, sig, "table")
+    ck = (f.path, *f.ident, rg, sig)
     hit = _CHUNK_CACHE.get(ck)
-    if hit is not None:
-        return hit[0]
-    n = f.md.row_group(rg).num_rows
-    stored = [fld.name for fld in schema if fld.name in f.names]
-    got = dict(zip(stored, _chunks(f, rg, stored)))
-    cols = []
-    for field in schema:
-        if field.name in got:
-            a = got[field.name]
-            if a.type != field.type:
-                a = a.cast(field.type)
-        elif field.name == "shard" and f.shard is not None:
-            # hive partition value, without a validity bitmap (as the
-            # dataset scan returns it)
-            a = pa.array(np.full(n, f.shard, field.type.to_pandas_dtype()),
-                         field.type)
-        else:  # a column this older file lacks
-            a = pa.nulls(n, field.type)
-        cols.append(a)
-    tbl = pa.Table.from_arrays(cols, schema=schema)
-    _CHUNK_CACHE.put(ck, (tbl,))
-    return tbl
-
-
-def _chunks(f: _File, rg: int, columns: list[str]) -> list:
-    """Decoded column chunks of row group ``rg`` of ``f``: hits from
-    _CHUNK_CACHE, misses read single-threaded (and cached) through a
-    handle whose identity is re-checked against the file index."""
-    keys = [(f.path, *f.ident, rg, c) for c in columns]
-    out = [_CHUNK_CACHE.get(k) for k in keys]
-    miss = [c for c, hit in zip(columns, out) if hit is None]
-    if miss:
+    tbl = hit[0] if hit is not None else None
+    if tbl is not None:
+        try:
+            return tbl.select(schema.names)
+        except KeyError:
+            pass  # a column not read yet: widen below
+    have = tbl.schema.names if tbl is not None else ()
+    missing = [fld for fld in schema if fld.name not in have]
+    stored = [fld.name for fld in missing if fld.name in f.names]
+    if stored:
         import pyarrow.parquet as pq
 
         try:
@@ -1600,14 +1580,30 @@ def _chunks(f: _File, rg: int, columns: list[str]) -> list:
             st = os.fstat(fh.fileno())
             if (st.st_mtime_ns, st.st_size) != f.ident:
                 raise _stale(f.path)
-            tbl = pq.ParquetFile(fh, metadata=f.md).read_row_group(
-                rg, columns=miss, use_threads=False)
-        for c in miss:
-            col = tbl.column(c)
-            arr = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
-            _CHUNK_CACHE.put((f.path, *f.ident, rg, c), (arr,))
-            out[columns.index(c)] = (arr,)
-    return [hit[0] for hit in out]
+            got = pq.ParquetFile(fh, metadata=f.md).read_row_group(
+                rg, columns=stored, use_threads=False)
+    n = f.md.row_group(rg).num_rows
+    for field in missing:
+        if field.name in f.names:
+            col = got.column(field.name)
+            a = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+            if a.type != field.type:
+                a = a.cast(field.type)
+            if field.name == key and (a.null_count or n > 1 and not pc.all(
+                    pc.greater(a.slice(1), a.slice(0, n - 1))).as_py()):
+                raise UnsortedIndexError(
+                    f"{f.path}: key column {key!r} is not strictly "
+                    f"increasing in row group {rg}; every index writer "
+                    "sorts it within a file, so this index was written "
+                    "by an older or foreign writer. Rewrite it with "
+                    "compact_index.")
+        else:  # a column this older file lacks
+            a = pa.nulls(n, field.type)
+        tbl = (pa.Table.from_arrays([a], schema=pa.schema([field]))
+               if tbl is None else tbl.append_column(field, a))
+    _CHUNK_CACHE.discard(ck)
+    _CHUNK_CACHE.put(ck, (tbl,))
+    return tbl.select(schema.names)
 
 
 class _PointReads:

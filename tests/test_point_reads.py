@@ -112,16 +112,16 @@ def test_tok_reads_match_dataset(spark, small_rg_index):
 
 def test_only_covering_row_groups_are_read(spark, small_rg_index,
                                            monkeypatch):
-    """Row-group pruning: a term read touches exactly the (file, row
+    """Row-group pruning: a term read searches exactly the (file, row
     group) pairs whose footer term range covers a requested term."""
     touched: list[tuple[str, int]] = []
-    orig = Q._chunks
+    orig = Q._sorted_keys
 
-    def counting(f, rg, columns):
+    def counting(f, rg, *args):
         touched.append((f.path, rg))
-        return orig(f, rg, columns)
+        return orig(f, rg, *args)
 
-    monkeypatch.setattr(Q, "_chunks", counting)
+    monkeypatch.setattr(Q, "_sorted_keys", counting)
     vocab = _vocab(small_rg_index)
     terms = sorted([vocab[5], vocab[len(vocab) // 2], vocab[-3]])
     want, total = set(), 0
@@ -294,8 +294,8 @@ def test_concurrent_first_touch_stress(spark, small_rg_index):
         assert Q._CHUNK_CACHE._bytes == sum(
             a.nbytes for v in Q._CHUNK_CACHE._d.values() for a in v)
         kinds = {type(v[0]).__name__ for v in Q._CHUNK_CACHE._d.values()}
-    # decoded chunks, searchable key copies and conformed row groups
-    assert {"_SortedKeys", "Table"} <= kinds, kinds
+    # one decoded, conformed table per row group and the key copies
+    assert kinds == {"_SortedKeys", "Table"}, kinds
 
 
 def test_key_range_reads_match_dataset(spark, small_rg_index):
@@ -333,32 +333,53 @@ def _write_table(path, pdf, row_group_size=None):
                    row_group_size=row_group_size)
 
 
-@pytest.mark.parametrize("key,vals,rg_size", [
-    ("term", ["apple", "cherry", "banana"], None),   # out of order
-    ("term", ["apple", "banana", "banana"], None),   # duplicate key
-    ("term", ["apple", "cherry", "banana", "date"], 2),  # across groups
-    ("local_idx", [0, 2, 1], None),
-    ("local_idx", [0, 1, 1, 2], 2),
+@pytest.mark.parametrize("key,vals", [
+    ("term", ["apple", "cherry", "banana"]),   # out of order
+    ("term", ["apple", "banana", "banana"]),   # duplicate key
+    ("local_idx", [0, 2, 1]),
+    ("local_idx", [0, 1, 1]),
 ])
-def test_unsorted_key_chunk_raises(tmp_path, key, vals, rg_size):
-    """A file whose key is not strictly increasing fails loudly, naming
-    the file — within one row group (at the first read of the chunk) and
-    across row groups (when its footer is indexed)."""
+def test_unsorted_key_chunk_raises(tmp_path, key, vals):
+    """A row group whose key is not strictly increasing fails loudly as
+    a fault of the index (not a ValueError, which callers treat as a bad
+    query), naming the file and compact_index as the repair."""
     import pandas as pd
 
     root = str(tmp_path / "table")
     path = os.path.join(root, "shard=0", "part-0.parquet")
-    _write_table(path, pd.DataFrame({key: vals, "df": range(len(vals))}),
-                 rg_size)
+    _write_table(path, pd.DataFrame({key: vals, "df": range(len(vals))}))
 
     def read():
         fi = Q._FileIndex(root, key, partitioned=True)
         return fi.read([key, "df"], shard_keys={0: sorted(set(vals))[:1]})
 
-    with pytest.raises(ValueError, match="part-0.parquet"):
-        read()
-    with pytest.raises(ValueError, match="part-0.parquet"):
-        read()  # also once the chunk is cached
+    for _ in range(2):  # also once the key chunk is cached
+        with pytest.raises(Q.UnsortedIndexError,
+                           match="part-0.parquet.*compact_index") as exc:
+            read()
+        assert not isinstance(exc.value, ValueError)
+
+
+@pytest.mark.parametrize("key,vals", [
+    ("term", ["apple", "cherry", "banana", "date"]),
+    ("local_idx", [0, 1, 1, 2]),
+])
+def test_overlapping_row_groups_read_like_dataset(tmp_path, key, vals):
+    """Row groups are searched one at a time in file order, so a file
+    sorted within each row group but not across them still reads the
+    dataset scan's rows, in its order."""
+    import pandas as pd
+
+    root = str(tmp_path / "table")
+    _write_table(os.path.join(root, "part-0.parquet"),
+                 pd.DataFrame({key: vals, "df": range(len(vals))}), 2)
+    ds = pads.dataset(root, format="parquet")
+    fi = Q._FileIndex(root, key, partitioned=False)
+    assert len(fi.files[0].ranges) == 2
+    for keys in (sorted(set(vals)), sorted(set(vals))[1:3]):
+        want = ds.to_table(columns=[key, "df"],
+                           filter=pads.field(key).isin(keys))
+        assert fi.read([key, "df"], keys=keys).equals(want), keys
 
 
 def test_sorted_hand_written_file_reads_by_address(tmp_path):
@@ -373,7 +394,7 @@ def test_sorted_hand_written_file_reads_by_address(tmp_path):
     _write_table(os.path.join(root, "part-0.parquet"), pdf, 16)
     ds = pads.dataset(root, format="parquet")
     fi = Q._FileIndex(root, "term", partitioned=False)
-    assert len(fi.files[0].bounded) == 7
+    assert len(fi.files[0].ranges) == 7
     for keys in (["t000"], ["t001", "t005"], ["t010", "t012", "t014"],
                  ["t004", "t040", "t041", "t150", "t198", "t199"],
                  terms):
@@ -387,15 +408,18 @@ def test_sorted_hand_written_file_reads_by_address(tmp_path):
 
 
 def test_point_read_cache_entries_are_accounted(tmp_path):
-    """A filtered read caches the key chunk, its searchable copy (whose
-    size counts the str objects it holds) and the conformed row group;
-    _CHUNK_CACHE's byte count stays the sum of its entries' nbytes."""
+    """A filtered read caches one table of the row group's decoded
+    columns and the key's searchable copy (whose size counts the str
+    objects it holds); a read of one more column widens that table
+    instead of adding an entry, and _CHUNK_CACHE's byte count stays the
+    sum of its entries' nbytes."""
     import pandas as pd
 
     root = str(tmp_path / "table")
     path = os.path.join(root, "part-0.parquet")
     terms = [f"term{i:04d}" for i in range(300)]
-    _write_table(path, pd.DataFrame({"term": terms, "df": range(300)}))
+    _write_table(path, pd.DataFrame({"term": terms, "df": range(300),
+                                     "extra": np.arange(300) + 0.5}))
     fi = Q._FileIndex(root, "term", partitioned=False)
     assert fi.read(["term", "df"], keys=["term0007"]).num_rows == 1
     with Q._CHUNK_CACHE._lock:
@@ -406,7 +430,43 @@ def test_point_read_cache_entries_are_accounted(tmp_path):
     assert len(sk) == 1 and list(sk[0].keys) == terms
     assert sk[0].nbytes == sk[0].keys.nbytes + sum(
         sys.getsizeof(t) for t in terms)
-    assert len(mine) == 4  # term and df chunks, key copy, conformed table
+    assert len(mine) == 2  # the row group's table, the key copy
+    tbl = next(e for e in mine if not isinstance(e, Q._SortedKeys))
+    assert tbl.column_names == ["term", "df"]
+    assert fi.read(["term", "extra"], keys=["term0009"]).column(
+        "extra").to_pylist() == [9.5]
+    with Q._CHUNK_CACHE._lock:
+        mine = [v[0] for k, v in Q._CHUNK_CACHE._d.items() if k[0] == path]
+        assert Q._CHUNK_CACHE._bytes == sum(
+            a.nbytes for v in Q._CHUNK_CACHE._d.values() for a in v)
+    assert len(mine) == 2
+    tbl = next(e for e in mine if not isinstance(e, Q._SortedKeys))
+    assert tbl.column_names == ["term", "df", "extra"]
+
+
+def test_cached_row_groups_follow_the_dataset_types(tmp_path):
+    """A snapshot whose dataset schema has other types (inferred from a
+    new first file) reads a file another snapshot cached as a table of
+    its own types, not of the old ones."""
+    import pandas as pd
+    import pyarrow as pa
+
+    root = str(tmp_path / "table")
+    old = os.path.join(root, "part-1.parquet")
+    os.makedirs(root)
+    pq.write_table(pa.table({"term": ["a", "b"],
+                             "df": pa.array([1, 2], pa.int32())}), old)
+    fi = Q._FileIndex(root, "term", partitioned=False)
+    assert fi.read(["term", "df"], keys=["a", "b"]).schema.field(
+        "df").type == pa.int32()
+    _write_table(os.path.join(root, "part-0.parquet"),
+                 pd.DataFrame({"term": ["c"], "df": [3]}))  # int64
+    fi = Q._FileIndex(root, "term", partitioned=False)
+    got = fi.read(["term", "df"], keys=["a", "c"])
+    want = pads.dataset(root, format="parquet").to_table(
+        columns=["term", "df"], filter=pads.field("term").isin(["a", "c"]))
+    assert got.schema.field("df").type == pa.int64()
+    assert got.equals(want)
 
 
 def test_update_keeps_tok_files_sorted(spark, tmp_path):

@@ -398,3 +398,52 @@ def test_serve_bool_mode(served):
         with pytest.raises(urllib.error.HTTPError) as exc:
             _get(port, f"/search?q={bad}&k=5&mode=bool")
         assert exc.value.code == 400
+
+
+def test_serve_unsorted_tok_file_is_500(spark, tmp_path_factory):
+    """A tok file whose local_idx is out of order is a fault of the
+    index, not of the query: /search and POST /query answer 500 naming
+    the file and compact_index, and a compacted copy serves again."""
+    import os
+    import urllib.error
+
+    import numpy as np
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from indexer_spark.build import compact_index
+
+    pdf = gen_transcripts(200, seed=23)
+    d = str(tmp_path_factory.mktemp("unsorted"))
+    build_index(spark, spark.createDataFrame(pdf), d,
+                BuildConfig(block_size=32, id_partitions=2))
+    for f in pads.dataset(os.path.join(d, "tok"), format="parquet",
+                          partitioning="hive").files:
+        tbl = pq.read_table(f)
+        pq.write_table(tbl.take(np.arange(tbl.num_rows)[::-1]), f)
+        # drop the Hadoop checksum of the old bytes, so Spark reads it
+        crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    q = pdf["text"].iloc[0].split()[0]
+    srv = QueryServer(spark, d, port=0)
+    try:
+        port = srv.start()
+        for send in (lambda: _get(port, f"/search?q={q}&k=5"),
+                     lambda: _post(port, q)):
+            with pytest.raises(urllib.error.HTTPError) as exc:
+                send()
+            assert exc.value.code == 500
+            msg = exc.value.read().decode()
+            assert "tok" in msg and ".parquet" in msg
+            assert "compact_index" in msg
+    finally:
+        srv.stop()
+    out = str(tmp_path_factory.mktemp("unsorted_compacted"))
+    compact_index(spark, d, out)
+    reader = IndexReader(spark, out)
+    try:
+        hits = reader.search(q, 5)
+        assert hits and len(reader.resolve_local(hits)) == len(hits)
+    finally:
+        reader.close()
