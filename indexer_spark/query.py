@@ -10,7 +10,8 @@ score EVERY matching doc, then full sort) with:
   2. executors: scan only postings rows with term IN (...) — Parquet
      row-group pruning via the term-sorted layout stands in for the
      reference's (offset, len) dictionary seeks (tree.rs:434-443),
-  3. per shard (applyInPandas): decode + score vectorized; either
+  3. per shard (Arrow batches: mapInArrow over whole-file tasks, else
+     groupBy(shard).applyInArrow): decode + score vectorized; either
      exhaustively, or with safe block-max pruning ("pruned" mode):
      segments bounded by block boundaries are processed in descending
      score-upper-bound order and the scan stops when no remaining segment
@@ -30,10 +31,12 @@ from __future__ import annotations
 import math
 import os
 from collections import Counter
+from operator import itemgetter
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import (
@@ -403,6 +406,30 @@ def _aggregate_scores_sharded(chunks_by_shard: dict, k: int,
     )
 
 
+#: the postings columns every scorer reads (AND and pruned add
+#: ``blocks``, the positional scorers ``poss``)
+_POST_COLS = ("shard", "term", "df", "docs", "tfs", "dls")
+
+
+def _term_rows(tbl: pa.Table, cols: tuple, by_shard: bool = False) -> list:
+    """The rows of a postings batch as tuples of ``cols``, built from
+    each column's to_pylist() (None for a column the batch lacks), in a
+    stable sort on term — on (term, shard) with ``by_shard``. Scorers
+    walk their rows in this order: it is the sorted-term addition order
+    that keeps per-doc float sums identical on every path."""
+    names, n = tbl.column_names, tbl.num_rows
+    rows = list(zip(*(
+        tbl.column(c).to_pylist() if c in names else [None] * n
+        for c in cols)))
+    key = ("term", "shard") if by_shard and "shard" in names else ("term",)
+    rows.sort(key=itemgetter(*map(cols.index, key)))
+    return rows
+
+
+def _no_hits():
+    return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.float64)
+
+
 def _make_exhaustive_scorer(
     weights: dict[str, float], k1, b, avgdl, k, kind, epoch: tuple | None = None,
     require_all: int = 0,
@@ -414,11 +441,15 @@ def _make_exhaustive_scorer(
     ``require_all``: >0 switches to conjunctive (AND) semantics — only
     docs containing all ``require_all`` distinct query terms survive
     (an extension beyond the OR-only reference, SURVEY §2.7; scoring of
-    survivors is unchanged BM25/TF-IDF)."""
+    survivors is unchanged BM25/TF-IDF).
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
+    Like every scorer here, the returned fn takes a postings
+    ``pyarrow.Table`` (any row order) and returns the top-k as
+    (doc_ids int64, scores float64) numpy arrays."""
+
+    def fn(tbl: pa.Table):
+        if tbl.num_rows == 0:
+            return _no_hits()
         # resolve the cache through the module AT CALL TIME: a direct
         # global reference would be captured BY VALUE by cloudpickle
         # (closures serialize their referenced globals), shipping the
@@ -427,14 +458,11 @@ def _make_exhaustive_scorer(
         cache = None
         if epoch is not None:
             from indexer_spark.query import _DECODED_CACHE as cache
-        pdf = pdf.sort_values("term", kind="stable")
-        has_shard = "shard" in pdf.columns
         # pass 1: cache lookups; the rows that miss batch-decode
         looked, misses = [], []
-        for row in pdf.itertuples():
-            shard_id = int(row.shard) if has_shard else -1
+        for shard, term, df, docs, tfs, dls in _term_rows(tbl, _POST_COLS):
             base_key = (
-                (epoch, shard_id, row.term, int(row.df), len(row.docs))
+                (epoch, -1 if shard is None else shard, term, df, len(docs))
                 if cache is not None else None
             )
             hit = cached = None
@@ -450,8 +478,8 @@ def _make_exhaustive_scorer(
             miss = None
             if hit is None and cached is None:
                 miss = len(misses)
-                misses.append((row.docs, row.tfs, row.dls, row.df))
-            looked.append((weights[row.term], base_key, hit, cached, miss))
+                misses.append((docs, tfs, dls, df))
+            looked.append((weights[term], base_key, hit, cached, miss))
         decoded = _decode_rows(misses)
         # pass 2: contributions in sorted-term order (pins float order)
         id_chunks, sc_chunks = [], []
@@ -488,8 +516,7 @@ def _make_exhaustive_scorer(
         if kind == "tfidf":
             keep = sums != 0.0  # P8: drop exact-zero scores (tree.rs:456-459)
             uids, sums = uids[keep], sums[keep]
-        uids, sums = _topk_merge(uids, sums, k)
-        return pd.DataFrame({"doc_id": uids, "score": sums})
+        return _topk_merge(uids, sums, k)
 
     return fn
 
@@ -518,29 +545,28 @@ def _make_and_scorer(
         idf, k1, b, avgdl, k, "bm25", epoch=epoch, require_all=n_required
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []})
-        if len(pdf) == 0 or pdf["term"].nunique() < n_required:
-            return empty
-        if int(pdf["df"].sum()) < small_shard:
-            return exhaustive(pdf)
+    def fn(tbl: pa.Table):
+        if tbl.num_rows == 0 or pc.count_distinct(
+                tbl.column("term")).as_py() < n_required:
+            return _no_hits()
+        if pc.sum(tbl.column("df")).as_py() < small_shard:
+            return exhaustive(tbl)
         gcache = None
         if epoch is not None:
             from indexer_spark.query import _DECODED_CACHE as gcache
-        shard = int(pdf["shard"].iloc[0])
-        pdf = pdf.sort_values("term", kind="stable")
+        shard = tbl.column("shard")[0].as_py()
         terms = []
-        for row in pdf.itertuples():
-            blocks = list(row.blocks)
+        for _sh, term, df, docs, tfs, dls, blocks in _term_rows(
+                tbl, _POST_COLS + ("blocks",)):
             terms.append({
-                "term": row.term, "df": int(row.df), "docs": row.docs,
-                "tfs": row.tfs, "dls": row.dls, "blocks": blocks,
+                "term": term, "df": df, "docs": docs,
+                "tfs": tfs, "dls": dls, "blocks": blocks,
                 "lasts": np.array(
                     [blk["last_doc_id"] for blk in blocks], dtype=np.int64
                 ),
-                "w": idf[row.term], "cache": {},
+                "w": idf[term], "cache": {},
                 "ckey": (
-                    (epoch, shard, row.term, int(row.df), len(row.docs))
+                    (epoch, shard, term, df, len(docs))
                     if epoch is not None else None
                 ),
             })
@@ -576,7 +602,7 @@ def _make_and_scorer(
         )
         for ti in by_df[1:]:
             if cand.size == 0:
-                return empty
+                return _no_hits()
             t = terms[ti]
             bis = np.searchsorted(t["lasts"], cand)
             valid = bis < t["lasts"].size  # past the term's last doc
@@ -591,7 +617,7 @@ def _make_and_scorer(
                 present[sel] = hit
             cand = cand[present]
         if cand.size == 0:
-            return empty
+            return _no_hits()
 
         score = np.zeros(cand.size, dtype=np.float64)
         for t in terms:  # sorted-term order pins float addition order
@@ -605,8 +631,7 @@ def _make_and_scorer(
                 contrib[sel] = t["w"] * _bm25_normpart(
                     tfv, dl[pos], k1, b, avgdl)
             score += contrib
-        uids, sums = _topk_merge(cand, score, k)
-        return pd.DataFrame({"doc_id": uids, "score": sums})
+        return _topk_merge(cand, score, k)
 
     return fn
 
@@ -705,8 +730,8 @@ def _decode_rows(rows: list) -> list:
     return out
 
 
-def _decode_merged_terms(pdf: pd.DataFrame, epoch, positional: bool):
-    """Decode every postings row of ``pdf`` (cache-aware, slot -1) and
+def _decode_merged_terms(tbl: pa.Table, epoch, positional: bool):
+    """Decode every postings row of ``tbl`` (cache-aware, slot -1) and
     MERGE same-term rows across shards into one entry per term with
     globally sorted doc arrays — valid because shards partition the
     doc-id space in shard order (offset[s+1] = offset[s] + count[s]), so
@@ -723,16 +748,13 @@ def _decode_merged_terms(pdf: pd.DataFrame, epoch, positional: bool):
     cache = None
     if epoch is not None:
         from indexer_spark.query import _DECODED_CACHE as cache
-    has_shard = "shard" in pdf.columns
-    pdf = pdf.sort_values(
-        ["term", "shard"] if has_shard else ["term"], kind="stable"
-    )
     looked, misses = [], []
-    for row in pdf.itertuples():
-        shard_id = int(row.shard) if has_shard else -1
-        plen = len(row.docs) if row.docs is not None else int(row.plen)
+    for shard, term, df, docs, tfs, dls, poss, plen in _term_rows(
+            tbl, _POST_COLS + ("poss", "plen"), by_shard=True):
+        if docs is not None:
+            plen = len(docs)
         base_key = (
-            (epoch, shard_id, row.term, int(row.df), plen)
+            (epoch, -1 if shard is None else shard, term, df, plen)
             if cache is not None else None
         )
         cached = cache.get(base_key + (-1,)) if base_key else None
@@ -741,9 +763,9 @@ def _decode_merged_terms(pdf: pd.DataFrame, epoch, positional: bool):
             # a None payload (cache-fed pass, entry evicted) raises
             # _FastCacheMiss inside the batch decode
             miss = len(misses)
-            misses.append((row.docs, row.tfs, row.dls, row.df))
-        poss_raw = getattr(row, "poss", None) if positional else None
-        looked.append((row.term, base_key, cached, poss_raw, miss))
+            misses.append((docs, tfs, dls, df))
+        looked.append((term, base_key, cached,
+                       poss if positional else None, miss))
     decoded = _decode_rows(misses)
     per_term: dict[str, list] = {}
     for term, base_key, cached, poss_raw, miss in looked:
@@ -911,14 +933,14 @@ def _make_phrase_scorer(
     as every other mode)."""
     n_required = len(qoffsets)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []})
-        if len(pdf) == 0 or pdf["term"].nunique() < n_required:
-            return empty
+    def fn(tbl: pa.Table):
+        if tbl.num_rows == 0 or pc.count_distinct(
+                tbl.column("term")).as_py() < n_required:
+            return _no_hits()
         # decode + merge same-term rows across shards (one entry per
         # term, globally sorted docs): the driver fast path feeds this
-        # fn the WHOLE matched pdf in one call on many-shard indexes
-        cache, entries = _decode_merged_terms(pdf, epoch, True)
+        # fn the WHOLE matched table in one call on many-shard indexes
+        cache, entries = _decode_merged_terms(tbl, epoch, True)
         terms = [
             {"term": t, **e, "w": idf[t], "qoffs": qoffsets[t]}
             for t, e in entries.items()
@@ -927,10 +949,10 @@ def _make_phrase_scorer(
         cand = terms[by_df[0]]["docs"]
         for ti in by_df[1:]:
             if cand.size == 0:
-                return empty
+                return _no_hits()
             cand = cand[np.isin(cand, terms[ti]["docs"], assume_unique=True)]
         if cand.size == 0:
-            return empty
+            return _no_hits()
         # candidate-driven positions decode: only surviving candidates'
         # lists are ever varint-decoded (decode_positions_select) — on a
         # hot term the conjunction is typically orders of magnitude
@@ -951,7 +973,7 @@ def _make_phrase_scorer(
         )
         cand = cand[keep]
         if cand.size == 0:
-            return empty
+            return _no_hits()
 
         score = np.zeros(cand.size, dtype=np.float64)
         for t in terms:  # sorted-term order pins float addition order
@@ -960,8 +982,7 @@ def _make_phrase_scorer(
             score += t["w"] * _bm25_normpart(
                 tfv, t["dls"][pos_in], k1, b, avgdl
             )
-        uids, sums = _topk_merge(cand, score, k)
-        return pd.DataFrame({"doc_id": uids, "score": sums})
+        return _topk_merge(cand, score, k)
 
     return fn
 
@@ -987,11 +1008,11 @@ def _make_near_scorer(
     every other mode)."""
     n_required = len(idf)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []})
-        if len(pdf) == 0 or pdf["term"].nunique() < n_required:
-            return empty
-        cache, entries = _decode_merged_terms(pdf, epoch, True)
+    def fn(tbl: pa.Table):
+        if tbl.num_rows == 0 or pc.count_distinct(
+                tbl.column("term")).as_py() < n_required:
+            return _no_hits()
+        cache, entries = _decode_merged_terms(tbl, epoch, True)
         terms = [
             {"term": t, **e, "w": idf[t]} for t, e in entries.items()
         ]
@@ -999,10 +1020,10 @@ def _make_near_scorer(
         cand = terms[by_df[0]]["docs"]
         for ti in by_df[1:]:
             if cand.size == 0:
-                return empty
+                return _no_hits()
             cand = cand[np.isin(cand, terms[ti]["docs"], assume_unique=True)]
         if cand.size == 0:
-            return empty
+            return _no_hits()
         if n_required > 1:
             # candidate-driven positions decode (decode_positions_select:
             # only surviving candidates' lists are varint-decoded, in
@@ -1038,7 +1059,7 @@ def _make_near_scorer(
             matched = np.unique(starts_all[ok] // stride)
             cand = cand[matched]
         if cand.size == 0:
-            return empty
+            return _no_hits()
 
         score = np.zeros(cand.size, dtype=np.float64)
         for t in terms:  # sorted-term order pins float addition order
@@ -1047,8 +1068,7 @@ def _make_near_scorer(
             score += t["w"] * _bm25_normpart(
                 tfv, t["dls"][pos_in], k1, b, avgdl
             )
-        uids, sums = _topk_merge(cand, score, k)
-        return pd.DataFrame({"doc_id": uids, "score": sums})
+        return _topk_merge(cand, score, k)
 
     return fn
 
@@ -1069,11 +1089,10 @@ def _make_bool_scorer(
     reference is OR-only, SURVEY §2.7)."""
     from .boolquery import eval_docs
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []})
-        if len(pdf) == 0:
-            return empty
-        cache, data = _decode_merged_terms(pdf, epoch, positional)
+    def fn(tbl: pa.Table):
+        if tbl.num_rows == 0:
+            return _no_hits()
+        cache, data = _decode_merged_terms(tbl, epoch, positional)
         term_docs = {t: e["docs"] for t, e in data.items()}
         no_docs = np.empty(0, dtype=np.int64)
 
@@ -1106,7 +1125,7 @@ def _make_bool_scorer(
 
         cand = eval_docs(pq.root, term_docs, phrase_fn)
         if cand.size == 0:
-            return empty
+            return _no_hits()
 
         score = np.zeros(cand.size, dtype=np.float64)
         for t in sorted(idf):  # sorted-term order pins float addition
@@ -1121,17 +1140,27 @@ def _make_bool_scorer(
                 tfv, e["dls"][pos_c], k1, b, avgdl
             )
             score += np.where(mask, contrib, 0.0)
-        uids, sums = _topk_merge(cand, score, k)
-        return pd.DataFrame({"doc_id": uids, "score": sums})
+        return _topk_merge(cand, score, k)
 
     return fn
 
 
+def _score_batch(hits) -> pa.RecordBatch:
+    """A scorer's (doc_ids, scores) as one ``_SCORE_SCHEMA`` batch."""
+    return pa.record_batch([pa.array(hits[0], pa.int64()),
+                            pa.array(hits[1], pa.float64())],
+                           names=["doc_id", "score"])
+
+
 def _shard_grouped(scorer):
-    """mapInPandas wrapper: accumulate a task's Arrow batches, then run
-    the per-shard scorer on each shard present. Correct ONLY when a
-    shard's matched postings rows all land in one task — IndexReader
-    pins spark.sql.files.maxPartitionBytes above the largest committed
+    """mapInArrow wrapper: concatenate a task's Arrow batches into one
+    table, then run the per-shard scorer ONCE per shard present, on all
+    of that shard's rows, yielding one doc_id/score batch per shard. The
+    grouping is a stable take of each shard's row indices, not a slice:
+    after append_index one task can hold a shard's files apart, so its
+    rows need not be contiguous. Correct ONLY when a shard's matched
+    postings rows all land in one task — IndexReader pins
+    spark.sql.files.maxPartitionBytes above the largest committed
     postings file (recorded in stats.json) to enforce that, and falls
     back to the groupBy(shard) exchange when it cannot. Scoring happens
     where the data lives: a hot term's postings bytes are never
@@ -1139,12 +1168,13 @@ def _shard_grouped(scorer):
     GBs and none at 10^12-doc scale."""
 
     def fn(batches):
-        acc = [pdf for pdf in batches if len(pdf)]
+        acc = [b for b in batches if b.num_rows]
         if not acc:
             return
-        whole = pd.concat(acc, ignore_index=True)
-        for _shard, g in whole.groupby("shard", sort=False):
-            yield scorer(g)
+        whole = pa.Table.from_batches(acc)
+        shard = whole.column("shard").to_numpy()
+        for sh in dict.fromkeys(shard.tolist()):
+            yield _score_batch(scorer(whole.take(np.flatnonzero(shard == sh))))
 
     return fn
 
@@ -1171,34 +1201,33 @@ def _make_pruned_scorer(
     small_shard = SMALL_SHARD_THRESHOLD  # captured at scorer creation
     exhaustive = _make_exhaustive_scorer(idf, k1, b, avgdl, k, "bm25", epoch=epoch)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": [], "score": []})
-        if int(pdf["df"].sum()) < small_shard:
-            return exhaustive(pdf)
+    def fn(tbl: pa.Table):
+        if tbl.num_rows == 0:
+            return _no_hits()
+        if pc.sum(tbl.column("df")).as_py() < small_shard:
+            return exhaustive(tbl)
         # runtime import, NOT a global reference: see exhaustive scorer
         gcache = None
         if epoch is not None:
             from indexer_spark.query import _DECODED_CACHE as gcache
-        shard = int(pdf["shard"].iloc[0])
+        shard = tbl.column("shard")[0].as_py()
         ub_scale = 1.0
         if shard_ub_scale:
             ub_scale = shard_ub_scale.get(shard, 1.0)
-        pdf = pdf.sort_values("term", kind="stable")
         terms = []
-        for row in pdf.itertuples():
-            blocks = list(row.blocks)
+        for _sh, term, df, docs, tfs, dls, blocks in _term_rows(
+                tbl, _POST_COLS + ("blocks",)):
             lasts = np.array([blk["last_doc_id"] for blk in blocks], dtype=np.int64)
             norms = np.array([blk["max_norm"] for blk in blocks], dtype=np.float64)
             terms.append({
-                "term": row.term, "df": int(row.df), "docs": row.docs,
-                "tfs": row.tfs, "dls": row.dls, "blocks": blocks,
+                "term": term, "df": df, "docs": docs,
+                "tfs": tfs, "dls": dls, "blocks": blocks,
                 "lasts": lasts,
-                "ub": idf[row.term] * (k1 + 1.0) * np.minimum(norms * ub_scale, 1.0),
-                "w": idf[row.term], "cache": {},
+                "ub": idf[term] * (k1 + 1.0) * np.minimum(norms * ub_scale, 1.0),
+                "w": idf[term], "cache": {},
                 # worker-side LRU key base (persists across queries)
                 "ckey": (
-                    (epoch, shard, row.term, int(row.df), len(row.docs))
+                    (epoch, shard, term, df, len(docs))
                     if epoch is not None else None
                 ),
             })
@@ -1264,7 +1293,7 @@ def _make_pruned_scorer(
             pool_ids, pool_sc = _topk_merge(pool_ids, pool_sc, k)
             if pool_ids.size >= k:
                 theta = pool_sc[-1]
-        return pd.DataFrame({"doc_id": pool_ids, "score": pool_sc})
+        return pool_ids, pool_sc
 
     return fn
 
@@ -1382,7 +1411,6 @@ class _FileIndex:
     scan plan per call."""
 
     def __init__(self, root: str, key: str, partitioned: bool):
-        import pyarrow as pa
         import pyarrow.dataset as pads
         import pyarrow.parquet as pq
 
@@ -1434,8 +1462,6 @@ class _FileIndex:
         FileNotFoundError when a file the read touches is gone or
         changed — also on a full cache hit."""
         import bisect
-
-        import pyarrow as pa
 
         filtered = keys is not None or shard_keys is not None \
             or key_range is not None
@@ -1511,9 +1537,8 @@ class _FileIndex:
                     # hive partition value, without a validity bitmap
                     # (as the dataset scan returns it)
                     field = schema.field(hive)
-                    got = got.add_column(hive, field, pa.array(np.full(
-                        got.num_rows, f.shard, field.type.to_pandas_dtype()),
-                        field.type))
+                    got = got.add_column(hive, field, pa.repeat(
+                        pa.scalar(f.shard, field.type), got.num_rows))
                 parts.append(got)
         if not parts:
             return schema.empty_table()
@@ -1527,8 +1552,6 @@ def _sorted_keys(f: _File, rg: int, key_schema, sig: str) -> np.ndarray:
     column; a string key through a copy of its str objects, cached in
     _CHUNK_CACHE."""
     import sys
-
-    import pyarrow as pa
 
     key = key_schema.field(0)
     if pa.types.is_integer(key.type):
@@ -1555,9 +1578,6 @@ def _row_group(f: _File, rg: int, schema, sig: str, key: str):
     shares the columns already held. The ``key`` column is checked
     strictly increasing as it is decoded (raises UnsortedIndexError
     naming the file otherwise)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     ck = (f.path, *f.ident, rg, sig)
     hit = _CHUNK_CACHE.get(ck)
     tbl = hit[0] if hit is not None else None
@@ -1639,13 +1659,15 @@ class _PointReads:
 _TS_COLS = ("term", "df", "nbytes", "poss_nbytes")
 
 
-def _rows_by_term(pdf: pd.DataFrame) -> dict[str, set]:
+def _rows_by_term(tbl: pa.Table) -> dict[str, set]:
     """term -> {(shard, df, payload_len)} of a postings read, for
     IndexReader._publish_cached."""
     out: dict[str, set] = {}
-    for t, sh, df, docs in zip(pdf["term"], pdf["shard"], pdf["df"],
-                               pdf["docs"]):
-        out.setdefault(t, set()).add((int(sh), int(df), len(docs)))
+    for t, sh, df, ln in zip(
+            tbl.column("term").to_pylist(), tbl.column("shard").to_pylist(),
+            tbl.column("df").to_pylist(),
+            pc.binary_length(tbl.column("docs")).to_pylist()):
+        out.setdefault(t, set()).add((sh, df, ln))
     return out
 
 
@@ -1992,8 +2014,6 @@ class IndexReader:
         pyarrow (select_k — no full-vocabulary to_pylist + Python sort;
         on a large dictionary that materialization is avoidable driver
         memory/CPU). Returns [(term, df, nbytes)] descending."""
-        import pyarrow.compute as pc
-
         def scan(reads):
             ts = reads["term_stats"]
             if not {"term", "nbytes"} <= set(ts.schema.names):
@@ -2067,14 +2087,10 @@ class IndexReader:
         epoch = self._epoch
         block_size = int(self.stats["block_size"])
         terms = [t for t, _, _ in rows]
-        tbl = self._post_table(
-            ["shard", "term", "df", "docs", "tfs", "dls"], terms)
+        tbl = self._post_table(list(_POST_COLS), terms)
         by_term: dict[str, list] = {}
         for sh, t, df, docs, tfs, dls in zip(
-            tbl.column("shard").to_pylist(), tbl.column("term").to_pylist(),
-            tbl.column("df").to_pylist(), tbl.column("docs").to_pylist(),
-            tbl.column("tfs").to_pylist(), tbl.column("dls").to_pylist(),
-        ):
+                *(tbl.column(c).to_pylist() for c in _POST_COLS)):
             by_term.setdefault(t, []).append((sh, df, docs, tfs, dls))
         payload: list[tuple] = []
         spent = 0
@@ -2115,20 +2131,18 @@ class IndexReader:
         bc = self.spark.sparkContext.broadcast(payload)
 
         def task(batches):
-            import pandas as pd_
-
             # runtime import => the WORKER's module instance (a direct
             # closure ref would ship the driver's cache by value)
             from indexer_spark.query import _warm_install_entries
 
             n = _warm_install_entries(bc.value, block_size, budget_bytes)
-            for _pdf in batches:
-                yield pd_.DataFrame({"n": [n]})
+            for _b in batches:
+                yield pa.RecordBatch.from_pydict({"n": [n]})
 
         try:
             out = (
                 self.spark.range(0, par, 1, par)
-                .mapInPandas(task, "n long")
+                .mapInArrow(task, "n long")
                 .agg(F.min("n").alias("n"))
                 .collect()
             )
@@ -2215,19 +2229,11 @@ class IndexReader:
         # still decides — in hottest-first order — which terms actually
         # decode; a budget break merely leaves some prefetched rows
         # unused (the adaptive default budget is sized to hold them all).
-        ptbl_all = self._post_table(
-            ["shard", "term", "df", "docs", "tfs", "dls"],
-            [t for t, _, _ in rows],
-        )
+        ptbl_all = self._post_table(list(_POST_COLS),
+                                    [t for t, _, _ in rows])
         rows_by_term: dict[str, list] = {}
         for sh, t_r, df_r, docs, tfs, dls in zip(
-            ptbl_all.column("shard").to_pylist(),
-            ptbl_all.column("term").to_pylist(),
-            ptbl_all.column("df").to_pylist(),
-            ptbl_all.column("docs").to_pylist(),
-            ptbl_all.column("tfs").to_pylist(),
-            ptbl_all.column("dls").to_pylist(),
-        ):
+                *(ptbl_all.column(c).to_pylist() for c in _POST_COLS)):
             rows_by_term.setdefault(t_r, []).append(
                 (sh, df_r, docs, tfs, dls)
             )
@@ -2359,25 +2365,24 @@ class IndexReader:
         if sum(self._nbytes_cache.get(t, 0) for t in uncovered) \
                 > self.fast_path_bytes:
             return None
-        tbl = self._post_table(
-            ["shard", "term", "df", "docs", "tfs", "dls"], uncovered)
-        pdf = tbl.to_pandas()
+        tbl = self._post_table(list(_POST_COLS), uncovered)
         by_term: dict[str, list] = {}
-        for row in pdf.itertuples():
-            by_term.setdefault(row.term, []).append(row)
+        for sh, t, df, docs, tfs, dls in zip(
+                *(tbl.column(c).to_pylist() for c in _POST_COLS)):
+            by_term.setdefault(t, []).append((sh, df, docs, tfs, dls))
         st = self.stats
         k1, b_, avgdl = st["k1"], st["b"], st["avgdl"]
         looked: dict[str, list] = {}
         misses = []
         for t in uncovered:  # cache lookups; the misses batch-decode
-            for row in by_term.get(t, ()):
-                base = (self._epoch, int(row.shard), t, int(row.df),
-                        len(row.docs))
+            for sh, df, docs, tfs, dls in by_term.get(t, ()):
+                row = (sh, df, len(docs))
+                base = (self._epoch, sh, t, df, len(docs))
                 hit = _DECODED_CACHE.get(base + (slot,))
                 miss = None
                 if hit is None:
                     miss = len(misses)
-                    misses.append((row.docs, row.tfs, row.dls, row.df))
+                    misses.append((docs, tfs, dls, df))
                 looked.setdefault(t, []).append((row, base, hit, miss))
         fresh = _decode_rows(misses)
         by_shard: dict[int, tuple[list, list]] = {}
@@ -2400,11 +2405,10 @@ class IndexReader:
                     else:
                         hit = (d, tfv, dl)
                     _DECODED_CACHE.put(base + (slot,), hit)
-                idc, scc = by_shard.setdefault(int(row.shard), ([], []))
+                idc, scc = by_shard.setdefault(row[0], ([], []))
                 idc.append(hit[0])
                 scc.append((w, hit[1]))
-                decoded.setdefault(t, set()).add(
-                    (int(row.shard), int(row.df), len(row.docs)))
+                decoded.setdefault(t, set()).add(row)
         self._publish_cached(decoded)
         uids, sums = _aggregate_scores_sharded(by_shard, k, require_all)
         uids, sums = _topk_merge(uids, sums, k)
@@ -2413,23 +2417,21 @@ class IndexReader:
 
     def _fast_scored(self, present: list[str], scorer) -> list | None:
         """Driver fast path: when the matched postings payload is small
-        (per-term nbytes from term_stats), read the matched rows with
-        pyarrow (hive shard partitioning; term predicate prunes row
-        groups via the term-sorted layout) and run the SAME numpy
-        exhaustive scorer a distributed task would run — identical
-        arithmetic, identical results, no Spark job. Returns None when
-        the payload exceeds fast_path_bytes (or the index predates the
-        nbytes column), falling back to the distributed plan."""
+        (per-term nbytes from term_stats), point-read the matched rows
+        (_post_table) and pass that Arrow table straight to the SAME
+        numpy exhaustive scorer a distributed task runs on its Arrow
+        batches — identical arithmetic, identical results, no Spark job
+        and no conversion. Returns None when the payload exceeds
+        fast_path_bytes (or the index predates the nbytes column),
+        falling back to the distributed plan."""
         if self.fast_path_bytes <= 0 or not self._has_nbytes:
             return None
         total = sum(self._nbytes_cache.get(t, 0) for t in present)
         if total > self.fast_path_bytes:
             return None
         # shard included: the decoded-postings cache keys on it
-        tbl = self._post_table(
-            ["shard", "term", "df", "docs", "tfs", "dls"], present)
-        pdf = tbl.to_pandas()
-        out = scorer(pdf)
+        tbl = self._post_table(list(_POST_COLS), present)
+        uids, sums = scorer(tbl)
         # record EVERY matched row so repeat queries can skip the parquet
         # read (_fast_from_cache). Unconditional on purpose: recording
         # only cache-resident rows would leave a term's entry PARTIAL
@@ -2437,14 +2439,11 @@ class IndexReader:
         # then silently score from a subset of its shards. With the full
         # list, any evicted entry is a get() miss -> clean fallback to
         # the reading path.
-        self._publish_cached(_rows_by_term(pdf))
+        self._publish_cached(_rows_by_term(tbl))
         self.last_path = "fast"
-        return [
-            (int(d), float(s))
-            for d, s in zip(out["doc_id"].to_numpy(), out["score"].to_numpy())
-        ]
+        return list(zip(uids.tolist(), sums.tolist()))
 
-    def _fast_phrase(self, present: list[str], scorer, k: int,
+    def _fast_phrase(self, present: list[str], scorer,
                      label: str = "fast_phrase",
                      cols: list[str] | None = None) -> list | None:
         """Driver fast path for the shard-grouped scorer modes (phrase /
@@ -2454,19 +2453,21 @@ class IndexReader:
         existed fall back to estimating poss at 1x the postings payload
         — the measured whole-index ratio at 2M turns was poss ~0.6x, so
         the estimate errs toward the distributed plan, never toward an
-        unbounded driver read). Then a pyarrow point-read of ``cols``
-        (default includes the poss column) scored by the SAME scorer a
-        distributed task runs per shard, called ONCE on the whole
-        matched frame (_score_frame): it merges each term's shard rows
-        into one sorted doc array and batch-decodes the uncached rows
-        (_decode_rows), so the pass costs the same few numpy calls
-        whether the terms span 1 shard or 300. The answer is the
-        (score desc, doc_id asc) top-k.
+        unbounded driver read). Then a point read of ``cols`` (default
+        includes the poss column) whose Arrow table goes, unconverted,
+        to the SAME scorer a distributed task runs per shard, called
+        ONCE on the whole matched table: it merges each term's shard rows
+        into one sorted doc array (_decode_merged_terms, which fails
+        loudly on overlapping shard ranges) and batch-decodes the
+        uncached rows (_decode_rows), so the pass costs the same few
+        numpy calls whether the terms span 1 shard or 300. The answer is
+        the scorer's (score desc, doc_id asc) top-k.
 
         Repeats skip the parquet read entirely: every reading pass
         records its rows in the _cached_terms bookkeeping, and a later
-        call whose terms are all recorded replays the scorer over
-        synthetic payload-less rows served from the decoded LRU
+        call whose terms are all recorded replays the scorer over an
+        Arrow table of payload-less rows (null payload columns, plus the
+        recorded payload length ``plen``) served from the decoded LRU
         (slots -1 postings, -3/-4 positions); any evicted entry raises
         _FastCacheMiss and the call falls back to the reading path.
         Result-identical to the distributed plan on every path."""
@@ -2488,42 +2489,29 @@ class IndexReader:
             return None
         # cache-fed replay: all terms' rows known from a previous read
         known = {t: self._cached_terms.get(t) for t in present}
+        hits = None
         if all(v is not None for v in known.values()):
-            rows = []
-            for t in present:
-                for sh, df_r, plen in sorted(known[t]):
-                    rows.append((sh, t, df_r, plen))
-            spdf = pd.DataFrame(
-                rows, columns=["shard", "term", "df", "plen"]
-            )
-            for c in ("docs", "tfs", "dls"):
-                spdf[c] = None
-            if "poss" in cols:
-                spdf["poss"] = None
+            rows = [(sh, t, df_r, plen) for t in present
+                    for sh, df_r, plen in sorted(known[t])]
+            replay = pa.table(
+                {c: [r[i] for r in rows]
+                 for i, c in enumerate(("shard", "term", "df", "plen"))}
+                | {c: pa.nulls(len(rows), pa.binary())
+                   for c in cols if c not in ("shard", "term", "df")})
             try:
-                return self._score_frame(spdf, scorer, k, label)
+                hits = scorer(replay)
             except _FastCacheMiss:
                 pass  # evicted somewhere: take the reading path
-        pdf = self._post_table(cols, present).to_pandas()
-        # record rows so repeats can replay from the cache (same
-        # bookkeeping _fast_scored uses; unconditional for the same
-        # partial-entry reason)
-        self._publish_cached(_rows_by_term(pdf))
-        return self._score_frame(pdf, scorer, k, label)
-
-    def _score_frame(self, pdf, scorer, k: int, label: str) -> list:
-        # ONE scorer call on the whole matched frame: the scorers merge
-        # same-term rows across shards into globally sorted doc arrays
-        # (_decode_merged_terms, which fails loudly on overlapping shard
-        # ranges), so a query costs the same few numpy calls whether its
-        # terms span 1 shard or 300
-        out = scorer(pdf)
-        uids, sums = _topk_merge(
-            out["doc_id"].to_numpy(np.int64),
-            out["score"].to_numpy(np.float64), k,
-        )
+        if hits is None:
+            tbl = self._post_table(cols, present)
+            # record rows so repeats can replay from the cache (same
+            # bookkeeping _fast_scored uses; unconditional for the same
+            # partial-entry reason)
+            self._publish_cached(_rows_by_term(tbl))
+            hits = scorer(tbl)
         self.last_path = label
-        return [(int(d), float(s)) for d, s in zip(uids, sums)]
+        uids, sums = hits
+        return list(zip(uids.tolist(), sums.tolist()))
 
     def _postings_for(self, terms: list[str]) -> DataFrame:
         from .build import POSTINGS_SCHEMA, POSTINGS_SCHEMA_POS
@@ -2934,8 +2922,8 @@ class IndexReader:
             if prep is None:
                 return []
             present, scorer, cols = prep
-            return self._fast_phrase(present, scorer, 1 << 30,
-                                     label="fast_bool", cols=cols)
+            return self._fast_phrase(present, scorer, label="fast_bool",
+                                     cols=cols)
         terms = sorted(set(tokenize(query)))
         if not terms:
             return []
@@ -2997,7 +2985,7 @@ class IndexReader:
         if prep is None:
             return []
         present, scorer, cols = prep
-        hit = self._fast_phrase(present, scorer, k, label="fast_bool",
+        hit = self._fast_phrase(present, scorer, label="fast_bool",
                                 cols=cols)
         if hit is not None:
             return hit
@@ -3079,7 +3067,7 @@ class IndexReader:
                     idf, st["k1"], st["b"], st["avgdl"], k, window,
                     epoch=self._epoch,
                 )
-            hit = self._fast_phrase(terms, scorer, k, label=f"fast_{mode}")
+            hit = self._fast_phrase(terms, scorer, label=f"fast_{mode}")
             if hit is not None:
                 return hit
             df = self.search_df(query, k, mode, window=window)
@@ -3211,7 +3199,8 @@ class IndexReader:
 
     def _apply_scorer(self, postings: DataFrame, scorer):
         """Shuffle-free when whole-file tasks are guaranteed (score in
-        place via mapInPandas); otherwise exchange by shard first."""
+        place via mapInArrow); otherwise exchange by shard first
+        (applyInArrow). Either way the scorer sees Arrow tables."""
         if self._whole_file_tasks:
             # re-pin the split-size confs on every query: another reader's
             # close() may have restored lower priors session-wide, which
@@ -3223,11 +3212,12 @@ class IndexReader:
                     cur = _parse_bytes(self.spark.conf.get(key))
                     if cur is None or cur < self._need_bytes:
                         self.spark.conf.set(key, str(self._need_bytes))
-            return postings.mapInPandas(
+            return postings.mapInArrow(
                 _shard_grouped(scorer), schema=_SCORE_SCHEMA
             )
-        return postings.groupBy("shard").applyInPandas(
-            scorer, schema=_SCORE_SCHEMA
+        return postings.groupBy("shard").applyInArrow(
+            lambda tbl: pa.Table.from_batches([_score_batch(scorer(tbl))]),
+            schema=_SCORE_SCHEMA,
         )
 
     def search_tfidf(self, query: str, k: int | None = 10) -> list[tuple[int, float]]:

@@ -180,11 +180,13 @@ def test_and_scorer_skips_hot_term_blocks(built_index, monkeypatch):
     scorer at scale — while matching the exhaustive conjunction."""
     import os
 
-    import pandas as pd
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
     import indexer_spark.query as qmod
-    from indexer_spark.build import read_stats
+    from indexer_spark.build import META_TERM, read_stats
 
     index_dir, _ = built_index
     st = read_stats(index_dir)
@@ -192,24 +194,26 @@ def test_and_scorer_skips_hot_term_blocks(built_index, monkeypatch):
                       format="parquet", partitioning="hive")
     tbl = ds.to_table(
         columns=["shard", "term", "df", "docs", "tfs", "dls", "blocks"])
-    allpdf = tbl.to_pandas()
-    from indexer_spark.build import META_TERM
-
-    allpdf = allpdf[allpdf["term"] != META_TERM].reset_index(drop=True)
-    totals = allpdf.groupby("term")["df"].sum()
-    hot = totals.idxmax()
-    rare = totals[totals.index != hot].idxmin()
-    pdf = allpdf[allpdf["term"].isin([hot, rare])].reset_index(drop=True)
-    n_hot_blocks = int(sum(
-        len(r.blocks) for r in pdf.itertuples() if r.term == hot))
+    tbl = tbl.filter(pc.not_equal(tbl["term"], META_TERM))
+    totals: dict = {}
+    for t, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
+        totals[t] = totals.get(t, 0) + df
+    by_term = sorted(totals)  # ties go to the smallest term
+    hot = max(by_term, key=totals.get)
+    rare = min((t for t in by_term if t != hot), key=totals.get)
+    sub = tbl.filter(pc.is_in(tbl["term"], pa.array([hot, rare])))
+    rows = list(zip(sub["term"].to_pylist(), sub["docs"].to_pylist(),
+                    sub["blocks"].to_pylist()))
+    n_hot_blocks = sum(len(blocks) for t, _, blocks in rows if t == hot)
     assert n_hot_blocks > 1
 
-    docs_to_term = {id(r.docs): r.term for r in pdf.itertuples()}
+    # the scorer reads payloads with to_pylist(), so match them by value
+    docs_to_term = {docs: t for t, docs, _ in rows}
     decoded = []
     real = qmod.decode_block_slice
 
     def counting(docs, tfs, dls, blocks, i, j, n, block_size=128):
-        decoded.append(docs_to_term.get(id(docs), "?"))
+        decoded.append(docs_to_term.get(bytes(docs), "?"))
         return real(docs, tfs, dls, blocks, i, j, n, block_size=block_size)
 
     monkeypatch.setattr(qmod, "decode_block_slice", counting)
@@ -225,13 +229,14 @@ def test_and_scorer_skips_hot_term_blocks(built_index, monkeypatch):
         idf, st["k1"], st["b"], st["avgdl"], 10, "bm25", require_all=2,
     )
     got_parts, want_parts = [], []
-    for _sh, g in pdf.groupby("shard", sort=True):
+    for sh in sorted(set(sub["shard"].to_pylist())):
+        g = sub.filter(pc.equal(sub["shard"], sh))
         got_parts.append(scorer(g))
         want_parts.append(exhaustive(g))
-    got = pd.concat(got_parts, ignore_index=True)
-    want = pd.concat(want_parts, ignore_index=True)
-    for col in ("doc_id", "score"):
-        assert got[col].tolist() == want[col].tolist()
+    for i in (0, 1):  # doc_ids, then scores
+        got = np.concatenate([p[i] for p in got_parts])
+        want = np.concatenate([p[i] for p in want_parts])
+        assert got.tolist() == want.tolist()
     hot_decodes = decoded.count(hot)
     assert hot_decodes < n_hot_blocks, (
         f"decoded {hot_decodes}/{n_hot_blocks} hot-term blocks — "
@@ -280,17 +285,18 @@ def test_manifest_covers_all_shards(built_index):
 
 
 def test_shuffle_free_scorer_matches_exchange_path(spark, built_index):
-    """The mapInPandas whole-file-task scorer (no query-time shuffle)
-    must be result-identical to the groupBy(shard) exchange fallback,
-    for both BM25 (pruned + exhaustive) and TF-IDF, on every reference
-    query."""
+    """The mapInArrow whole-file-task scorer (no query-time shuffle)
+    must be result-identical to the groupBy(shard).applyInArrow exchange
+    fallback, for BM25 (pruned, exhaustive and and) and TF-IDF, on
+    every reference query. The positional scorers (phrase, near, bool)
+    are checked the same way in test_merged_pass.py."""
     index_dir, _ = built_index
     fast = IndexReader(spark, index_dir, fast_path_bytes=0)
     assert fast._whole_file_tasks, "invariant not recorded / conf not set"
     slow = IndexReader(spark, index_dir, fast_path_bytes=0)
     slow._whole_file_tasks = False
     for _, q, k in gen_queries():
-        for mode in ("pruned", "exhaustive"):
+        for mode in ("pruned", "exhaustive", "and"):
             assert fast.search(q, k, mode=mode) == slow.search(q, k, mode=mode)
         assert fast.search_tfidf(q, k) == slow.search_tfidf(q, k)
 

@@ -5,6 +5,7 @@ per-shard plan."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.dataset as pads
 import pytest
 
@@ -101,6 +102,55 @@ def test_decode_rows_rejects_misaligned_rows():
         Q._decode_rows(cut)
 
 
+def test_shard_grouped_scores_each_shard_once_on_all_its_rows():
+    """One task's batches hold shard 0, then shard 1, then shard 0 again
+    (the layout append_index leaves): each shard is scored exactly once,
+    on all of its rows, and equals scoring that shard's rows alone."""
+    rng = np.random.default_rng(12)
+    rows = []  # (shard, term, df, docs, tfs, dls)
+    for shard, lo in ((0, 0), (1, 5000)):
+        for term in ("alpha", "beta", "gamma"):
+            df = int(rng.integers(1, 300))
+            docs = np.sort(rng.choice(5000, df, replace=False)) + lo
+            tfs = rng.integers(1, 9, size=df)
+            dls = rng.integers(1, 60, size=df)
+            d_b, tf_b, dl_b, _ = encode_postings(docs, tfs, dls, avgdl=20.0)
+            rows.append((shard, term, df, d_b, tf_b, dl_b))
+    names = list(Q._POST_COLS)
+    schema = pa.schema([("shard", pa.int32()), ("term", pa.string()),
+                        ("df", pa.int64()), ("docs", pa.binary()),
+                        ("tfs", pa.binary()), ("dls", pa.binary())])
+
+    def batch(rs):
+        return pa.RecordBatch.from_arrays(
+            [pa.array([r[i] for r in rs], schema.field(i).type)
+             for i in range(len(names))], schema=schema)
+
+    a0, a1, a2, b0, b1, b2 = rows
+    batches = [batch([a1, a0]), batch([]), batch([b2, b0]),
+               batch([a2, b1])]
+    scorer = Q._make_exhaustive_scorer(
+        {"alpha": 1.3, "beta": 0.7, "gamma": 2.1}, 1.2, 0.75, 20.0, 50,
+        "bm25")
+    seen = []
+
+    def recording(tbl):
+        seen.append(sorted(zip(tbl["shard"].to_pylist(),
+                               tbl["term"].to_pylist())))
+        return scorer(tbl)
+
+    out = list(Q._shard_grouped(recording)(iter(batches)))
+    assert seen == [[(0, "alpha"), (0, "beta"), (0, "gamma")],
+                    [(1, "alpha"), (1, "beta"), (1, "gamma")]]
+    assert len(out) == 2
+    for got, own in zip(out, ([a0, a1, a2], [b0, b1, b2])):
+        ids, sc = scorer(pa.Table.from_batches([batch(own)]))
+        assert got.schema.names == ["doc_id", "score"]
+        assert got["doc_id"].to_pylist() == ids.tolist() and ids.size
+        assert got["score"].to_pylist() == sc.tolist()
+    assert list(Q._shard_grouped(recording)(iter([batch([])]))) == []
+
+
 CFG = dict(shard_docs=256, block_size=32, id_partitions=4, positions=True)
 
 
@@ -153,19 +203,29 @@ def _queries(corpus, partial_terms):
     return out
 
 
+def _plan_hits(reader, mode, q):
+    if mode == "bool":
+        plan = reader.search_bool_df(q, k=10)
+    else:
+        plan = reader.search_df(q, k=10, mode=mode)
+    return [] if plan is None else [
+        (r["doc_id"], r["score"]) for r in plan.collect()]
+
+
 def _check_state(spark, index_dir, corpus, state):
     assert read_stats(index_dir)["n_shards"] >= 4, state
     queries = _queries(corpus, _partial_terms(index_dir))
     fast = IndexReader(spark, index_dir)
+    assert fast._whole_file_tasks, state
+    # the same plan with the groupBy(shard).applyInArrow exchange instead
+    # of the shuffle-free mapInArrow one
+    exchange = IndexReader(spark, index_dir)
+    exchange._whole_file_tasks = False
     n_hit = 0
     try:
         for mode, q in queries:
-            if mode == "bool":
-                plan = fast.search_bool_df(q, k=10)
-            else:
-                plan = fast.search_df(q, k=10, mode=mode)
-            want = [] if plan is None else [
-                (r["doc_id"], r["score"]) for r in plan.collect()]
+            want = _plan_hits(fast, mode, q)
+            assert _plan_hits(exchange, mode, q) == want, (state, q)
             for rep in ("read", "replay"):  # parquet, then cache-fed
                 got = fast.search(q, k=10, mode=mode)
                 why = (state, q, rep)
@@ -176,6 +236,7 @@ def _check_state(spark, index_dir, corpus, state):
                     rtol=0, atol=1e-9)
             n_hit += bool(want)
     finally:
+        exchange.close()
         fast.close()
     assert n_hit >= 6, state  # queries are sliced from real docs
 
@@ -183,8 +244,9 @@ def _check_state(spark, index_dir, corpus, state):
 def test_merged_pass_equals_distributed_plan(spark, tmp_path_factory):
     """As built, after append_index and after compaction: phrase, near
     and bool answers of the driver route (first read and cache-fed
-    replay) equal the distributed per-shard plan. This pins the
-    shard-order / doc-range assumption the merge relies on
+    replay) equal the distributed per-shard plan, whose shuffle-free
+    (mapInArrow) and exchange (applyInArrow) forms agree exactly. This
+    pins the shard-order / doc-range assumption the merge relies on
     (_decode_merged_terms fails loudly if it breaks)."""
     base = gen_transcripts(900, seed=21)
     extra = gen_transcripts(400, seed=22)
