@@ -180,6 +180,13 @@ class _DecodedLRU:
                 self._bytes -= sum(a.nbytes for a in old)
             self._pins.pop(key, None)
 
+    def clear(self) -> None:
+        """Drop every entry, the byte count and every pin."""
+        with self._lock:
+            self._d.clear()
+            self._bytes = 0
+            self._pins.clear()
+
     def pin(self, key) -> bool:
         """Take one pin share on a RESIDENT entry (False if absent —
         pinning a missing key is meaningless). Refcounted: a key pinned
@@ -1347,6 +1354,13 @@ def _warm_install_entries(payload, block_size: int,
     return warmed
 
 
+#: a row group whose wanted rows form more runs of consecutive rows
+#: than this is gathered with one ``Table.take``; up to it, each run is
+#: a zero-copy slice. The crossover was measured on a 4-core VM over
+#: tok and postings reads (read plus ``to_pylist``): one take costs
+#: about as much as six slices and the copy that joins them.
+SLICE_MAX_RUNS = 6
+
 #: byte budget of _CHUNK_CACHE. Every column chunk the serving paths of
 #: a 25,000-turn index touch (term_stats, postings, tok) fits in ~5 MB.
 CHUNK_CACHE_BYTES = 64 << 20
@@ -1400,15 +1414,18 @@ class _FileIndex:
     rows instead of masking them: files are pruned by shard and row
     groups by their key range, and the requested keys become row indices
     by ``np.searchsorted`` over the row group's key column (in place for
-    an integer key, through a cached copy for a string key) — a
+    an integer key, through a cached copy for a string key). Each run of
+    consecutive rows is a zero-copy slice, a row group whose rows form
+    more than SLICE_MAX_RUNS runs is gathered with one take, and a
     ``key_range`` read is one slice. Each row group is decoded once into
     a cached table conformed to the dataset types (casts, nulls for
     columns an older file lacks), and its key is checked strictly
     increasing as it is decoded: a row group whose keys are out of order
-    or repeated raises UnsortedIndexError naming the file. The rows
-    taken get the hive ``shard`` column, so the result is the same rows
-    in the same order as ``dataset.to_table(filter=...)``, without a
-    scan plan per call."""
+    or repeated raises UnsortedIndexError naming the file. The hive
+    ``shard`` column is built once per read from each part's partition
+    value and row count, so the result is the same rows in the same
+    order as ``dataset.to_table(filter=...)``, without a scan plan per
+    call."""
 
     def __init__(self, root: str, key: str, partitioned: bool):
         import pyarrow.dataset as pads
@@ -1418,6 +1435,7 @@ class _FileIndex:
                           partitioning="hive" if partitioned else None)
         self.schema = ds.schema
         self.key = key
+        self.partitioned = partitioned
         # the dataset types cached row groups are conformed to: part of
         # their cache key, so a snapshot that infers other types (from
         # another first file) never gets tables cast for the old ones
@@ -1458,9 +1476,11 @@ class _FileIndex:
         """Rows of ``columns`` whose key is in ``keys`` (sorted,
         distinct), or in ``shard_keys[shard]`` (sorted, distinct, per
         hive shard; other shards are skipped), or in the half-open
-        ``key_range`` (lo, hi); all rows when no filter is given. Raises
-        FileNotFoundError when a file the read touches is gone or
-        changed — also on a full cache hit."""
+        ``key_range`` (lo, hi); all rows when no filter is given. A
+        filtered read that gathers rows from more than one place comes
+        back as one chunk per column. Raises FileNotFoundError when a
+        file the read touches is gone or changed — also on a full cache
+        hit."""
         import bisect
 
         filtered = keys is not None or shard_keys is not None \
@@ -1501,75 +1521,106 @@ class _FileIndex:
         hit = self._schemas.get(cols)
         if hit is None:
             schema = pa.schema([self.schema.field(c) for c in cols])
-            hive = schema.get_field_index("shard")
+            hive = schema.get_field_index("shard") if self.partitioned \
+                else -1
             hit = self._schemas[cols] = (
                 schema, schema.remove(hive) if hive >= 0 else schema, hive)
         schema, inner, hive = hit
-        parts = []
+        # the parts of the result, with each part's row count and hive
+        # partition value
+        parts, counts, shards = [], [], []
         for f, vals, rgs in plan:
-            fill = hive >= 0 and f.shard is not None \
-                and "shard" not in f.names
-            stored = inner if fill else schema
             for rg in rgs:
                 if not filtered:
-                    got = _row_group(f, rg, stored, self._sig, self.key)
+                    got = [_row_group(f, rg, inner, self._sig,
+                                      self.key).select(inner.names)]
                 else:
-                    ks = _sorted_keys(f, rg, self._key_schema, self._sig)
+                    # the key first: the other columns of a row group
+                    # holding no requested key are never decoded
+                    tbl = _row_group(f, rg, self._key_schema, self._sig,
+                                     self.key)
+                    ks = _sorted_keys(f, rg, tbl, self._key_schema)
                     if key_range is not None:
-                        lo, hi = np.searchsorted(ks, key_range)
-                        if hi <= lo:
-                            continue
-                        got = _row_group(f, rg, stored, self._sig,
-                                         self.key).slice(lo, hi - lo)
+                        rows = np.arange(*np.searchsorted(ks, key_range))
                     else:
                         want = np.asarray(vals, dtype=ks.dtype)
                         pos = np.searchsorted(ks, want)
                         rows = pos[ks[np.minimum(pos, ks.size - 1)] == want]
-                        if not rows.size:
-                            continue
-                        # a gather, not a slice, even for one run of rows:
-                        # take builds the buffers a filter does (validity
-                        # bitmaps included), so result sizes stay those
-                        # of a dataset scan
-                        got = _row_group(f, rg, stored, self._sig,
-                                         self.key).take(rows)
-                if fill:
-                    # hive partition value, without a validity bitmap
-                    # (as the dataset scan returns it)
-                    field = schema.field(hive)
-                    got = got.add_column(hive, field, pa.repeat(
-                        pa.scalar(f.shard, field.type), got.num_rows))
-                parts.append(got)
+                    if not rows.size:
+                        continue
+                    try:
+                        tbl = tbl.select(inner.names)
+                    except KeyError:  # columns not decoded yet: widen
+                        tbl = _row_group(f, rg, inner, self._sig,
+                                         self.key).select(inner.names)
+                    got = _address(tbl, rows)
+                parts += got
+                counts += [g.num_rows for g in got]
+                shards += [f.shard] * len(got)
         if not parts:
             return schema.empty_table()
-        return pa.concat_tables(parts)
+        out = parts[0]
+        if len(parts) > 1:
+            # a filtered read copies just the rows it read into one
+            # chunk per column; a full read keeps the cached chunks
+            out = pa.concat_tables(parts)
+            if filtered:
+                out = out.combine_chunks()
+        if hive >= 0:
+            # one column for the whole read, without a validity bitmap
+            # (as the dataset scan returns it)
+            field = schema.field(hive)
+            out = out.add_column(hive, field, pa.array(
+                np.repeat(shards, counts), field.type))
+        return out
 
 
-def _sorted_keys(f: _File, rg: int, key_schema, sig: str) -> np.ndarray:
-    """Searchable keys of row group ``rg`` (``key_schema`` holds the key
-    field; _row_group checked them strictly increasing when it decoded
-    them). An integer key is searched in place, as a view of the cached
-    column; a string key through a copy of its str objects, cached in
+def _address(tbl: pa.Table, rows: np.ndarray) -> list:
+    """``rows`` (strictly increasing indices) of ``tbl``: one zero-copy
+    slice per run of consecutive rows, or one take when the rows form
+    more than SLICE_MAX_RUNS runs."""
+    if rows[-1] - rows[0] == rows.size - 1:  # one run
+        return [tbl.slice(int(rows[0]), rows.size)]
+    runs = []  # [first row, row count]
+    # a memoryview yields the rows as ints one at a time, so scattered
+    # rows stop the scan at the first run past SLICE_MAX_RUNS
+    for r in memoryview(rows):
+        if runs and runs[-1][0] + runs[-1][1] == r:
+            runs[-1][1] += 1
+        elif len(runs) == SLICE_MAX_RUNS:
+            return [tbl.take(rows)]
+        else:
+            runs.append([r, 1])
+    return [tbl.slice(r, n) for r, n in runs]
+
+
+def _sorted_keys(f: _File, rg: int, tbl: pa.Table,
+                 key_schema) -> np.ndarray:
+    """Searchable keys of row group ``rg``: the column of the key field
+    (``key_schema`` holds it) in ``tbl``, the row group's cached table
+    (_row_group checked the key strictly increasing when it decoded it).
+    An integer key is searched in place, as a view of the cached column;
+    a string key through a copy of its str objects, cached in
     _CHUNK_CACHE."""
     import sys
 
     key = key_schema.field(0)
     if pa.types.is_integer(key.type):
-        return _row_group(f, rg, key_schema, sig, key.name).column(
-            0).chunk(0).to_numpy()
+        return tbl.column(key.name).chunk(0).to_numpy()
     ck = (f.path, *f.ident, rg, key.name, "sorted")
     hit = _CHUNK_CACHE.get(ck)
     if hit is not None:
         return hit[0].keys
-    ks = _row_group(f, rg, key_schema, sig, key.name).column(0).to_numpy()
+    ks = tbl.column(key.name).to_numpy()
     _CHUNK_CACHE.put(ck, (_SortedKeys(
         ks, ks.nbytes + sum(map(sys.getsizeof, ks))),))
     return ks
 
 
 def _row_group(f: _File, rg: int, schema, sig: str, key: str):
-    """Row group ``rg`` of ``f`` as a table of ``schema`` (fields of the
-    dataset schema whose string form is ``sig``): stored columns cast to
+    """Row group ``rg`` of ``f`` as its cached table, which holds at
+    least the fields of ``schema`` (fields of the dataset schema whose
+    string form is ``sig``), in no fixed order: stored columns cast to
     the dataset type, columns this older file lacks as nulls.
     _CHUNK_CACHE keeps one table per row group, of every column read so
     far; a read that needs columns it lacks reads just those
@@ -1581,13 +1632,10 @@ def _row_group(f: _File, rg: int, schema, sig: str, key: str):
     ck = (f.path, *f.ident, rg, sig)
     hit = _CHUNK_CACHE.get(ck)
     tbl = hit[0] if hit is not None else None
-    if tbl is not None:
-        try:
-            return tbl.select(schema.names)
-        except KeyError:
-            pass  # a column not read yet: widen below
     have = tbl.schema.names if tbl is not None else ()
     missing = [fld for fld in schema if fld.name not in have]
+    if not missing:
+        return tbl
     stored = [fld.name for fld in missing if fld.name in f.names]
     if stored:
         import pyarrow.parquet as pq
@@ -1623,7 +1671,7 @@ def _row_group(f: _File, rg: int, schema, sig: str, key: str):
                if tbl is None else tbl.append_column(field, a))
     _CHUNK_CACHE.discard(ck)
     _CHUNK_CACHE.put(ck, (tbl,))
-    return tbl.select(schema.names)
+    return tbl
 
 
 class _PointReads:

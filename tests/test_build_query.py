@@ -492,9 +492,7 @@ def test_tfidf_all_cached_shortcut_identity(spark, built_index, oracle_index):
     # eviction: a cleared cache falls back to the reading path, same result
     from indexer_spark.query import _DECODED_CACHE
 
-    with _DECODED_CACHE._lock:
-        _DECODED_CACHE._d.clear()
-        _DECODED_CACHE._bytes = 0
+    _DECODED_CACHE.clear()
     assert reader.search_tfidf(q, k) == first
 
 

@@ -38,6 +38,26 @@ def _vocab(index_dir):
         columns=["term"]).column("term").to_pylist())
 
 
+def _validity_bytes(tbl):
+    """Bytes that the validity bitmaps of ``tbl``'s all-valid chunks add
+    to ``tbl.nbytes``. A dataset scan's filter allocates them; a
+    zero-copy slice, and the copy that joins several parts, has none."""
+    import pyarrow as pa
+
+    out = 0
+    for col in tbl.columns:
+        for c in col.chunks:
+            bufs = c.buffers()
+            if c.null_count == 0 and bufs[0] is not None:
+                out += c.nbytes - pa.Array.from_buffers(
+                    c.type, len(c), [None, *bufs[1:]], offset=c.offset).nbytes
+    return out
+
+
+def _one_chunk(tbl):
+    return all(c.num_chunks == 1 for c in tbl.columns)
+
+
 def test_several_row_groups_per_postings_file(small_rg_index):
     files = _dataset(small_rg_index, "postings").files
     assert len(files) > 1
@@ -60,12 +80,17 @@ def test_term_reads_match_dataset(spark, small_rg_index):
             assert got.num_rows > 0
             assert got.schema == want.schema
             assert got.equals(want), n  # same rows, same order
-            assert got.nbytes == want.nbytes
+            # every term has rows in several files: the parts are joined
+            # into one chunk per column, without the filter's bitmaps
+            assert _one_chunk(got), n
+            assert _validity_bytes(want) > 0
+            assert got.nbytes == want.nbytes - _validity_bytes(want), n
             cols = ["term", "df", "nbytes", "poss_nbytes"]
             want_ts = ts.to_table(columns=cols,
                                   filter=pads.field("term").isin(terms))
             got_ts = r._reads["term_stats"].read(cols, keys=sorted(terms))
             assert got_ts.equals(want_ts), n
+            assert _one_chunk(got_ts), n
         lo, hi = vocab[len(vocab) // 3], vocab[len(vocab) // 2]
         want = ts.to_table(
             columns=["term", "df"],
@@ -81,31 +106,65 @@ def test_term_reads_match_dataset(spark, small_rg_index):
         r.close()
 
 
-def test_tok_reads_match_dataset(spark, small_rg_index):
+def test_tok_reads_match_dataset(spark, small_rg_index, monkeypatch):
+    """Tok reads equal the dataset scan: random requests over several
+    shards, a single-shard request whose rows form more runs than
+    SLICE_MAX_RUNS (one take) and one with fewer runs, a run of
+    consecutive local_idx among them (one slice per run)."""
     tok = _dataset(small_rg_index, "tok")
     pairs = tok.to_table(columns=["shard", "local_idx"])
     shards = pairs.column("shard").to_numpy()
     locs = pairs.column("local_idx").to_numpy()
     cols = ["shard", "local_idx", "conv_id", "turn_idx"]
     rng = np.random.default_rng(9)
+    requests = []
+    for n in (1, 10, 40):
+        pick = rng.choice(len(locs), n, replace=False)
+        want_keys: dict[int, set] = {}
+        for i in pick:
+            want_keys.setdefault(int(shards[i]), set()).add(int(locs[i]))
+        requests.append({s: sorted(v) for s, v in want_keys.items()})
     r = IndexReader(spark, small_rg_index)
+    fi = r._reads["tok"]
+    # a row group holding every local_idx of its footer range
+    f = next(f for f in fi.files if f.ranges[0] and f.ranges[0][1]
+             - f.ranges[0][0] + 1 >= 2 * Q.SLICE_MAX_RUNS + 2
+             and f.md.row_group(0).num_rows
+             == f.ranges[0][1] - f.ranges[0][0] + 1)
+    lo = f.ranges[0][0]
+    # every other row: SLICE_MAX_RUNS + 1 runs of one row
+    scattered = list(range(lo, lo + 2 * Q.SLICE_MAX_RUNS + 2, 2))
+    # a run of four consecutive local_idx, then a run of one
+    runs = [lo, lo + 1, lo + 2, lo + 3, lo + 6]
+    # the row group's addressing each request expects: (rows, part
+    # sizes) per _address call; None for the random requests
+    requests = [(req, None) for req in requests] + [
+        ({f.shard: scattered}, [(scattered, [len(scattered)])]),  # a take
+        ({f.shard: runs}, [(runs, [4, 1])]),  # a slice per run
+    ]
+    addressed = []
+    orig = Q._address
+
+    def spy(tbl, rows):
+        out = orig(tbl, rows)
+        addressed.append((rows.tolist(), [p.num_rows for p in out]))
+        return out
+
+    monkeypatch.setattr(Q, "_address", spy)
     try:
-        for n in (1, 10, 40):
-            pick = rng.choice(len(locs), n, replace=False)
-            want_keys: dict[int, set] = {}
-            for i in pick:
-                want_keys.setdefault(int(shards[i]), set()).add(int(locs[i]))
+        for req, how in requests:
             filt = None
-            for s, li in want_keys.items():
-                f = (pads.field("shard") == s) & pads.field(
-                    "local_idx").isin(sorted(li))
-                filt = f if filt is None else (filt | f)
+            for s, li in req.items():
+                flt = (pads.field("shard") == s) & pads.field(
+                    "local_idx").isin(li)
+                filt = flt if filt is None else (filt | flt)
             want = tok.to_table(columns=cols, filter=filt)
-            got = r._reads["tok"].read(
-                cols, shard_keys={s: sorted(v) for s, v in want_keys.items()})
-            assert got.num_rows == len({(int(shards[i]), int(locs[i]))
-                                        for i in pick})
-            assert got.equals(want), n
+            addressed.clear()
+            got = fi.read(cols, shard_keys=req)
+            assert got.num_rows == sum(map(len, req.values()))
+            assert got.equals(want), req
+            assert _one_chunk(got), req
+            assert how is None or addressed == how, req
     finally:
         r.close()
 
@@ -159,6 +218,10 @@ def test_chunk_cache_byte_accounting_and_discard():
     assert cache._bytes == 2 * b.nbytes
     cache.discard(("b",))
     assert cache._bytes == 0 and not cache._d
+    cache.put(("a",), (a,))
+    assert cache.pin(("a",))
+    cache.clear()
+    assert cache._bytes == 0 and not cache._d and not cache._pins
 
 
 def test_reader_refreshes_after_append(spark, tmp_path):
@@ -260,9 +323,7 @@ def test_concurrent_first_touch_stress(spark, small_rg_index):
     finally:
         ref.close()
     reader = IndexReader(spark, small_rg_index)
-    with Q._CHUNK_CACHE._lock:
-        Q._CHUNK_CACHE._d.clear()
-        Q._CHUNK_CACHE._bytes = 0
+    Q._CHUNK_CACHE.clear()
     errors: list = []
 
     def work(i):

@@ -10,7 +10,10 @@ asserting both return identical results. This isolates the block-skip
 win for the selective-AND shape (rare term bounds the candidates, hot
 term's blocks mostly skipped) from job-launch noise.
 
-Writes one JSON line to stdout and BENCH/raw/and_bench_8m.json.
+Writes one JSON line to stdout and to BENCH/raw/and_bench_<turns>.json,
+named after ``SPARK_GRAFT_TURNS`` (``and_bench_8m.json`` for the
+default 8M turns, ``and_bench_100k.json`` for 100,000), so a smaller run
+never overwrites a larger one.
 """
 
 from __future__ import annotations
@@ -23,6 +26,14 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+
+
+def _turns_label(n: int) -> str:
+    """8000000 -> "8m", 100000 -> "100k", 2500 -> "2500"."""
+    for div, unit in ((1_000_000, "m"), (1_000, "k")):
+        if n >= div and n % div == 0:
+            return f"{n // div}{unit}"
+    return str(n)
 
 
 def main():
@@ -113,7 +124,8 @@ def main():
         line = json.dumps(out)
         print(line, flush=True)
         raw = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "..", "BENCH", "raw", "and_bench_8m.json")
+                           "..", "BENCH", "raw",
+                           f"and_bench_{_turns_label(n_turns)}.json")
         with open(raw, "w") as f:
             f.write(line + "\n")
     finally:
