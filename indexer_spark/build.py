@@ -1677,22 +1677,32 @@ def docstore(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
-def locate_doc_ids(stats: dict, doc_ids: list[int]) -> dict[int, tuple[int, int]]:
-    """doc_id -> (shard, local_idx) using the stats offsets — lets point
-    lookups push shard partition pruning + local_idx row-group stats down
-    to the tok scan instead of filtering a computed column."""
+def shard_bounds(stats: dict) -> tuple[list[int], list[tuple[int, int]]]:
+    """The stats shard map as locate_doc_ids searches it: the shard
+    offsets in ascending order, and (shard, doc count) per offset."""
     pairs = sorted(
         (int(o), int(s)) for s, o in stats["shard_offsets"].items()
     )
+    counts = stats["shard_counts"]
+    return ([o for o, _ in pairs],
+            [(s, int(counts[str(s)])) for _, s in pairs])
+
+
+def locate_doc_ids(stats: dict, doc_ids: list[int],
+                   bounds=None) -> dict[int, tuple[int, int]]:
+    """doc_id -> (shard, local_idx) using the stats offsets — lets point
+    lookups push shard partition pruning + local_idx row-group stats down
+    to the tok scan instead of filtering a computed column. ``bounds``:
+    shard_bounds(stats), for a caller that keeps it per snapshot."""
     import bisect
 
-    bounds = [o for o, _ in pairs]
+    offsets, shards = bounds if bounds is not None else shard_bounds(stats)
     out = {}
     for d in doc_ids:
-        i = bisect.bisect_right(bounds, d) - 1
+        i = bisect.bisect_right(offsets, d) - 1
         if i < 0:
             continue
-        off, shard = pairs[i]
-        if d - off < int(stats["shard_counts"][str(shard)]):
-            out[int(d)] = (shard, int(d - off))
+        shard, count = shards[i]
+        if d - offsets[i] < count:
+            out[int(d)] = (shard, int(d - offsets[i]))
     return out

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import math
 import os
+import sys
+from bisect import bisect_left
 from collections import Counter
 from operator import itemgetter
 from typing import NamedTuple
@@ -1365,11 +1367,9 @@ SLICE_MAX_RUNS = 6
 #: a 25,000-turn index touch (term_stats, postings, tok) fits in ~5 MB.
 CHUNK_CACHE_BYTES = 64 << 20
 
-# what the driver point reads keep: per (path, mtime_ns, size,
-# row_group, dataset types), the row group's columns decoded so far,
-# conformed to those types; per (path, mtime_ns, size, row_group, key,
-# "sorted"), the searchable copy of a string key. A separate instance,
-# so _DECODED_CACHE keeps holding decoded postings only.
+# what the driver point reads keep: one _RowGroup per (path, mtime_ns,
+# size, row_group, dataset types). A separate instance, so
+# _DECODED_CACHE keeps holding decoded postings only.
 _CHUNK_CACHE = _DecodedLRU(CHUNK_CACHE_BYTES)
 
 
@@ -1384,11 +1384,19 @@ class _File(NamedTuple):
     #                          None (no stats: always read) or False (empty)
 
 
-class _SortedKeys(NamedTuple):
-    """Searchable numpy copy of one row group's string key column.
-    ``nbytes`` also counts its str objects, so _CHUNK_CACHE accounts
-    what the copy holds."""
-    keys: np.ndarray
+class _RowGroup(NamedTuple):
+    """_CHUNK_CACHE's record of one row group: its columns decoded so
+    far, conformed to the dataset types, and the key index built when
+    the key column was decoded (None until then). The index is
+      - a string key's sorted values as a list (searched by bisect),
+      - an int, the first key, when an integer key is dense (last -
+        first = rows - 1): a key's row is key - first,
+      - any other integer key's column as a numpy view (searchsorted).
+    ``nbytes`` is the table's bytes plus what the index holds beyond
+    them: the list and its str objects (an int or a view holds none)."""
+    tbl: pa.Table
+    names: frozenset
+    index: object
     nbytes: int
 
 
@@ -1413,15 +1421,15 @@ class _FileIndex:
     and postings by term, tok by local_idx), so a point read addresses
     rows instead of masking them: files are pruned by shard and row
     groups by their key range, and the requested keys become row indices
-    by ``np.searchsorted`` over the row group's key column (in place for
-    an integer key, through a cached copy for a string key). Each run of
+    through the row group's key index (see _RowGroup). Each run of
     consecutive rows is a zero-copy slice, a row group whose rows form
     more than SLICE_MAX_RUNS runs is gathered with one take, and a
     ``key_range`` read is one slice. Each row group is decoded once into
-    a cached table conformed to the dataset types (casts, nulls for
-    columns an older file lacks), and its key is checked strictly
-    increasing as it is decoded: a row group whose keys are out of order
-    or repeated raises UnsortedIndexError naming the file. The hive
+    one cached record: a table conformed to the dataset types (casts,
+    nulls for columns an older file lacks) and the key index. Its key is
+    checked strictly increasing as it is decoded: a row group whose keys
+    are out of order or repeated raises UnsortedIndexError naming the
+    file. The hive
     ``shard`` column is built once per read from each part's partition
     value and row count, so the result is the same rows in the same
     order as ``dataset.to_table(filter=...)``, without a scan plan per
@@ -1443,8 +1451,9 @@ class _FileIndex:
                                         show_schema_metadata=False)
         self._key_schema = (pa.schema([ds.schema.field(key)])
                             if key in ds.schema.names else None)
-        # columns -> (their schema, it without the hive column, the
-        # hive column's index or -1)
+        self._key_names = frozenset([key])
+        # columns -> (their schema, it without the hive column, that
+        # one's names as a frozenset, the hive column's index or -1)
         self._schemas: dict[tuple, tuple] = {}
         self.files: list[_File] = []
         for frag in ds.get_fragments():
@@ -1481,8 +1490,6 @@ class _FileIndex:
         back as one chunk per column. Raises FileNotFoundError when a
         file the read touches is gone or changed — also on a full cache
         hit."""
-        import bisect
-
         filtered = keys is not None or shard_keys is not None \
             or key_range is not None
         plan = []
@@ -1501,7 +1508,7 @@ class _FileIndex:
                 if r is not None:
                     lo, hi = r
                     if vals is not None:
-                        i = bisect.bisect_left(vals, lo)
+                        i = bisect_left(vals, lo)
                         if i == len(vals) or vals[i] > hi:
                             continue
                     elif key_range is not None and (
@@ -1523,37 +1530,30 @@ class _FileIndex:
             schema = pa.schema([self.schema.field(c) for c in cols])
             hive = schema.get_field_index("shard") if self.partitioned \
                 else -1
+            inner = schema.remove(hive) if hive >= 0 else schema
             hit = self._schemas[cols] = (
-                schema, schema.remove(hive) if hive >= 0 else schema, hive)
-        schema, inner, hive = hit
+                schema, inner, frozenset(inner.names), hive)
+        schema, inner, need, hive = hit
         # the parts of the result, with each part's row count and hive
         # partition value
         parts, counts, shards = [], [], []
         for f, vals, rgs in plan:
             for rg in rgs:
                 if not filtered:
-                    got = [_row_group(f, rg, inner, self._sig,
-                                      self.key).select(inner.names)]
+                    rec = _row_group(f, rg, inner, need, self._sig, self.key)
+                    got = [rec.tbl.select(inner.names)]
                 else:
                     # the key first: the other columns of a row group
                     # holding no requested key are never decoded
-                    tbl = _row_group(f, rg, self._key_schema, self._sig,
-                                     self.key)
-                    ks = _sorted_keys(f, rg, tbl, self._key_schema)
-                    if key_range is not None:
-                        rows = np.arange(*np.searchsorted(ks, key_range))
-                    else:
-                        want = np.asarray(vals, dtype=ks.dtype)
-                        pos = np.searchsorted(ks, want)
-                        rows = pos[ks[np.minimum(pos, ks.size - 1)] == want]
-                    if not rows.size:
+                    rec = _row_group(f, rg, self._key_schema,
+                                     self._key_names, self._sig, self.key)
+                    rows = _key_rows(rec, vals, key_range)
+                    if not rows:
                         continue
-                    try:
-                        tbl = tbl.select(inner.names)
-                    except KeyError:  # columns not decoded yet: widen
-                        tbl = _row_group(f, rg, inner, self._sig,
-                                         self.key).select(inner.names)
-                    got = _address(tbl, rows)
+                    if not need <= rec.names:  # columns not decoded: widen
+                        rec = _row_group(f, rg, inner, need, self._sig,
+                                         self.key)
+                    got = _address(rec.tbl.select(inner.names), rows)
                 parts += got
                 counts += [g.num_rows for g in got]
                 shards += [f.shard] * len(got)
@@ -1575,67 +1575,94 @@ class _FileIndex:
         return out
 
 
-def _address(tbl: pa.Table, rows: np.ndarray) -> list:
-    """``rows`` (strictly increasing indices) of ``tbl``: one zero-copy
-    slice per run of consecutive rows, or one take when the rows form
-    more than SLICE_MAX_RUNS runs."""
-    if rows[-1] - rows[0] == rows.size - 1:  # one run
-        return [tbl.slice(int(rows[0]), rows.size)]
+def _key_rows(rec: _RowGroup, vals, key_range):
+    """Rows of ``rec``'s row group, as ascending Python ints, whose key
+    is in ``vals`` (sorted, distinct; a list) or, as a range, in the
+    half-open ``key_range`` (lo, hi)."""
+    idx, n = rec.index, rec.tbl.num_rows
+    if type(idx) is int:  # dense integer key: row = key - first
+        if key_range is not None:
+            lo, hi = key_range
+            return range(min(max(lo - idx, 0), n), min(max(hi - idx, 0), n))
+        return [v - idx for v in vals[
+            bisect_left(vals, idx):bisect_left(vals, idx + n)]]
+    if type(idx) is list:  # string key: bisect over its sorted values
+        if key_range is not None:
+            return range(bisect_left(idx, key_range[0]),
+                         bisect_left(idx, key_range[1]))
+        rows, i = [], 0
+        for v in vals:
+            i = bisect_left(idx, v, i)
+            if i == n:
+                break
+            if idx[i] == v:
+                rows.append(i)
+        return rows
+    # an integer key with gaps: np.searchsorted over the column view
+    if key_range is not None:
+        return range(*np.searchsorted(idx, key_range).tolist())
+    want = np.asarray(vals, dtype=idx.dtype)
+    pos = np.searchsorted(idx, want)
+    return pos[idx[np.minimum(pos, n - 1)] == want].tolist()
+
+
+def _address(tbl: pa.Table, rows) -> list:
+    """``rows`` (strictly increasing Python ints: a list or a range) of
+    ``tbl``: one zero-copy slice per run of consecutive rows, or one take
+    when the rows form more than SLICE_MAX_RUNS runs."""
+    if rows[-1] - rows[0] == len(rows) - 1:  # one run
+        return [tbl.slice(rows[0], len(rows))]
     runs = []  # [first row, row count]
-    # a memoryview yields the rows as ints one at a time, so scattered
-    # rows stop the scan at the first run past SLICE_MAX_RUNS
-    for r in memoryview(rows):
+    # scattered rows stop the scan at the first run past SLICE_MAX_RUNS
+    for r in rows:
         if runs and runs[-1][0] + runs[-1][1] == r:
             runs[-1][1] += 1
         elif len(runs) == SLICE_MAX_RUNS:
-            return [tbl.take(rows)]
+            # through numpy: take converts a list ~2x slower
+            return [tbl.take(np.fromiter(rows, np.int64, len(rows)))]
         else:
             runs.append([r, 1])
     return [tbl.slice(r, n) for r, n in runs]
 
 
-def _sorted_keys(f: _File, rg: int, tbl: pa.Table,
-                 key_schema) -> np.ndarray:
-    """Searchable keys of row group ``rg``: the column of the key field
-    (``key_schema`` holds it) in ``tbl``, the row group's cached table
-    (_row_group checked the key strictly increasing when it decoded it).
-    An integer key is searched in place, as a view of the cached column;
-    a string key through a copy of its str objects, cached in
-    _CHUNK_CACHE."""
-    import sys
-
-    key = key_schema.field(0)
-    if pa.types.is_integer(key.type):
-        return tbl.column(key.name).chunk(0).to_numpy()
-    ck = (f.path, *f.ident, rg, key.name, "sorted")
-    hit = _CHUNK_CACHE.get(ck)
-    if hit is not None:
-        return hit[0].keys
-    ks = tbl.column(key.name).to_numpy()
-    _CHUNK_CACHE.put(ck, (_SortedKeys(
-        ks, ks.nbytes + sum(map(sys.getsizeof, ks))),))
-    return ks
+def _key_index(a: pa.Array) -> tuple[object, int]:
+    """The key index of ``a``, a decoded row group's key column checked
+    strictly increasing and null-free (see _RowGroup), and the bytes it
+    holds beyond the column."""
+    n = len(a)
+    if pa.types.is_integer(a.type):
+        if n and a[n - 1].as_py() - a[0].as_py() == n - 1:
+            return a[0].as_py(), 0
+        return a.to_numpy(), 0
+    keys = a.to_pylist()[:]  # to_pylist over-allocates the list by ~1/8
+    return keys,sys.getsizeof(keys) + sum(map(sys.getsizeof, keys))
 
 
-def _row_group(f: _File, rg: int, schema, sig: str, key: str):
-    """Row group ``rg`` of ``f`` as its cached table, which holds at
-    least the fields of ``schema`` (fields of the dataset schema whose
-    string form is ``sig``), in no fixed order: stored columns cast to
-    the dataset type, columns this older file lacks as nulls.
-    _CHUNK_CACHE keeps one table per row group, of every column read so
-    far; a read that needs columns it lacks reads just those
-    (single-threaded, through a handle whose identity is re-checked
-    against the file index) and replaces it with the wider table, which
-    shares the columns already held. The ``key`` column is checked
-    strictly increasing as it is decoded (raises UnsortedIndexError
-    naming the file otherwise)."""
+def _row_group(f: _File, rg: int, schema, names: frozenset, sig: str,
+               key: str) -> _RowGroup:
+    """Row group ``rg`` of ``f`` as its cached _RowGroup, whose table
+    holds at least the fields of ``schema`` (fields of the dataset
+    schema whose string form is ``sig``; ``names`` are their names), in
+    no fixed order: stored columns cast to the dataset type, columns
+    this older file lacks as nulls. _CHUNK_CACHE keeps one record per
+    row group, of every column read so far; a read that needs columns it
+    lacks reads just those (single-threaded, through a handle whose
+    identity is re-checked against the file index) and replaces it with
+    a wider record, which shares the columns and the key index already
+    held. The ``key`` column is checked strictly increasing as it is
+    decoded (raises UnsortedIndexError naming the file otherwise), and
+    its key index is built then."""
     ck = (f.path, *f.ident, rg, sig)
     hit = _CHUNK_CACHE.get(ck)
-    tbl = hit[0] if hit is not None else None
-    have = tbl.schema.names if tbl is not None else ()
+    if hit is None:
+        tbl, have, index, index_bytes = None, frozenset(), None, 0
+    else:
+        rec = hit[0]
+        if names <= rec.names:
+            return rec
+        tbl, have, index = rec.tbl, rec.names, rec.index
+        index_bytes = rec.nbytes - tbl.nbytes
     missing = [fld for fld in schema if fld.name not in have]
-    if not missing:
-        return tbl
     stored = [fld.name for fld in missing if fld.name in f.names]
     if stored:
         import pyarrow.parquet as pq
@@ -1657,21 +1684,25 @@ def _row_group(f: _File, rg: int, schema, sig: str, key: str):
             a = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
             if a.type != field.type:
                 a = a.cast(field.type)
-            if field.name == key and (a.null_count or n > 1 and not pc.all(
-                    pc.greater(a.slice(1), a.slice(0, n - 1))).as_py()):
-                raise UnsortedIndexError(
-                    f"{f.path}: key column {key!r} is not strictly "
-                    f"increasing in row group {rg}; every index writer "
-                    "sorts it within a file, so this index was written "
-                    "by an older or foreign writer. Rewrite it with "
-                    "compact_index.")
+            if field.name == key:
+                if a.null_count or n > 1 and not pc.all(
+                        pc.greater(a.slice(1), a.slice(0, n - 1))).as_py():
+                    raise UnsortedIndexError(
+                        f"{f.path}: key column {key!r} is not strictly "
+                        f"increasing in row group {rg}; every index "
+                        "writer sorts it within a file, so this index "
+                        "was written by an older or foreign writer. "
+                        "Rewrite it with compact_index.")
+                index, index_bytes = _key_index(a)
         else:  # a column this older file lacks
             a = pa.nulls(n, field.type)
         tbl = (pa.Table.from_arrays([a], schema=pa.schema([field]))
                if tbl is None else tbl.append_column(field, a))
+    rec = _RowGroup(tbl, have | {fld.name for fld in missing}, index,
+                    tbl.nbytes + index_bytes)
     _CHUNK_CACHE.discard(ck)
-    _CHUNK_CACHE.put(ck, (tbl,))
-    return tbl
+    _CHUNK_CACHE.put(ck, (rec,))
+    return rec
 
 
 class _PointReads:
@@ -1780,20 +1811,7 @@ class IndexReader:
         self._conf_priors: dict[str, str] = {}
         self._need_bytes: int | None = None
         self._pin_split_size()
-        # shard -> upper-bound rescale for appended indexes whose avgdl
-        # drifted upward since a shard's block maxima were computed
-        avgdl_now = self.stats["avgdl"]
-        # LAST postings row per shard wins (a shard rebuilt by
-        # update_index supersedes its older manifest rows)
-        last_ab: dict[int, float] = {}
-        for r in read_manifest(index_dir):
-            if r["stage"] == "postings" and "avgdl_build" in r:
-                last_ab[r["shard"]] = r["avgdl_build"]
-        self._ub_scale: dict[int, float] = {
-            s: avgdl_now / ab
-            for s, ab in last_ab.items()
-            if ab > 0 and avgdl_now > ab
-        }
+        self._derive_snapshot()
         from .session import warm_workers
 
         warm_workers(spark)
@@ -1893,12 +1911,25 @@ class IndexReader:
         # re-derive the whole-file-task pin: the mutation may have grown
         # max_postings_file_bytes past the pin taken at init
         self._pin_split_size()
+        self._derive_snapshot()
+
+    def _derive_snapshot(self) -> None:
+        """What the reader derives once per snapshot from stats.json and
+        the manifest (at init and on every refresh): ``_doc_bounds``, the
+        shard map as locate_doc_ids searches it, and ``_ub_scale``, shard
+        -> upper-bound rescale for appended indexes whose avgdl drifted
+        upward since a shard's block maxima were computed."""
+        from .build import shard_bounds
+
+        self._doc_bounds = shard_bounds(self.stats)
         avgdl_now = self.stats["avgdl"]
+        # LAST postings row per shard wins (a shard rebuilt by
+        # update_index supersedes its older manifest rows)
         last_ab: dict[int, float] = {}
         for r in read_manifest(self.index_dir):
             if r["stage"] == "postings" and "avgdl_build" in r:
                 last_ab[r["shard"]] = r["avgdl_build"]
-        self._ub_scale = {
+        self._ub_scale: dict[int, float] = {
             s: avgdl_now / ab
             for s, ab in last_ab.items()
             if ab > 0 and avgdl_now > ab
@@ -3324,8 +3355,9 @@ class IndexReader:
         from .build import locate_doc_ids
 
         def lookup(reads):
-            # located inside the retry: a refresh re-reads the stats map
-            loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
+            # located inside the retry: a refresh re-derives the bounds
+            loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits],
+                                 self._doc_bounds)
             want: dict[int, set] = {}
             for s, li in loc.values():
                 want.setdefault(s, set()).add(li)
@@ -3375,7 +3407,8 @@ class IndexReader:
         computed doc_id column)."""
         from .build import _tok_path, locate_doc_ids
 
-        loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits])
+        loc = locate_doc_ids(self.stats, [int(d) for d, _ in hits],
+                             self._doc_bounds)
         rows = [
             (*loc[int(d)], int(d), float(s)) for d, s in hits if int(d) in loc
         ]

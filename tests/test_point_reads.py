@@ -58,6 +58,15 @@ def _one_chunk(tbl):
     return all(c.num_chunks == 1 for c in tbl.columns)
 
 
+def _records(paths):
+    """_CHUNK_CACHE's records of the row groups of the files ``paths``."""
+    paths = set(paths)
+    with Q._CHUNK_CACHE._lock:
+        assert Q._CHUNK_CACHE._bytes == sum(
+            a.nbytes for v in Q._CHUNK_CACHE._d.values() for a in v)
+        return [v[0] for k, v in Q._CHUNK_CACHE._d.items() if k[0] in paths]
+
+
 def test_several_row_groups_per_postings_file(small_rg_index):
     files = _dataset(small_rg_index, "postings").files
     assert len(files) > 1
@@ -147,7 +156,7 @@ def test_tok_reads_match_dataset(spark, small_rg_index, monkeypatch):
 
     def spy(tbl, rows):
         out = orig(tbl, rows)
-        addressed.append((rows.tolist(), [p.num_rows for p in out]))
+        addressed.append((list(rows), [p.num_rows for p in out]))
         return out
 
     monkeypatch.setattr(Q, "_address", spy)
@@ -165,22 +174,27 @@ def test_tok_reads_match_dataset(spark, small_rg_index, monkeypatch):
             assert got.equals(want), req
             assert _one_chunk(got), req
             assert how is None or addressed == how, req
+        # every tok row group holds each local_idx of its range: its
+        # rows are addressed by arithmetic, without a key array
+        recs = _records(f.path for f in fi.files)
+        assert recs and all(type(rec.index) is int for rec in recs)
     finally:
         r.close()
 
 
 def test_only_covering_row_groups_are_read(spark, small_rg_index,
                                            monkeypatch):
-    """Row-group pruning: a term read searches exactly the (file, row
-    group) pairs whose footer term range covers a requested term."""
+    """Row-group pruning: a term read fetches the record of exactly the
+    (file, row group) pairs whose footer term range covers a requested
+    term."""
     touched: list[tuple[str, int]] = []
-    orig = Q._sorted_keys
+    orig = Q._row_group
 
     def counting(f, rg, *args):
         touched.append((f.path, rg))
         return orig(f, rg, *args)
 
-    monkeypatch.setattr(Q, "_sorted_keys", counting)
+    monkeypatch.setattr(Q, "_row_group", counting)
     vocab = _vocab(small_rg_index)
     terms = sorted([vocab[5], vocab[len(vocab) // 2], vocab[-3]])
     want, total = set(), 0
@@ -354,9 +368,10 @@ def test_concurrent_first_touch_stress(spark, small_rg_index):
     with Q._CHUNK_CACHE._lock:
         assert Q._CHUNK_CACHE._bytes == sum(
             a.nbytes for v in Q._CHUNK_CACHE._d.values() for a in v)
-        kinds = {type(v[0]).__name__ for v in Q._CHUNK_CACHE._d.values()}
-    # one decoded, conformed table per row group and the key copies
-    assert kinds == {"_SortedKeys", "Table"}, kinds
+        kinds = {type(a).__name__ for v in Q._CHUNK_CACHE._d.values()
+                 for a in v}
+    # one record per row group: its decoded, conformed table and key index
+    assert kinds == {"_RowGroup"}, kinds
 
 
 def test_key_range_reads_match_dataset(spark, small_rg_index):
@@ -469,11 +484,12 @@ def test_sorted_hand_written_file_reads_by_address(tmp_path):
 
 
 def test_point_read_cache_entries_are_accounted(tmp_path):
-    """A filtered read caches one table of the row group's decoded
-    columns and the key's searchable copy (whose size counts the str
-    objects it holds); a read of one more column widens that table
-    instead of adding an entry, and _CHUNK_CACHE's byte count stays the
-    sum of its entries' nbytes."""
+    """A filtered read caches one record per row group: the table of its
+    decoded columns and the key index, here the string keys as a list,
+    whose record size counts the list and its str objects. A read of
+    one more column widens that record, keeping its index, instead of
+    adding an entry, and _CHUNK_CACHE's byte count stays the sum of its
+    entries' nbytes."""
     import pandas as pd
 
     root = str(tmp_path / "table")
@@ -483,26 +499,80 @@ def test_point_read_cache_entries_are_accounted(tmp_path):
                                      "extra": np.arange(300) + 0.5}))
     fi = Q._FileIndex(root, "term", partitioned=False)
     assert fi.read(["term", "df"], keys=["term0007"]).num_rows == 1
-    with Q._CHUNK_CACHE._lock:
-        mine = [v[0] for k, v in Q._CHUNK_CACHE._d.items() if k[0] == path]
-        assert Q._CHUNK_CACHE._bytes == sum(
-            a.nbytes for v in Q._CHUNK_CACHE._d.values() for a in v)
-    sk = [e for e in mine if isinstance(e, Q._SortedKeys)]
-    assert len(sk) == 1 and list(sk[0].keys) == terms
-    assert sk[0].nbytes == sk[0].keys.nbytes + sum(
+    mine = _records([path])
+    assert len(mine) == 1  # one record for the row group
+    rec = mine[0]
+    assert isinstance(rec, Q._RowGroup)
+    assert rec.tbl.column_names == ["term", "df"]
+    assert rec.names == {"term", "df"}
+    assert rec.index == terms
+    assert rec.nbytes == rec.tbl.nbytes + sys.getsizeof(rec.index) + sum(
         sys.getsizeof(t) for t in terms)
-    assert len(mine) == 2  # the row group's table, the key copy
-    tbl = next(e for e in mine if not isinstance(e, Q._SortedKeys))
-    assert tbl.column_names == ["term", "df"]
     assert fi.read(["term", "extra"], keys=["term0009"]).column(
         "extra").to_pylist() == [9.5]
-    with Q._CHUNK_CACHE._lock:
-        mine = [v[0] for k, v in Q._CHUNK_CACHE._d.items() if k[0] == path]
-        assert Q._CHUNK_CACHE._bytes == sum(
-            a.nbytes for v in Q._CHUNK_CACHE._d.values() for a in v)
-    assert len(mine) == 2
-    tbl = next(e for e in mine if not isinstance(e, Q._SortedKeys))
-    assert tbl.column_names == ["term", "df", "extra"]
+    mine = _records([path])
+    assert len(mine) == 1
+    wide = mine[0]
+    assert wide.tbl.column_names == ["term", "df", "extra"]
+    assert wide.names == {"term", "df", "extra"}
+    assert wide.index is rec.index  # carried over, not rebuilt
+    assert wide.nbytes == wide.tbl.nbytes + rec.nbytes - rec.tbl.nbytes
+
+
+@pytest.mark.parametrize("key,stored,kind", [
+    ("local_idx", list(range(100, 300)), int),            # dense
+    ("local_idx", list(range(0, 400, 2)), np.ndarray),    # with gaps
+    ("term", [f"t{i:03d}" for i in range(0, 400, 2)], list),
+])
+def test_key_index_cases_read_like_dataset(tmp_path, key, stored, kind):
+    """Each key-index case on a file of several row groups: a dense
+    integer key (addressed by arithmetic), an integer key with gaps
+    (np.searchsorted) and a string key (bisect). Key and key_range
+    reads (the shape expand_prefix reads) equal the dataset scan in
+    one chunk per column, for keys in one and in several row groups,
+    between two stored keys and past either end."""
+    import pandas as pd
+
+    root = str(tmp_path / "table")
+    path = os.path.join(root, "part-0.parquet")
+    _write_table(path, pd.DataFrame({key: stored,
+                                     "df": range(len(stored))}), 16)
+    ds = pads.dataset(root, format="parquet")
+    fi = Q._FileIndex(root, key, partitioned=False)
+    assert len(fi.files[0].ranges) == 13
+    if key == "term":
+        below, above = "a", "u"
+
+        def between(v):  # sorts after v, before the next stored key
+            return v + "0"
+    else:
+        below, above = stored[0] - 1, stored[-1] + 1
+
+        def between(v):  # a stored key when the key is dense
+            return v + 1
+    key_sets = [
+        [stored[3]], [stored[0], stored[20], stored[-1]],
+        [below, stored[5], between(stored[5]), above], [below, above],
+        [between(stored[40]), between(stored[41])], stored]
+    for keys in key_sets:
+        keys = sorted(set(keys))
+        want = ds.to_table(columns=[key, "df"],
+                           filter=pads.field(key).isin(keys))
+        got = fi.read([key, "df"], keys=keys)
+        assert got.equals(want), keys
+        assert got.num_rows == 0 or _one_chunk(got), keys
+    for lo, hi in [(stored[10], stored[40]),
+                   (between(stored[10]), between(stored[12])),
+                   (below, stored[2]), (stored[-3], above), (below, above),
+                   (stored[5], stored[5]), (above, below)]:
+        want = ds.to_table(columns=[key, "df"], filter=(
+            pads.field(key) >= lo) & (pads.field(key) < hi))
+        got = fi.read([key, "df"], key_range=(lo, hi))
+        assert got.equals(want), (lo, hi)
+        assert got.num_rows == 0 or _one_chunk(got), (lo, hi)
+    recs = _records([path])
+    assert len(recs) == 13
+    assert all(isinstance(rec.index, kind) for rec in recs), kind
 
 
 def test_cached_row_groups_follow_the_dataset_types(tmp_path):
