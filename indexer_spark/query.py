@@ -415,24 +415,48 @@ def _aggregate_scores_sharded(chunks_by_shard: dict, k: int,
     )
 
 
+class _Rows(dict):
+    """A batch of index rows as Python columns: column name -> list of
+    the column's values (what ``to_pylist`` gives), ``num_rows`` rows.
+    Driver point reads return it and every scorer takes it. ``nbytes``
+    is the bytes of the same rows as an Arrow table of ``schema`` (the
+    read's dataset fields; None infers them), built only when asked."""
+
+    __slots__ = ("num_rows", "schema")
+
+    def __init__(self, cols: dict, num_rows: int, schema=None):
+        super().__init__(cols)
+        self.num_rows = num_rows
+        self.schema = schema
+
+    @property
+    def nbytes(self) -> int:
+        return pa.Table.from_pydict(self, schema=self.schema).nbytes
+
+
+def _table_rows(tbl: pa.Table) -> _Rows:
+    """An Arrow table (a Spark task's shard of postings) as the _Rows a
+    scorer takes: one ``to_pylist`` per column."""
+    return _Rows({c: tbl.column(c).to_pylist() for c in tbl.column_names},
+                 tbl.num_rows, tbl.schema)
+
+
 #: the postings columns every scorer reads (AND and pruned add
 #: ``blocks``, the positional scorers ``poss``)
 _POST_COLS = ("shard", "term", "df", "docs", "tfs", "dls")
 
 
-def _term_rows(tbl: pa.Table, cols: tuple, by_shard: bool = False) -> list:
-    """The rows of a postings batch as tuples of ``cols``, built from
-    each column's to_pylist() (None for a column the batch lacks), in a
-    stable sort on term — on (term, shard) with ``by_shard``. Scorers
-    walk their rows in this order: it is the sorted-term addition order
-    that keeps per-doc float sums identical on every path."""
-    names, n = tbl.column_names, tbl.num_rows
-    rows = list(zip(*(
-        tbl.column(c).to_pylist() if c in names else [None] * n
-        for c in cols)))
-    key = ("term", "shard") if by_shard and "shard" in names else ("term",)
-    rows.sort(key=itemgetter(*map(cols.index, key)))
-    return rows
+def _term_rows(rows: _Rows, cols: tuple, by_shard: bool = False) -> list:
+    """The rows of a postings batch as tuples of ``cols`` (None for a
+    column the batch lacks), in a stable sort on term — on (term, shard)
+    with ``by_shard``. Scorers walk their rows in this order: it is the
+    sorted-term addition order that keeps per-doc float sums identical
+    on every path."""
+    n = rows.num_rows
+    out = list(zip(*(rows[c] if c in rows else [None] * n for c in cols)))
+    key = ("term", "shard") if by_shard and "shard" in rows else ("term",)
+    out.sort(key=itemgetter(*map(cols.index, key)))
+    return out
 
 
 def _no_hits():
@@ -452,12 +476,12 @@ def _make_exhaustive_scorer(
     (an extension beyond the OR-only reference, SURVEY §2.7; scoring of
     survivors is unchanged BM25/TF-IDF).
 
-    Like every scorer here, the returned fn takes a postings
-    ``pyarrow.Table`` (any row order) and returns the top-k as
-    (doc_ids int64, scores float64) numpy arrays."""
+    Like every scorer here, the returned fn takes the postings rows as
+    _Rows (any row order) and returns the top-k as (doc_ids int64,
+    scores float64) numpy arrays."""
 
-    def fn(tbl: pa.Table):
-        if tbl.num_rows == 0:
+    def fn(rows: _Rows):
+        if rows.num_rows == 0:
             return _no_hits()
         # resolve the cache through the module AT CALL TIME: a direct
         # global reference would be captured BY VALUE by cloudpickle
@@ -469,7 +493,7 @@ def _make_exhaustive_scorer(
             from indexer_spark.query import _DECODED_CACHE as cache
         # pass 1: cache lookups; the rows that miss batch-decode
         looked, misses = [], []
-        for shard, term, df, docs, tfs, dls in _term_rows(tbl, _POST_COLS):
+        for shard, term, df, docs, tfs, dls in _term_rows(rows, _POST_COLS):
             base_key = (
                 (epoch, -1 if shard is None else shard, term, df, len(docs))
                 if cache is not None else None
@@ -554,19 +578,18 @@ def _make_and_scorer(
         idf, k1, b, avgdl, k, "bm25", epoch=epoch, require_all=n_required
     )
 
-    def fn(tbl: pa.Table):
-        if tbl.num_rows == 0 or pc.count_distinct(
-                tbl.column("term")).as_py() < n_required:
+    def fn(rows: _Rows):
+        if rows.num_rows == 0 or len(set(rows["term"])) < n_required:
             return _no_hits()
-        if pc.sum(tbl.column("df")).as_py() < small_shard:
-            return exhaustive(tbl)
+        if sum(rows["df"]) < small_shard:
+            return exhaustive(rows)
         gcache = None
         if epoch is not None:
             from indexer_spark.query import _DECODED_CACHE as gcache
-        shard = tbl.column("shard")[0].as_py()
+        shard = rows["shard"][0]
         terms = []
         for _sh, term, df, docs, tfs, dls, blocks in _term_rows(
-                tbl, _POST_COLS + ("blocks",)):
+                rows, _POST_COLS + ("blocks",)):
             terms.append({
                 "term": term, "df": df, "docs": docs,
                 "tfs": tfs, "dls": dls, "blocks": blocks,
@@ -739,8 +762,8 @@ def _decode_rows(rows: list) -> list:
     return out
 
 
-def _decode_merged_terms(tbl: pa.Table, epoch, positional: bool):
-    """Decode every postings row of ``tbl`` (cache-aware, slot -1) and
+def _decode_merged_terms(rows: _Rows, epoch, positional: bool):
+    """Decode every postings row of ``rows`` (cache-aware, slot -1) and
     MERGE same-term rows across shards into one entry per term with
     globally sorted doc arrays — valid because shards partition the
     doc-id space in shard order (offset[s+1] = offset[s] + count[s]), so
@@ -759,7 +782,7 @@ def _decode_merged_terms(tbl: pa.Table, epoch, positional: bool):
         from indexer_spark.query import _DECODED_CACHE as cache
     looked, misses = [], []
     for shard, term, df, docs, tfs, dls, poss, plen in _term_rows(
-            tbl, _POST_COLS + ("poss", "plen"), by_shard=True):
+            rows, _POST_COLS + ("poss", "plen"), by_shard=True):
         if docs is not None:
             plen = len(docs)
         base_key = (
@@ -942,14 +965,13 @@ def _make_phrase_scorer(
     as every other mode)."""
     n_required = len(qoffsets)
 
-    def fn(tbl: pa.Table):
-        if tbl.num_rows == 0 or pc.count_distinct(
-                tbl.column("term")).as_py() < n_required:
+    def fn(rows: _Rows):
+        if rows.num_rows == 0 or len(set(rows["term"])) < n_required:
             return _no_hits()
         # decode + merge same-term rows across shards (one entry per
         # term, globally sorted docs): the driver fast path feeds this
         # fn the WHOLE matched table in one call on many-shard indexes
-        cache, entries = _decode_merged_terms(tbl, epoch, True)
+        cache, entries = _decode_merged_terms(rows, epoch, True)
         terms = [
             {"term": t, **e, "w": idf[t], "qoffs": qoffsets[t]}
             for t, e in entries.items()
@@ -1017,11 +1039,10 @@ def _make_near_scorer(
     every other mode)."""
     n_required = len(idf)
 
-    def fn(tbl: pa.Table):
-        if tbl.num_rows == 0 or pc.count_distinct(
-                tbl.column("term")).as_py() < n_required:
+    def fn(rows: _Rows):
+        if rows.num_rows == 0 or len(set(rows["term"])) < n_required:
             return _no_hits()
-        cache, entries = _decode_merged_terms(tbl, epoch, True)
+        cache, entries = _decode_merged_terms(rows, epoch, True)
         terms = [
             {"term": t, **e, "w": idf[t]} for t, e in entries.items()
         ]
@@ -1098,10 +1119,10 @@ def _make_bool_scorer(
     reference is OR-only, SURVEY §2.7)."""
     from .boolquery import eval_docs
 
-    def fn(tbl: pa.Table):
-        if tbl.num_rows == 0:
+    def fn(rows: _Rows):
+        if rows.num_rows == 0:
             return _no_hits()
-        cache, data = _decode_merged_terms(tbl, epoch, positional)
+        cache, data = _decode_merged_terms(rows, epoch, positional)
         term_docs = {t: e["docs"] for t, e in data.items()}
         no_docs = np.empty(0, dtype=np.int64)
 
@@ -1164,10 +1185,11 @@ def _score_batch(hits) -> pa.RecordBatch:
 def _shard_grouped(scorer):
     """mapInArrow wrapper: concatenate a task's Arrow batches into one
     table, then run the per-shard scorer ONCE per shard present, on all
-    of that shard's rows, yielding one doc_id/score batch per shard. The
-    grouping is a stable take of each shard's row indices, not a slice:
-    after append_index one task can hold a shard's files apart, so its
-    rows need not be contiguous. Correct ONLY when a shard's matched
+    of that shard's rows (converted once, _table_rows), yielding one
+    doc_id/score batch per shard. The grouping is a stable take of each
+    shard's row indices, not a slice: after append_index one task can
+    hold a shard's files apart, so its rows need not be contiguous.
+    Correct ONLY when a shard's matched
     postings rows all land in one task — IndexReader pins
     spark.sql.files.maxPartitionBytes above the largest committed
     postings file (recorded in stats.json) to enforce that, and falls
@@ -1183,7 +1205,8 @@ def _shard_grouped(scorer):
         whole = pa.Table.from_batches(acc)
         shard = whole.column("shard").to_numpy()
         for sh in dict.fromkeys(shard.tolist()):
-            yield _score_batch(scorer(whole.take(np.flatnonzero(shard == sh))))
+            yield _score_batch(scorer(_table_rows(
+                whole.take(np.flatnonzero(shard == sh)))))
 
     return fn
 
@@ -1210,22 +1233,22 @@ def _make_pruned_scorer(
     small_shard = SMALL_SHARD_THRESHOLD  # captured at scorer creation
     exhaustive = _make_exhaustive_scorer(idf, k1, b, avgdl, k, "bm25", epoch=epoch)
 
-    def fn(tbl: pa.Table):
-        if tbl.num_rows == 0:
+    def fn(rows: _Rows):
+        if rows.num_rows == 0:
             return _no_hits()
-        if pc.sum(tbl.column("df")).as_py() < small_shard:
-            return exhaustive(tbl)
+        if sum(rows["df"]) < small_shard:
+            return exhaustive(rows)
         # runtime import, NOT a global reference: see exhaustive scorer
         gcache = None
         if epoch is not None:
             from indexer_spark.query import _DECODED_CACHE as gcache
-        shard = tbl.column("shard")[0].as_py()
+        shard = rows["shard"][0]
         ub_scale = 1.0
         if shard_ub_scale:
             ub_scale = shard_ub_scale.get(shard, 1.0)
         terms = []
         for _sh, term, df, docs, tfs, dls, blocks in _term_rows(
-                tbl, _POST_COLS + ("blocks",)):
+                rows, _POST_COLS + ("blocks",)):
             lasts = np.array([blk["last_doc_id"] for blk in blocks], dtype=np.int64)
             norms = np.array([blk["max_norm"] for blk in blocks], dtype=np.float64)
             terms.append({
@@ -1356,13 +1379,6 @@ def _warm_install_entries(payload, block_size: int,
     return warmed
 
 
-#: a row group whose wanted rows form more runs of consecutive rows
-#: than this is gathered with one ``Table.take``; up to it, each run is
-#: a zero-copy slice. The crossover was measured on a 4-core VM over
-#: tok and postings reads (read plus ``to_pylist``): one take costs
-#: about as much as six slices and the copy that joins them.
-SLICE_MAX_RUNS = 6
-
 #: byte budget of _CHUNK_CACHE. Every column chunk the serving paths of
 #: a 25,000-turn index touch (term_stats, postings, tok) fits in ~5 MB.
 CHUNK_CACHE_BYTES = 64 << 20
@@ -1386,16 +1402,18 @@ class _File(NamedTuple):
 
 class _RowGroup(NamedTuple):
     """_CHUNK_CACHE's record of one row group: its columns decoded so
-    far, conformed to the dataset types, and the key index built when
-    the key column was decoded (None until then). The index is
+    far, conformed to the dataset types, as one Arrow array per column
+    name (looked up by name, without a Table.column call per read); its
+    row count; and the key index built when the key column was decoded
+    (None until then). The index is
       - a string key's sorted values as a list (searched by bisect),
       - an int, the first key, when an integer key is dense (last -
         first = rows - 1): a key's row is key - first,
       - any other integer key's column as a numpy view (searchsorted).
-    ``nbytes`` is the table's bytes plus what the index holds beyond
+    ``nbytes`` is the arrays' bytes plus what the index holds beyond
     them: the list and its str objects (an int or a view holds none)."""
-    tbl: pa.Table
-    names: frozenset
+    arrays: dict
+    n: int
     index: object
     nbytes: int
 
@@ -1411,6 +1429,18 @@ def _stale(path: str) -> FileNotFoundError:
         f"{path} changed or vanished since the reader's snapshot")
 
 
+def _check_files(files) -> None:
+    """Raise FileNotFoundError unless each of ``files`` still has the
+    identity its footer was read with."""
+    for f in files:
+        try:
+            st = os.stat(f.path)
+        except OSError:
+            raise _stale(f.path) from None
+        if (st.st_mtime_ns, st.st_size) != f.ident:
+            raise _stale(f.path)
+
+
 class _FileIndex:
     """Footer index of one parquet table, read once per reader snapshot:
     the files in ``pyarrow.dataset`` discovery order, each with its
@@ -1418,22 +1448,22 @@ class _FileIndex:
     per-row-group min/max of the ``key`` column.
 
     Every index writer sorts ``key`` strictly within a file (term_stats
-    and postings by term, tok by local_idx), so a point read addresses
-    rows instead of masking them: files are pruned by shard and row
-    groups by their key range, and the requested keys become row indices
-    through the row group's key index (see _RowGroup). Each run of
-    consecutive rows is a zero-copy slice, a row group whose rows form
-    more than SLICE_MAX_RUNS runs is gathered with one take, and a
-    ``key_range`` read is one slice. Each row group is decoded once into
-    one cached record: a table conformed to the dataset types (casts,
-    nulls for columns an older file lacks) and the key index. Its key is
-    checked strictly increasing as it is decoded: a row group whose keys
-    are out of order or repeated raises UnsortedIndexError naming the
-    file. The hive
-    ``shard`` column is built once per read from each part's partition
-    value and row count, so the result is the same rows in the same
-    order as ``dataset.to_table(filter=...)``, without a scan plan per
-    call."""
+    and postings by term, tok by local_idx), so a point read (``read``)
+    addresses rows instead of masking them: files are pruned by shard
+    and row groups by their key range, and the requested keys become row
+    indices through the row group's key index (see _RowGroup). Each
+    value of those rows is read cell by cell from the row group's cached
+    array into Python lists (_Rows), which is what every caller of a
+    point read consumes: no Arrow table is assembled per read. ``scan``
+    returns every row as an Arrow table of the cached arrays. Each row
+    group is decoded once into one cached record: arrays conformed to
+    the dataset types (casts, nulls for columns an older file lacks) and
+    the key index. Its key is checked strictly increasing as it is
+    decoded: a row group whose keys are out of order or repeated raises
+    UnsortedIndexError naming the file. The hive ``shard`` column comes
+    from each file's partition value, so both return the same rows in
+    the same order as ``dataset.to_table(filter=...)``, without a scan
+    plan per call."""
 
     def __init__(self, root: str, key: str, partitioned: bool):
         import pyarrow.dataset as pads
@@ -1446,14 +1476,15 @@ class _FileIndex:
         self.partitioned = partitioned
         # the dataset types cached row groups are conformed to: part of
         # their cache key, so a snapshot that infers other types (from
-        # another first file) never gets tables cast for the old ones
+        # another first file) never gets arrays cast for the old ones
         self._sig = ds.schema.to_string(show_field_metadata=False,
                                         show_schema_metadata=False)
         self._key_schema = (pa.schema([ds.schema.field(key)])
                             if key in ds.schema.names else None)
         self._key_names = frozenset([key])
-        # columns -> (their schema, it without the hive column, that
-        # one's names as a frozenset, the hive column's index or -1)
+        # columns -> their schema, it without the hive column, that
+        # one's names as a tuple and a frozenset, the hive column's
+        # index or -1 (see _columns)
         self._schemas: dict[tuple, tuple] = {}
         self.files: list[_File] = []
         for frag in ds.get_fragments():
@@ -1480,18 +1511,35 @@ class _FileIndex:
                                     (st.st_mtime_ns, st.st_size), md,
                                     frozenset(names), ranges))
 
+    def _columns(self, columns: list[str]) -> tuple:
+        """(schema of ``columns``, it without the hive column, that
+        one's names as a tuple and as a frozenset, the hive column's
+        index or -1), built once per column list."""
+        cols = tuple(columns)
+        hit = self._schemas.get(cols)
+        if hit is None:
+            schema = pa.schema([self.schema.field(c) for c in cols])
+            hive = schema.get_field_index("shard") if self.partitioned \
+                else -1
+            inner = schema.remove(hive) if hive >= 0 else schema
+            hit = self._schemas[cols] = (
+                schema, inner, tuple(inner.names), frozenset(inner.names),
+                hive)
+        return hit
+
     def read(self, columns: list[str], keys=None, shard_keys=None,
-             key_range=None):
+             key_range=None) -> _Rows:
         """Rows of ``columns`` whose key is in ``keys`` (sorted,
         distinct), or in ``shard_keys[shard]`` (sorted, distinct, per
         hive shard; other shards are skipped), or in the half-open
-        ``key_range`` (lo, hi); all rows when no filter is given. A
-        filtered read that gathers rows from more than one place comes
-        back as one chunk per column. Raises FileNotFoundError when a
-        file the read touches is gone or changed — also on a full cache
-        hit."""
-        filtered = keys is not None or shard_keys is not None \
-            or key_range is not None
+        ``key_range`` (lo, hi), as _Rows: each column's values in
+        dataset row order, equal to the dataset scan's ``to_pylist``.
+        One filter is required (``scan`` reads every row). Raises
+        FileNotFoundError when a file the read touches is gone or
+        changed — also on a full cache hit."""
+        if keys is None and shard_keys is None and key_range is None:
+            raise TypeError("read needs keys, shard_keys or key_range; "
+                            "scan reads every row")
         plan = []
         for f in self.files:
             vals = keys
@@ -1499,7 +1547,7 @@ class _FileIndex:
                 vals = shard_keys.get(f.shard)
                 if not vals:
                     continue
-            if filtered and self.key not in f.names:
+            if self.key not in f.names:
                 continue  # key column absent: no row can match
             rgs = []
             for rg, r in enumerate(f.ranges):
@@ -1511,75 +1559,72 @@ class _FileIndex:
                         i = bisect_left(vals, lo)
                         if i == len(vals) or vals[i] > hi:
                             continue
-                    elif key_range is not None and (
-                            hi < key_range[0] or lo >= key_range[1]):
+                    elif hi < key_range[0] or lo >= key_range[1]:
                         continue
                 rgs.append(rg)
             if rgs:
                 plan.append((f, vals, rgs))
-        for f, _, _ in plan:
-            try:
-                st = os.stat(f.path)
-            except OSError:
-                raise _stale(f.path) from None
-            if (st.st_mtime_ns, st.st_size) != f.ident:
-                raise _stale(f.path)
-        cols = tuple(columns)
-        hit = self._schemas.get(cols)
-        if hit is None:
-            schema = pa.schema([self.schema.field(c) for c in cols])
-            hive = schema.get_field_index("shard") if self.partitioned \
-                else -1
-            inner = schema.remove(hive) if hive >= 0 else schema
-            hit = self._schemas[cols] = (
-                schema, inner, frozenset(inner.names), hive)
-        schema, inner, need, hive = hit
-        # the parts of the result, with each part's row count and hive
-        # partition value
-        parts, counts, shards = [], [], []
+        _check_files(f for f, _, _ in plan)
+        schema, inner, names, need, hive = self._columns(columns)
+        out = {c: [] for c in columns}
+        n = 0
         for f, vals, rgs in plan:
             for rg in rgs:
-                if not filtered:
-                    rec = _row_group(f, rg, inner, need, self._sig, self.key)
-                    got = [rec.tbl.select(inner.names)]
-                else:
-                    # the key first: the other columns of a row group
-                    # holding no requested key are never decoded
-                    rec = _row_group(f, rg, self._key_schema,
-                                     self._key_names, self._sig, self.key)
-                    rows = _key_rows(rec, vals, key_range)
-                    if not rows:
-                        continue
-                    if not need <= rec.names:  # columns not decoded: widen
-                        rec = _row_group(f, rg, inner, need, self._sig,
-                                         self.key)
-                    got = _address(rec.tbl.select(inner.names), rows)
-                parts += got
-                counts += [g.num_rows for g in got]
-                shards += [f.shard] * len(got)
-        if not parts:
+                # the key first: the other columns of a row group
+                # holding no requested key are never decoded
+                rec = _row_group(f, rg, self._key_schema, self._key_names,
+                                 self._sig, self.key)
+                rows = _key_rows(rec, vals, key_range)
+                if not rows:
+                    continue
+                if not need <= rec.arrays.keys():  # not decoded: widen
+                    rec = _row_group(f, rg, inner, need, self._sig,
+                                     self.key)
+                for c in names:
+                    a = rec.arrays[c]
+                    out[c] += [a[i].as_py() for i in rows]
+                if hive >= 0:
+                    out["shard"] += [f.shard] * len(rows)
+                n += len(rows)
+        return _Rows(out, n, schema)
+
+    def scan(self, columns: list[str]) -> pa.Table:
+        """Every row of ``columns`` as an Arrow table in dataset row
+        order: the cached arrays of each row group, zero-copy, one chunk
+        per row group. The hive ``shard`` column is one chunk built from
+        each file's partition value and footer row counts, so a scan of
+        it alone decodes nothing. Raises FileNotFoundError like read."""
+        plan = [(f, [rg for rg, r in enumerate(f.ranges) if r is not False])
+                for f in self.files]
+        _check_files(f for f, rgs in plan if rgs)
+        schema, inner, names, need, hive = self._columns(columns)
+        chunks = {c: [] for c in names}
+        counts, shards = [], []
+        for f, rgs in plan:
+            for rg in rgs:
+                if need:
+                    arrays = _row_group(f, rg, inner, need, self._sig,
+                                        self.key).arrays
+                    for c in names:
+                        chunks[c].append(arrays[c])
+                counts.append(f.md.row_group(rg).num_rows)
+                shards.append(f.shard)
+        if not counts:
             return schema.empty_table()
-        out = parts[0]
-        if len(parts) > 1:
-            # a filtered read copies just the rows it read into one
-            # chunk per column; a full read keeps the cached chunks
-            out = pa.concat_tables(parts)
-            if filtered:
-                out = out.combine_chunks()
+        cols = [pa.chunked_array(chunks[c], inner.field(c).type)
+                for c in names]
         if hive >= 0:
-            # one column for the whole read, without a validity bitmap
-            # (as the dataset scan returns it)
-            field = schema.field(hive)
-            out = out.add_column(hive, field, pa.array(
-                np.repeat(shards, counts), field.type))
-        return out
+            # without a validity bitmap, as the dataset scan returns it
+            cols.insert(hive, pa.array(np.repeat(shards, counts),
+                                       schema.field(hive).type))
+        return pa.Table.from_arrays(cols, schema=schema)
 
 
 def _key_rows(rec: _RowGroup, vals, key_range):
     """Rows of ``rec``'s row group, as ascending Python ints, whose key
     is in ``vals`` (sorted, distinct; a list) or, as a range, in the
     half-open ``key_range`` (lo, hi)."""
-    idx, n = rec.index, rec.tbl.num_rows
+    idx, n = rec.index, rec.n
     if type(idx) is int:  # dense integer key: row = key - first
         if key_range is not None:
             lo, hi = key_range
@@ -1606,25 +1651,6 @@ def _key_rows(rec: _RowGroup, vals, key_range):
     return pos[idx[np.minimum(pos, n - 1)] == want].tolist()
 
 
-def _address(tbl: pa.Table, rows) -> list:
-    """``rows`` (strictly increasing Python ints: a list or a range) of
-    ``tbl``: one zero-copy slice per run of consecutive rows, or one take
-    when the rows form more than SLICE_MAX_RUNS runs."""
-    if rows[-1] - rows[0] == len(rows) - 1:  # one run
-        return [tbl.slice(rows[0], len(rows))]
-    runs = []  # [first row, row count]
-    # scattered rows stop the scan at the first run past SLICE_MAX_RUNS
-    for r in rows:
-        if runs and runs[-1][0] + runs[-1][1] == r:
-            runs[-1][1] += 1
-        elif len(runs) == SLICE_MAX_RUNS:
-            # through numpy: take converts a list ~2x slower
-            return [tbl.take(np.fromiter(rows, np.int64, len(rows)))]
-        else:
-            runs.append([r, 1])
-    return [tbl.slice(r, n) for r, n in runs]
-
-
 def _key_index(a: pa.Array) -> tuple[object, int]:
     """The key index of ``a``, a decoded row group's key column checked
     strictly increasing and null-free (see _RowGroup), and the bytes it
@@ -1635,34 +1661,35 @@ def _key_index(a: pa.Array) -> tuple[object, int]:
             return a[0].as_py(), 0
         return a.to_numpy(), 0
     keys = a.to_pylist()[:]  # to_pylist over-allocates the list by ~1/8
-    return keys,sys.getsizeof(keys) + sum(map(sys.getsizeof, keys))
+    return keys, sys.getsizeof(keys) + sum(map(sys.getsizeof, keys))
 
 
 def _row_group(f: _File, rg: int, schema, names: frozenset, sig: str,
                key: str) -> _RowGroup:
-    """Row group ``rg`` of ``f`` as its cached _RowGroup, whose table
-    holds at least the fields of ``schema`` (fields of the dataset
-    schema whose string form is ``sig``; ``names`` are their names), in
-    no fixed order: stored columns cast to the dataset type, columns
-    this older file lacks as nulls. _CHUNK_CACHE keeps one record per
-    row group, of every column read so far; a read that needs columns it
-    lacks reads just those (single-threaded, through a handle whose
-    identity is re-checked against the file index) and replaces it with
-    a wider record, which shares the columns and the key index already
-    held. The ``key`` column is checked strictly increasing as it is
-    decoded (raises UnsortedIndexError naming the file otherwise), and
-    its key index is built then."""
+    """Row group ``rg`` of ``f`` as its cached _RowGroup, whose arrays
+    hold at least the fields of ``schema`` (fields of the dataset
+    schema whose string form is ``sig``; ``names`` are their names):
+    stored columns cast to the dataset type, columns this older file
+    lacks as nulls. _CHUNK_CACHE keeps one record per row group, of
+    every column read so far; a read that needs columns it lacks reads
+    just those (single-threaded, through a handle whose identity is
+    re-checked against the file index) and replaces it with a wider
+    record, which shares the arrays and the key index already held (a
+    record is never changed once cached, so a read holding the narrower
+    one stays valid). The ``key`` column is checked strictly increasing
+    as it is decoded (raises UnsortedIndexError naming the file
+    otherwise), and its key index is built then."""
     ck = (f.path, *f.ident, rg, sig)
     hit = _CHUNK_CACHE.get(ck)
     if hit is None:
-        tbl, have, index, index_bytes = None, frozenset(), None, 0
+        arrays, index, index_bytes = {}, None, 0
     else:
         rec = hit[0]
-        if names <= rec.names:
+        if names <= rec.arrays.keys():
             return rec
-        tbl, have, index = rec.tbl, rec.names, rec.index
-        index_bytes = rec.nbytes - tbl.nbytes
-    missing = [fld for fld in schema if fld.name not in have]
+        arrays, index = dict(rec.arrays), rec.index
+        index_bytes = rec.nbytes - sum(a.nbytes for a in arrays.values())
+    missing = [fld for fld in schema if fld.name not in arrays]
     stored = [fld.name for fld in missing if fld.name in f.names]
     if stored:
         import pyarrow.parquet as pq
@@ -1696,10 +1723,9 @@ def _row_group(f: _File, rg: int, schema, names: frozenset, sig: str,
                 index, index_bytes = _key_index(a)
         else:  # a column this older file lacks
             a = pa.nulls(n, field.type)
-        tbl = (pa.Table.from_arrays([a], schema=pa.schema([field]))
-               if tbl is None else tbl.append_column(field, a))
-    rec = _RowGroup(tbl, have | {fld.name for fld in missing}, index,
-                    tbl.nbytes + index_bytes)
+        arrays[field.name] = a
+    rec = _RowGroup(arrays, n, index,
+                    sum(a.nbytes for a in arrays.values()) + index_bytes)
     _CHUNK_CACHE.discard(ck)
     _CHUNK_CACHE.put(ck, (rec,))
     return rec
@@ -1738,14 +1764,12 @@ class _PointReads:
 _TS_COLS = ("term", "df", "nbytes", "poss_nbytes")
 
 
-def _rows_by_term(tbl: pa.Table) -> dict[str, set]:
+def _rows_by_term(rows: _Rows) -> dict[str, set]:
     """term -> {(shard, df, payload_len)} of a postings read, for
     IndexReader._publish_cached."""
     out: dict[str, set] = {}
-    for t, sh, df, ln in zip(
-            tbl.column("term").to_pylist(), tbl.column("shard").to_pylist(),
-            tbl.column("df").to_pylist(),
-            pc.binary_length(tbl.column("docs")).to_pylist()):
+    for t, sh, df, ln in zip(rows["term"], rows["shard"], rows["df"],
+                             map(len, rows["docs"])):
         out.setdefault(t, set()).add((sh, df, ln))
     return out
 
@@ -1951,7 +1975,7 @@ class IndexReader:
                     raise
                 self._refresh_snapshot()
 
-    def _post_table(self, columns: list[str], terms):
+    def _post_table(self, columns: list[str], terms) -> _Rows:
         """Postings rows of ``terms`` (every shard, dataset row order)
         through the point-read layer."""
         keys = sorted(set(terms))
@@ -1985,25 +2009,18 @@ class IndexReader:
                 return out
             self._has_nbytes = "nbytes" in names
             self._has_poss_nbytes = "poss_nbytes" in names
-            tbl = ts.read([c for c in _TS_COLS if c in names],
-                          keys=sorted(set(missing)))
-            tlist = tbl.column("term").to_pylist()
-            found = dict(
-                zip(tlist, (int(x) for x in tbl.column("df").to_pylist()))
-            )
+            rows = ts.read([c for c in _TS_COLS if c in names],
+                           keys=sorted(set(missing)))
+            tlist = rows["term"]
+            found = dict(zip(tlist, rows["df"]))
             if self._has_nbytes:
                 # `or 0`: NULL nbytes (e.g. a mixed-format index that
                 # slipped past the version guard) must not crash queries
-                nb = dict(
-                    zip(tlist, (int(x or 0) for x in tbl.column("nbytes").to_pylist()))
-                )
+                nb = dict(zip(tlist, (x or 0 for x in rows["nbytes"])))
                 for t in missing:
                     self._nbytes_cache[t] = nb.get(t, 0)
             if self._has_poss_nbytes:
-                pnb = dict(zip(tlist, (
-                    int(x or 0)
-                    for x in tbl.column("poss_nbytes").to_pylist()
-                )))
+                pnb = dict(zip(tlist, (x or 0 for x in rows["poss_nbytes"])))
                 for t in missing:
                     self._poss_nbytes_cache[t] = pnb.get(t, 0)
             for t in missing:
@@ -2040,20 +2057,20 @@ class IndexReader:
                 key_range=(prefix, prefix + "\U0010ffff"),
             )
 
-        names, tbl = self._with_reads(scan)
-        if tbl is None:
+        names, rows = self._with_reads(scan)
+        if rows is None:
             self._prefix_cache[key] = []
             return []
         self._has_nbytes = "nbytes" in names
         self._has_poss_nbytes = "poss_nbytes" in names
-        terms = tbl.column("term").to_pylist()
-        dfs = [int(x) for x in tbl.column("df").to_pylist()]
+        terms = rows["term"]
+        dfs = rows["df"]
         nbs = (
-            [int(x or 0) for x in tbl.column("nbytes").to_pylist()]
+            [x or 0 for x in rows["nbytes"]]
             if self._has_nbytes else [0] * len(terms)
         )
         pnbs = (
-            [int(x or 0) for x in tbl.column("poss_nbytes").to_pylist()]
+            [x or 0 for x in rows["poss_nbytes"]]
             if self._has_poss_nbytes else [0] * len(terms)
         )
         pairs = []
@@ -2090,14 +2107,15 @@ class IndexReader:
 
     def _top_terms(self, n_terms: int) -> list[tuple[str, int, int]]:
         """Hottest terms by compressed payload size, ranked inside
-        pyarrow (select_k — no full-vocabulary to_pylist + Python sort;
-        on a large dictionary that materialization is avoidable driver
+        pyarrow over a term_stats scan (the cached arrays, zero-copy;
+        select_k — no full-vocabulary to_pylist + Python sort; on a
+        large dictionary that materialization is avoidable driver
         memory/CPU). Returns [(term, df, nbytes)] descending."""
         def scan(reads):
             ts = reads["term_stats"]
             if not {"term", "nbytes"} <= set(ts.schema.names):
                 return None
-            return ts.read(["term", "df", "nbytes"])
+            return ts.scan(["term", "df", "nbytes"])
 
         tbl = self._with_reads(scan)
         if tbl is None:
@@ -2166,10 +2184,10 @@ class IndexReader:
         epoch = self._epoch
         block_size = int(self.stats["block_size"])
         terms = [t for t, _, _ in rows]
-        tbl = self._post_table(list(_POST_COLS), terms)
+        rows_read = self._post_table(list(_POST_COLS), terms)
         by_term: dict[str, list] = {}
         for sh, t, df, docs, tfs, dls in zip(
-                *(tbl.column(c).to_pylist() for c in _POST_COLS)):
+                *(rows_read[c] for c in _POST_COLS)):
             by_term.setdefault(t, []).append((sh, df, docs, tfs, dls))
         payload: list[tuple] = []
         spent = 0
@@ -2308,11 +2326,11 @@ class IndexReader:
         # still decides — in hottest-first order — which terms actually
         # decode; a budget break merely leaves some prefetched rows
         # unused (the adaptive default budget is sized to hold them all).
-        ptbl_all = self._post_table(list(_POST_COLS),
-                                    [t for t, _, _ in rows])
+        post_rows = self._post_table(list(_POST_COLS),
+                                     [t for t, _, _ in rows])
         rows_by_term: dict[str, list] = {}
         for sh, t_r, df_r, docs, tfs, dls in zip(
-                *(ptbl_all.column(c).to_pylist() for c in _POST_COLS)):
+                *(post_rows[c] for c in _POST_COLS)):
             rows_by_term.setdefault(t_r, []).append(
                 (sh, df_r, docs, tfs, dls)
             )
@@ -2444,10 +2462,10 @@ class IndexReader:
         if sum(self._nbytes_cache.get(t, 0) for t in uncovered) \
                 > self.fast_path_bytes:
             return None
-        tbl = self._post_table(list(_POST_COLS), uncovered)
+        read = self._post_table(list(_POST_COLS), uncovered)
         by_term: dict[str, list] = {}
         for sh, t, df, docs, tfs, dls in zip(
-                *(tbl.column(c).to_pylist() for c in _POST_COLS)):
+                *(read[c] for c in _POST_COLS)):
             by_term.setdefault(t, []).append((sh, df, docs, tfs, dls))
         st = self.stats
         k1, b_, avgdl = st["k1"], st["b"], st["avgdl"]
@@ -2497,20 +2515,20 @@ class IndexReader:
     def _fast_scored(self, present: list[str], scorer) -> list | None:
         """Driver fast path: when the matched postings payload is small
         (per-term nbytes from term_stats), point-read the matched rows
-        (_post_table) and pass that Arrow table straight to the SAME
-        numpy exhaustive scorer a distributed task runs on its Arrow
-        batches — identical arithmetic, identical results, no Spark job
-        and no conversion. Returns None when the payload exceeds
-        fast_path_bytes (or the index predates the nbytes column),
-        falling back to the distributed plan."""
+        (_post_table) and pass those _Rows straight to the SAME numpy
+        exhaustive scorer a distributed task runs on each shard's rows —
+        identical arithmetic, identical results, no Spark job. Returns
+        None when the payload exceeds fast_path_bytes (or the index
+        predates the nbytes column), falling back to the distributed
+        plan."""
         if self.fast_path_bytes <= 0 or not self._has_nbytes:
             return None
         total = sum(self._nbytes_cache.get(t, 0) for t in present)
         if total > self.fast_path_bytes:
             return None
         # shard included: the decoded-postings cache keys on it
-        tbl = self._post_table(list(_POST_COLS), present)
-        uids, sums = scorer(tbl)
+        rows = self._post_table(list(_POST_COLS), present)
+        uids, sums = scorer(rows)
         # record EVERY matched row so repeat queries can skip the parquet
         # read (_fast_from_cache). Unconditional on purpose: recording
         # only cache-resident rows would leave a term's entry PARTIAL
@@ -2518,7 +2536,7 @@ class IndexReader:
         # then silently score from a subset of its shards. With the full
         # list, any evicted entry is a get() miss -> clean fallback to
         # the reading path.
-        self._publish_cached(_rows_by_term(tbl))
+        self._publish_cached(_rows_by_term(rows))
         self.last_path = "fast"
         return list(zip(uids.tolist(), sums.tolist()))
 
@@ -2533,9 +2551,9 @@ class IndexReader:
         — the measured whole-index ratio at 2M turns was poss ~0.6x, so
         the estimate errs toward the distributed plan, never toward an
         unbounded driver read). Then a point read of ``cols`` (default
-        includes the poss column) whose Arrow table goes, unconverted,
-        to the SAME scorer a distributed task runs per shard, called
-        ONCE on the whole matched table: it merges each term's shard rows
+        includes the poss column) whose _Rows go to the SAME scorer a
+        distributed task runs per shard, called ONCE on all the matched
+        rows: it merges each term's shard rows
         into one sorted doc array (_decode_merged_terms, which fails
         loudly on overlapping shard ranges) and batch-decodes the
         uncached rows (_decode_rows), so the pass costs the same few
@@ -2544,9 +2562,9 @@ class IndexReader:
 
         Repeats skip the parquet read entirely: every reading pass
         records its rows in the _cached_terms bookkeeping, and a later
-        call whose terms are all recorded replays the scorer over an
-        Arrow table of payload-less rows (null payload columns, plus the
-        recorded payload length ``plen``) served from the decoded LRU
+        call whose terms are all recorded replays the scorer over
+        payload-less _Rows (None payload columns, plus the recorded
+        payload length ``plen``) served from the decoded LRU
         (slots -1 postings, -3/-4 positions); any evicted entry raises
         _FastCacheMiss and the call falls back to the reading path.
         Result-identical to the distributed plan on every path."""
@@ -2572,22 +2590,23 @@ class IndexReader:
         if all(v is not None for v in known.values()):
             rows = [(sh, t, df_r, plen) for t in present
                     for sh, df_r, plen in sorted(known[t])]
-            replay = pa.table(
+            n = len(rows)
+            replay = _Rows(
                 {c: [r[i] for r in rows]
                  for i, c in enumerate(("shard", "term", "df", "plen"))}
-                | {c: pa.nulls(len(rows), pa.binary())
-                   for c in cols if c not in ("shard", "term", "df")})
+                | {c: [None] * n
+                   for c in cols if c not in ("shard", "term", "df")}, n)
             try:
                 hits = scorer(replay)
             except _FastCacheMiss:
                 pass  # evicted somewhere: take the reading path
         if hits is None:
-            tbl = self._post_table(cols, present)
+            read = self._post_table(cols, present)
             # record rows so repeats can replay from the cache (same
             # bookkeeping _fast_scored uses; unconditional for the same
             # partial-entry reason)
-            self._publish_cached(_rows_by_term(tbl))
-            hits = scorer(tbl)
+            self._publish_cached(_rows_by_term(read))
+            hits = scorer(read)
         self.last_path = label
         uids, sums = hits
         return list(zip(uids.tolist(), sums.tolist()))
@@ -2836,12 +2855,11 @@ class IndexReader:
         if hits == []:
             return []
         if hits is not None and len(hits) <= self.FACET_DRIVER_MAX_DOCS:
-            loc, tbl = self._tok_rows(hits, [by])
+            loc, rows = self._tok_rows(hits, [by])
             val_of = {
-                (int(s), int(li)): v
-                for s, li, v in zip(tbl.column("shard").to_pylist(),
-                                    tbl.column("local_idx").to_pylist(),
-                                    tbl.column(by).to_pylist())
+                (s, li): v
+                for s, li, v in zip(rows["shard"], rows["local_idx"],
+                                    rows[by])
             }
             counts: dict = {}
             for d, _s in hits:
@@ -2941,13 +2959,12 @@ class IndexReader:
         if hits == []:
             return []
         if hits is not None and len(hits) <= self.FACET_DRIVER_MAX_DOCS:
-            loc, tbl = self._tok_rows(hits, cols)
+            loc, rows = self._tok_rows(hits, cols)
             attr = {
-                (int(s), int(li)): vals
+                (s, li): vals
                 for s, li, *vals in zip(
-                    tbl.column("shard").to_pylist(),
-                    tbl.column("local_idx").to_pylist(),
-                    *[tbl.column(c).to_pylist() for c in cols],
+                    rows["shard"], rows["local_idx"],
+                    *[rows[c] for c in cols],
                 )
             }
             out = []
@@ -3279,7 +3296,8 @@ class IndexReader:
     def _apply_scorer(self, postings: DataFrame, scorer):
         """Shuffle-free when whole-file tasks are guaranteed (score in
         place via mapInArrow); otherwise exchange by shard first
-        (applyInArrow). Either way the scorer sees Arrow tables."""
+        (applyInArrow). Either way the scorer sees each shard's Arrow
+        table as _Rows (_table_rows)."""
         if self._whole_file_tasks:
             # re-pin the split-size confs on every query: another reader's
             # close() may have restored lower priors session-wide, which
@@ -3295,7 +3313,8 @@ class IndexReader:
                 _shard_grouped(scorer), schema=_SCORE_SCHEMA
             )
         return postings.groupBy("shard").applyInArrow(
-            lambda tbl: pa.Table.from_batches([_score_batch(scorer(tbl))]),
+            lambda tbl: pa.Table.from_batches(
+                [_score_batch(scorer(_table_rows(tbl)))]),
             schema=_SCORE_SCHEMA,
         )
 
@@ -3351,7 +3370,7 @@ class IndexReader:
         """doc_id -> (shard, local_idx) via the stats map, then one point
         read of ``columns`` of the matched tok rows (shard pruning +
         local_idx addressing — k rows, metadata-sized IO, no Spark job).
-        Returns (locations, table with shard and local_idx first)."""
+        Returns (locations, _Rows with shard and local_idx first)."""
         from .build import locate_doc_ids
 
         def lookup(reads):
@@ -3361,11 +3380,11 @@ class IndexReader:
             want: dict[int, set] = {}
             for s, li in loc.values():
                 want.setdefault(s, set()).add(li)
-            tbl = reads["tok"].read(
+            rows = reads["tok"].read(
                 ["shard", "local_idx", *columns],
                 shard_keys={s: sorted(v) for s, v in want.items()},
             )
-            return loc, tbl
+            return loc, rows
 
         return self._with_reads(lookup)
 
@@ -3377,15 +3396,11 @@ class IndexReader:
         list-of-dict instead of a DataFrame."""
         if not hits:
             return []
-        loc, tbl = self._tok_rows(hits, ["conv_id", "turn_idx"])
+        loc, rows = self._tok_rows(hits, ["conv_id", "turn_idx"])
         by_key = {
-            (int(s), int(li)): (c, int(t))
-            for s, li, c, t in zip(
-                tbl.column("shard").to_pylist(),
-                tbl.column("local_idx").to_pylist(),
-                tbl.column("conv_id").to_pylist(),
-                tbl.column("turn_idx").to_pylist(),
-            )
+            (s, li): (c, t)
+            for s, li, c, t in zip(rows["shard"], rows["local_idx"],
+                                   rows["conv_id"], rows["turn_idx"])
         }
         out = []
         for d, score in hits:

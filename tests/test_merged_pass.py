@@ -134,17 +134,16 @@ def test_shard_grouped_scores_each_shard_once_on_all_its_rows():
         "bm25")
     seen = []
 
-    def recording(tbl):
-        seen.append(sorted(zip(tbl["shard"].to_pylist(),
-                               tbl["term"].to_pylist())))
-        return scorer(tbl)
+    def recording(rows):
+        seen.append(sorted(zip(rows["shard"], rows["term"])))
+        return scorer(rows)
 
     out = list(Q._shard_grouped(recording)(iter(batches)))
     assert seen == [[(0, "alpha"), (0, "beta"), (0, "gamma")],
                     [(1, "alpha"), (1, "beta"), (1, "gamma")]]
     assert len(out) == 2
     for got, own in zip(out, ([a0, a1, a2], [b0, b1, b2])):
-        ids, sc = scorer(pa.Table.from_batches([batch(own)]))
+        ids, sc = scorer(Q._table_rows(pa.Table.from_batches([batch(own)])))
         assert got.schema.names == ["doc_id", "score"]
         assert got["doc_id"].to_pylist() == ids.tolist() and ids.size
         assert got["score"].to_pylist() == sc.tolist()
