@@ -22,12 +22,12 @@ computation is expressed with no lock and no driver bottleneck:
                    analog of the reference's 100-doc segment
                    (tree.rs:269).
 
-  stage "postings" per pending shard: ONE shuffle of compact doc rows
-                   (terms/tfs as Arrow list columns, not exploded rows)
-                   keyed by shard; the per-shard applyInPandas explodes
-                   with numpy, factorize+lexsorts (term, doc_id), and
-                   delta+varint-encodes (compress.py) into one row per
-                   (shard, term), written directly partitionBy(shard)
+  stage "postings" per pending shard: whole-file tasks stream compact
+                   doc rows (not exploded rows) into a mapInArrow
+                   builder that explodes with numpy, lexsorts (term,
+                   doc_id) and lays the doc-id gaps, tfs and dls out as
+                   integer list columns (compress.postings_columns), one
+                   row per (shard, term), written directly partitionBy(shard)
                    with dynamic partition overwrite (idempotent re-runs)
                    and small parquet row groups so query-time term
                    predicates prune within a shard file.
@@ -76,18 +76,22 @@ TOK_SCHEMA = (
     "doc_len int, terms string, tfs binary"
 )
 
-# positional variant (BuildConfig.positions): two extra binary columns —
-# poss = per-term delta-varint position lists concatenated in terms order,
-# poss_lens = int32 byte length of each term's blob (the builder's split
-# boundaries). Parquet column pruning means non-positional readers never
-# touch them.
-TOK_SCHEMA_POS = TOK_SCHEMA + ", poss binary, poss_lens binary"
+# positional variant (BuildConfig.positions): one extra binary column,
+# poss = per-term delta-varint position lists concatenated in terms order.
+# Each term's blob holds its tf varints, so the postings builder splits it
+# at the varint ends without a stored length. Parquet column pruning means
+# non-positional readers never touch it.
+TOK_SCHEMA_POS = TOK_SCHEMA + ", poss binary"
 
+# one row per (shard, term): docs = doc-id gaps (the first absolute),
+# tfs/dls = term frequencies and document lengths, as integer lists the
+# reader views as numpy arrays; blocks = per-block WAND metadata over
+# elements [i*block_size, min((i+1)*block_size, df)); nbytes = the
+# varint-equivalent payload bytes (compress.postings_columns)
 POSTINGS_SCHEMA = (
     "shard int, term string, df long, nbytes long, "
-    "docs binary, tfs binary, dls binary, "
-    "blocks array<struct<last_doc_id: long, max_tf: int, max_norm: double, "
-    "doc_off: long, tf_off: long, dl_off: long>>"
+    "docs array<long>, tfs array<int>, dls array<int>, "
+    "blocks array<struct<last_doc_id: long, max_tf: int, max_norm: double>>"
 )
 
 # positional postings carry one extra payload column: the doc-ordered
@@ -150,6 +154,11 @@ def _append_manifest(index_dir: str, rows: list[dict]) -> None:
 
 
 def _shard_map_path(d): return os.path.join(d, "shard_map")
+
+
+def _ms_since(t: float) -> int:
+    """Whole milliseconds of wall time since ``time.time()`` was ``t``."""
+    return int((time.time() - t) * 1000)
 
 
 def _shard_files(root: str, shard: int) -> list[str]:
@@ -270,16 +279,17 @@ SHARD_MAP_JSON_MAX = 4096
 
 # On-disk index format version, stamped into stats.json at build time and
 # checked on every open. v2 = per-term nbytes column in postings +
-# packed-int32-binary tfs in tok (round-2 format); indexes without the
-# stamp predate it. Readers/appenders fail fast on mismatch instead of
-# silently mixing formats (NULL nbytes in term_stats, string-vs-binary tfs
-# in update_index's retok path).
-FORMAT_VERSION = 2
+# packed-int32-binary tfs in tok; v3 = postings docs/tfs/dls as integer
+# lists (no varint blobs, no block byte offsets) and no tok poss_lens.
+# Indexes without the stamp predate v2. Readers/appenders fail fast on
+# mismatch instead of silently mixing formats.
+FORMAT_VERSION = 3
 
 # Sentinel term for the per-(shard, task) metadata row the postings
-# builder emits alongside the real rows: carries n_terms / n_postings /
-# payload bytes, and doubles as the split-shard guard (two tasks touching
-# one shard -> two meta rows). Collision-proof: the lexer emits non-
+# builder emits alongside the real rows: carries n_postings (df), n_terms
+# (docs = [n_terms]) and the payload bytes (nbytes, poss_nbytes), and
+# doubles as the split-shard guard (two tasks touching one shard -> two
+# meta rows). Collision-proof: the lexer emits non-
 # alphanumeric characters as SINGLE-char tokens (lexer.py), so no real
 # term can be multi-char and start with \x00. Sorts before every real
 # term, so it lives in each file's first row group and term-stat pruning
@@ -309,8 +319,8 @@ def read_stats(index_dir: str) -> dict:
         raise RuntimeError(
             f"index at {index_dir} has on-disk format v{found}; this "
             f"engine reads/writes v{FORMAT_VERSION}. Rebuild the index "
-            "with build_index — mixing formats would corrupt term_stats "
-            "(missing nbytes) and update_index's retok path (tfs layout)."
+            "with build_index: the postings and tok layouts differ "
+            "between versions, and an append or update would mix them."
         )
     if stats.get("shard_map") == "parquet" and "shard_offsets" not in stats:
         import pyarrow.parquet as pq
@@ -431,8 +441,7 @@ def _make_tokenizer(shard_base: int = 0, verify_sorted: bool = False,
             n = len(pdf)
             doc_ids = local + np.arange(n, dtype=np.int64)
             local += n
-            terms_col, tfs_col = [], []
-            poss_col, plens_col = [], []
+            terms_col, tfs_col, poss_col = [], [], []
             dls = np.zeros(n, dtype=np.int32)
             texts = pdf["text"].tolist()
             for i, text in enumerate(texts):
@@ -446,9 +455,7 @@ def _make_tokenizer(shard_base: int = 0, verify_sorted: bool = False,
                             dtype=np.int32, count=len(occ),
                         ).tobytes()
                     )
-                    blob, plens = encode_positions_doc(occ.values())
-                    poss_col.append(blob)
-                    plens_col.append(plens.astype(np.int32).tobytes())
+                    poss_col.append(encode_positions_doc(occ.values()))
                     continue
                 counts = term_counts(text)
                 dls[i] = sum(counts.values())
@@ -470,7 +477,6 @@ def _make_tokenizer(shard_base: int = 0, verify_sorted: bool = False,
             }
             if positions:
                 out["poss"] = poss_col
-                out["poss_lens"] = plens_col
             yield pd.DataFrame(out)
 
     return fn
@@ -534,14 +540,6 @@ def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
             spark.sparkContext.defaultParallelism,
             math.ceil(n_est / cfg.shard_docs),
         )
-    import sys as _sys
-
-    dbg = os.environ.get("SPARK_GRAFT_DEBUG")
-
-    def _dbg(msg, t):
-        if dbg:
-            print(f"[ids] {msg}: {time.time() - t:.1f}s", file=_sys.stderr)
-
     if cfg.presorted_source:
         parted = df.withColumn("pid", F.spark_partition_id())
     else:
@@ -576,13 +574,13 @@ def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
         .mode("overwrite")
         .parquet(_tok_path(index_dir))
     )
-    _dbg("tokenize+write", t1)
+    tokenize_ms = _ms_since(t1)
 
     t1 = time.time()
     offsets, counts, n_docs, total_len = _collect_shard_stats(
         spark, index_dir, p
     )
-    _dbg("stats-agg", t1)
+    shard_stats_ms = _ms_since(t1)
     avgdl = total_len / n_docs if n_docs else 0.0
     stats = {
         "format_version": FORMAT_VERSION,
@@ -610,7 +608,8 @@ def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
         [{
             "stage": "ids", "shard": -1, "status": "done",
             "n_terms": 0, "n_postings": 0, "n_bytes": 0,
-            "lineage": lineage, "wall_ms": int((time.time() - t0) * 1000),
+            "lineage": lineage, "wall_ms": _ms_since(t0),
+            "tokenize_ms": tokenize_ms, "shard_stats_ms": shard_stats_ms,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }],
     )
@@ -621,48 +620,58 @@ def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
 # stage "postings": per-shard sorted, delta+varint-compressed posting lists
 # --------------------------------------------------------------------------
 
+def _binary_values(a) -> np.ndarray:
+    """The values of a binary Arrow array concatenated, as a uint8 numpy
+    view of its data buffer (no per-row bytes objects)."""
+    import pyarrow as pa
+
+    n = len(a)
+    if n == 0:
+        return np.zeros(0, dtype=np.uint8)
+    wide = pa.types.is_large_binary(a.type)
+    _validity, offs, data = a.buffers()
+    off = np.frombuffer(offs, dtype=np.int64 if wide else np.int32)[
+        a.offset:a.offset + n + 1]
+    if data is None:
+        return np.zeros(0, dtype=np.uint8)
+    return np.frombuffer(data, dtype=np.uint8)[off[0]:off[-1]]
+
+
 def _make_postings_builder(
     avgdl: float, k1: float, b: float, block_size: int,
     offsets: dict[int, int], positions: bool = False,
 ):
-    from .compress import encode_postings_batch
+    """One shard's tok rows (an Arrow table) -> its postings rows as
+    Arrow record batches: the sentinel meta row, then one row per term
+    in term order (see POSTINGS_SCHEMA), or nothing for a shard without
+    a single term."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    empty_cols = ["shard", "term", "df", "nbytes", "docs", "tfs", "dls",
-                  "blocks"]
-    if positions:
-        empty_cols = empty_cols + ["poss", "poss_nbytes"]
+    from .compress import postings_columns, varint_ends
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=empty_cols)
-        shard = int(pdf["shard"].iloc[0])
+    def fn(tbl):
+        shard = int(tbl.column("shard")[0].as_py())
         # absolute doc_id baked into the postings: the query path never
         # sees the local/offset indirection
         base = offsets[shard]
-        # explode the doc rows at C speed: one join+split over the whole
-        # group instead of per-row list handling (no Spark explode shuffle)
-        pdf = pdf[pdf["terms"] != ""]
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=empty_cols)
-        # split + dictionary-encode inside pyarrow: the whole shard's term
-        # stream stays in contiguous Arrow buffers — no 2M+ Python str
-        # objects, no object-hash factorize (the two together were ~40% of
-        # the builder's per-task CPU at 2M turns). UTF-8 byte order equals
-        # code-point order, so sort_indices over the dictionary yields the
-        # exact codes pd.factorize(sort=True) produced.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        ta = pa.array(pdf["terms"])
-        tlists = pc.split_pattern(ta, "\n")
+        tbl = tbl.filter(pc.not_equal(tbl.column("terms"), "")) \
+            .combine_chunks()
+        if tbl.num_rows == 0:
+            return
+        col = {c: tbl.column(c).chunk(0) for c in tbl.column_names}
+        # explode the doc rows at C speed: split + dictionary-encode
+        # inside pyarrow, so the whole shard's term stream stays in
+        # contiguous Arrow buffers (no per-term Python str objects, no
+        # object-hash factorize). UTF-8 byte order equals code-point
+        # order, so sort_indices over the dictionary ranks the terms.
+        tlists = pc.split_pattern(col["terms"], "\n")
         lens = pc.list_value_length(tlists).to_numpy().astype(np.int64)
         doc_rep = np.repeat(
-            base + pdf["local_idx"].to_numpy(dtype=np.int64), lens
-        )
-        dl_rep = np.repeat(pdf["doc_len"].to_numpy(dtype=np.int64), lens)
-        tfs = np.frombuffer(
-            b"".join(pdf["tfs"].tolist()), dtype=np.int32
-        ).astype(np.int64)
+            base + col["local_idx"].to_numpy().astype(np.int64), lens)
+        dl_rep = np.repeat(col["doc_len"].to_numpy().astype(np.int64), lens)
+        tfs = np.frombuffer(_binary_values(col["tfs"]),
+                            dtype=np.int32).astype(np.int64)
         # sort by (term, doc_id) via integer codes (dictionary >> strings)
         enc = pc.list_flatten(tlists).dictionary_encode()
         dic = enc.dictionary
@@ -670,17 +679,24 @@ def _make_postings_builder(
         rank = np.empty(len(dic), dtype=np.int64)
         rank[sort_idx] = np.arange(len(dic), dtype=np.int64)
         codes = rank[enc.indices.to_numpy()]
-        uniq = dic.take(pa.array(sort_idx)).to_numpy(zero_copy_only=False)
         order = np.lexsort((doc_rep, codes))
         codes, doc_s = codes[order], doc_rep[order]
-        tf_s, dl_s = tfs[order], dl_rep[order]
         starts = np.concatenate(
             ([0], np.nonzero(np.diff(codes))[0] + 1, [codes.size])
         )
-        docs_col, tfs_col, dls_col, blocks_col = encode_postings_batch(
-            doc_s, tf_s, dl_s, starts, avgdl,
-            k1=k1, b=b, block_size=block_size,
-        )
+        n_terms = starts.size - 1
+        out = postings_columns(doc_s, tfs[order], dl_rep[order], starts,
+                               avgdl, k1=k1, b=b, block_size=block_size)
+        nbytes = out.pop("nbytes")
+        names = ["shard", "term", "df", "nbytes", "docs", "tfs", "dls",
+                 "blocks"]
+        arrays = [
+            pa.array(np.full(n_terms, shard, dtype=np.int32)),
+            dic.take(pa.array(sort_idx[codes[starts[:-1]]])),
+            pa.array(np.diff(starts)),
+            pa.array(nbytes),
+            out["docs"], out["tfs"], out["dls"], out["blocks"],
+        ]
         if positions:
             # permute each doc row's concatenated per-term position blobs
             # into (term, doc_id) order WITHOUT per-entry Python slicing:
@@ -688,116 +704,80 @@ def _make_postings_builder(
             # position -> input position), then per-term splits at byte
             # boundaries. The per-doc delta chains stay intact, so the
             # query side decodes a term's whole payload in one varint
-            # pass. (The obvious bytes-slice loop here was the dominant
-            # positional build cost at 2M turns.)
-            ent_len = np.frombuffer(
-                b"".join(pdf["poss_lens"].tolist()), dtype=np.int32
-            ).astype(np.int64)
-            if ent_len.size != codes.size:
+            # pass. Entries tile the buffer contiguously in explode order
+            # (doc-major, term-within-doc: how the tokenizer wrote them)
+            # and entry i holds tfs[i] varints, so every entry's end is
+            # the end of varint cumsum(tfs)[i] - 1.
+            big = _binary_values(col["poss"])
+            ends = varint_ends(big)
+            if ends.size != int(tfs.sum()):
                 raise RuntimeError(
                     f"positions misaligned in shard {shard}: "
-                    f"{ent_len.size} blobs vs {codes.size} postings"
+                    f"{ends.size} varints vs {int(tfs.sum())} positions"
                 )
-            big = np.frombuffer(b"".join(pdf["poss"].tolist()),
-                                dtype=np.uint8)
-            # entries tile the concatenated buffer contiguously in
-            # explode order (doc-major, term-within-doc — exactly how
-            # the tokenizer wrote them), so the exclusive prefix sum IS
-            # every entry's input start
-            if int(ent_len.sum()) != big.size:
+            if (int(ends[-1]) if ends.size else 0) != big.size:
                 raise RuntimeError(
                     f"positions byte-length mismatch in shard {shard}"
                 )
-            ent_start = np.cumsum(ent_len) - ent_len
+            ent_end = ends[np.cumsum(tfs) - 1]
+            ent_len = np.diff(ent_end, prepend=0)
             # gather in (term, doc) order
-            s_o = ent_start[order]
+            s_o = (ent_end - ent_len)[order]
             l_o = ent_len[order]
-            total = int(l_o.sum())
-            if total:
-                out_prev = np.concatenate(([0], np.cumsum(l_o)))[:-1]
-                gather = (
-                    np.arange(total, dtype=np.int64)
-                    - np.repeat(out_prev, l_o)
-                    + np.repeat(s_o, l_o)
-                )
-                permuted = big[gather].tobytes()
-            else:
-                permuted = b""
-            term_bytes = np.add.reduceat(l_o, starts[:-1]) \
-                if l_o.size else np.zeros(0, dtype=np.int64)
-            bounds = np.concatenate(([0], np.cumsum(term_bytes)))
-            poss_col = [
-                permuted[bounds[g] : bounds[g + 1]]
-                for g in range(starts.size - 1)
-            ]
-        # per-term compressed payload bytes, known for free here — stored
-        # so term_stats/metrics never re-read the payload columns (at
-        # 10^12 scale that re-scan would be the whole index again)
-        nbytes = np.fromiter(
-            (len(a) + len(b_) + len(c) for a, b_, c in
-             zip(docs_col, tfs_col, dls_col)),
-            dtype=np.int64, count=len(docs_col),
-        )
-        n_terms = starts.size - 1
-        out_d = {
-            "shard": np.full(n_terms, shard, dtype=np.int32),
-            "term": uniq[codes[starts[:-1]]],
-            "df": (starts[1:] - starts[:-1]).astype(np.int64),
-            "nbytes": nbytes,
-            "docs": docs_col,
-            "tfs": tfs_col,
-            "dls": dls_col,
-            "blocks": blocks_col,
-        }
-        if positions:
-            out_d["poss"] = poss_col
+            out_prev = np.concatenate(([0], np.cumsum(l_o)))
+            gather = (
+                np.arange(int(out_prev[-1]), dtype=np.int64)
+                - np.repeat(out_prev[:-1], l_o)
+                + np.repeat(s_o, l_o)
+            )
             # per-term positions payload bytes, known for free here (the
             # fast-path gate reads them via term_stats, never the payload)
-            out_d["poss_nbytes"] = np.asarray(term_bytes, dtype=np.int64)
-        out = pd.DataFrame(out_d)
+            term_bytes = np.add.reduceat(l_o, starts[:-1])
+            names += ["poss", "poss_nbytes"]
+            arrays += [
+                pa.Array.from_buffers(pa.binary(), n_terms, [
+                    None,
+                    pa.py_buffer(out_prev[starts].astype(np.int32)),
+                    pa.py_buffer(big[gather]),
+                ]),
+                pa.array(term_bytes.astype(np.int64)),
+            ]
+        data = pa.RecordBatch.from_arrays(arrays, names=names)
         # sentinel meta row FIRST (META_TERM sorts before all real terms,
         # preserving the term-sorted layout): per-(shard, task) metrics the
         # post-write bookkeeping reads back without re-aggregating the
-        # table, plus the split-shard guard (>1 meta row per shard means a
-        # shard's file was split across tasks)
-        meta_d = {
-            "shard": np.array([shard], dtype=np.int32),
-            "term": [META_TERM],
-            "df": np.array([int(doc_s.size)], dtype=np.int64),
-            "nbytes": np.array([int(nbytes.sum())], dtype=np.int64),
-            "docs": [json.dumps({
-                "n_terms": int(n_terms),
-                "n_postings": int(doc_s.size),
-            }).encode()],
-            "tfs": [b""],
-            "dls": [b""],
-            "blocks": [[]],
-        }
+        # table (df = the shard's postings, docs = [its terms]), plus the
+        # split-shard guard (>1 meta row per shard means a shard's file
+        # was split across tasks)
+        meta = [[shard], [META_TERM], [int(doc_s.size)],
+                [int(nbytes.sum())], [[n_terms]], [[]], [[]], [[]]]
         if positions:
-            meta_d["poss"] = [b""]
-            meta_d["poss_nbytes"] = np.array(
-                [int(np.asarray(term_bytes).sum())], dtype=np.int64
-            )
-        meta = pd.DataFrame(meta_d)
-        return pd.concat([meta, out], ignore_index=True)
+            meta += [[b""], [int(term_bytes.sum())]]
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(v, data.schema.field(i).type)
+             for i, v in enumerate(meta)], schema=data.schema)
+        yield data
 
     return fn
 
 
 def _make_streaming_builder(avgdl, k1, b, block_size, offsets,
                             positions: bool = False):
-    """mapInPandas wrapper: accumulate a task's batches (whole shard
+    """mapInArrow wrapper: accumulate a task's batches (whole shard
     files), then run the per-shard builder for each shard present."""
+    import pyarrow as pa
+
     builder = _make_postings_builder(avgdl, k1, b, block_size, offsets,
                                      positions=positions)
 
     def fn(batches):
-        acc = [pdf for pdf in batches if len(pdf)]
+        acc = [rb for rb in batches if rb.num_rows]
         if not acc:
             return
-        whole = pd.concat(acc, ignore_index=True)
-        for _shard, g in whole.groupby("shard", sort=False):
-            yield builder(g)
+        whole = pa.Table.from_batches(acc)
+        shard = whole.column("shard").to_numpy()
+        for sh in dict.fromkeys(shard.tolist()):
+            yield from builder(whole.filter(pa.array(shard == sh)))
 
     return fn
 
@@ -822,15 +802,7 @@ def _stage_postings(
         os.path.join(tok_root, f"shard={int(s)}") for s in pending
         if os.path.exists(os.path.join(tok_root, f"shard={int(s)}"))
     ]
-    import sys
-
-    dbg = os.environ.get("SPARK_GRAFT_DEBUG")
-
-    def _dbg(msg, t):
-        if dbg:
-            print(f"[postings] {msg}: {time.time() - t:.1f}s", file=sys.stderr)
-
-    wall = 0
+    postings_ms = 0
     if paths:
         conf = spark.conf
         old_mpb = conf.get("spark.sql.files.maxPartitionBytes")
@@ -841,14 +813,14 @@ def _stage_postings(
             positions = bool(stats.get("positions", cfg.positions))
             tok_cols = ["shard", "local_idx", "doc_len", "terms", "tfs"]
             if positions:
-                tok_cols += ["poss", "poss_lens"]
+                tok_cols.append("poss")
             src = (
                 spark.read.option("basePath", tok_root)
                 .parquet(*paths)
                 .select(*tok_cols)
             )
             offsets = {int(s): int(o) for s, o in stats["shard_offsets"].items()}
-            built = src.mapInPandas(
+            built = src.mapInArrow(
                 _make_streaming_builder(
                     stats["avgdl"], cfg.k1, cfg.b, cfg.block_size, offsets,
                     positions=positions,
@@ -872,14 +844,27 @@ def _stage_postings(
                 .write.partitionBy("shard")
                 .option("partitionOverwriteMode", overwrite_mode)
                 .option("parquet.block.size", str(cfg.row_group_bytes))
+                # the writer counts each column's open page at its raw
+                # size against the row-group target; a list column's raw
+                # values are ~5x its stored bytes, so at the default
+                # 1 MiB pages a file split into row groups of a fraction
+                # of the target (2 per 320 KB file on a 25,000-turn
+                # index, where v2 kept 1): 64 KiB pages keep 1, and
+                # every extra row group costs each point read a lookup
+                .option("parquet.page.size", str(64 << 10))
+                # doc-id gaps are near-unique, so their dictionary pages
+                # only add bytes: plain + zstd stores them 4.7% smaller
+                # (796,121 -> 758,848 B on a 25,000-turn index)
+                .option("parquet.enable.dictionary#docs.list.element",
+                        "false")
                 .mode("overwrite")
                 .parquet(_postings_path(index_dir))
             )
-            _dbg("write", t1)
+            postings_ms = _ms_since(t1)
         finally:
             conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
             conf.set("spark.sql.files.openCostInBytes", old_oc)
-    wall = int((time.time() - t0) * 1000)
+    wall = _ms_since(t0)
 
     # per-shard metrics + split-shard guard from the builder's own
     # sentinel meta rows (one per (shard, task)) — no re-aggregation of
@@ -894,13 +879,12 @@ def _stage_postings(
     t1 = time.time()
     metrics: dict[int, dict] = {}
 
-    def _acc_meta(shard_val: int, blob: bytes) -> None:
-        info = json.loads(bytes(blob))
+    def _acc_meta(shard_val: int, n_postings: int, n_terms: list) -> None:
         m = metrics.setdefault(
             int(shard_val), {"n_terms": 0, "n_postings": 0, "tasks": 0}
         )
-        m["n_terms"] += int(info["n_terms"])
-        m["n_postings"] += int(info["n_postings"])
+        m["n_terms"] += int(n_terms[0])
+        m["n_postings"] += int(n_postings)
         m["tasks"] += 1
 
     pend = [int(s) for s in pending]
@@ -914,24 +898,23 @@ def _stage_postings(
         )
         if "term" in ds.schema.names:
             tbl = ds.to_table(
-                columns=["shard", "docs"],
+                columns=["shard", "df", "docs"],
                 filter=pads.field("shard").isin(pend)
                 & (pads.field("term") == META_TERM),
             )
-            for sh, blob in zip(
-                tbl.column("shard").to_pylist(), tbl.column("docs").to_pylist()
-            ):
-                _acc_meta(sh, blob)
+            for row in zip(*(tbl.column(c).to_pylist()
+                             for c in ("shard", "df", "docs"))):
+                _acc_meta(*row)
     else:
         meta_rows = (
             spark.read.schema(POSTINGS_SCHEMA)
             .parquet(_postings_path(index_dir))
             .filter(F.col("shard").isin(pend) & (F.col("term") == META_TERM))
-            .select("shard", "docs")
+            .select("shard", "df", "docs")
             .collect()
         )
         for r in meta_rows:
-            _acc_meta(r["shard"], r["docs"])
+            _acc_meta(r["shard"], r["df"], r["docs"])
 
     shard_bytes, max_file = {}, 0
     for s in pending:
@@ -950,7 +933,7 @@ def _stage_postings(
         int(stats.get("max_postings_file_bytes", 0)), int(max_file)
     )
     _write_stats(index_dir, stats)
-    _dbg("metrics+guard", t1)
+    meta_ms = _ms_since(t1)
     dup = sum(1 for m in metrics.values() if m["tasks"] > 1)
     if dup:
         raise RuntimeError(
@@ -971,7 +954,12 @@ def _stage_postings(
             # scorer must rescale its upper bounds if the corpus avgdl
             # later drifts upward (see IndexReader/_make_pruned_scorer)
             "avgdl_build": float(stats["avgdl"]),
-            "lineage": lineage, "wall_ms": wall, "finished_at": now,
+            "lineage": lineage, "wall_ms": wall,
+            # the stage's two walls: the Spark job that builds and writes
+            # every pending shard, then the meta-row read, split-shard
+            # guard and stats commit
+            "postings_ms": postings_ms, "meta_ms": meta_ms,
+            "finished_at": now,
         })
     _append_manifest(index_dir, rows)
 
@@ -1147,7 +1135,7 @@ def compact_index(
     p = cfg.id_partitions or max(1, math.ceil(n_docs / cfg.shard_docs))
     carry = ["conv_id", "turn_idx", "role", "doc_len", "terms", "tfs"]
     if cfg.positions:
-        carry += ["poss", "poss_lens"]
+        carry.append("poss")
     tok = spark.read.parquet(_tok_path(src_dir)).select(*carry)
     parted = (
         tok.repartitionByRange(p, "conv_id", "turn_idx")
@@ -1341,6 +1329,7 @@ def append_index(
         _make_tokenizer(shard_base=base_shards, positions=cfg.positions),
         schema=TOK_SCHEMA_POS if cfg.positions else TOK_SCHEMA,
     )
+    t1 = time.time()
     (
         tok.sortWithinPartitions("shard", "local_idx")  # see _stage_ids
         .write.partitionBy("shard")
@@ -1348,6 +1337,7 @@ def append_index(
         .mode("overwrite")
         .parquet(_tok_path(index_dir))
     )
+    tokenize_ms = _ms_since(t1)
 
     new_shards = list(range(base_shards, base_shards + p))
     if p <= DRIVER_META_MAX_SHARDS:
@@ -1395,7 +1385,8 @@ def append_index(
         [{
             "stage": "ids", "shard": -1, "status": "done",
             "n_terms": 0, "n_postings": n_new, "n_bytes": 0,
-            "lineage": lineage, "wall_ms": int((time.time() - t0) * 1000),
+            "lineage": lineage, "wall_ms": _ms_since(t0),
+            "tokenize_ms": tokenize_ms,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }],
     )
@@ -1532,7 +1523,7 @@ def update_index(
         out_cols = [
             "local_idx", "shard", "conv_id", "turn_idx", "role",
             "doc_len", "terms", "tfs",
-        ] + (["poss", "poss_lens"] if pos_on else [])
+        ] + (["poss"] if pos_on else [])
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1544,10 +1535,8 @@ def update_index(
                     if pos_on:
                         occ = term_occurrences(text)
                         counts = {t: len(v) for t, v in occ.items()}
-                        blob, plens = encode_positions_doc(occ.values())
-                        pdf.iloc[int(i), pdf.columns.get_loc("poss")] = blob
-                        pdf.iloc[int(i), pdf.columns.get_loc("poss_lens")] = (
-                            plens.astype(np.int32).tobytes()
+                        pdf.iloc[int(i), pdf.columns.get_loc("poss")] = (
+                            encode_positions_doc(occ.values())
                         )
                     else:
                         counts = term_counts(text)

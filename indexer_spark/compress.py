@@ -1,15 +1,22 @@
-"""Delta + LEB128-varint posting compression, NumPy-vectorized.
+"""Postings layout and positions codec, NumPy-vectorized.
 
 Resolves the reference's own TODO ("apply delta + variable-byte encoding
 here before writing", /root/reference/src/tree.rs:215): the reference
-serializes postings as raw framed structs (8B doc_id + 4B tf each); we
-store sorted doc_id gaps, tfs and doc lengths as three varint streams plus
-per-block metadata (last_doc_id, max_tf, max BM25 tf-norm) every
-``BLOCK_SIZE`` postings, which is what block-max WAND pruning consumes at
-query time.
+serializes postings as raw framed structs (8B doc_id + 4B tf each).
 
-Both encode and decode are O(max_varint_width) vectorized numpy passes —
-no per-value Python — so they stay fast inside Arrow-batched pandas UDFs.
+Postings are plain integer columns (the columnar inverted index of
+"Columnar Formatted Inverted Index for Highly-Paralleled, Vectorized
+Query Processing", ICDE 2025): per (shard, term) row, ``docs`` holds the
+sorted doc-id gaps (the first value absolute) as ``list<int64>``,
+``tfs`` and ``dls`` the term frequencies and document lengths as
+``list<int32>``, plus per-block metadata (last_doc_id, max_tf, max BM25
+tf-norm) every ``BLOCK_SIZE`` postings, which is what block-max WAND
+pruning consumes at query time. Parquet compresses the columns; a
+reader gets each row as numpy views and decodes it with one ``cumsum``.
+
+Term positions stay a delta + LEB128-varint byte stream per (shard,
+term). Encode and decode are O(max_varint_width) vectorized numpy
+passes, no per-value Python.
 """
 
 from __future__ import annotations
@@ -113,20 +120,21 @@ def encode_positions(positions: list[int] | np.ndarray) -> bytes:
     return varint_encode(d)
 
 
-def encode_positions_doc(lists) -> tuple[bytes, np.ndarray]:
+def encode_positions_doc(lists) -> bytes:
     """Encode ALL of one doc's per-term position lists in ONE varint
     pass — byte-identical to ``b"".join(encode_positions(v) for v in
     lists)`` but without millions of tiny-array numpy calls (the
-    per-call overhead dominated the positional build at 2M turns).
-    Returns (concatenated blob, int64 per-term byte lengths)."""
+    per-call overhead dominated the positional build at 2M turns). Each
+    list's blob holds len(list) varints, so the blob splits back into
+    lists at the varint ends (varint_ends) without a length table."""
     lists = list(lists)
     if not lists:
-        return b"", np.zeros(0, dtype=np.int64)
+        return b""
     lens = np.fromiter((len(v) for v in lists), dtype=np.int64,
                        count=len(lists))
     total = int(lens.sum())
     if total == 0:
-        return b"", np.zeros(len(lists), dtype=np.int64)
+        return b""
     flat = np.empty(total, dtype=np.int64)
     off = 0
     for v in lists:
@@ -142,10 +150,7 @@ def encode_positions_doc(lists) -> tuple[bytes, np.ndarray]:
     inner[seg0] = False
     if (d[inner] <= 0).any():
         raise ValueError("positions must be strictly increasing")
-    vl = varint_lengths(d)
-    per_term = np.add.reduceat(vl, seg0).astype(np.int64) \
-        if total else np.zeros(0, dtype=np.int64)
-    return varint_encode(d), per_term
+    return varint_encode(d)
 
 
 def decode_positions(blob: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -166,6 +171,12 @@ def decode_positions(blob: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarr
     base = cs[seg0] - vals[seg0]  # cumsum carried in from prior segments
     pos = cs - np.repeat(base, tfs)
     return pos, starts
+
+
+def varint_ends(b: np.ndarray) -> np.ndarray:
+    """Byte offset just past each varint of the uint8 stream ``b``: a
+    varint ends at every byte without the continuation bit (< 0x80)."""
+    return np.flatnonzero(b < 0x80) + 1
 
 
 def decode_positions_select(
@@ -193,7 +204,7 @@ def decode_positions_select(
     b = np.frombuffer(blob, dtype=np.uint8)
     if b.size == 0 or (b[-1] & 0x80):
         raise ValueError("truncated varint stream")
-    ends = np.nonzero((b & 0x80) == 0)[0] + 1  # byte index AFTER varint i
+    ends = varint_ends(b)
     if ends.size != int(tfs.sum()):
         raise ValueError(
             f"positions payload holds {ends.size} varints, "
@@ -224,104 +235,7 @@ def decode_positions_select(
     return pos, starts_out
 
 
-def encode_postings(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    avgdl: float,
-    k1: float = 1.2,
-    b: float = 0.75,
-    block_size: int = BLOCK_SIZE,
-):
-    """Compress one term's postings (sorted by doc_id, tree.rs:211).
-
-    Returns (docs_bytes, tfs_bytes, dls_bytes, blocks) where blocks is a
-    list of dicts {last_doc_id, max_tf, max_norm, doc_off, tf_off, dl_off}
-    per block of ``block_size`` postings. max_norm is the exact per-block
-    maximum of the BM25 tf-normalization  tf/(tf + k1*(1-b+b*dl/avgdl)),
-    so a safe score upper bound for the term in a block is
-    idf * (k1+1) * max_norm  (block-max WAND). The *_off fields are byte
-    offsets of the block's first value in each stream, enabling per-block
-    lazy decode (a skipped block is never even decompressed); the first
-    doc_id gap of block i is relative to block i-1's last_doc_id.
-    """
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    n = doc_ids.size
-    if n == 0:
-        return b"", b"", b"", []
-    if n > 1 and (np.diff(doc_ids) <= 0).any():
-        raise ValueError("doc_ids must be strictly increasing")
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = doc_ids[0]
-    np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:], casting="unsafe")
-    docs_bytes = varint_encode(gaps)
-    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    dls = np.ascontiguousarray(dls, dtype=np.int64)
-    tfs_bytes = varint_encode(tfs)
-    dls_bytes = varint_encode(dls)
-
-    tfd = tfs.astype(np.float64)
-    norm = tfd / (tfd + k1 * (1.0 - b + b * dls / max(avgdl, 1e-12)))
-
-    # byte offset of each value in each stream -> block start offsets
-    doc_offs = np.concatenate(([0], np.cumsum(varint_lengths(gaps))))
-    tf_offs = np.concatenate(([0], np.cumsum(varint_lengths(tfs))))
-    dl_offs = np.concatenate(([0], np.cumsum(varint_lengths(dls))))
-
-    blocks = []
-    for s in range(0, n, block_size):
-        e = min(s + block_size, n)
-        blocks.append(
-            {
-                "last_doc_id": int(doc_ids[e - 1]),
-                "max_tf": int(tfs[s:e].max()),
-                "max_norm": float(norm[s:e].max()),
-                "doc_off": int(doc_offs[s]),
-                "tf_off": int(tf_offs[s]),
-                "dl_off": int(dl_offs[s]),
-            }
-        )
-    return docs_bytes, tfs_bytes, dls_bytes, blocks
-
-
-def decode_block_slice(
-    docs_bytes: bytes,
-    tfs_bytes: bytes,
-    dls_bytes: bytes,
-    blocks: list,
-    i: int,
-    j: int,
-    n: int,
-    block_size: int = BLOCK_SIZE,
-):
-    """Decode only blocks [i, j) of one term's postings (lazy block decode).
-
-    Returns (doc_ids, tfs, dls) for postings in those blocks. Uses the
-    per-block byte offsets so skipped blocks are never decompressed.
-    """
-    n_blocks = len(blocks)
-    s_val = i * block_size
-    e_val = min(j * block_size, n)
-    count = e_val - s_val
-    if count <= 0:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.copy(), z.copy()
-    d0 = blocks[i]["doc_off"]
-    t0 = blocks[i]["tf_off"]
-    l0 = blocks[i]["dl_off"]
-    if j < n_blocks:
-        d1, t1, l1 = blocks[j]["doc_off"], blocks[j]["tf_off"], blocks[j]["dl_off"]
-    else:
-        d1, t1, l1 = len(docs_bytes), len(tfs_bytes), len(dls_bytes)
-    gaps = varint_decode(docs_bytes[d0:d1], count)
-    base = blocks[i - 1]["last_doc_id"] if i > 0 else 0
-    doc_ids = base + np.cumsum(gaps.astype(np.int64))
-    tfs = varint_decode(tfs_bytes[t0:t1], count).astype(np.int64)
-    dls = varint_decode(dls_bytes[l0:l1], count).astype(np.int64)
-    return doc_ids, tfs, dls
-
-
-def encode_postings_batch(
+def postings_columns(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
@@ -330,92 +244,110 @@ def encode_postings_batch(
     k1: float = 1.2,
     b: float = 0.75,
     block_size: int = BLOCK_SIZE,
-):
-    """Encode MANY terms' postings in one vectorized pass.
+) -> dict:
+    """Lay out MANY terms' postings as Arrow list columns in one
+    vectorized pass, with no per-term work.
 
-    Inputs are the whole shard's postings concatenated in (term, doc_id)
-    order; ``starts`` (len n_terms+1) marks each term's run. Produces
-    byte-identical output to per-term `encode_postings` but with O(1)
-    numpy calls for the shard instead of O(n_terms): the per-small-array
-    overhead of thousands of encode calls is what dominated the postings
-    stage under full executor concurrency.
-
-    Returns (docs_col, tfs_col, dls_col, blocks_col): per-term lists of
-    bytes / bytes / bytes / list-of-block-dicts.
+    Inputs are a shard's postings concatenated in (term, doc_id) order;
+    ``starts`` (len n_terms+1) marks each term's run. Returns a dict of
+    one entry per term:
+      - ``docs`` list<int64>: doc-id gaps, the first one absolute;
+      - ``tfs``, ``dls`` list<int32>;
+      - ``blocks`` list<struct<last_doc_id, max_tf, max_norm>>: block i
+        is elements [i*block_size, min((i+1)*block_size, df)). max_norm
+        is the exact block maximum of the BM25 tf-normalization
+        tf/(tf + k1*(1-b+b*dl/avgdl)), so idf*(k1+1)*max_norm bounds the
+        term's score in the block (block-max WAND);
+      - ``nbytes`` (numpy int64): the varint-equivalent payload bytes,
+        the LEB128 lengths of the gaps, tfs and dls summed. It is the
+        unit the reader's ``fast_path_bytes`` gate is set in.
     """
+    import pyarrow as pa
+
     doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
     tfs = np.ascontiguousarray(tfs, dtype=np.int64)
     dls = np.ascontiguousarray(dls, dtype=np.int64)
     starts = np.ascontiguousarray(starts, dtype=np.int64)
-    n = doc_ids.size
-    nt = starts.size - 1
-    if n == 0:
-        return [], [], [], []
-
-    # per-term delta: first gap of a run is the absolute doc_id
-    prev = np.empty(n, dtype=np.int64)
-    prev[1:] = doc_ids[:-1]
-    prev[starts[:-1]] = 0
-    gaps = doc_ids - prev
-    is_start = np.zeros(n, dtype=bool)
-    is_start[starts[:-1]] = True
-    if (gaps[~is_start] <= 0).any():
+    counts = starts[1:] - starts[:-1]
+    if (counts <= 0).any():
+        raise ValueError("every term needs at least one posting")
+    heads = starts[:-1]
+    # per-term delta: the first gap of a run is the absolute doc_id
+    gaps = np.empty(doc_ids.size, dtype=np.int64)
+    gaps[1:] = doc_ids[1:] - doc_ids[:-1]
+    gaps[heads] = doc_ids[heads]
+    is_head = np.zeros(doc_ids.size, dtype=bool)
+    is_head[heads] = True
+    if (gaps[~is_head] <= 0).any():
         raise ValueError("doc_ids must be strictly increasing within a term")
-
-    docs_buf, d_len = _varint_encode_with_lengths(gaps.astype(np.uint64))
-    tfs_buf, t_len = _varint_encode_with_lengths(tfs.astype(np.uint64))
-    dls_buf, l_len = _varint_encode_with_lengths(dls.astype(np.uint64))
-    d_cum = np.concatenate(([0], np.cumsum(d_len)))
-    t_cum = np.concatenate(([0], np.cumsum(t_len)))
-    l_cum = np.concatenate(([0], np.cumsum(l_len)))
+    vl = varint_lengths(gaps) + varint_lengths(tfs) + varint_lengths(dls)
+    nbytes = (np.add.reduceat(vl, heads) if heads.size
+              else np.zeros(0, dtype=np.int64))
 
     tfd = tfs.astype(np.float64)
     norm = tfd / (tfd + k1 * (1.0 - b + b * dls / max(avgdl, 1e-12)))
-
-    # global block partition: per term, blocks of block_size postings.
-    # Consecutive blocks tile [0, n) exactly, so one reduceat per metric
-    # computes every block's max.
-    counts = starts[1:] - starts[:-1]
+    # per term, blocks of block_size postings: consecutive blocks tile
+    # the postings exactly, so one reduceat per metric computes every
+    # block maximum
     nblocks = -(-counts // block_size)
-    nblocks = np.maximum(nblocks, 0)
-    total_blocks = int(nblocks.sum())
-    term_of_block = np.repeat(np.arange(nt), nblocks)
+    term_of_block = np.repeat(np.arange(counts.size), nblocks)
     nb_cum = np.concatenate(([0], np.cumsum(nblocks)))
-    blk_in_term = np.arange(total_blocks) - nb_cum[term_of_block]
-    bs = starts[term_of_block] + blk_in_term * block_size
+    bs = (starts[term_of_block]
+          + (np.arange(nb_cum[-1]) - nb_cum[term_of_block]) * block_size)
     be = np.minimum(bs + block_size, starts[term_of_block + 1])
-    max_tf_b = np.maximum.reduceat(tfs, bs) if total_blocks else np.zeros(0)
-    max_norm_b = np.maximum.reduceat(norm, bs) if total_blocks else np.zeros(0)
-    last_doc_b = doc_ids[be - 1] if total_blocks else np.zeros(0, dtype=np.int64)
-    doc_off_b = d_cum[bs] - d_cum[starts[term_of_block]]
-    tf_off_b = t_cum[bs] - t_cum[starts[term_of_block]]
-    dl_off_b = l_cum[bs] - l_cum[starts[term_of_block]]
+    if bs.size:
+        max_tf = np.maximum.reduceat(tfs, bs)
+        max_norm = np.maximum.reduceat(norm, bs)
+    else:
+        max_tf, max_norm = tfs[:0], norm[:0]
+    blocks = pa.StructArray.from_arrays(
+        [pa.array(doc_ids[be - 1], pa.int64()),
+         pa.array(max_tf, pa.int32()),
+         pa.array(max_norm, pa.float64())],
+        names=["last_doc_id", "max_tf", "max_norm"])
 
-    docs_col, tfs_col, dls_col, blocks_col = [], [], [], []
-    for i in range(nt):
-        s, e = starts[i], starts[i + 1]
-        docs_col.append(docs_buf[d_cum[s]: d_cum[e]])
-        tfs_col.append(tfs_buf[t_cum[s]: t_cum[e]])
-        dls_col.append(dls_buf[l_cum[s]: l_cum[e]])
-        blocks = [
-            {
-                "last_doc_id": int(last_doc_b[j]),
-                "max_tf": int(max_tf_b[j]),
-                "max_norm": float(max_norm_b[j]),
-                "doc_off": int(doc_off_b[j]),
-                "tf_off": int(tf_off_b[j]),
-                "dl_off": int(dl_off_b[j]),
-            }
-            for j in range(nb_cum[i], nb_cum[i + 1])
-        ]
-        blocks_col.append(blocks)
-    return docs_col, tfs_col, dls_col, blocks_col
+    def lists(offsets, values):
+        return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
+
+    return {
+        "docs": lists(starts, pa.array(gaps, pa.int64())),
+        "tfs": lists(starts, pa.array(tfs, pa.int32())),
+        "dls": lists(starts, pa.array(dls, pa.int32())),
+        "blocks": lists(nb_cum, blocks),
+        "nbytes": nbytes.astype(np.int64),
+    }
 
 
-def decode_postings(docs_bytes: bytes, tfs_bytes: bytes, dls_bytes: bytes, n: int):
-    """Inverse of encode_postings -> (doc_ids, tfs, dls) int64 arrays."""
-    gaps = varint_decode(docs_bytes, n)
-    doc_ids = np.cumsum(gaps.astype(np.int64))
-    tfs = varint_decode(tfs_bytes, n).astype(np.int64)
-    dls = varint_decode(dls_bytes, n).astype(np.int64)
-    return doc_ids, tfs, dls
+def _check_row(docs, tfs, dls, n: int) -> None:
+    if not len(docs) == len(tfs) == len(dls) == n:
+        raise ValueError(
+            f"postings row holds {len(docs)} doc gaps, {len(tfs)} tfs and "
+            f"{len(dls)} dls; its df is {n}")
+
+
+def decode_postings(docs, tfs, dls, n: int):
+    """One postings row (doc-id gaps, tfs, dls; numpy views or
+    sequences) -> (doc_ids, tfs, dls) int64 arrays that own their
+    memory. Every list must hold ``n`` values (ValueError otherwise)."""
+    _check_row(docs, tfs, dls, n)
+    # np.add.accumulate, not np.cumsum: same result, without the ~2 us
+    # dispatch np.cumsum adds per call (a query decodes ~12 short rows)
+    return (np.add.accumulate(docs, dtype=np.int64),
+            np.asarray(tfs).astype(np.int64), np.asarray(dls).astype(np.int64))
+
+
+def decode_block_slice(docs, tfs, dls, blocks: list, i: int, j: int,
+                       n: int, block_size: int = BLOCK_SIZE):
+    """Blocks [i, j) of one postings row as (doc_ids, tfs, dls) int64
+    arrays that own their memory: an element slice, its doc ids
+    restored from the gaps on top of block i-1's last_doc_id."""
+    _check_row(docs, tfs, dls, n)
+    s, e = i * block_size, min(j * block_size, n)
+    if e <= s:
+        z = np.zeros(0, dtype=np.int64)
+        return z, z.copy(), z.copy()
+    doc_ids = np.add.accumulate(docs[s:e], dtype=np.int64)
+    if i > 0:
+        doc_ids += blocks[i - 1]["last_doc_id"]
+    return (doc_ids, np.asarray(tfs[s:e]).astype(np.int64),
+            np.asarray(dls[s:e]).astype(np.int64))

@@ -16,7 +16,8 @@ score EVERY matching doc, then full sort) with:
      segments bounded by block boundaries are processed in descending
      score-upper-bound order and the scan stops when no remaining segment
      can beat the current k-th score — skipped blocks are never even
-     decompressed (per-block byte offsets). Because a segment is a doc_id
+     decoded (block i is elements [i*block_size, (i+1)*block_size) of
+     the row's integer lists). Because a segment is a doc_id
      range and shards partition doc_ids, every doc's FULL score is
      computed inside its segment — pruning is exact, verified by
      tests against exhaustive mode.
@@ -49,7 +50,6 @@ from .build import (
     read_stats,
 )
 from .compress import (
-    BLOCK_SIZE,
     decode_block_slice,
     decode_positions,
     decode_positions_select,
@@ -417,10 +417,12 @@ def _aggregate_scores_sharded(chunks_by_shard: dict, k: int,
 
 class _Rows(dict):
     """A batch of index rows as Python columns: column name -> list of
-    the column's values (what ``to_pylist`` gives), ``num_rows`` rows.
-    Driver point reads return it and every scorer takes it. ``nbytes``
-    is the bytes of the same rows as an Arrow table of ``schema`` (the
-    read's dataset fields; None infers them), built only when asked."""
+    the column's values, ``num_rows`` rows. A cell of an integer-list
+    column (postings docs/tfs/dls) is a numpy view of the list's values
+    (_list_cells); any other cell is what ``to_pylist`` gives. Driver
+    point reads return it and every scorer takes it. ``nbytes`` is the
+    bytes of the same rows as an Arrow table of ``schema`` (the read's
+    dataset fields; None infers them), built only when asked."""
 
     __slots__ = ("num_rows", "schema")
 
@@ -434,11 +436,37 @@ class _Rows(dict):
         return pa.Table.from_pydict(self, schema=self.schema).nbytes
 
 
+def _int_lists(a):
+    """(offsets, values) of an integer-list array (a chunked one is
+    combined first) as numpy views, or None for any other array.
+    ``values`` ignores a slice's offset and ``offsets`` does not, so row
+    i is values[offsets[i]:offsets[i+1]]."""
+    t = a.type
+    if not (pa.types.is_list(t) and pa.types.is_integer(t.value_type)):
+        return None
+    if isinstance(a, pa.ChunkedArray):
+        a = a.combine_chunks()
+    return a.offsets.to_numpy(), a.values.to_numpy()
+
+
+def _list_cells(lists: tuple, rows) -> list:
+    """Rows ``rows`` of an _int_lists pair, one numpy view each."""
+    off, vals = lists
+    return [vals[off[i]:off[i + 1]] for i in rows]
+
+
 def _table_rows(tbl: pa.Table) -> _Rows:
     """An Arrow table (a Spark task's shard of postings) as the _Rows a
-    scorer takes: one ``to_pylist`` per column."""
-    return _Rows({c: tbl.column(c).to_pylist() for c in tbl.column_names},
-                 tbl.num_rows, tbl.schema)
+    scorer takes, cell for cell what a driver point read gives: numpy
+    views for integer-list columns (_list_cells), one ``to_pylist`` per
+    other column."""
+    out = {}
+    for c in tbl.column_names:
+        col = tbl.column(c)
+        lists = _int_lists(col)
+        out[c] = (col.to_pylist() if lists is None
+                  else _list_cells(lists, range(len(col))))
+    return _Rows(out, tbl.num_rows, tbl.schema)
 
 
 #: the postings columns every scorer reads (AND and pruned add
@@ -470,7 +498,7 @@ def _make_exhaustive_scorer(
     """kind='bm25': contribution = w * tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl));
     kind='tfidf': contribution = w * tf (reference scorer, tree.rs:445-449).
     ``epoch``: when set, full decoded lists go through the worker-side
-    _DECODED_CACHE so repeated hot-term queries skip the varint decode.
+    _DECODED_CACHE so repeated hot-term queries skip the decode.
     ``require_all``: >0 switches to conjunctive (AND) semantics — only
     docs containing all ``require_all`` distinct query terms survive
     (an extension beyond the OR-only reference, SURVEY §2.7; scoring of
@@ -491,7 +519,7 @@ def _make_exhaustive_scorer(
         cache = None
         if epoch is not None:
             from indexer_spark.query import _DECODED_CACHE as cache
-        # pass 1: cache lookups; the rows that miss batch-decode
+        # pass 1: cache lookups; the rows that miss decode after
         looked, misses = [], []
         for shard, term, df, docs, tfs, dls in _term_rows(rows, _POST_COLS):
             base_key = (
@@ -703,63 +731,15 @@ class _FastCacheMiss(Exception):
 
 
 def _decode_rows(rows: list) -> list:
-    """Decode many postings rows, batching the small ones.
-
-    ``rows`` holds (docs, tfs, dls, df) payloads; returns one
-    (doc_ids, tfs, dls) tuple per row, in row order. A ``None`` docs
-    payload (a cache-fed pass whose entry was evicted) raises
-    _FastCacheMiss. A query touches ~12 rows of ~12 postings, where the
-    fixed numpy cost of a decode_postings call (~100 us), not the varint
-    work, was the cost: so rows of at most BLOCK_SIZE postings have each
-    varint stream joined, up to BLOCK_SIZE rows at a time, and decoded
-    in ONE call. Larger rows decode on their own, as before: joining
-    them only adds copies, and temporaries that outgrow the CPU cache
-    (measured 1.4-1.6x slower from ~4k postings per row). The cap on
-    rows per batch bounds a batch's temporaries at a few MB however
-    many terms a prefix query expands to.
-
-    A row's first doc gap is absolute, so the joined doc cumsum carries
-    every earlier row's last doc id — subtracting the running total at
-    the row's start restores the row's own ids exactly. Before the
-    joined decode, every row must end on a value boundary and hold
-    exactly df values, so a malformed row still fails loudly instead
-    of bleeding into its neighbour. Every returned array owns its
-    memory (the decoded LRU counts ``nbytes``, and a view would pin the
-    whole joined buffer)."""
+    """Decode many postings rows: ``rows`` holds (docs, tfs, dls, df)
+    payloads; returns one (doc_ids, tfs, dls) tuple per row, in row
+    order, each array owning its memory (decode_postings). A ``None``
+    docs payload (a cache-fed pass whose entry was evicted) raises
+    _FastCacheMiss."""
     if any(r[0] is None for r in rows):
         raise _FastCacheMiss()
-    out: list = [None] * len(rows)
-    small = []
-    for i, (docs, tfs, dls, df) in enumerate(rows):
-        if int(df) > BLOCK_SIZE:
-            out[i] = decode_postings(docs, tfs, dls, int(df))
-        else:
-            small.append(i)
-    for c in range(0, len(small), BLOCK_SIZE):
-        batch = small[c:c + BLOCK_SIZE]
-        if len(batch) == 1:
-            docs, tfs, dls, df = rows[batch[0]]
-            out[batch[0]] = decode_postings(docs, tfs, dls, int(df))
-            continue
-        dfs = np.fromiter((int(rows[i][3]) for i in batch), dtype=np.int64,
-                          count=len(batch))
-        ends = np.cumsum(dfs)
-        streams = []
-        for j in range(3):
-            lens = np.fromiter((len(rows[i][j]) for i in batch),
-                               dtype=np.int64, count=len(batch))
-            buf = b"".join(rows[i][j] for i in batch)
-            last = (np.frombuffer(buf, dtype=np.uint8) & 0x80) == 0
-            tail = np.cumsum(lens)[lens > 0] - 1
-            if ((lens > 0) != (dfs > 0)).any() or not last[tail].all() or (
-                    np.cumsum(last)[tail] != ends[lens > 0]).any():
-                raise ValueError("postings row does not hold df varints")
-            streams.append(buf)
-        d, tf, dl = decode_postings(*streams, int(ends[-1]))
-        for i, s, e in zip(batch, (ends - dfs).tolist(), ends.tolist()):
-            base = d[s - 1] if s else 0
-            out[i] = (d[s:e] - base, tf[s:e].copy(), dl[s:e].copy())
-    return out
+    return [decode_postings(docs, tfs, dls, int(df))
+            for docs, tfs, dls, df in rows]
 
 
 def _decode_merged_terms(rows: _Rows, epoch, positional: bool):
@@ -793,7 +773,7 @@ def _decode_merged_terms(rows: _Rows, epoch, positional: bool):
         miss = None
         if cached is None:
             # a None payload (cache-fed pass, entry evicted) raises
-            # _FastCacheMiss inside the batch decode
+            # _FastCacheMiss in _decode_rows
             miss = len(misses)
             misses.append((docs, tfs, dls, df))
         looked.append((term, base_key, cached,
@@ -1395,7 +1375,7 @@ class _File(NamedTuple):
     shard: int | None        # hive partition value (None: unpartitioned)
     ident: tuple[int, int]   # (mtime_ns, size) when the footer was read
     md: object               # pyarrow.parquet.FileMetaData
-    names: frozenset         # stored column names
+    names: frozenset         # stored top-level column names
     ranges: list             # per row group: (min, max) of the key,
     #                          None (no stats: always read) or False (empty)
 
@@ -1403,9 +1383,11 @@ class _File(NamedTuple):
 class _RowGroup(NamedTuple):
     """_CHUNK_CACHE's record of one row group: its columns decoded so
     far, conformed to the dataset types, as one Arrow array per column
-    name (looked up by name, without a Table.column call per read); its
-    row count; and the key index built when the key column was decoded
-    (None until then). The index is
+    name (looked up by name, without a Table.column call per read); the
+    _int_lists (offsets, values) numpy views of its integer-list columns
+    by name (they share the arrays' buffers); its row count; and the key
+    index built when the key column was decoded (None until then). The
+    index is
       - a string key's sorted values as a list (searched by bisect),
       - an int, the first key, when an integer key is dense (last -
         first = rows - 1): a key's row is key - first,
@@ -1413,6 +1395,7 @@ class _RowGroup(NamedTuple):
     ``nbytes`` is the arrays' bytes plus what the index holds beyond
     them: the list and its str objects (an int or a view holds none)."""
     arrays: dict
+    lists: dict
     n: int
     index: object
     nbytes: int
@@ -1453,8 +1436,10 @@ class _FileIndex:
     and row groups by their key range, and the requested keys become row
     indices through the row group's key index (see _RowGroup). Each
     value of those rows is read cell by cell from the row group's cached
-    array into Python lists (_Rows), which is what every caller of a
-    point read consumes: no Arrow table is assembled per read. ``scan``
+    record into Python lists (_Rows): a numpy view over the cached
+    offsets and values for an integer-list cell, ``as_py`` for any
+    other, which is what every caller of a point read consumes: no
+    Arrow table is assembled per read. ``scan``
     returns every row as an Arrow table of the cached arrays. Each row
     group is decoded once into one cached record: arrays conformed to
     the dataset types (casts, nulls for columns an older file lacks) and
@@ -1495,8 +1480,12 @@ class _FileIndex:
             with open(frag.path, "rb") as fh:
                 st = os.fstat(fh.fileno())
                 md = pq.read_metadata(fh)
-            names = md.schema.names
-            ci = names.index(key) if key in names else None
+            # the stored top-level columns; the key's statistics are
+            # those of its leaf column (a nested column has several)
+            names = md.schema.to_arrow_schema().names
+            leaves = [md.schema.column(i).path
+                      for i in range(md.num_columns)]
+            ci = leaves.index(key) if key in leaves else None
             ranges = []
             for rg in range(md.num_row_groups):
                 rgm = md.row_group(rg)
@@ -1533,8 +1522,9 @@ class _FileIndex:
         distinct), or in ``shard_keys[shard]`` (sorted, distinct, per
         hive shard; other shards are skipped), or in the half-open
         ``key_range`` (lo, hi), as _Rows: each column's values in
-        dataset row order, equal to the dataset scan's ``to_pylist``.
-        One filter is required (``scan`` reads every row). Raises
+        dataset row order, equal to the dataset scan's ``to_pylist``
+        (integer-list cells as numpy views of the same values). One
+        filter is required (``scan`` reads every row). Raises
         FileNotFoundError when a file the read touches is gone or
         changed — also on a full cache hit."""
         if keys is None and shard_keys is None and key_range is None:
@@ -1581,8 +1571,12 @@ class _FileIndex:
                     rec = _row_group(f, rg, inner, need, self._sig,
                                      self.key)
                 for c in names:
-                    a = rec.arrays[c]
-                    out[c] += [a[i].as_py() for i in rows]
+                    views = rec.lists.get(c)
+                    if views is not None:
+                        out[c] += _list_cells(views, rows)
+                    else:
+                        a = rec.arrays[c]
+                        out[c] += [a[i].as_py() for i in rows]
                 if hive >= 0:
                     out["shard"] += [f.shard] * len(rows)
                 n += len(rows)
@@ -1682,12 +1676,12 @@ def _row_group(f: _File, rg: int, schema, names: frozenset, sig: str,
     ck = (f.path, *f.ident, rg, sig)
     hit = _CHUNK_CACHE.get(ck)
     if hit is None:
-        arrays, index, index_bytes = {}, None, 0
+        arrays, lists, index, index_bytes = {}, {}, None, 0
     else:
         rec = hit[0]
         if names <= rec.arrays.keys():
             return rec
-        arrays, index = dict(rec.arrays), rec.index
+        arrays, lists, index = dict(rec.arrays), dict(rec.lists), rec.index
         index_bytes = rec.nbytes - sum(a.nbytes for a in arrays.values())
     missing = [fld for fld in schema if fld.name not in arrays]
     stored = [fld.name for fld in missing if fld.name in f.names]
@@ -1724,7 +1718,10 @@ def _row_group(f: _File, rg: int, schema, names: frozenset, sig: str,
         else:  # a column this older file lacks
             a = pa.nulls(n, field.type)
         arrays[field.name] = a
-    rec = _RowGroup(arrays, n, index,
+        views = _int_lists(a)
+        if views is not None:
+            lists[field.name] = views
+    rec = _RowGroup(arrays, lists, n, index,
                     sum(a.nbytes for a in arrays.values()) + index_bytes)
     _CHUNK_CACHE.discard(ck)
     _CHUNK_CACHE.put(ck, (rec,))
@@ -2149,8 +2146,8 @@ class IndexReader:
         of warm_hot_terms, which warms only the driver process).
 
         Decode-once / ship-many: the driver reads the hot terms' payload
-        ONCE (pyarrow, term-pruned), varint-decodes each (shard, term)
-        list in ONE vectorized pass and slices it at block boundaries —
+        ONCE (pyarrow, term-pruned), decodes each (shard, term) list in
+        ONE vectorized pass and slices it at block boundaries —
         value-identical to the per-block decode_block_slice the scorers
         use (the whole-list cumsum restores exactly last_doc_id-of-
         previous-block + in-block gap cumsum) — then broadcasts the
@@ -2471,7 +2468,7 @@ class IndexReader:
         k1, b_, avgdl = st["k1"], st["b"], st["avgdl"]
         looked: dict[str, list] = {}
         misses = []
-        for t in uncovered:  # cache lookups; the misses batch-decode
+        for t in uncovered:  # cache lookups; the misses decode after
             for sh, df, docs, tfs, dls in by_term.get(t, ()):
                 row = (sh, df, len(docs))
                 base = (self._epoch, sh, t, df, len(docs))
@@ -2555,10 +2552,10 @@ class IndexReader:
         distributed task runs per shard, called ONCE on all the matched
         rows: it merges each term's shard rows
         into one sorted doc array (_decode_merged_terms, which fails
-        loudly on overlapping shard ranges) and batch-decodes the
-        uncached rows (_decode_rows), so the pass costs the same few
-        numpy calls whether the terms span 1 shard or 300. The answer is
-        the scorer's (score desc, doc_id asc) top-k.
+        loudly on overlapping shard ranges) after decoding the uncached
+        rows (_decode_rows), so one scorer pass serves the terms whether
+        they span 1 shard or 300. The answer is the scorer's (score
+        desc, doc_id asc) top-k.
 
         Repeats skip the parquet read entirely: every reading pass
         records its rows in the _cached_terms bookkeeping, and a later

@@ -62,9 +62,8 @@ def test_postings_parity(spark, built_index, oracle_index):
     ]
     got: dict[str, list[tuple[int, int]]] = {}
     for r in rows:
-        ids, tfs, _dls = decode_postings(
-            bytes(r["docs"]), bytes(r["tfs"]), bytes(r["dls"]), r["df"]
-        )
+        ids, tfs, _dls = decode_postings(r["docs"], r["tfs"], r["dls"],
+                                         r["df"])
         got.setdefault(r["term"], []).extend(zip(ids.tolist(), tfs.tolist()))
     for t in got:
         got[t].sort()
@@ -97,9 +96,8 @@ def test_dl_stream_matches_docstore(spark, built_index, oracle_index):
         .collect()
     )
     for r in rows:
-        ids, _tfs, dls = decode_postings(
-            bytes(r["docs"]), bytes(r["tfs"]), bytes(r["dls"]), r["df"]
-        )
+        ids, _tfs, dls = decode_postings(r["docs"], r["tfs"], r["dls"],
+                                         r["df"])
         for d, dl in zip(ids.tolist(), dls.tolist()):
             assert dl == oracle_index.doc_len[d]
 
@@ -207,13 +205,13 @@ def test_and_scorer_skips_hot_term_blocks(built_index, monkeypatch):
     n_hot_blocks = sum(len(blocks) for t, _, blocks in rows if t == hot)
     assert n_hot_blocks > 1
 
-    # the scorer reads payloads with to_pylist(), so match them by value
-    docs_to_term = {docs: t for t, docs, _ in rows}
+    # the scorer reads payloads as numpy views, so match them by value
+    docs_to_term = {tuple(docs): t for t, docs, _ in rows}
     decoded = []
     real = qmod.decode_block_slice
 
     def counting(docs, tfs, dls, blocks, i, j, n, block_size=128):
-        decoded.append(docs_to_term.get(bytes(docs), "?"))
+        decoded.append(docs_to_term.get(tuple(docs.tolist()), "?"))
         return real(docs, tfs, dls, blocks, i, j, n, block_size=block_size)
 
     monkeypatch.setattr(qmod, "decode_block_slice", counting)
@@ -284,6 +282,99 @@ def test_manifest_covers_all_shards(built_index):
             assert r["n_bytes"] >= 0 and r["wall_ms"] >= 0
     # stats file round-trips
     assert read_stats(index_dir)["n_docs"] == stats["n_docs"]
+
+
+def test_manifest_records_stage_walls(built_index):
+    """Every build writes its stage walls into the manifest rows: the
+    ids row the tokenize job's and the shard-stats read's, each postings
+    row the build-and-write job's and the meta-row guard's."""
+    index_dir, _ = built_index
+    m = read_manifest(index_dir)
+    ids = [r for r in m if r["stage"] == "ids"]
+    assert len(ids) == 1
+    for key in ("tokenize_ms", "shard_stats_ms"):
+        assert type(ids[0][key]) is int and 0 <= ids[0][key]
+    assert ids[0]["tokenize_ms"] <= ids[0]["wall_ms"]
+    post = [r for r in m if r["stage"] == "postings"]
+    assert post
+    for r in post:
+        assert type(r["postings_ms"]) is int and type(r["meta_ms"]) is int
+        assert 0 < r["postings_ms"] <= r["wall_ms"] and r["meta_ms"] >= 0
+
+
+def test_postings_layout_v3(spark, pos_index, tmp_path):
+    """On disk, postings docs/tfs/dls are integer lists (doc-id gaps as
+    int64, tfs and dls as int32), blocks carry no byte offsets, tok has
+    no poss_lens, and a postings row whose lists do not hold df values
+    fails the query loudly instead of scoring garbage."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from indexer_spark.build import FORMAT_VERSION, META_TERM
+
+    index_dir, stats = pos_index
+    assert FORMAT_VERSION == 3 and stats["format_version"] == 3
+    post = pads.dataset(os.path.join(index_dir, "postings"),
+                        format="parquet", partitioning="hive").schema
+    assert post.field("docs").type == pa.list_(pa.field("element",
+                                                        pa.int64()))
+    for c in ("tfs", "dls"):
+        assert post.field(c).type == pa.list_(pa.field("element",
+                                                       pa.int32()))
+    blk = post.field("blocks").type.value_type
+    assert [blk.field(i).name for i in range(blk.num_fields)] == [
+        "last_doc_id", "max_tf", "max_norm"]
+    assert post.field("poss").type == pa.binary()
+    tok = pads.dataset(os.path.join(index_dir, "tok"), format="parquet",
+                       partitioning="hive").schema
+    assert "poss" in tok.names and "poss_lens" not in tok.names
+
+    # one row's df off by one, in a copy of the index
+    bad = str(tmp_path / "bad")
+    shutil.copytree(index_dir, bad)
+    path = sorted(pads.dataset(os.path.join(bad, "postings"),
+                               format="parquet").files)[0]
+    tbl = pq.read_table(path)
+    terms = tbl.column("term").to_pylist()
+    i = next(j for j, t in enumerate(terms)
+             if t != META_TERM and t.isalpha())
+    df = tbl.column("df").to_numpy().copy()
+    df[i] += 1
+    pq.write_table(tbl.set_column(tbl.schema.get_field_index("df"), "df",
+                                  pa.array(df)), path)
+    r = IndexReader(spark, bad)
+    try:
+        with pytest.raises(ValueError, match="df"):
+            r.search(terms[i], 10)
+    finally:
+        r.close()
+
+
+def test_older_format_is_refused(spark, built_index, corpus_pdf, tmp_path):
+    """An index whose stats.json says format v2 is refused by the reader
+    and by append_index, with the rebuild message naming v3."""
+    import json
+    import os
+    import shutil
+
+    from indexer_spark.build import append_index
+
+    old = str(tmp_path / "v2")
+    shutil.copytree(built_index[0], old)
+    with open(os.path.join(old, "stats.json")) as f:
+        st = json.load(f)
+    st["format_version"] = 2
+    with open(os.path.join(old, "stats.json"), "w") as f:
+        json.dump(st, f)
+    with pytest.raises(RuntimeError, match=r"format v2.*reads/writes v3"):
+        IndexReader(spark, old)
+    batch = spark.createDataFrame(corpus_pdf.head(5))
+    with pytest.raises(RuntimeError, match=r"format v2.*reads/writes v3"):
+        append_index(spark, batch, old)
 
 
 def test_shuffle_free_scorer_matches_exchange_path(spark, built_index):

@@ -1,23 +1,40 @@
-"""Varint / delta codec round-trip tests (property-based)."""
+"""Varint codec and postings layout round-trip tests (property-based)."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from indexer_spark.compress import (
+    decode_block_slice,
     decode_postings,
-    encode_postings,
+    postings_columns,
     varint_decode,
     varint_encode,
 )
+from indexer_spark.query import _int_lists, _list_cells
+
+PAYLOAD = ("docs", "tfs", "dls")
+
+
+def _layout(ids, tfs, dls, avgdl=40.0, block_size=16):
+    """One term's postings laid out as the postings builder writes them."""
+    return postings_columns(np.array(ids, dtype=np.int64), np.array(tfs),
+                            np.array(dls), np.array([0, len(ids)]), avgdl,
+                            block_size=block_size)
+
+
+def _payload(cols, i=0):
+    """Row ``i``'s docs/tfs/dls as the numpy views a reader hands a
+    scorer."""
+    return [_list_cells(_int_lists(cols[c]), [i])[0] for c in PAYLOAD]
 
 
 def test_empty():
     assert varint_encode(np.array([], dtype=np.uint64)) == b""
     assert varint_decode(b"").size == 0
-    d, t, l, blocks = encode_postings(
-        np.array([], dtype=np.int64), np.array([]), np.array([]), 10.0
-    )
-    assert blocks == [] and d == b""
+    cols = postings_columns(np.array([], dtype=np.int64), np.array([]),
+                            np.array([]), np.array([0]), 10.0)
+    assert all(len(cols[c]) == 0 for c in (*PAYLOAD, "blocks", "nbytes"))
 
 
 def test_known_values():
@@ -35,8 +52,6 @@ def test_uint64_extremes():
 
 
 def test_truncated_stream_raises():
-    import pytest
-
     with pytest.raises(ValueError):
         varint_decode(b"\x80")  # continuation bit set on final byte
     with pytest.raises(ValueError):
@@ -66,14 +81,20 @@ def test_postings_roundtrip_and_blocks(data):
     ids, tfs, dls = data
     ids = sorted(ids)
     avgdl = 40.0
-    d, t, l, blocks = encode_postings(
-        np.array(ids), np.array(tfs), np.array(dls), avgdl, block_size=16
-    )
-    rid, rtf, rdl = decode_postings(d, t, l, len(ids))
+    cols = _layout(ids, tfs, dls, avgdl)
+    assert cols["docs"].type.value_type == "int64"
+    assert cols["tfs"].type.value_type == cols["dls"].type.value_type == "int32"
+    rid, rtf, rdl = decode_postings(*_payload(cols), len(ids))
     assert list(rid) == ids
     assert list(rtf) == tfs
     assert list(rdl) == dls
+    # nbytes: the varint-encoded size of the gaps, tfs and dls
+    gaps = np.diff(ids, prepend=0).astype(np.uint64)
+    assert cols["nbytes"].tolist() == [sum(
+        len(varint_encode(np.array(v, dtype=np.uint64)))
+        for v in (gaps, tfs, dls))]
     # block invariants
+    blocks = cols["blocks"].to_pylist()[0]
     assert len(blocks) == (len(ids) + 15) // 16
     assert blocks[-1]["last_doc_id"] == ids[-1]
     k1, b = 1.2, 0.75
@@ -105,20 +126,65 @@ def test_block_slice_decode(data):
     tfs = [(x % 7) + 1 for x in ids]
     dls = [(x % 50) for x in ids]
     bs = 16
-    d, t, l, blocks = encode_postings(
-        np.array(ids), np.array(tfs), np.array(dls), 40.0, block_size=bs
-    )
-    from indexer_spark.compress import decode_block_slice
-
+    cols = _layout(ids, tfs, dls, block_size=bs)
+    blocks = cols["blocks"].to_pylist()[0]
     nb = len(blocks)
     i, j = min(bi, nb), min(bj, nb)
     if i > j:
         i, j = j, i
-    rid, rtf, rdl = decode_block_slice(d, t, l, blocks, i, j, n, block_size=bs)
+    rid, rtf, rdl = decode_block_slice(*_payload(cols), blocks, i, j, n,
+                                       block_size=bs)
     s, e = i * bs, min(j * bs, n)
     assert list(rid) == ids[s:e]
     assert list(rtf) == tfs[s:e]
     assert list(rdl) == dls[s:e]
+
+
+@given(
+    st.sampled_from([1, 16, 48, 16 * 3 + 5, 7]).flatmap(
+        lambda n: st.tuples(
+            st.lists(st.integers(0, 1 << 40), min_size=n, max_size=n,
+                     unique=True),
+            st.lists(st.integers(1, (1 << 31) - 1), min_size=n, max_size=n),
+            st.lists(st.integers(1, (1 << 31) - 1), min_size=n, max_size=n),
+        )
+    )
+)
+@settings(max_examples=80, deadline=None)
+def test_large_ids_round_trip(data):
+    """Doc ids past 2**32, df = 1, whole blocks of exactly block_size
+    and a short last block: the full decode and every block slice equal
+    numpy references, and every returned array owns its memory (the
+    decoded LRU counts ``nbytes``)."""
+    ids, tfs, dls = data
+    ids = np.sort(np.array(ids, dtype=np.int64) + (1 << 32))
+    tfs, dls = np.array(tfs, dtype=np.int64), np.array(dls, dtype=np.int64)
+    n, bs = ids.size, 16
+    cols = _layout(ids, tfs, dls, block_size=bs)
+    payload = _payload(cols)
+    np.testing.assert_array_equal(payload[0], np.diff(ids, prepend=0))
+    got = decode_postings(*payload, n)
+    for g, want in zip(got, (ids, tfs, dls)):
+        assert g.dtype == np.int64 and g.flags.owndata
+        np.testing.assert_array_equal(g, want)
+    blocks = cols["blocks"].to_pylist()[0]
+    assert len(blocks) == -(-n // bs)
+    for i in range(len(blocks)):
+        s, e = i * bs, min((i + 1) * bs, n)
+        sl = decode_block_slice(*payload, blocks, i, i + 1, n,
+                                block_size=bs)
+        for g, want in zip(sl, (ids[s:e], tfs[s:e], dls[s:e])):
+            assert g.dtype == np.int64 and g.flags.owndata
+            np.testing.assert_array_equal(g, want)
+        assert blocks[i]["last_doc_id"] == ids[e - 1]
+    # a list whose length differs from df fails loudly
+    with pytest.raises(ValueError, match="df"):
+        decode_postings(payload[0], payload[1][:-1], payload[2], n)
+    with pytest.raises(ValueError, match="df"):
+        decode_postings(*payload, n + 1)
+    with pytest.raises(ValueError, match="df"):
+        decode_block_slice(payload[0][1:], *payload[1:], blocks, 0, 1, n,
+                           block_size=bs)
 
 
 @given(
@@ -132,29 +198,24 @@ def test_block_slice_decode(data):
 )
 @settings(max_examples=60, deadline=None)
 def test_batch_encode_equals_per_term(term_runs):
-    """encode_postings_batch must be byte-identical to per-term encode."""
-    from indexer_spark.compress import encode_postings_batch
-
+    """A many-term postings_columns pass lays out each term exactly as
+    a one-term pass does."""
     runs = [sorted(ids) for (ids,) in term_runs]
     all_ids = np.concatenate([np.array(r, dtype=np.int64) for r in runs])
     tfs = (all_ids % 9 + 1).astype(np.int64)
     dls = (all_ids % 73).astype(np.int64)
     starts = np.concatenate(([0], np.cumsum([len(r) for r in runs])))
     avgdl, bs = 37.5, 16
-    d_col, t_col, l_col, b_col = encode_postings_batch(
-        all_ids, tfs, dls, starts, avgdl, block_size=bs
-    )
+    cols = postings_columns(all_ids, tfs, dls, starts, avgdl, block_size=bs)
     for i in range(len(runs)):
         s, e = starts[i], starts[i + 1]
-        d, t, l, blocks = encode_postings(
-            all_ids[s:e], tfs[s:e], dls[s:e], avgdl, block_size=bs
-        )
-        assert d_col[i] == d and t_col[i] == t and l_col[i] == l
-        assert b_col[i] == blocks
+        one = _layout(all_ids[s:e], tfs[s:e], dls[s:e], avgdl, block_size=bs)
+        for g, w in zip(_payload(cols, i), _payload(one)):
+            assert g.tolist() == w.tolist()
+        assert cols["blocks"][i].as_py() == one["blocks"][0].as_py()
+        assert cols["nbytes"][i] == one["nbytes"][0]
 
 
 def test_unsorted_doc_ids_rejected():
-    import pytest
-
     with pytest.raises(ValueError):
-        encode_postings(np.array([5, 3]), np.array([1, 1]), np.array([1, 1]), 10.0)
+        _layout([5, 3], [1, 1], [1, 1])

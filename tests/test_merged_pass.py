@@ -17,13 +17,15 @@ from indexer_spark.build import (
     compact_index,
     read_stats,
 )
-from indexer_spark.compress import decode_postings, encode_postings
+from indexer_spark.compress import BLOCK_SIZE, decode_postings
 from indexer_spark.lexer import tokenize
 from indexer_spark.query import IndexReader
 from indexer_spark.synth import gen_transcripts
 
 
 def _random_rows(rng, n_rows, max_df=300):
+    """(docs gaps int64, tfs int32, dls int32, df) payloads as a point
+    read hands them to a scorer, and the (docs, tfs, dls) they hold."""
     rows, want = [], []
     for i in range(n_rows):
         df = 1 if i % 3 == 0 else int(rng.integers(2, max_df))
@@ -32,44 +34,45 @@ def _random_rows(rng, n_rows, max_df=300):
         docs = first + np.concatenate(([0], np.cumsum(gaps[1:])))
         tfs = rng.integers(1, 1 << int(rng.integers(1, 20)), size=df)
         dls = rng.integers(1, 1 << 16, size=df)
-        d_b, tf_b, dl_b, _ = encode_postings(docs, tfs, dls, avgdl=10.0)
-        rows.append((d_b, tf_b, dl_b, df))
+        rows.append((np.diff(docs, prepend=0), tfs.astype(np.int32),
+                     dls.astype(np.int32), df))
         want.append((docs, tfs, dls))
     return rows, want
 
 
 def test_decode_rows_matches_per_row_decode():
-    """Rows on both sides of BLOCK_SIZE postings, and more small rows
-    than one batch holds."""
+    """Rows on both sides of BLOCK_SIZE postings, and more rows than
+    one block holds."""
     rng = np.random.default_rng(3)
     for n_rows in (1, 2, 7, 40, 400):
         rows, want = _random_rows(rng, n_rows)
         got = Q._decode_rows(rows)
         assert len(got) == n_rows
-        for (d_b, tf_b, dl_b, df), g, w in zip(rows, got, want):
-            ref = decode_postings(d_b, tf_b, dl_b, df)
+        for (d_g, tf_v, dl_v, df), g, w in zip(rows, got, want):
+            ref = decode_postings(d_g, tf_v, dl_v, df)
             for a, r, orig in zip(g, ref, w):
                 assert a.dtype == r.dtype == np.int64
                 np.testing.assert_array_equal(a, r)
                 np.testing.assert_array_equal(a, orig)
                 # owns its memory: the decoded LRU's nbytes accounting
-                # must not be pinning a shared joined buffer
+                # must not be pinning the cached row group's buffers
                 assert a.base is None and a.flags.owndata
     assert Q._decode_rows([]) == []
 
 
-def test_decode_rows_batches_small_rows(monkeypatch):
-    """Rows of at most BLOCK_SIZE postings share one decode call per
-    BLOCK_SIZE rows; a larger row gets a call of its own."""
-    rows, _ = _random_rows(np.random.default_rng(7), 300, Q.BLOCK_SIZE)
-    big, _ = _random_rows(np.random.default_rng(8), 3, 4 * Q.BLOCK_SIZE)
-    big = [r for r in big if r[3] > Q.BLOCK_SIZE]
+def test_decode_rows_decodes_each_row_once(monkeypatch):
+    """Every row, small or large, is one decode_postings call, in row
+    order: perfbench's decode_postings wrapper sees every decoded
+    posting."""
+    rows, _ = _random_rows(np.random.default_rng(7), 300, BLOCK_SIZE)
+    big, _ = _random_rows(np.random.default_rng(8), 3, 4 * BLOCK_SIZE)
+    big = [r for r in big if r[3] > BLOCK_SIZE]
     calls = []
     real = Q.decode_postings
     monkeypatch.setattr(
         Q, "decode_postings", lambda *a: calls.append(a[3]) or real(*a))
     Q._decode_rows(rows + big)
-    assert len(calls) == 3 + len(big) and big
+    assert calls == [r[3] for r in rows + big] and big
 
 
 def test_decode_rows_lru_accounting_is_exact():
@@ -88,16 +91,16 @@ def test_decode_rows_cache_fed_none_row_raises():
 
 
 def test_decode_rows_rejects_misaligned_rows():
-    """Rows whose varint counts only balance in total must still fail:
-    the joined decode alone cannot see row boundaries."""
-    rows, _ = _random_rows(np.random.default_rng(6), 3, Q.BLOCK_SIZE)
+    """A row whose lists do not all hold df values fails loudly, also
+    when the counts of its neighbours balance it in total."""
+    rows, _ = _random_rows(np.random.default_rng(6), 3, BLOCK_SIZE)
     (d0, t0, l0, n0), (d1, t1, l1, n1) = rows[0], rows[1]
     # move one value of the first row into the second: totals unchanged
     moved = [(d0, t0, l0, n0 + 1), (d1, t1, l1, n1 - 1), rows[2]]
     with pytest.raises(ValueError):
         Q._decode_rows(moved)
-    # a row cut inside its last varint (continuation bit left set)
-    cut = [(d0 + b"\x80", t0, l0, n0), rows[1]]
+    # a row one tf short of its df
+    cut = [(d0, t0[:-1], l0, n0), rows[1]]
     with pytest.raises(ValueError):
         Q._decode_rows(cut)
 
@@ -114,12 +117,13 @@ def test_shard_grouped_scores_each_shard_once_on_all_its_rows():
             docs = np.sort(rng.choice(5000, df, replace=False)) + lo
             tfs = rng.integers(1, 9, size=df)
             dls = rng.integers(1, 60, size=df)
-            d_b, tf_b, dl_b, _ = encode_postings(docs, tfs, dls, avgdl=20.0)
-            rows.append((shard, term, df, d_b, tf_b, dl_b))
+            rows.append((shard, term, df, np.diff(docs, prepend=0).tolist(),
+                         tfs.tolist(), dls.tolist()))
     names = list(Q._POST_COLS)
     schema = pa.schema([("shard", pa.int32()), ("term", pa.string()),
-                        ("df", pa.int64()), ("docs", pa.binary()),
-                        ("tfs", pa.binary()), ("dls", pa.binary())])
+                        ("df", pa.int64()), ("docs", pa.list_(pa.int64())),
+                        ("tfs", pa.list_(pa.int32())),
+                        ("dls", pa.list_(pa.int32()))])
 
     def batch(rs):
         return pa.RecordBatch.from_arrays(

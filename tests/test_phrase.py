@@ -14,7 +14,7 @@ from indexer_spark.build import BuildConfig, append_index, build_index, update_i
 from indexer_spark.compress import (
     decode_positions,
     encode_positions,
-    varint_decode,
+    varint_ends,
 )
 from indexer_spark.lexer import term_counts, term_occurrences
 from indexer_spark.query import IndexReader
@@ -99,12 +99,15 @@ def test_encode_positions_doc_batch_identity():
                                replace=False)).astype(np.int64)
             for _ in range(int(rng.integers(1, 15)))
         ]
-        blob, plens = encode_positions_doc(lists)
+        blob = encode_positions_doc(lists)
         ref = [encode_positions(v) for v in lists]
         assert blob == b"".join(ref)
-        assert list(plens) == [len(b) for b in ref]
-    assert encode_positions_doc([]) == (b"", pytest.approx(np.zeros(0))) \
-        or encode_positions_doc([])[0] == b""
+        # each list's blob ends at the end of its last varint: how the
+        # postings builder splits a doc's blob without a length table
+        ends = varint_ends(np.frombuffer(blob, dtype=np.uint8))[
+            np.cumsum([len(v) for v in lists]) - 1]
+        assert list(np.diff(ends, prepend=0)) == [len(b) for b in ref]
+    assert encode_positions_doc([]) == b""
     with pytest.raises(ValueError):
         encode_positions_doc([[1, 5], [3, 3, 4]])
 
@@ -137,9 +140,9 @@ def test_phrase_positions_payload_parity(spark, pos_index, corpus_pdf):
     ).collect()
     assert len(post) > 50
     for r in post:
-        tfs = varint_decode(bytes(r["tfs"]), expect=r["df"]).astype(np.int64)
-        gaps = varint_decode(bytes(r["docs"]), expect=r["df"]).astype(np.int64)
-        doc_ids = np.cumsum(gaps)
+        assert len(r["tfs"]) == len(r["docs"]) == r["df"]
+        tfs = np.asarray(r["tfs"], dtype=np.int64)
+        doc_ids = np.cumsum(np.asarray(r["docs"], dtype=np.int64))
         pos, starts = decode_positions(bytes(r["poss"]), tfs)
         for i, d in enumerate(doc_ids):
             assert list(pos[starts[i] : starts[i + 1]]) == \

@@ -38,13 +38,21 @@ def _vocab(index_dir):
         columns=["term"]).column("term").to_pylist())
 
 
+def _pylists(rows):
+    """_Rows as Python lists: a numpy view cell (an integer-list
+    column's) as the list of its values, which is what ``to_pylist``
+    gives for it."""
+    return {c: [v.tolist() if isinstance(v, np.ndarray) else v for v in col]
+            for c, col in rows.items()}
+
+
 def _same(got, want):
     """A point read's _Rows hold the dataset scan's ``want``: the same
     columns in the same order, and the same values in the same row
     order."""
     assert list(got) == want.column_names
     assert got.num_rows == want.num_rows
-    return dict(got) == want.to_pydict()
+    return _pylists(got) == want.to_pydict()
 
 
 def _records(paths):
@@ -135,7 +143,7 @@ def test_post_read_rows_and_bytes_match_an_arrow_table(spark,
             got = r._post_table(["shard", *cols], terms)
             assert got.num_rows == want.num_rows > 0, terms
             assert got.nbytes == want.nbytes, terms
-            assert dict(got) == want.to_pydict(), terms
+            assert _pylists(got) == want.to_pydict(), terms
     finally:
         r.close()
 

@@ -30,7 +30,8 @@ def _postings_signature(spark, index_dir):
 
     rows = (
         spark.read.parquet(_postings_path(index_dir))
-        .select("shard", "term", "df", F.md5(F.hex("docs")).alias("h"))
+        .select("shard", "term", "df",
+                F.md5(F.to_json(F.struct("docs", "tfs", "dls"))).alias("h"))
         .collect()
     )
     return sorted((r["shard"], r["term"], r["df"], r["h"]) for r in rows)
@@ -61,7 +62,7 @@ def test_partial_then_resume_equals_fresh(spark, small_corpus, tmp_path):
     # the ids stage ran once (manifest has a single ids row)
     assert sum(1 for r in m2 if r["stage"] == "ids") == 1
 
-    # byte-identical postings content (per-term compressed streams)
+    # identical postings content (per-term doc gaps, tfs and dls)
     assert _postings_signature(spark, part_dir) == _postings_signature(
         spark, fresh_dir
     )
