@@ -25,7 +25,7 @@ computation is expressed with no lock and no driver bottleneck:
   stage "postings" per pending shard: whole-file tasks stream compact
                    doc rows (not exploded rows) into a mapInArrow
                    builder that explodes with numpy, lexsorts (term,
-                   doc_id) and lays the doc-id gaps, tfs and dls out as
+                   doc_id) and lays the doc-id gaps and tfs out as
                    integer list columns (compress.postings_columns), one
                    row per (shard, term), written directly partitionBy(shard)
                    with dynamic partition overwrite (idempotent re-runs)
@@ -84,13 +84,15 @@ TOK_SCHEMA = (
 TOK_SCHEMA_POS = TOK_SCHEMA + ", poss binary"
 
 # one row per (shard, term): docs = doc-id gaps (the first absolute),
-# tfs/dls = term frequencies and document lengths, as integer lists the
-# reader views as numpy arrays; blocks = per-block WAND metadata over
-# elements [i*block_size, min((i+1)*block_size, df)); nbytes = the
-# varint-equivalent payload bytes (compress.postings_columns)
+# tfs = term frequencies, as integer lists the reader views as numpy
+# arrays; blocks = per-block WAND metadata over elements
+# [i*block_size, min((i+1)*block_size, df)); nbytes = the
+# varint-equivalent payload bytes (compress.postings_columns). Document
+# lengths are stored once per document, in tok doc_len: the reader
+# gathers each posting's from there.
 POSTINGS_SCHEMA = (
     "shard int, term string, df long, nbytes long, "
-    "docs array<long>, tfs array<int>, dls array<int>, "
+    "docs array<long>, tfs array<int>, "
     "blocks array<struct<last_doc_id: long, max_tf: int, max_norm: double>>"
 )
 
@@ -280,10 +282,11 @@ SHARD_MAP_JSON_MAX = 4096
 # On-disk index format version, stamped into stats.json at build time and
 # checked on every open. v2 = per-term nbytes column in postings +
 # packed-int32-binary tfs in tok; v3 = postings docs/tfs/dls as integer
-# lists (no varint blobs, no block byte offsets) and no tok poss_lens.
+# lists (no varint blobs, no block byte offsets) and no tok poss_lens;
+# v4 = no postings dls (document lengths only in tok doc_len).
 # Indexes without the stamp predate v2. Readers/appenders fail fast on
 # mismatch instead of silently mixing formats.
-FORMAT_VERSION = 3
+FORMAT_VERSION = 4
 
 # Sentinel term for the per-(shard, task) metadata row the postings
 # builder emits alongside the real rows: carries n_postings (df), n_terms
@@ -669,6 +672,8 @@ def _make_postings_builder(
         lens = pc.list_value_length(tlists).to_numpy().astype(np.int64)
         doc_rep = np.repeat(
             base + col["local_idx"].to_numpy().astype(np.int64), lens)
+        # each posting's document length: its block max_norm and nbytes
+        # count it, the postings do not store it
         dl_rep = np.repeat(col["doc_len"].to_numpy().astype(np.int64), lens)
         tfs = np.frombuffer(_binary_values(col["tfs"]),
                             dtype=np.int32).astype(np.int64)
@@ -688,14 +693,13 @@ def _make_postings_builder(
         out = postings_columns(doc_s, tfs[order], dl_rep[order], starts,
                                avgdl, k1=k1, b=b, block_size=block_size)
         nbytes = out.pop("nbytes")
-        names = ["shard", "term", "df", "nbytes", "docs", "tfs", "dls",
-                 "blocks"]
+        names = ["shard", "term", "df", "nbytes", "docs", "tfs", "blocks"]
         arrays = [
             pa.array(np.full(n_terms, shard, dtype=np.int32)),
             dic.take(pa.array(sort_idx[codes[starts[:-1]]])),
             pa.array(np.diff(starts)),
             pa.array(nbytes),
-            out["docs"], out["tfs"], out["dls"], out["blocks"],
+            out["docs"], out["tfs"], out["blocks"],
         ]
         if positions:
             # permute each doc row's concatenated per-term position blobs
@@ -750,7 +754,7 @@ def _make_postings_builder(
         # split-shard guard (>1 meta row per shard means a shard's file
         # was split across tasks)
         meta = [[shard], [META_TERM], [int(doc_s.size)],
-                [int(nbytes.sum())], [[n_terms]], [[]], [[]], [[]]]
+                [int(nbytes.sum())], [[n_terms]], [[]], [[]]]
         if positions:
             meta += [[b""], [int(term_bytes.sum())]]
         yield pa.RecordBatch.from_arrays(

@@ -7,12 +7,15 @@ serializes postings as raw framed structs (8B doc_id + 4B tf each).
 Postings are plain integer columns (the columnar inverted index of
 "Columnar Formatted Inverted Index for Highly-Paralleled, Vectorized
 Query Processing", ICDE 2025): per (shard, term) row, ``docs`` holds the
-sorted doc-id gaps (the first value absolute) as ``list<int64>``,
-``tfs`` and ``dls`` the term frequencies and document lengths as
-``list<int32>``, plus per-block metadata (last_doc_id, max_tf, max BM25
-tf-norm) every ``BLOCK_SIZE`` postings, which is what block-max WAND
-pruning consumes at query time. Parquet compresses the columns; a
-reader gets each row as numpy views and decodes it with one ``cumsum``.
+sorted doc-id gaps (the first value absolute) as ``list<int64>`` and
+``tfs`` the term frequencies as ``list<int32>``, plus per-block metadata
+(last_doc_id, max_tf, max BM25 tf-norm) every ``BLOCK_SIZE`` postings,
+which is what block-max WAND pruning consumes at query time. Parquet
+compresses the columns; a reader gets each row as numpy views and
+decodes it with one ``cumsum``. Document lengths are not stored per
+posting: like Lucene's per-document norms they live once per document,
+in the forward index's ``doc_len`` column, and the decode gathers each
+posting's length from there (DocLens).
 
 Term positions stay a delta + LEB128-varint byte stream per (shard,
 term). Encode and decode are O(max_varint_width) vectorized numpy
@@ -248,11 +251,11 @@ def postings_columns(
     """Lay out MANY terms' postings as Arrow list columns in one
     vectorized pass, with no per-term work.
 
-    Inputs are a shard's postings concatenated in (term, doc_id) order;
-    ``starts`` (len n_terms+1) marks each term's run. Returns a dict of
-    one entry per term:
+    Inputs are a shard's postings concatenated in (term, doc_id) order,
+    each with its document's length ``dls``; ``starts`` (len n_terms+1)
+    marks each term's run. Returns a dict of one entry per term:
       - ``docs`` list<int64>: doc-id gaps, the first one absolute;
-      - ``tfs``, ``dls`` list<int32>;
+      - ``tfs`` list<int32>;
       - ``blocks`` list<struct<last_doc_id, max_tf, max_norm>>: block i
         is elements [i*block_size, min((i+1)*block_size, df)). max_norm
         is the exact block maximum of the BM25 tf-normalization
@@ -260,7 +263,8 @@ def postings_columns(
         term's score in the block (block-max WAND);
       - ``nbytes`` (numpy int64): the varint-equivalent payload bytes,
         the LEB128 lengths of the gaps, tfs and dls summed. It is the
-        unit the reader's ``fast_path_bytes`` gate is set in.
+        unit the reader's ``fast_path_bytes`` gate is set in, so it
+        still counts the lengths the postings no longer store.
     """
     import pyarrow as pa
 
@@ -312,36 +316,72 @@ def postings_columns(
     return {
         "docs": lists(starts, pa.array(gaps, pa.int64())),
         "tfs": lists(starts, pa.array(tfs, pa.int32())),
-        "dls": lists(starts, pa.array(dls, pa.int32())),
         "blocks": lists(nb_cum, blocks),
         "nbytes": nbytes.astype(np.int64),
     }
 
 
-def _check_row(docs, tfs, dls, n: int) -> None:
-    if not len(docs) == len(tfs) == len(dls) == n:
+class DocLens:
+    """One shard's document lengths, read as ``doc_len[doc_id - base]``:
+    ``base`` is the shard's first doc id and ``runs`` its forward-index
+    ``doc_len`` column as (first local index, values) pairs, one per
+    stored row group, which tile the shard's local indexes in ascending
+    order. Called on ascending doc ids, it returns their lengths as an
+    int64 array that owns its memory; a doc id no run holds raises
+    ValueError."""
+
+    __slots__ = ("starts", "views")
+
+    def __init__(self, base: int, runs: list):
+        runs = sorted(runs, key=lambda r: r[0]) or [
+            (0, np.zeros(0, dtype=np.int32))]
+        self.starts = [base + int(first) for first, _ in runs]
+        self.views = [v for _, v in runs]
+
+    def __call__(self, doc_ids: np.ndarray) -> np.ndarray:
+        if len(self.views) == 1:  # one row group: the common case
+            return _take_lens(doc_ids, self.starts[0], self.views[0])
+        cuts = [0, *np.searchsorted(doc_ids, self.starts[1:]).tolist(),
+                len(doc_ids)]
+        return np.concatenate([
+            _take_lens(doc_ids[a:b], s, v)
+            for a, b, s, v in zip(cuts, cuts[1:], self.starts, self.views)])
+
+
+def _take_lens(ids: np.ndarray, start: int, values: np.ndarray):
+    if ids.size and (ids[0] < start or ids[-1] - start >= values.size):
         raise ValueError(
-            f"postings row holds {len(docs)} doc gaps, {len(tfs)} tfs and "
-            f"{len(dls)} dls; its df is {n}")
+            f"doc ids {int(ids[0])}..{int(ids[-1])} are not among the "
+            f"{values.size} document lengths from doc id {start}")
+    return values[ids - start].astype(np.int64)
 
 
-def decode_postings(docs, tfs, dls, n: int):
-    """One postings row (doc-id gaps, tfs, dls; numpy views or
-    sequences) -> (doc_ids, tfs, dls) int64 arrays that own their
-    memory. Every list must hold ``n`` values (ValueError otherwise)."""
-    _check_row(docs, tfs, dls, n)
+def _check_row(docs, tfs, n: int) -> None:
+    if not len(docs) == len(tfs) == n:
+        raise ValueError(
+            f"postings row holds {len(docs)} doc gaps and {len(tfs)} tfs; "
+            f"its df is {n}")
+
+
+def decode_postings(docs, tfs, doc_len: DocLens, n: int):
+    """One postings row (doc-id gaps and tfs; numpy views or sequences)
+    -> (doc_ids, tfs, dls) int64 arrays that own their memory, ``dls``
+    gathered from the row's shard's ``doc_len``. Both lists must hold
+    ``n`` values (ValueError otherwise)."""
+    _check_row(docs, tfs, n)
     # np.add.accumulate, not np.cumsum: same result, without the ~2 us
     # dispatch np.cumsum adds per call (a query decodes ~12 short rows)
-    return (np.add.accumulate(docs, dtype=np.int64),
-            np.asarray(tfs).astype(np.int64), np.asarray(dls).astype(np.int64))
+    doc_ids = np.add.accumulate(docs, dtype=np.int64)
+    return doc_ids, np.asarray(tfs).astype(np.int64), doc_len(doc_ids)
 
 
-def decode_block_slice(docs, tfs, dls, blocks: list, i: int, j: int,
-                       n: int, block_size: int = BLOCK_SIZE):
+def decode_block_slice(docs, tfs, doc_len: DocLens, blocks: list, i: int,
+                       j: int, n: int, block_size: int = BLOCK_SIZE):
     """Blocks [i, j) of one postings row as (doc_ids, tfs, dls) int64
     arrays that own their memory: an element slice, its doc ids
-    restored from the gaps on top of block i-1's last_doc_id."""
-    _check_row(docs, tfs, dls, n)
+    restored from the gaps on top of block i-1's last_doc_id and its
+    lengths gathered from ``doc_len``."""
+    _check_row(docs, tfs, n)
     s, e = i * block_size, min(j * block_size, n)
     if e <= s:
         z = np.zeros(0, dtype=np.int64)
@@ -350,4 +390,4 @@ def decode_block_slice(docs, tfs, dls, blocks: list, i: int, j: int,
     if i > 0:
         doc_ids += blocks[i - 1]["last_doc_id"]
     return (doc_ids, np.asarray(tfs[s:e]).astype(np.int64),
-            np.asarray(dls[s:e]).astype(np.int64))
+            doc_len(doc_ids))

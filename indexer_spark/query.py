@@ -50,6 +50,7 @@ from .build import (
     read_stats,
 )
 from .compress import (
+    DocLens,
     decode_block_slice,
     decode_positions,
     decode_positions_select,
@@ -418,11 +419,13 @@ def _aggregate_scores_sharded(chunks_by_shard: dict, k: int,
 class _Rows(dict):
     """A batch of index rows as Python columns: column name -> list of
     the column's values, ``num_rows`` rows. A cell of an integer-list
-    column (postings docs/tfs/dls) is a numpy view of the list's values
+    column (postings docs/tfs) is a numpy view of the list's values
     (_list_cells); any other cell is what ``to_pylist`` gives. Driver
-    point reads return it and every scorer takes it. ``nbytes`` is the
-    bytes of the same rows as an Arrow table of ``schema`` (the read's
-    dataset fields; None infers them), built only when asked."""
+    point reads return it and every scorer takes it, postings rows with
+    a ``doc_len`` column the files do not store: each row's shard's
+    document lengths as a DocLens (_attach_doc_lens). ``nbytes`` is the
+    bytes of the stored columns as an Arrow table of ``schema`` (the
+    read's dataset fields; None infers them), built only when asked."""
 
     __slots__ = ("num_rows", "schema")
 
@@ -470,8 +473,18 @@ def _table_rows(tbl: pa.Table) -> _Rows:
 
 
 #: the postings columns every scorer reads (AND and pruned add
-#: ``blocks``, the positional scorers ``poss``)
-_POST_COLS = ("shard", "term", "df", "docs", "tfs", "dls")
+#: ``blocks``, the positional scorers ``poss``); ``doc_len`` is not a
+#: stored column but each row's shard's DocLens (_attach_doc_lens)
+_POST_COLS = ("shard", "term", "df", "docs", "tfs", "doc_len")
+
+
+def _attach_doc_lens(rows: _Rows, doc_lens) -> _Rows:
+    """Give postings ``rows`` their ``doc_len`` column: the DocLens of
+    each row's shard from ``doc_lens(shard)``, called once per distinct
+    shard."""
+    lens = {s: doc_lens(s) for s in set(rows["shard"])}
+    rows["doc_len"] = [lens[s] for s in rows["shard"]]
+    return rows
 
 
 def _term_rows(rows: _Rows, cols: tuple, by_shard: bool = False) -> list:
@@ -521,7 +534,7 @@ def _make_exhaustive_scorer(
             from indexer_spark.query import _DECODED_CACHE as cache
         # pass 1: cache lookups; the rows that miss decode after
         looked, misses = [], []
-        for shard, term, df, docs, tfs, dls in _term_rows(rows, _POST_COLS):
+        for shard, term, df, docs, tfs, lens in _term_rows(rows, _POST_COLS):
             base_key = (
                 (epoch, -1 if shard is None else shard, term, df, len(docs))
                 if cache is not None else None
@@ -539,7 +552,7 @@ def _make_exhaustive_scorer(
             miss = None
             if hit is None and cached is None:
                 miss = len(misses)
-                misses.append((docs, tfs, dls, df))
+                misses.append((docs, tfs, lens, df))
             looked.append((weights[term], base_key, hit, cached, miss))
         decoded = _decode_rows(misses)
         # pass 2: contributions in sorted-term order (pins float order)
@@ -616,11 +629,11 @@ def _make_and_scorer(
             from indexer_spark.query import _DECODED_CACHE as gcache
         shard = rows["shard"][0]
         terms = []
-        for _sh, term, df, docs, tfs, dls, blocks in _term_rows(
+        for _sh, term, df, docs, tfs, lens, blocks in _term_rows(
                 rows, _POST_COLS + ("blocks",)):
             terms.append({
                 "term": term, "df": df, "docs": docs,
-                "tfs": tfs, "dls": dls, "blocks": blocks,
+                "tfs": tfs, "lens": lens, "blocks": blocks,
                 "lasts": np.array(
                     [blk["last_doc_id"] for blk in blocks], dtype=np.int64
                 ),
@@ -642,7 +655,7 @@ def _make_and_scorer(
                 cached = gcache.get(gkey) if gkey else None
                 if cached is None:
                     cached = decode_block_slice(
-                        t["docs"], t["tfs"], t["dls"], t["blocks"],
+                        t["docs"], t["tfs"], t["lens"], t["blocks"],
                         bi, bi + 1, t["df"], block_size=block_size,
                     )
                     if gkey is not None:
@@ -731,15 +744,15 @@ class _FastCacheMiss(Exception):
 
 
 def _decode_rows(rows: list) -> list:
-    """Decode many postings rows: ``rows`` holds (docs, tfs, dls, df)
-    payloads; returns one (doc_ids, tfs, dls) tuple per row, in row
-    order, each array owning its memory (decode_postings). A ``None``
-    docs payload (a cache-fed pass whose entry was evicted) raises
-    _FastCacheMiss."""
+    """Decode many postings rows: ``rows`` holds (docs, tfs, doc_len,
+    df) payloads, doc_len the row's shard's DocLens; returns one
+    (doc_ids, tfs, dls) tuple per row, in row order, each array owning
+    its memory (decode_postings). A ``None`` docs payload (a cache-fed
+    pass whose entry was evicted) raises _FastCacheMiss."""
     if any(r[0] is None for r in rows):
         raise _FastCacheMiss()
-    return [decode_postings(docs, tfs, dls, int(df))
-            for docs, tfs, dls, df in rows]
+    return [decode_postings(docs, tfs, lens, int(df))
+            for docs, tfs, lens, df in rows]
 
 
 def _decode_merged_terms(rows: _Rows, epoch, positional: bool):
@@ -761,7 +774,7 @@ def _decode_merged_terms(rows: _Rows, epoch, positional: bool):
     if epoch is not None:
         from indexer_spark.query import _DECODED_CACHE as cache
     looked, misses = [], []
-    for shard, term, df, docs, tfs, dls, poss, plen in _term_rows(
+    for shard, term, df, docs, tfs, lens, poss, plen in _term_rows(
             rows, _POST_COLS + ("poss", "plen"), by_shard=True):
         if docs is not None:
             plen = len(docs)
@@ -775,7 +788,7 @@ def _decode_merged_terms(rows: _Rows, epoch, positional: bool):
             # a None payload (cache-fed pass, entry evicted) raises
             # _FastCacheMiss in _decode_rows
             miss = len(misses)
-            misses.append((docs, tfs, dls, df))
+            misses.append((docs, tfs, lens, df))
         looked.append((term, base_key, cached,
                        poss if positional else None, miss))
     decoded = _decode_rows(misses)
@@ -1162,11 +1175,12 @@ def _score_batch(hits) -> pa.RecordBatch:
                            names=["doc_id", "score"])
 
 
-def _shard_grouped(scorer):
+def _shard_grouped(scorer, doc_lens):
     """mapInArrow wrapper: concatenate a task's Arrow batches into one
     table, then run the per-shard scorer ONCE per shard present, on all
-    of that shard's rows (converted once, _table_rows), yielding one
-    doc_id/score batch per shard. The grouping is a stable take of each
+    of that shard's rows (converted once, _table_rows, with the shard's
+    DocLens from ``doc_lens``), yielding one doc_id/score batch per
+    shard. The grouping is a stable take of each
     shard's row indices, not a slice: after append_index one task can
     hold a shard's files apart, so its rows need not be contiguous.
     Correct ONLY when a shard's matched
@@ -1185,10 +1199,28 @@ def _shard_grouped(scorer):
         whole = pa.Table.from_batches(acc)
         shard = whole.column("shard").to_numpy()
         for sh in dict.fromkeys(shard.tolist()):
-            yield _score_batch(scorer(_table_rows(
-                whole.take(np.flatnonzero(shard == sh)))))
+            rows = _table_rows(whole.take(np.flatnonzero(shard == sh)))
+            yield _score_batch(scorer(_attach_doc_lens(rows, doc_lens)))
 
     return fn
+
+
+class _TaskDocLens:
+    """A Spark task's ``doc_lens``: shard -> its DocLens, read with
+    pyarrow from that shard's own tok directory only (the ``local_idx``
+    key and ``doc_len`` projected, through the worker's _CHUNK_CACHE),
+    so no task reads another shard's docstore and none is broadcast or
+    joined. Pickled into the scoring tasks with the tok root and the
+    snapshot's shard offsets."""
+
+    def __init__(self, tok_root: str, offsets: dict):
+        self.tok_root = tok_root
+        self.offsets = offsets
+
+    def __call__(self, shard: int) -> DocLens:
+        tok = _FileIndex(os.path.join(self.tok_root, f"shard={shard}"),
+                         "local_idx", False)
+        return DocLens(self.offsets[shard], tok.runs("doc_len"))
 
 
 def _make_pruned_scorer(
@@ -1227,13 +1259,13 @@ def _make_pruned_scorer(
         if shard_ub_scale:
             ub_scale = shard_ub_scale.get(shard, 1.0)
         terms = []
-        for _sh, term, df, docs, tfs, dls, blocks in _term_rows(
+        for _sh, term, df, docs, tfs, lens, blocks in _term_rows(
                 rows, _POST_COLS + ("blocks",)):
             lasts = np.array([blk["last_doc_id"] for blk in blocks], dtype=np.int64)
             norms = np.array([blk["max_norm"] for blk in blocks], dtype=np.float64)
             terms.append({
                 "term": term, "df": df, "docs": docs,
-                "tfs": tfs, "dls": dls, "blocks": blocks,
+                "tfs": tfs, "lens": lens, "blocks": blocks,
                 "lasts": lasts,
                 "ub": idf[term] * (k1 + 1.0) * np.minimum(norms * ub_scale, 1.0),
                 "w": idf[term], "cache": {},
@@ -1281,7 +1313,7 @@ def _make_pruned_scorer(
                     cached = gcache.get(gkey) if gkey else None
                     if cached is None:
                         cached = decode_block_slice(
-                            t["docs"], t["tfs"], t["dls"], t["blocks"],
+                            t["docs"], t["tfs"], t["lens"], t["blocks"],
                             bi, bi + 1, t["df"], block_size=block_size,
                         )
                         if gkey is not None:
@@ -1367,6 +1399,8 @@ CHUNK_CACHE_BYTES = 64 << 20
 # size, row_group, dataset types). A separate instance, so
 # _DECODED_CACHE keeps holding decoded postings only.
 _CHUNK_CACHE = _DecodedLRU(CHUNK_CACHE_BYTES)
+# serializes replacing a _CHUNK_CACHE record by a wider one (_row_group)
+_WIDEN_LOCK = _threading.Lock()
 
 
 class _File(NamedTuple):
@@ -1384,8 +1418,8 @@ class _RowGroup(NamedTuple):
     """_CHUNK_CACHE's record of one row group: its columns decoded so
     far, conformed to the dataset types, as one Arrow array per column
     name (looked up by name, without a Table.column call per read); the
-    _int_lists (offsets, values) numpy views of its integer-list columns
-    by name (they share the arrays' buffers); its row count; and the key
+    _views of its columns by name, numpy views sharing the arrays'
+    buffers that read cells without pyarrow scalars; its row count; and the key
     index built when the key column was decoded (None until then). The
     index is
       - a string key's sorted values as a list (searched by bisect),
@@ -1395,7 +1429,7 @@ class _RowGroup(NamedTuple):
     ``nbytes`` is the arrays' bytes plus what the index holds beyond
     them: the list and its str objects (an int or a view holds none)."""
     arrays: dict
-    lists: dict
+    views: dict
     n: int
     index: object
     nbytes: int
@@ -1434,12 +1468,13 @@ class _FileIndex:
     and postings by term, tok by local_idx), so a point read (``read``)
     addresses rows instead of masking them: files are pruned by shard
     and row groups by their key range, and the requested keys become row
-    indices through the row group's key index (see _RowGroup). Each
-    value of those rows is read cell by cell from the row group's cached
-    record into Python lists (_Rows): a numpy view over the cached
-    offsets and values for an integer-list cell, ``as_py`` for any
-    other, which is what every caller of a point read consumes: no
-    Arrow table is assembled per read. ``scan``
+    indices through the row group's key index (see _RowGroup). Those
+    rows are read from the row group's cached record into Python lists
+    (_Rows): a numpy view over the cached offsets and values for an
+    integer-list cell, the key index's values for the key, and one bulk
+    conversion per other column (_cells), which is what every caller of
+    a point read consumes: no Arrow table is assembled per read. ``runs``
+    returns one shard's integer column as numpy views. ``scan``
     returns every row as an Arrow table of the cached arrays. Each row
     group is decoded once into one cached record: arrays conformed to
     the dataset types (casts, nulls for columns an older file lacks) and
@@ -1472,6 +1507,7 @@ class _FileIndex:
         # index or -1 (see _columns)
         self._schemas: dict[tuple, tuple] = {}
         self.files: list[_File] = []
+        self._by_shard: dict[int | None, list[_File]] = {}
         for frag in ds.get_fragments():
             shard = pads.get_partition_keys(
                 frag.partition_expression).get("shard")
@@ -1499,6 +1535,7 @@ class _FileIndex:
             self.files.append(_File(frag.path, shard,
                                     (st.st_mtime_ns, st.st_size), md,
                                     frozenset(names), ranges))
+            self._by_shard.setdefault(shard, []).append(self.files[-1])
 
     def _columns(self, columns: list[str]) -> tuple:
         """(schema of ``columns``, it without the hive column, that
@@ -1571,16 +1608,39 @@ class _FileIndex:
                     rec = _row_group(f, rg, inner, need, self._sig,
                                      self.key)
                 for c in names:
-                    views = rec.lists.get(c)
-                    if views is not None:
-                        out[c] += _list_cells(views, rows)
-                    else:
-                        a = rec.arrays[c]
-                        out[c] += [a[i].as_py() for i in rows]
+                    out[c] += (_key_cells(rec.index, rows) if c == self.key
+                               else _cells(rec, c, rows))
                 if hive >= 0:
                     out["shard"] += [f.shard] * len(rows)
                 n += len(rows)
         return _Rows(out, n, schema)
+
+    def shard_files(self, shard: int | None) -> list:
+        """The files of ``shard`` (their hive value; None for an
+        unpartitioned table)."""
+        return self._by_shard.get(shard, [])
+
+    def runs(self, column: str, shard: int | None = None) -> list:
+        """Every value of the integer ``column`` in ``shard``'s files
+        (their hive value; None for an unpartitioned table) as numpy
+        views of the cached row-group arrays: one (first key, view)
+        pair per row group, row i of a view holding key first + i. The
+        key must be dense in each row group, as tok's local_idx is
+        (RuntimeError otherwise). Raises FileNotFoundError like read."""
+        files = self.shard_files(shard)
+        _check_files(files)
+        _, inner, _, need, _ = self._columns([self.key, column])
+        out = []
+        for f in files:
+            for rg in (rg for rg, r in enumerate(f.ranges) if r is not False):
+                rec = _row_group(f, rg, inner, need, self._sig, self.key)
+                if type(rec.index) is not int:
+                    raise RuntimeError(
+                        f"{f.path}: key column {self.key!r} skips values "
+                        f"in row group {rg}; rewrite the index with "
+                        "compact_index")
+                out.append((rec.index, rec.arrays[column].to_numpy()))
+        return out
 
     def scan(self, columns: list[str]) -> pa.Table:
         """Every row of ``columns`` as an Arrow table in dataset row
@@ -1645,6 +1705,59 @@ def _key_rows(rec: _RowGroup, vals, key_range):
     return pos[idx[np.minimum(pos, n - 1)] == want].tolist()
 
 
+def _key_cells(index, rows) -> list:
+    """The keys of rows ``rows`` from a _RowGroup key index, equal to
+    the key column's ``to_pylist``."""
+    if type(index) is int:
+        return [index + i for i in rows]
+    if type(index) is list:
+        return [index[i] for i in rows]
+    return index[rows].tolist()
+
+
+def _views(a: pa.Array):
+    """numpy views of a decoded column (sharing its buffers) that read
+    its cells without a pyarrow scalar per cell (_cells): the _int_lists
+    pair of an integer-list column, the values of a null-free integer
+    column, (offsets, data) of a null-free string or binary column; None
+    for any other column."""
+    t = a.type
+    if pa.types.is_list(t):
+        return _int_lists(a)
+    if a.null_count:
+        return None
+    if pa.types.is_integer(t):
+        return a.to_numpy()
+    if t in (pa.string(), pa.binary()):
+        _, offs, data = a.buffers()
+        return (np.frombuffer(offs, np.int32)[a.offset:a.offset + len(a) + 1],
+                memoryview(data if data is not None else b""))
+    return None
+
+
+def _cells(rec: _RowGroup, c: str, rows) -> list:
+    """Rows ``rows`` of column ``c`` of ``rec`` as Python values, equal
+    to its ``to_pylist`` (an integer-list cell as a numpy view of the
+    same values): one numpy gather of an integer column, a slice of the
+    data per string or binary cell. A ``take`` would convert in bulk,
+    but its ~20 us dispatch costs more than the 1-3 rows a point read
+    typically wants from one row group. A column _views cannot read
+    (nulls, structs) converts cell by cell."""
+    view = rec.views.get(c)
+    t = rec.arrays[c].type
+    if view is None:
+        a = rec.arrays[c]
+        return [a[i].as_py() for i in rows]
+    if pa.types.is_list(t):
+        return _list_cells(view, rows)
+    if pa.types.is_integer(t):
+        return view[rows].tolist()
+    off, buf = view
+    if t == pa.string():
+        return [str(buf[off[i]:off[i + 1]], "utf-8") for i in rows]
+    return [buf[off[i]:off[i + 1]].tobytes() for i in rows]
+
+
 def _key_index(a: pa.Array) -> tuple[object, int]:
     """The key index of ``a``, a decoded row group's key column checked
     strictly increasing and null-free (see _RowGroup), and the bytes it
@@ -1676,12 +1789,12 @@ def _row_group(f: _File, rg: int, schema, names: frozenset, sig: str,
     ck = (f.path, *f.ident, rg, sig)
     hit = _CHUNK_CACHE.get(ck)
     if hit is None:
-        arrays, lists, index, index_bytes = {}, {}, None, 0
+        arrays, views, index, index_bytes = {}, {}, None, 0
     else:
         rec = hit[0]
         if names <= rec.arrays.keys():
             return rec
-        arrays, lists, index = dict(rec.arrays), dict(rec.lists), rec.index
+        arrays, views, index = dict(rec.arrays), dict(rec.views), rec.index
         index_bytes = rec.nbytes - sum(a.nbytes for a in arrays.values())
     missing = [fld for fld in schema if fld.name not in arrays]
     stored = [fld.name for fld in missing if fld.name in f.names]
@@ -1718,21 +1831,37 @@ def _row_group(f: _File, rg: int, schema, names: frozenset, sig: str,
         else:  # a column this older file lacks
             a = pa.nulls(n, field.type)
         arrays[field.name] = a
-        views = _int_lists(a)
-        if views is not None:
-            lists[field.name] = views
-    rec = _RowGroup(arrays, lists, n, index,
-                    sum(a.nbytes for a in arrays.values()) + index_bytes)
-    _CHUNK_CACHE.discard(ck)
-    _CHUNK_CACHE.put(ck, (rec,))
+        view = _views(a)
+        if view is not None:
+            views[field.name] = view
+    with _WIDEN_LOCK:
+        # another thread may have widened the record meanwhile: keep its
+        # columns too, or the last writer's narrower record would win
+        cur = _CHUNK_CACHE.get(ck)
+        if cur is not None:
+            cur = cur[0]
+            for name, a in cur.arrays.items():
+                if name not in arrays:
+                    arrays[name] = a
+                    if name in cur.views:
+                        views[name] = cur.views[name]
+            if index is None and cur.index is not None:
+                index = cur.index
+                index_bytes = cur.nbytes - sum(
+                    a.nbytes for a in cur.arrays.values())
+        rec = _RowGroup(arrays, views, n, index,
+                        sum(a.nbytes for a in arrays.values()) + index_bytes)
+        _CHUNK_CACHE.discard(ck)
+        _CHUNK_CACHE.put(ck, (rec,))
     return rec
 
 
 class _PointReads:
     """The driver's snapshot-scoped point-read layer: one lazily built
     _FileIndex per table (term_stats by term, postings by term with hive
-    shard pruning, tok by local_idx within a shard). An IndexReader
-    drops it on every snapshot refresh."""
+    shard pruning, tok by local_idx within a shard) and the snapshot's
+    shard offsets (``stats``' shard map). An IndexReader drops it on
+    every snapshot refresh."""
 
     _TABLES = {
         "term_stats": (_term_stats_path, "term", False),
@@ -1740,10 +1869,16 @@ class _PointReads:
         "tok": (_tok_path, "local_idx", True),
     }
 
-    def __init__(self, index_dir: str):
+    def __init__(self, index_dir: str, stats: dict):
         self.index_dir = index_dir
+        self.offsets = {int(s): int(o)
+                        for s, o in stats["shard_offsets"].items()}
         self._idx: dict[str, _FileIndex] = {}
         self._lock = _threading.Lock()
+        # shard -> its DocLens: a shard's norms are built once per
+        # snapshot (4 B per document, like its doc_len column), and each
+        # use re-checks its tok files
+        self._lens: dict[int, DocLens] = {}
 
     def __getitem__(self, table: str) -> _FileIndex:
         fi = self._idx.get(table)
@@ -1755,6 +1890,19 @@ class _PointReads:
                     fi = self._idx[table] = _FileIndex(
                         path_of(self.index_dir), key, partitioned)
         return fi
+
+    def doc_lens(self, shard: int) -> DocLens:
+        """``shard``'s document lengths: its tok doc_len column as numpy
+        views of the cached row groups (_FileIndex.runs), checked
+        unchanged on every call (FileNotFoundError like any read)."""
+        tok = self["tok"]
+        lens = self._lens.get(shard)
+        if lens is None:
+            lens = self._lens[shard] = DocLens(
+                self.offsets[shard], tok.runs("doc_len", shard))
+        else:
+            _check_files(tok.shard_files(shard))
+        return lens
 
 
 # term_stats columns the dictionary lookups read (when present)
@@ -1807,7 +1955,7 @@ class IndexReader:
         # snapshot-scoped footer index + decoded chunk cache: each table's
         # directory is listed and its footers read once per snapshot,
         # not per query (_refresh_snapshot drops it)
-        self._reads = _PointReads(index_dir)
+        self._reads = _PointReads(index_dir, self.stats)
         # term -> {(shard, df, payload_len)} rows known to be decoded in
         # _DECODED_CACHE: lets repeat/warmed queries score WITHOUT the
         # per-query parquet payload read (see _fast_from_cache). Bounded
@@ -1921,7 +2069,7 @@ class IndexReader:
         if stale:
             _DECODED_CACHE.unpin(stale)
             self._pinned_keys -= stale
-        self._reads = _PointReads(self.index_dir)
+        self._reads = _PointReads(self.index_dir, self.stats)
         self._df_cache.clear()
         self._nbytes_cache.clear()
         self._poss_nbytes_cache.clear()
@@ -1974,10 +2122,19 @@ class IndexReader:
 
     def _post_table(self, columns: list[str], terms) -> _Rows:
         """Postings rows of ``terms`` (every shard, dataset row order)
-        through the point-read layer."""
+        through the point-read layer. A ``doc_len`` column, which the
+        postings do not store, is filled with each row's shard's DocLens
+        (read in the same snapshot, for the shards the rows touch)."""
         keys = sorted(set(terms))
-        return self._with_reads(
-            lambda r: r["postings"].read(columns, keys=keys))
+        stored = [c for c in columns if c != "doc_len"]
+
+        def read(reads):
+            rows = reads["postings"].read(stored, keys=keys)
+            if len(stored) < len(columns):
+                _attach_doc_lens(rows, reads.doc_lens)
+            return rows
+
+        return self._with_reads(read)
 
     def global_dfs(self, terms: list[str]) -> dict[str, int]:
         """Per-term global df (pass 1 of the reference search,
@@ -2183,17 +2340,17 @@ class IndexReader:
         terms = [t for t, _, _ in rows]
         rows_read = self._post_table(list(_POST_COLS), terms)
         by_term: dict[str, list] = {}
-        for sh, t, df, docs, tfs, dls in zip(
+        for sh, t, df, docs, tfs, lens in zip(
                 *(rows_read[c] for c in _POST_COLS)):
-            by_term.setdefault(t, []).append((sh, df, docs, tfs, dls))
+            by_term.setdefault(t, []).append((sh, df, docs, tfs, lens))
         payload: list[tuple] = []
         spent = 0
         full = False
         for t in terms:  # hottest-first: a budget cut drops the tail
-            for sh, df, docs, tfs, dls in by_term.get(t, ()):
+            for sh, df, docs, tfs, lens in by_term.get(t, ()):
                 df = int(df)
                 d_full, tf_full, dl_full = decode_postings(
-                    docs, tfs, dls, df
+                    docs, tfs, lens, df
                 )
                 per_post = (
                     d_full.itemsize + tf_full.itemsize + dl_full.itemsize
@@ -2326,10 +2483,10 @@ class IndexReader:
         post_rows = self._post_table(list(_POST_COLS),
                                      [t for t, _, _ in rows])
         rows_by_term: dict[str, list] = {}
-        for sh, t_r, df_r, docs, tfs, dls in zip(
+        for sh, t_r, df_r, docs, tfs, lens in zip(
                 *(post_rows[c] for c in _POST_COLS)):
             rows_by_term.setdefault(t_r, []).append(
-                (sh, df_r, docs, tfs, dls)
+                (sh, df_r, docs, tfs, lens)
             )
         for t, df, nb in rows:
             # projected stored size is exact: the -2 entry is one int64
@@ -2342,12 +2499,12 @@ class IndexReader:
             self._df_cache[t] = int(df)
             self._nbytes_cache[t] = int(nb or 0)
             decoded = set()
-            for sh, df_r, docs, tfs, dls in rows_by_term.get(t, ()):
+            for sh, df_r, docs, tfs, lens in rows_by_term.get(t, ()):
                 base = (self._epoch, int(sh), t, int(df_r), len(docs))
                 need_norm = _DECODED_CACHE.get(base + (-2,)) is None
                 need_raw = raw and _DECODED_CACHE.get(base + (-1,)) is None
                 if need_norm or need_raw:
-                    d, tfv, dl = decode_postings(docs, tfs, dls, int(df_r))
+                    d, tfv, dl = decode_postings(docs, tfs, lens, int(df_r))
                     if need_norm:
                         normpart = _bm25_normpart(
                             tfv.astype(np.float64), dl,
@@ -2461,22 +2618,22 @@ class IndexReader:
             return None
         read = self._post_table(list(_POST_COLS), uncovered)
         by_term: dict[str, list] = {}
-        for sh, t, df, docs, tfs, dls in zip(
+        for sh, t, df, docs, tfs, lens in zip(
                 *(read[c] for c in _POST_COLS)):
-            by_term.setdefault(t, []).append((sh, df, docs, tfs, dls))
+            by_term.setdefault(t, []).append((sh, df, docs, tfs, lens))
         st = self.stats
         k1, b_, avgdl = st["k1"], st["b"], st["avgdl"]
         looked: dict[str, list] = {}
         misses = []
         for t in uncovered:  # cache lookups; the misses decode after
-            for sh, df, docs, tfs, dls in by_term.get(t, ()):
+            for sh, df, docs, tfs, lens in by_term.get(t, ()):
                 row = (sh, df, len(docs))
                 base = (self._epoch, sh, t, df, len(docs))
                 hit = _DECODED_CACHE.get(base + (slot,))
                 miss = None
                 if hit is None:
                     miss = len(misses)
-                    misses.append((docs, tfs, dls, df))
+                    misses.append((docs, tfs, lens, df))
                 looked.setdefault(t, []).append((row, base, hit, miss))
         fresh = _decode_rows(misses)
         by_shard: dict[int, tuple[list, list]] = {}
@@ -2567,8 +2724,7 @@ class IndexReader:
         Result-identical to the distributed plan on every path."""
         if self.fast_path_bytes <= 0 or not self._has_nbytes:
             return None
-        cols = cols or ["shard", "term", "df", "docs", "tfs", "dls",
-                        "poss"]
+        cols = cols or [*_POST_COLS, "poss"]
         total = sum(self._nbytes_cache.get(t, 0) for t in present)
         if "poss" in cols:
             if self._has_poss_nbytes:
@@ -2608,7 +2764,9 @@ class IndexReader:
         uids, sums = hits
         return list(zip(uids.tolist(), sums.tolist()))
 
-    def _postings_for(self, terms: list[str]) -> DataFrame:
+    def _postings_for(self, terms: list[str], cols: list[str]) -> DataFrame:
+        """The postings rows of ``terms`` as a DataFrame of the stored
+        ``cols`` (``doc_len`` is attached per task, see _apply_scorer)."""
         from .build import POSTINGS_SCHEMA, POSTINGS_SCHEMA_POS
 
         # positional indexes carry one extra payload column; reading with
@@ -2621,7 +2779,8 @@ class IndexReader:
         base = self.spark.read.schema(schema).parquet(
             _postings_path(self.index_dir)
         )
-        return base.filter(F.col("term").isin(terms))
+        return base.filter(F.col("term").isin(terms)).select(
+            *(c for c in cols if c != "doc_len"))
 
     # -- search ----------------------------------------------------------
 
@@ -2666,7 +2825,7 @@ class IndexReader:
             pq, idf, st["k1"], st["b"], st["avgdl"], k, pq.has_phrase,
             epoch=self._epoch,
         )
-        cols = ["shard", "term", "df", "docs", "tfs", "dls"]
+        cols = list(_POST_COLS)
         if pq.has_phrase:
             cols.append("poss")
         return present, scorer, cols
@@ -3098,9 +3257,7 @@ class IndexReader:
         if prep is None:
             return None
         present, scorer, cols = prep
-        scored = self._apply_scorer(
-            self._postings_for(present).select(*cols), scorer
-        )
+        scored = self._apply_scorer(self._postings_for(present, cols), scorer)
         self.last_path = "distributed"
         if _all:
             return scored
@@ -3260,7 +3417,7 @@ class IndexReader:
                     idf, st["k1"], st["b"], st["avgdl"], k, window,
                     epoch=self._epoch,
                 )
-            cols = ["shard", "term", "df", "docs", "tfs", "dls", "poss"]
+            cols = [*_POST_COLS, "poss"]
         elif mode == "and":
             if len(present) < len(terms):
                 return None
@@ -3268,23 +3425,21 @@ class IndexReader:
                 idf, st["k1"], st["b"], st["avgdl"], k, st["block_size"],
                 n_required=len(present), epoch=self._epoch,
             )
-            cols = ["shard", "term", "df", "docs", "tfs", "dls", "blocks"]
+            cols = [*_POST_COLS, "blocks"]
         elif mode == "pruned":
             scorer = _make_pruned_scorer(
                 idf, st["k1"], st["b"], st["avgdl"], k, st["block_size"],
                 shard_ub_scale=self._ub_scale or None,
                 epoch=self._epoch,
             )
-            cols = ["shard", "term", "df", "docs", "tfs", "dls", "blocks"]
+            cols = [*_POST_COLS, "blocks"]
         else:
             scorer = _make_exhaustive_scorer(
                 idf, st["k1"], st["b"], st["avgdl"], k, "bm25",
                 epoch=self._epoch,
             )
-            cols = ["shard", "term", "df", "docs", "tfs", "dls"]
-        scored = self._apply_scorer(
-            self._postings_for(present).select(*cols), scorer
-        )
+            cols = list(_POST_COLS)
+        scored = self._apply_scorer(self._postings_for(present, cols), scorer)
         self.last_path = "distributed"
         if _all:
             return scored
@@ -3294,7 +3449,10 @@ class IndexReader:
         """Shuffle-free when whole-file tasks are guaranteed (score in
         place via mapInArrow); otherwise exchange by shard first
         (applyInArrow). Either way the scorer sees each shard's Arrow
-        table as _Rows (_table_rows)."""
+        table as _Rows (_table_rows) with the shard's DocLens, which the
+        task reads from that shard's tok files (_TaskDocLens)."""
+        doc_lens = _TaskDocLens(_tok_path(self.index_dir),
+                                self._reads.offsets)
         if self._whole_file_tasks:
             # re-pin the split-size confs on every query: another reader's
             # close() may have restored lower priors session-wide, which
@@ -3307,11 +3465,11 @@ class IndexReader:
                     if cur is None or cur < self._need_bytes:
                         self.spark.conf.set(key, str(self._need_bytes))
             return postings.mapInArrow(
-                _shard_grouped(scorer), schema=_SCORE_SCHEMA
+                _shard_grouped(scorer, doc_lens), schema=_SCORE_SCHEMA
             )
         return postings.groupBy("shard").applyInArrow(
-            lambda tbl: pa.Table.from_batches(
-                [_score_batch(scorer(_table_rows(tbl)))]),
+            lambda tbl: pa.Table.from_batches([_score_batch(scorer(
+                _attach_doc_lens(_table_rows(tbl), doc_lens)))]),
             schema=_SCORE_SCHEMA,
         )
 
@@ -3355,11 +3513,7 @@ class IndexReader:
             return fast
         self.last_path = "distributed"
         scored = self._apply_scorer(
-            self._postings_for(present).select(
-                "shard", "term", "df", "docs", "tfs", "dls"
-            ),
-            scorer,
-        )
+            self._postings_for(present, list(_POST_COLS)), scorer)
         out = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
         return [(r["doc_id"], r["score"]) for r in out.collect()]
 

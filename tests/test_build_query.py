@@ -50,6 +50,8 @@ def test_doc_len_parity(spark, built_index, oracle_index):
 
 def test_postings_parity(spark, built_index, oracle_index):
     """(term -> sorted [(doc_id, tf)]) from Spark equals oracle exactly."""
+    import numpy as np
+
     from indexer_spark.build import _postings_path
     from indexer_spark.compress import decode_postings
 
@@ -60,9 +62,14 @@ def test_postings_parity(spark, built_index, oracle_index):
         r for r in spark.read.parquet(_postings_path(index_dir)).collect()
         if r["term"] != META_TERM  # bookkeeping sentinel, not a posting
     ]
+    assert "dls" not in rows[0].asDict()
+
+    def doc_len(ids):
+        return np.array([oracle_index.doc_len[d] for d in ids.tolist()])
+
     got: dict[str, list[tuple[int, int]]] = {}
     for r in rows:
-        ids, tfs, _dls = decode_postings(r["docs"], r["tfs"], r["dls"],
+        ids, tfs, _dls = decode_postings(r["docs"], r["tfs"], doc_len,
                                          r["df"])
         got.setdefault(r["term"], []).extend(zip(ids.tolist(), tfs.tolist()))
     for t in got:
@@ -83,23 +90,29 @@ def test_global_df_parity(spark, built_index, oracle_index):
 
 
 def test_dl_stream_matches_docstore(spark, built_index, oracle_index):
-    from indexer_spark.build import _postings_path
+    """The length the reader gathers for every posting of the index (its
+    shard's tok doc_len, through the point-read layer) is the
+    docstore's doc_len of the posting's document."""
     from indexer_spark.compress import decode_postings
+    from indexer_spark.query import _POST_COLS
 
     index_dir, _ = built_index
-    from indexer_spark.build import META_TERM
-
-    rows = (
-        spark.read.parquet(_postings_path(index_dir))
-        .filter(F.col("term") != META_TERM)
-        .limit(50)
-        .collect()
-    )
-    for r in rows:
-        ids, _tfs, dls = decode_postings(r["docs"], r["tfs"], r["dls"],
-                                         r["df"])
-        for d, dl in zip(ids.tolist(), dls.tolist()):
-            assert dl == oracle_index.doc_len[d]
+    dl_of = {r["doc_id"]: r["doc_len"] for r in docstore(spark, index_dir)
+             .select("doc_id", "doc_len").collect()}
+    assert dl_of == oracle_index.doc_len
+    reader = IndexReader(spark, index_dir)
+    try:
+        rows = reader._post_table(list(_POST_COLS),
+                                  sorted(oracle_index.postings))
+        n = 0
+        for _sh, _t, df, docs, tfs, lens in zip(
+                *(rows[c] for c in _POST_COLS)):
+            ids, _tfs, dls = decode_postings(docs, tfs, lens, df)
+            assert dls.tolist() == [dl_of[d] for d in ids.tolist()]
+            n += df
+        assert n == sum(len(p) for p in oracle_index.postings.values())
+    finally:
+        reader.close()
 
 
 @pytest.mark.parametrize("mode", ["exhaustive", "pruned"])
@@ -191,7 +204,7 @@ def test_and_scorer_skips_hot_term_blocks(built_index, monkeypatch):
     ds = pads.dataset(os.path.join(index_dir, "postings"),
                       format="parquet", partitioning="hive")
     tbl = ds.to_table(
-        columns=["shard", "term", "df", "docs", "tfs", "dls", "blocks"])
+        columns=["shard", "term", "df", "docs", "tfs", "blocks"])
     tbl = tbl.filter(pc.not_equal(tbl["term"], META_TERM))
     totals: dict = {}
     for t, df in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()):
@@ -210,9 +223,9 @@ def test_and_scorer_skips_hot_term_blocks(built_index, monkeypatch):
     decoded = []
     real = qmod.decode_block_slice
 
-    def counting(docs, tfs, dls, blocks, i, j, n, block_size=128):
+    def counting(docs, tfs, lens, blocks, i, j, n, block_size=128):
         decoded.append(docs_to_term.get(tuple(docs.tolist()), "?"))
-        return real(docs, tfs, dls, blocks, i, j, n, block_size=block_size)
+        return real(docs, tfs, lens, blocks, i, j, n, block_size=block_size)
 
     monkeypatch.setattr(qmod, "decode_block_slice", counting)
     monkeypatch.setattr(qmod, "SMALL_SHARD_THRESHOLD", 0)
@@ -226,11 +239,14 @@ def test_and_scorer_skips_hot_term_blocks(built_index, monkeypatch):
     exhaustive = qmod._make_exhaustive_scorer(
         idf, st["k1"], st["b"], st["avgdl"], 10, "bm25", require_all=2,
     )
+    doc_lens = qmod._TaskDocLens(
+        os.path.join(index_dir, "tok"),
+        {int(s): int(o) for s, o in st["shard_offsets"].items()})
     got_parts, want_parts = [], []
     for sh in sorted(set(sub["shard"].to_pylist())):
         g = sub.filter(pc.equal(sub["shard"], sh))
         # a Spark task hands each shard's table to its scorer this way
-        rows = qmod._table_rows(g)
+        rows = qmod._attach_doc_lens(qmod._table_rows(g), doc_lens)
         got_parts.append(scorer(rows))
         want_parts.append(exhaustive(rows))
     for i in (0, 1):  # doc_ids, then scores
@@ -302,11 +318,12 @@ def test_manifest_records_stage_walls(built_index):
         assert 0 < r["postings_ms"] <= r["wall_ms"] and r["meta_ms"] >= 0
 
 
-def test_postings_layout_v3(spark, pos_index, tmp_path):
-    """On disk, postings docs/tfs/dls are integer lists (doc-id gaps as
-    int64, tfs and dls as int32), blocks carry no byte offsets, tok has
-    no poss_lens, and a postings row whose lists do not hold df values
-    fails the query loudly instead of scoring garbage."""
+def test_postings_layout_v4(spark, pos_index, tmp_path):
+    """On disk, postings docs/tfs are integer lists (doc-id gaps as
+    int64, tfs as int32) and store no dls (document lengths live once
+    per document, in tok doc_len), blocks carry no byte offsets, tok has
+    no poss_lens, and a postings row whose docs/tfs lists do not hold df
+    values fails the query loudly instead of scoring garbage."""
     import os
     import shutil
 
@@ -317,14 +334,14 @@ def test_postings_layout_v3(spark, pos_index, tmp_path):
     from indexer_spark.build import FORMAT_VERSION, META_TERM
 
     index_dir, stats = pos_index
-    assert FORMAT_VERSION == 3 and stats["format_version"] == 3
+    assert FORMAT_VERSION == 4 and stats["format_version"] == 4
     post = pads.dataset(os.path.join(index_dir, "postings"),
                         format="parquet", partitioning="hive").schema
     assert post.field("docs").type == pa.list_(pa.field("element",
                                                         pa.int64()))
-    for c in ("tfs", "dls"):
-        assert post.field(c).type == pa.list_(pa.field("element",
+    assert post.field("tfs").type == pa.list_(pa.field("element",
                                                        pa.int32()))
+    assert "dls" not in post.names
     blk = post.field("blocks").type.value_type
     assert [blk.field(i).name for i in range(blk.num_fields)] == [
         "last_doc_id", "max_tf", "max_norm"]
@@ -332,6 +349,7 @@ def test_postings_layout_v3(spark, pos_index, tmp_path):
     tok = pads.dataset(os.path.join(index_dir, "tok"), format="parquet",
                        partitioning="hive").schema
     assert "poss" in tok.names and "poss_lens" not in tok.names
+    assert tok.field("doc_len").type == pa.int32()
 
     # one row's df off by one, in a copy of the index
     bad = str(tmp_path / "bad")
@@ -355,26 +373,29 @@ def test_postings_layout_v3(spark, pos_index, tmp_path):
 
 
 def test_older_format_is_refused(spark, built_index, corpus_pdf, tmp_path):
-    """An index whose stats.json says format v2 is refused by the reader
-    and by append_index, with the rebuild message naming v3."""
+    """An index whose stats.json says format v2 or v3 (the v3 postings
+    still carry dls) is refused by the reader and by append_index, with
+    the rebuild message naming v4."""
     import json
     import os
     import shutil
 
     from indexer_spark.build import append_index
 
-    old = str(tmp_path / "v2")
-    shutil.copytree(built_index[0], old)
-    with open(os.path.join(old, "stats.json")) as f:
-        st = json.load(f)
-    st["format_version"] = 2
-    with open(os.path.join(old, "stats.json"), "w") as f:
-        json.dump(st, f)
-    with pytest.raises(RuntimeError, match=r"format v2.*reads/writes v3"):
-        IndexReader(spark, old)
     batch = spark.createDataFrame(corpus_pdf.head(5))
-    with pytest.raises(RuntimeError, match=r"format v2.*reads/writes v3"):
-        append_index(spark, batch, old)
+    for version in (2, 3):
+        old = str(tmp_path / f"v{version}")
+        shutil.copytree(built_index[0], old)
+        with open(os.path.join(old, "stats.json")) as f:
+            st = json.load(f)
+        st["format_version"] = version
+        with open(os.path.join(old, "stats.json"), "w") as f:
+            json.dump(st, f)
+        want = rf"format v{version}.*reads/writes v4"
+        with pytest.raises(RuntimeError, match=want):
+            IndexReader(spark, old)
+        with pytest.raises(RuntimeError, match=want):
+            append_index(spark, batch, old)
 
 
 def test_shuffle_free_scorer_matches_exchange_path(spark, built_index):
@@ -729,27 +750,81 @@ def test_aggregate_and_topk_match_naive_reference():
     prop()
 
 
-def test_update_invalidates_decoded_cache(spark, tmp_path):
+def _assert_lengths_current(spark, index_dir, texts, readers=()):
+    """BM25 (exhaustive and pruned), AND and phrase answers equal an
+    oracle over ``texts`` (in doc-id order) at 1e-9, on the driver route
+    of a new reader, the distributed route and each of ``readers``: no
+    scorer reads a stale document length."""
+    from indexer_spark.oracle import OracleIndex
+
+    oracle = OracleIndex(list(enumerate(texts)))
+    queries = ["run dog"]
+    for i in (3, 5, 17, len(texts) - 1):
+        w = [x for x in texts[i].split() if x.isalpha()]
+        if len(w) >= 2:
+            queries += [w[0], f"{w[0]} {w[-1]}", f"{w[0]} {w[1]}"]
+    fresh = IndexReader(spark, index_dir)
+    dist = IndexReader(spark, index_dir, fast_path_bytes=0)
+    want_of = {
+        "exhaustive": oracle.search_bm25, "pruned": oracle.search_bm25,
+        "and": oracle.search_bm25_and, "phrase": oracle.search_bm25_phrase,
+    }
+    n_hits = 0
+    try:
+        for r in (fresh, dist, *readers):
+            for q in queries:
+                for mode, search in want_of.items():
+                    want = search(q, 10)
+                    got = r.search(q, 10, mode=mode)
+                    why = (index_dir, q, mode, r.fast_path_bytes)
+                    assert [d for d, _ in got] == [d for d, _ in want], why
+                    for (_, gs), (_, ws) in zip(got, want):
+                        assert math.isclose(gs, ws, rel_tol=REL_TOL), why
+                    n_hits += len(got)
+    finally:
+        dist.close()
+        fresh.close()
+    assert n_hits
+
+
+def test_update_invalidates_decoded_cache(spark, tmp_path, monkeypatch):
     """An in-place update bumps the stats epoch, so a FRESH reader can
     never be served pre-update decoded postings from the shared cache —
-    even when a prior reader warmed the same terms."""
-    from indexer_spark.build import BuildConfig, build_index, update_index
+    even when a prior reader warmed the same terms. And the document
+    lengths scorers gather from tok are never stale: after an update
+    that changes turns' lengths, a delete that sets one to 0, an append
+    (new shards) and a compaction, a refreshed reader, a new one and the
+    distributed plan all answer like the oracle of the current corpus."""
+    import indexer_spark.query as qmod
+    from indexer_spark.build import (
+        BuildConfig, append_index, build_index, compact_index, delete_turns,
+        update_index,
+    )
     from indexer_spark.synth import gen_transcripts
 
+    # pruned and AND walk their blocks even on this small index
+    monkeypatch.setattr(qmod, "SMALL_SHARD_THRESHOLD", 0)
     pdf = gen_transcripts(400, seed=33)
+    texts = pdf.sort_values(["conv_id", "turn_idx"])["text"].tolist()
     d = str(tmp_path / "cacheidx")
     build_index(spark, spark.createDataFrame(pdf), d,
-                BuildConfig(block_size=32, id_partitions=2))
+                BuildConfig(block_size=32, id_partitions=2, positions=True))
     r1 = IndexReader(spark, d)
     w = pdf["text"].iloc[0].split()[0]
     before = r1.search(w, 400)
     assert before
     r1.search(w, 400)  # repeat: populates + uses the decoded cache
     top = r1.resolve_local(before[:1])[0]
+    # a second hit keeps its words and grows 8 tokens longer
+    grow = r1.resolve_local([h for h in before
+                             if h[0] != top["doc_id"]][:1])[0]
+    texts[grow["doc_id"]] += " filler" * 8
+    texts[top["doc_id"]] = "completelydifferent words"
 
     # rewrite the top hit's text so it no longer contains w
     up = spark.createDataFrame(
-        [(top["conv_id"], top["turn_idx"], "completelydifferent words")],
+        [(top["conv_id"], top["turn_idx"], texts[top["doc_id"]]),
+         (grow["conv_id"], grow["turn_idx"], texts[grow["doc_id"]])],
         "conv_id string, turn_idx int, text string",
     )
     update_index(spark, up, d, BuildConfig(block_size=32))
@@ -762,6 +837,31 @@ def test_update_invalidates_decoded_cache(spark, tmp_path):
     # and the updated doc is findable under its new token
     hit = r2.search("completelydifferent", 5)
     assert [h[0] for h in hit] == [top["doc_id"]]
+    r2.close()
+    try:
+        r1._refresh_snapshot()
+        _assert_lengths_current(spark, d, texts, [r1])
+
+        # tombstone the grown turn: its length drops to 0
+        texts[grow["doc_id"]] = ""
+        delete_turns(spark, spark.createDataFrame(
+            [(grow["conv_id"], grow["turn_idx"])],
+            "conv_id string, turn_idx int"), d)
+        r1._refresh_snapshot()
+        _assert_lengths_current(spark, d, texts, [r1])
+
+        # new shards: their lengths come from their own tok files
+        extra = gen_transcripts(150, seed=34, mean_turn_len=60)
+        extra["conv_id"] = "zz_" + extra["conv_id"]
+        append_index(spark, spark.createDataFrame(extra), d)
+        texts += extra.sort_values(["conv_id", "turn_idx"])["text"].tolist()
+        r1._refresh_snapshot()
+        _assert_lengths_current(spark, d, texts, [r1])
+    finally:
+        r1.close()
+    out = str(tmp_path / "cacheidx_compact")
+    compact_index(spark, d, out)
+    _assert_lengths_current(spark, out, texts)
 
 
 def test_sharded_aggregation_bit_identity():
@@ -941,3 +1041,89 @@ def test_warm_pinned_hot_set_survives_eviction_pressure(spark, built_index):
     # their pre-test values; keys other readers never pinned are gone)
     for k in pinned:
         assert Q._DECODED_CACHE._pins.get(k, 0) == pre_counts.get(k, 0)
+
+
+def test_routes_agree_on_gathered_lengths(spark, pos_index, monkeypatch):
+    """bm25 (exhaustive and pruned), tfidf, and, phrase and near answer
+    alike on the driver route (lengths from the point-read layer), the
+    shuffle-free mapInArrow plan and the applyInArrow exchange (lengths
+    read by each task for its own shard) of a multi-shard positional
+    index; and the task-side loader, given one shard, opens only that
+    shard's tok files."""
+    import os
+
+    import numpy as np
+    import pyarrow.dataset as pads
+
+    import indexer_spark.query as qmod
+    from indexer_spark.synth import gen_queries
+
+    monkeypatch.setattr(qmod, "SMALL_SHARD_THRESHOLD", 0)
+    index_dir, stats = pos_index
+    assert stats["n_shards"] > 2
+    driver = IndexReader(spark, index_dir)
+    mapped = IndexReader(spark, index_dir, fast_path_bytes=0)
+    exchange = IndexReader(spark, index_dir, fast_path_bytes=0)
+    exchange._whole_file_tasks = False
+    queries = [q for _, q, _ in gen_queries() if q.strip()][:6]
+    queries += ["run dog", "the dog", "fox lazy dog"]
+    n_hits = 0
+    try:
+        assert mapped._whole_file_tasks
+        for q in queries:
+            for mode in ("exhaustive", "pruned", "and", "phrase", "near",
+                         "tfidf"):
+                def run(r):
+                    r.last_path = None  # an empty-by-construction
+                    if mode == "tfidf":  # query sets no route
+                        return r.search_tfidf(q, 10)
+                    return r.search(q, 10, mode=mode)
+                want = run(driver)
+                assert driver.last_path in (None, "fast",
+                                            f"fast_{mode}"), (q, mode)
+                got_map, got_ex = run(mapped), run(exchange)
+                assert mapped.last_path == exchange.last_path
+                assert got_map == got_ex, (q, mode)
+                if want:
+                    assert mapped.last_path == "distributed", (q, mode)
+                assert [d for d, _ in got_map] == [d for d, _ in want], (
+                    q, mode)
+                np.testing.assert_allclose(
+                    [s for _, s in got_map], [s for _, s in want],
+                    rtol=REL_TOL, atol=0)
+                n_hits += len(want)
+    finally:
+        for r in (driver, mapped, exchange):
+            r.close()
+    assert n_hits
+
+    tok_root = os.path.join(index_dir, "tok")
+    offsets = {int(s): int(o) for s, o in stats["shard_offsets"].items()}
+    tok = pads.dataset(tok_root, format="parquet", partitioning="hive")
+    made, opened = [], []
+
+    class Recording(qmod._FileIndex):
+        def __init__(self, *a, **kw):
+            super().__init__(*a, **kw)
+            made.append(self)
+
+    real_open = open
+    monkeypatch.setattr(qmod, "_FileIndex", Recording)
+    monkeypatch.setattr(
+        qmod, "open", lambda p, *a, **kw: opened.append(p)
+        or real_open(p, *a, **kw), raising=False)
+    loader = qmod._TaskDocLens(tok_root, offsets)
+    for shard in (0, 2):
+        made.clear()
+        opened.clear()
+        lens = loader(shard)
+        own = os.path.join(tok_root, f"shard={shard}") + os.sep
+        assert len(made) == 1 and made[0].files
+        assert all(f.path.startswith(own) for f in made[0].files)
+        assert opened and all(p.startswith(own) for p in opened), opened
+        want = tok.to_table(columns=["local_idx", "doc_len"],
+                            filter=pads.field("shard") == shard)
+        local = want["local_idx"].to_numpy()
+        got = lens(np.sort(local) + offsets[shard])
+        assert got.tolist() == want["doc_len"].to_numpy()[
+            np.argsort(local)].tolist()

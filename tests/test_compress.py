@@ -5,6 +5,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from indexer_spark.compress import (
+    DocLens,
     decode_block_slice,
     decode_postings,
     postings_columns,
@@ -13,7 +14,7 @@ from indexer_spark.compress import (
 )
 from indexer_spark.query import _int_lists, _list_cells
 
-PAYLOAD = ("docs", "tfs", "dls")
+PAYLOAD = ("docs", "tfs")
 
 
 def _layout(ids, tfs, dls, avgdl=40.0, block_size=16):
@@ -24,9 +25,21 @@ def _layout(ids, tfs, dls, avgdl=40.0, block_size=16):
 
 
 def _payload(cols, i=0):
-    """Row ``i``'s docs/tfs/dls as the numpy views a reader hands a
-    scorer."""
+    """Row ``i``'s docs/tfs as the numpy views a reader hands a scorer."""
     return [_list_cells(_int_lists(cols[c]), [i])[0] for c in PAYLOAD]
+
+
+def _lens(ids, dls):
+    """A doc_len gather over sparse ids: the length of each of ``ids``
+    (ascending), failing on an id it does not hold."""
+    ids = np.asarray(ids, dtype=np.int64)
+    dls = np.asarray(dls, dtype=np.int64)
+
+    def gather(doc_ids):
+        pos = np.searchsorted(ids, doc_ids)
+        assert (ids[pos] == doc_ids).all()
+        return dls[pos]
+    return gather
 
 
 def test_empty():
@@ -35,6 +48,7 @@ def test_empty():
     cols = postings_columns(np.array([], dtype=np.int64), np.array([]),
                             np.array([]), np.array([0]), 10.0)
     assert all(len(cols[c]) == 0 for c in (*PAYLOAD, "blocks", "nbytes"))
+    assert "dls" not in cols
 
 
 def test_known_values():
@@ -83,8 +97,9 @@ def test_postings_roundtrip_and_blocks(data):
     avgdl = 40.0
     cols = _layout(ids, tfs, dls, avgdl)
     assert cols["docs"].type.value_type == "int64"
-    assert cols["tfs"].type.value_type == cols["dls"].type.value_type == "int32"
-    rid, rtf, rdl = decode_postings(*_payload(cols), len(ids))
+    assert cols["tfs"].type.value_type == "int32" and "dls" not in cols
+    rid, rtf, rdl = decode_postings(*_payload(cols), _lens(ids, dls),
+                                    len(ids))
     assert list(rid) == ids
     assert list(rtf) == tfs
     assert list(rdl) == dls
@@ -132,8 +147,8 @@ def test_block_slice_decode(data):
     i, j = min(bi, nb), min(bj, nb)
     if i > j:
         i, j = j, i
-    rid, rtf, rdl = decode_block_slice(*_payload(cols), blocks, i, j, n,
-                                       block_size=bs)
+    rid, rtf, rdl = decode_block_slice(*_payload(cols), _lens(ids, dls),
+                                       blocks, i, j, n, block_size=bs)
     s, e = i * bs, min(j * bs, n)
     assert list(rid) == ids[s:e]
     assert list(rtf) == tfs[s:e]
@@ -161,7 +176,7 @@ def test_large_ids_round_trip(data):
     tfs, dls = np.array(tfs, dtype=np.int64), np.array(dls, dtype=np.int64)
     n, bs = ids.size, 16
     cols = _layout(ids, tfs, dls, block_size=bs)
-    payload = _payload(cols)
+    payload = [*_payload(cols), _lens(ids, dls)]
     np.testing.assert_array_equal(payload[0], np.diff(ids, prepend=0))
     got = decode_postings(*payload, n)
     for g, want in zip(got, (ids, tfs, dls)):
@@ -180,6 +195,8 @@ def test_large_ids_round_trip(data):
     # a list whose length differs from df fails loudly
     with pytest.raises(ValueError, match="df"):
         decode_postings(payload[0], payload[1][:-1], payload[2], n)
+    with pytest.raises(ValueError, match="df"):
+        decode_postings(payload[0][:-1], payload[1], payload[2], n)
     with pytest.raises(ValueError, match="df"):
         decode_postings(*payload, n + 1)
     with pytest.raises(ValueError, match="df"):
@@ -219,3 +236,33 @@ def test_batch_encode_equals_per_term(term_runs):
 def test_unsorted_doc_ids_rejected():
     with pytest.raises(ValueError):
         _layout([5, 3], [1, 1], [1, 1])
+
+
+def test_doc_lens_gathers_across_row_groups():
+    """DocLens reads doc_len[doc_id - base] over one or several row-group
+    runs (in any order), returns owned int64 arrays, and refuses a doc
+    id outside its runs instead of wrapping around."""
+    lens = np.arange(100, dtype=np.int32) * 3 + 1
+    base = 1 << 33
+    one = DocLens(base, [(0, lens)])
+    three = DocLens(base, [(70, lens[70:]), (0, lens[:30]),
+                           (30, lens[30:70])])
+    rng = np.random.default_rng(9)
+    for _ in range(50):
+        local = np.sort(rng.choice(100, int(rng.integers(0, 40)),
+                                   replace=False))
+        for dl in (one, three):
+            got = dl(local.astype(np.int64) + base)
+            assert got.dtype == np.int64 and got.flags.owndata
+            assert got.tolist() == lens[local].tolist()
+    for dl in (one, three):
+        for bad in ([base - 1, base], [base + 99, base + 100]):
+            with pytest.raises(ValueError, match="document lengths"):
+                dl(np.array(bad, dtype=np.int64))
+    # a gap between runs and a shard without rows fail the same way
+    gappy = DocLens(base, [(0, lens[:30]), (40, lens[40:])])
+    with pytest.raises(ValueError, match="document lengths"):
+        gappy(np.array([base + 29, base + 35], dtype=np.int64))
+    with pytest.raises(ValueError, match="document lengths"):
+        DocLens(base, [])(np.array([base], dtype=np.int64))
+    assert DocLens(base, [])(np.zeros(0, dtype=np.int64)).size == 0

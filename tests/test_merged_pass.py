@@ -17,26 +17,34 @@ from indexer_spark.build import (
     compact_index,
     read_stats,
 )
-from indexer_spark.compress import BLOCK_SIZE, decode_postings
+from indexer_spark.compress import BLOCK_SIZE, DocLens, decode_postings
 from indexer_spark.lexer import tokenize
 from indexer_spark.query import IndexReader
 from indexer_spark.synth import gen_transcripts
 
 
 def _random_rows(rng, n_rows, max_df=300):
-    """(docs gaps int64, tfs int32, dls int32, df) payloads as a point
-    read hands them to a scorer, and the (docs, tfs, dls) they hold."""
+    """(docs gaps int64, tfs int32, doc_len DocLens, df) payloads as a
+    point read hands them to a scorer, and the (docs, tfs, dls) they
+    hold. Every row's docs lie in one shard of ``n_docs`` documents from
+    doc id ``base`` (past 2**32), whose int32 lengths the DocLens reads
+    as two row-group runs."""
+    n_docs, base = 1 << 15, int(rng.integers(1 << 33, 1 << 35))
+    lens = rng.integers(0, 1 << 16, size=n_docs).astype(np.int32)
+    doc_len = DocLens(base, [(0, lens[:20_000]), (20_000, lens[20_000:])])
     rows, want = [], []
     for i in range(n_rows):
         df = 1 if i % 3 == 0 else int(rng.integers(2, max_df))
-        gaps = rng.integers(1, 1 << int(rng.integers(1, 40)), size=df)
-        first = 0 if i % 4 == 0 else int(rng.integers(0, 1 << 35))
-        docs = first + np.concatenate(([0], np.cumsum(gaps[1:])))
+        local = np.sort(rng.choice(n_docs, df, replace=False))
+        if i % 4 == 0:
+            local[0] = 0  # the shard's first document
+            local = np.unique(local)
+            df = local.size
+        docs = base + local
         tfs = rng.integers(1, 1 << int(rng.integers(1, 20)), size=df)
-        dls = rng.integers(1, 1 << 16, size=df)
         rows.append((np.diff(docs, prepend=0), tfs.astype(np.int32),
-                     dls.astype(np.int32), df))
-        want.append((docs, tfs, dls))
+                     doc_len, df))
+        want.append((docs, tfs, lens[local].astype(np.int64)))
     return rows, want
 
 
@@ -99,10 +107,12 @@ def test_decode_rows_rejects_misaligned_rows():
     moved = [(d0, t0, l0, n0 + 1), (d1, t1, l1, n1 - 1), rows[2]]
     with pytest.raises(ValueError):
         Q._decode_rows(moved)
-    # a row one tf short of its df
+    # a row one tf short of its df, and one doc gap short
     cut = [(d0, t0[:-1], l0, n0), rows[1]]
     with pytest.raises(ValueError):
         Q._decode_rows(cut)
+    with pytest.raises(ValueError):
+        Q._decode_rows([(d0[:-1], t0, l0, n0)])
 
 
 def test_shard_grouped_scores_each_shard_once_on_all_its_rows():
@@ -110,20 +120,26 @@ def test_shard_grouped_scores_each_shard_once_on_all_its_rows():
     (the layout append_index leaves): each shard is scored exactly once,
     on all of its rows, and equals scoring that shard's rows alone."""
     rng = np.random.default_rng(12)
-    rows = []  # (shard, term, df, docs, tfs, dls)
+    rows = []  # (shard, term, df, docs, tfs)
     for shard, lo in ((0, 0), (1, 5000)):
         for term in ("alpha", "beta", "gamma"):
             df = int(rng.integers(1, 300))
             docs = np.sort(rng.choice(5000, df, replace=False)) + lo
             tfs = rng.integers(1, 9, size=df)
-            dls = rng.integers(1, 60, size=df)
             rows.append((shard, term, df, np.diff(docs, prepend=0).tolist(),
-                         tfs.tolist(), dls.tolist()))
-    names = list(Q._POST_COLS)
+                         tfs.tolist()))
+    lens = rng.integers(1, 60, size=10_000).astype(np.int32)
+    opened = []
+
+    def doc_lens(shard):  # what a task reads from the shard's tok files
+        opened.append(shard)
+        lo = shard * 5000
+        return DocLens(lo, [(0, lens[lo:lo + 5000])])
+
+    names = ["shard", "term", "df", "docs", "tfs"]
     schema = pa.schema([("shard", pa.int32()), ("term", pa.string()),
                         ("df", pa.int64()), ("docs", pa.list_(pa.int64())),
-                        ("tfs", pa.list_(pa.int32())),
-                        ("dls", pa.list_(pa.int32()))])
+                        ("tfs", pa.list_(pa.int32()))])
 
     def batch(rs):
         return pa.RecordBatch.from_arrays(
@@ -142,16 +158,29 @@ def test_shard_grouped_scores_each_shard_once_on_all_its_rows():
         seen.append(sorted(zip(rows["shard"], rows["term"])))
         return scorer(rows)
 
-    out = list(Q._shard_grouped(recording)(iter(batches)))
+    out = list(Q._shard_grouped(recording, doc_lens)(iter(batches)))
     assert seen == [[(0, "alpha"), (0, "beta"), (0, "gamma")],
                     [(1, "alpha"), (1, "beta"), (1, "gamma")]]
+    assert opened == [0, 1]  # each shard's lengths loaded once
     assert len(out) == 2
     for got, own in zip(out, ([a0, a1, a2], [b0, b1, b2])):
-        ids, sc = scorer(Q._table_rows(pa.Table.from_batches([batch(own)])))
+        own_rows = Q._attach_doc_lens(
+            Q._table_rows(pa.Table.from_batches([batch(own)])), doc_lens)
+        ids, sc = scorer(own_rows)
         assert got.schema.names == ["doc_id", "score"]
         assert got["doc_id"].to_pylist() == ids.tolist() and ids.size
         assert got["score"].to_pylist() == sc.tolist()
-    assert list(Q._shard_grouped(recording)(iter([batch([])]))) == []
+        # and the scores use each posting's own document length
+        want = {}
+        for _sh, term, _df, gaps, tfs in own:
+            w = {"alpha": 1.3, "beta": 0.7, "gamma": 2.1}[term]
+            for d, tf in zip(np.cumsum(gaps).tolist(), tfs):
+                want[d] = want.get(d, 0.0) + w * tf * 2.2 / (
+                    tf + 1.2 * (0.25 + 0.75 * int(lens[d]) / 20.0))
+        for d, s in zip(ids.tolist(), sc.tolist()):
+            assert abs(want[d] - s) <= 1e-9 * want[d]
+    assert list(Q._shard_grouped(recording, doc_lens)(
+        iter([batch([])]))) == []
 
 
 CFG = dict(shard_docs=256, block_size=32, id_partitions=4, positions=True)

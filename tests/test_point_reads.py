@@ -17,7 +17,7 @@ from indexer_spark.synth import gen_transcripts
 
 CFG = dict(shard_docs=256, block_size=32, id_partitions=3, positions=True,
            row_group_bytes=8 << 10)
-POST_COLS = ["shard", "term", "df", "docs", "tfs", "dls", "poss"]
+POST_COLS = ["shard", "term", "df", "docs", "tfs", "poss"]
 
 
 @pytest.fixture(scope="module")
@@ -122,7 +122,7 @@ def test_post_read_rows_and_bytes_match_an_arrow_table(spark,
     vocab = _vocab(small_rg_index)
     rng = np.random.default_rng(17)
     post = _dataset(small_rg_index, "postings")
-    cols = ["term", "df", "docs", "tfs", "dls", "poss"]
+    cols = ["term", "df", "docs", "tfs", "poss"]
     r = IndexReader(spark, small_rg_index)
     try:
         for n in (1, 2, 3, 9, 40):
@@ -789,3 +789,48 @@ def test_facets_refresh_after_append(spark, tmp_path):
             fresh.close()
     finally:
         old.close()
+
+
+def test_doc_lens_read_each_shard_by_address(spark, small_rg_index,
+                                             tmp_path):
+    """The point-read layer's doc_len accessor equals the dataset scan
+    for every shard, also over a hand-written tok file of several row
+    groups, and fails loudly on a row group whose local_idx skips."""
+    import pyarrow as pa
+
+    tok = _dataset(small_rg_index, "tok")
+    r = IndexReader(spark, small_rg_index)
+    try:
+        offsets = r._reads.offsets
+        for shard in sorted(offsets):
+            want = tok.to_table(columns=["local_idx", "doc_len"],
+                                filter=pads.field("shard") == shard)
+            local = want["local_idx"].to_numpy()
+            lens = r._reads.doc_lens(shard)
+            got = lens(np.sort(local) + offsets[shard])
+            assert got.tolist() == want["doc_len"].to_numpy()[
+                np.argsort(local)].tolist(), shard
+            with pytest.raises(ValueError, match="document lengths"):
+                lens(np.array([offsets[shard] + local.size]))
+    finally:
+        r.close()
+
+    d = tmp_path / "tok" / "shard=3"
+    d.mkdir(parents=True)
+    lens = np.arange(1000, dtype=np.int32) % 97
+    pq.write_table(pa.table({"local_idx": np.arange(1000),
+                             "doc_len": lens}), str(d / "part-0.parquet"),
+                   row_group_size=300)
+    fi = Q._FileIndex(str(tmp_path / "tok"), "local_idx", True)
+    runs = fi.runs("doc_len", 3)
+    assert [first for first, _ in runs] == [0, 300, 600, 900]
+    dl = Q.DocLens(5000, runs)
+    ids = np.array([5000, 5299, 5300, 5650, 5999], dtype=np.int64)
+    assert dl(ids).tolist() == lens[ids - 5000].tolist()
+    assert fi.runs("doc_len", 4) == []
+    pq.write_table(pa.table({"local_idx": np.array([0, 1, 3]),
+                             "doc_len": np.array([1, 2, 3], np.int32)}),
+                   str(d / "part-0.parquet"))
+    with pytest.raises(RuntimeError, match="skips"):
+        Q._FileIndex(str(tmp_path / "tok"), "local_idx", True).runs(
+            "doc_len", 3)

@@ -26,15 +26,25 @@ def small_corpus(spark):
 
 
 def _postings_signature(spark, index_dir):
-    from indexer_spark.build import _postings_path
+    """Every postings row's content (doc gaps, tfs, block metadata and
+    nbytes, the last two computed from the document lengths) and every
+    document's length (tok doc_len, which the reader gathers)."""
+    from indexer_spark.build import _postings_path, _tok_path
 
     rows = (
         spark.read.parquet(_postings_path(index_dir))
         .select("shard", "term", "df",
-                F.md5(F.to_json(F.struct("docs", "tfs", "dls"))).alias("h"))
+                F.md5(F.to_json(F.struct("docs", "tfs", "blocks",
+                                         "nbytes"))).alias("h"))
         .collect()
     )
-    return sorted((r["shard"], r["term"], r["df"], r["h"]) for r in rows)
+    lens = (
+        spark.read.parquet(_tok_path(index_dir))
+        .select("shard", "local_idx", "doc_len")
+        .collect()
+    )
+    return (sorted((r["shard"], r["term"], r["df"], r["h"]) for r in rows),
+            sorted(tuple(r) for r in lens))
 
 
 def test_partial_then_resume_equals_fresh(spark, small_corpus, tmp_path):
@@ -62,7 +72,8 @@ def test_partial_then_resume_equals_fresh(spark, small_corpus, tmp_path):
     # the ids stage ran once (manifest has a single ids row)
     assert sum(1 for r in m2 if r["stage"] == "ids") == 1
 
-    # identical postings content (per-term doc gaps, tfs and dls)
+    # identical postings content (per-term doc gaps, tfs, blocks) and
+    # document lengths
     assert _postings_signature(spark, part_dir) == _postings_signature(
         spark, fresh_dir
     )
