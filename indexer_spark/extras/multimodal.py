@@ -2,19 +2,17 @@
 with typed metadata, processed through Arrow-batched mapInPandas.
 
 The Spark-side machinery (schemas, partitioning by kind, UDF signatures,
-batch shapes, byte budgets) is real and tested. The codec step is real
-for all three modalities via `media_decoder`: images (pure-numpy PPM
-P6/P3 + uncompressed 24/32-bit BMP + COMPRESSED PNG via stdlib zlib),
-audio (RIFF/WAVE: PCM plus the COMPRESSED G.711 mu-law/A-law and IMA
-ADPCM tags, pure numpy), and video (the RVID container: length-prefixed
-PPM frames with frame-accurate lazy seeks). Remaining compressed
-formats (JPEG/WebP, FLAC/OGG,
-H.264/...) decode through import-guarded OPTIONAL public libraries —
-Pillow, soundfile, PyAV — when installed (none are present in this
-container, so those branches are exercised by skip-marked tests);
-without them `strict_decoder` raises its documented
-NotImplementedError. `deterministic_fake_decoder` derives features from
-payload bytes (pure function of content) for plumbing tests.
+batch shapes, byte budgets) is real and tested for every kind. The
+codec step is real for images via `media_decoder`: pure-numpy PPM P6/P3
++ uncompressed 24/32-bit BMP + COMPRESSED PNG via stdlib zlib. Other
+image formats (JPEG/WebP/...) decode through the import-guarded
+OPTIONAL public library Pillow when installed (exercised by a
+skip-marked test where it is absent); without it, and for audio and
+video payloads, `strict_decoder` raises its documented
+NotImplementedError — the `decoder=` seam of `extract_features` is where
+an audio or video codec plugs in. `deterministic_fake_decoder` derives
+features from payload bytes (pure function of content) for plumbing
+tests.
 
 Scale notes: assets are processed in bounded Arrow batches
 (`spark.sql.execution.arrow.maxRecordsPerBatch` caps rows per batch, and
@@ -57,13 +55,10 @@ def deterministic_fake_decoder(payload: bytes, kind: str) -> np.ndarray:
 def strict_decoder(payload: bytes, kind: str) -> np.ndarray:
     raise NotImplementedError(
         f"real {kind} decode for this payload requires a codec library "
-        "that is not installed: media_decoder handles PPM/BMP/PNG images, "
-        "WAV audio (PCM/G.711/IMA-ADPCM) and RVID video with pure "
-        "numpy/zlib, and decodes "
-        "compressed formats through the import-guarded optional deps "
-        "Pillow (images), soundfile (audio) and PyAV (video) when those "
-        "public libraries are present — install them to make this error "
-        "unreachable"
+        "that is not installed: media_decoder handles PPM/BMP/PNG images "
+        "with pure numpy/zlib and decodes other image formats through "
+        "the import-guarded optional dep Pillow when present; pass an "
+        "audio or video codec as extract_features(decoder=...)"
     )
 
 
@@ -338,365 +333,12 @@ def image_features(arr: np.ndarray) -> np.ndarray:
 
 
 def image_decoder(payload: bytes, kind: str) -> np.ndarray:
-    """REAL decoder for the image kind (PPM/BMP, pure numpy): decode
-    pixels, then featurize. Non-image kinds go through media_decoder's
-    dispatch rules (audio is real too; video still raises)."""
+    """REAL decoder for the image kind (PPM/BMP/PNG, pure numpy/zlib):
+    decode pixels, then featurize. Non-image kinds go through
+    media_decoder's dispatch rules (they raise without a codec)."""
     if kind != "image":
         return media_decoder(payload, kind)
     return image_features(decode_image_bytes(payload))
-
-
-# --------------------------------------------------------------------------
-# real audio codec: RIFF/PCM WAV (8/16-bit, any channel count) — pure
-# numpy, same no-external-library policy as the image codec above
-# --------------------------------------------------------------------------
-
-def _wav_container(fmt_body: bytes, data: bytes, n_samples: int | None) -> bytes:
-    """Assemble RIFF/WAVE from a fmt chunk body + data chunk. A `fact`
-    chunk (decoded sample count) is emitted when given — the WAV spec
-    requires it for non-PCM format tags."""
-    fact = (b"fact" + (4).to_bytes(4, "little")
-            + int(n_samples).to_bytes(4, "little")) if n_samples is not None else b""
-    pad = b"\x00" if len(data) & 1 else b""
-    body = (b"WAVE" + b"fmt " + len(fmt_body).to_bytes(4, "little") + fmt_body
-            + fact + b"data" + len(data).to_bytes(4, "little") + data + pad)
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int, bits: int = 16,
-               codec: str = "pcm", block_size: int = 256) -> bytes:
-    """(n,) or (n, channels) int16-scale samples -> RIFF/WAVE bytes.
-
-    ``codec``: "pcm" (format 1; 16-bit signed LE or 8-bit unsigned),
-    "ulaw" / "alaw" (ITU-T G.711 companding, format tags 7 / 6 — REAL
-    compressed audio at 8 bits/sample from 16-bit input), or "adpcm"
-    (IMA/DVI ADPCM, format tag 0x11, 4 bits/sample, mono,
-    ``block_size``-byte blocks). Non-PCM payloads carry the spec-required
-    `fact` chunk."""
-    arr = np.asarray(samples)
-    if arr.ndim == 1:
-        arr = arr[:, None]
-    n, ch = arr.shape
-    rate = int(sample_rate)
-    if codec == "pcm":
-        if bits == 16:
-            data = arr.astype("<i2").tobytes()
-        elif bits == 8:
-            data = (arr.astype(np.int64) + 128).clip(0, 255).astype(np.uint8).tobytes()
-        else:
-            raise ValueError("bits must be 8 or 16")
-        block = ch * bits // 8
-        fmt_body = ((1).to_bytes(2, "little") + ch.to_bytes(2, "little")
-                    + rate.to_bytes(4, "little")
-                    + (rate * block).to_bytes(4, "little")
-                    + block.to_bytes(2, "little") + bits.to_bytes(2, "little"))
-        return _wav_container(fmt_body, data, None)
-    if codec in ("ulaw", "alaw"):
-        tag = 7 if codec == "ulaw" else 6
-        enc = encode_ulaw if codec == "ulaw" else encode_alaw
-        data = enc(arr.reshape(-1)).tobytes()
-        fmt_body = (tag.to_bytes(2, "little") + ch.to_bytes(2, "little")
-                    + rate.to_bytes(4, "little")
-                    + (rate * ch).to_bytes(4, "little")
-                    + ch.to_bytes(2, "little") + (8).to_bytes(2, "little"))
-        return _wav_container(fmt_body, data, n)
-    if codec == "adpcm":
-        if ch != 1:
-            raise ValueError("IMA ADPCM encoder is mono-only here")
-        data = encode_ima_adpcm(arr.reshape(-1), block_size)
-        spb = (block_size - 4) * 2 + 1
-        fmt_body = ((0x11).to_bytes(2, "little") + (1).to_bytes(2, "little")
-                    + rate.to_bytes(4, "little")
-                    # byte rate: rate scaled by 4 bits/sample + block headers
-                    + max(1, rate * block_size // spb).to_bytes(4, "little")
-                    + block_size.to_bytes(2, "little") + (4).to_bytes(2, "little")
-                    + (2).to_bytes(2, "little")      # cbSize
-                    + spb.to_bytes(2, "little"))     # wSamplesPerBlock
-        return _wav_container(fmt_body, data, n)
-    raise ValueError(f"unknown WAV codec {codec!r}")
-
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """RIFF/WAVE -> ((n, channels) float64 in [-1, 1], sample_rate).
-    Walks the chunk list per the RIFF spec (skips LIST etc.). Format
-    tags: 1 = PCM (8-bit unsigned / 16-bit signed), 6 / 7 = G.711
-    A-law / mu-law, 0x11 = IMA ADPCM (mono) — the COMPRESSED tags decode
-    with pure numpy; other tags raise so callers can fall through to the
-    optional soundfile path."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    i, end = 12, min(len(payload), 8 + int.from_bytes(payload[4:8], "little"))
-    fmt_body, data, fact_n = None, None, None
-    while i + 8 <= end:
-        cid = payload[i : i + 4]
-        size = int.from_bytes(payload[i + 4 : i + 8], "little")
-        body = payload[i + 8 : i + 8 + size]
-        if cid == b"fmt ":
-            fmt_body = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact":
-            fact_n = int.from_bytes(body[0:4], "little")
-        i += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt_body is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    afmt = int.from_bytes(fmt_body[0:2], "little")
-    ch = int.from_bytes(fmt_body[2:4], "little")
-    rate = int.from_bytes(fmt_body[4:8], "little")
-    block_align = int.from_bytes(fmt_body[12:14], "little")
-    bits = int.from_bytes(fmt_body[14:16], "little")
-    if ch < 1:
-        raise ValueError("WAV with zero channels")
-    if afmt == 1 and bits in (8, 16):
-        if bits == 16:
-            x = np.frombuffer(data, dtype="<i2").astype(np.float64) / 32768.0
-        else:
-            raw = np.frombuffer(data, dtype=np.uint8)
-            x = (raw.astype(np.float64) - 128.0) / 128.0
-    elif afmt in (6, 7):  # G.711 A-law / mu-law
-        dec = decode_alaw if afmt == 6 else decode_ulaw
-        x = dec(np.frombuffer(data, dtype=np.uint8)).astype(np.float64) / 32768.0
-        if fact_n is not None:
-            x = x[: fact_n * ch]
-    elif afmt == 0x11:  # IMA ADPCM
-        if ch != 1:
-            raise ValueError("IMA ADPCM decode is mono-only here")
-        x = decode_ima_adpcm(data, block_align,
-                             n_samples=fact_n).astype(np.float64) / 32768.0
-    else:
-        raise ValueError(f"unsupported WAV (format={afmt}, bits={bits})")
-    n = x.size // ch
-    return x[: n * ch].reshape(n, ch), rate
-
-
-# --------------------------------------------------------------------------
-# real COMPRESSED audio codecs, no external library:
-#   - G.711 mu-law / A-law (ITU-T G.711): 16-bit PCM -> 8 bits/sample
-#     logarithmic companding; fully vectorized numpy both directions.
-#   - IMA/DVI ADPCM (IMA Digital Audio Pack spec, WAV format tag 0x11):
-#     4 bits/sample adaptive differential coding in independent blocks —
-#     block independence is what makes it parallelizable at scale (each
-#     Arrow batch / task decodes its own rows' blocks; here the per-block
-#     recursion is a plain loop sized by the payload, fine for asset
-#     payloads that arrive one row at a time through mapInPandas).
-# FLAC/OGG (entropy-coded) remain the soundfile plug point.
-# --------------------------------------------------------------------------
-
-_ULAW_BIAS = 0x84  # 132, per G.711
-
-
-def encode_ulaw(samples: np.ndarray) -> np.ndarray:
-    """int16-scale samples -> G.711 mu-law codes (uint8), vectorized."""
-    x = np.asarray(samples, dtype=np.int64)
-    sign = np.where(x < 0, 0x80, 0)
-    mag = np.minimum(np.abs(x), 32635) + _ULAW_BIAS
-    exp = np.clip(np.floor(np.log2(mag)).astype(np.int64) - 7, 0, 7)
-    mant = (mag >> (exp + 3)) & 0x0F
-    return (~(sign | (exp << 4) | mant) & 0xFF).astype(np.uint8)
-
-
-def decode_ulaw(codes: np.ndarray) -> np.ndarray:
-    """G.711 mu-law codes -> int16 samples, vectorized."""
-    u = (~np.asarray(codes, dtype=np.int64)) & 0xFF
-    exp = (u >> 4) & 7
-    mant = u & 0x0F
-    mag = (((mant << 3) + _ULAW_BIAS) << exp) - _ULAW_BIAS
-    return np.where(u & 0x80, -mag, mag).astype(np.int16)
-
-
-def encode_alaw(samples: np.ndarray) -> np.ndarray:
-    """int16-scale samples -> G.711 A-law codes (uint8), vectorized.
-    Operates on the 13-bit magnitude per the spec; even bits inverted
-    (the 0x55 mask) as transmitted."""
-    x = np.asarray(samples, dtype=np.int64) >> 3
-    neg = x < 0
-    mag = np.where(neg, -x - 1, x)
-    mag = np.minimum(mag, 0xFFF)
-    seg = np.clip(np.floor(np.log2(np.maximum(mag, 1))).astype(np.int64) - 4,
-                  0, 7)
-    mant = (mag >> np.maximum(seg, 1)) & 0x0F
-    code = np.where(neg, 0, 0x80) | (seg << 4) | mant
-    return (code ^ 0x55).astype(np.uint8)
-
-
-def decode_alaw(codes: np.ndarray) -> np.ndarray:
-    """G.711 A-law codes -> int16 samples, vectorized."""
-    a = (np.asarray(codes, dtype=np.int64) ^ 0x55) & 0xFF
-    seg = (a >> 4) & 7
-    t = ((a & 0x0F) << 4) + 8
-    t = np.where(seg > 0, (t + 0x100) << np.maximum(seg - 1, 0), t)
-    return np.where(a & 0x80, t, -t).astype(np.int16)
-
-
-_IMA_STEPS = np.array([
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 158, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894, 6484,
-    7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289, 16818,
-    18500, 20350, 22385, 24623, 27086, 29794, 32767], dtype=np.int64)
-_IMA_INDEX = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int64)
-
-
-def _ima_step(nibble: int, pred: int, idx: int) -> tuple[int, int]:
-    """One IMA ADPCM reconstruction step (shared by encoder state
-    tracking and decoder): nibble + (pred, idx) -> new (pred, idx)."""
-    step = int(_IMA_STEPS[idx])
-    diff = step >> 3
-    if nibble & 4:
-        diff += step
-    if nibble & 2:
-        diff += step >> 1
-    if nibble & 1:
-        diff += step >> 2
-    pred = pred - diff if nibble & 8 else pred + diff
-    pred = max(-32768, min(32767, pred))
-    idx = max(0, min(88, idx + int(_IMA_INDEX[nibble & 7])))
-    return pred, idx
-
-
-def encode_ima_adpcm(samples: np.ndarray, block_size: int = 256) -> bytes:
-    """Mono int16-scale samples -> IMA ADPCM block stream (WAV tag 0x11
-    layout): per block a 4-byte header (predictor int16 LE, step index,
-    reserved) holding sample 0 verbatim, then 4-bit nibbles low-first."""
-    x = np.asarray(samples, dtype=np.int64).reshape(-1)
-    if block_size < 8 or block_size & 3:
-        raise ValueError("block_size must be a multiple of 4, >= 8")
-    spb = (block_size - 4) * 2 + 1
-    out, idx = bytearray(), 0
-    for start in range(0, len(x), spb):
-        blk = x[start : start + spb]
-        pred = int(np.clip(blk[0], -32768, 32767))
-        out += pred.to_bytes(2, "little", signed=True)
-        out += bytes([idx, 0])
-        nibbles = []
-        for s in blk[1:]:
-            step = int(_IMA_STEPS[idx])
-            diff = int(s) - pred
-            nib = 8 if diff < 0 else 0
-            diff = abs(diff)
-            if diff >= step:
-                nib |= 4
-                diff -= step
-            if diff >= step >> 1:
-                nib |= 2
-                diff -= step >> 1
-            if diff >= step >> 2:
-                nib |= 1
-            pred, idx = _ima_step(nib, pred, idx)
-            nibbles.append(nib)
-        nibbles += [0] * (spb - 1 - len(nibbles))  # pad final block
-        for lo, hi in zip(nibbles[0::2], nibbles[1::2]):
-            out.append(lo | (hi << 4))
-    return bytes(out)
-
-
-def decode_ima_adpcm(data: bytes, block_size: int,
-                     n_samples: int | None = None) -> np.ndarray:
-    """IMA ADPCM block stream -> mono int16 samples. ``n_samples`` (the
-    WAV `fact` count) trims final-block padding when given."""
-    if block_size < 8:
-        raise ValueError("bad IMA ADPCM block size")
-    spb = (block_size - 4) * 2 + 1
-    out = []
-    for start in range(0, len(data) - 3, block_size):
-        blk = data[start : start + block_size]
-        pred = int.from_bytes(blk[0:2], "little", signed=True)
-        idx = max(0, min(88, blk[2]))
-        vals = [pred]
-        for byte in blk[4:]:
-            for nib in (byte & 0x0F, byte >> 4):
-                pred, idx = _ima_step(nib, pred, idx)
-                vals.append(pred)
-        out.extend(vals[:spb])
-    arr = np.array(out, dtype=np.int16)
-    return arr[:n_samples] if n_samples is not None else arr
-
-
-def audio_features(samples: np.ndarray, sample_rate: int) -> np.ndarray:
-    """(n, ch) samples -> FEATURE_DIM deterministic features: mean, std,
-    rms, peak, zero-crossing rate (5) + 8-band normalized spectral energy
-    (rfft of the channel mean) + log duration, log sample rate, channel
-    count (3)."""
-    mono = samples.mean(axis=1) if samples.ndim > 1 else samples
-    n = max(mono.size, 1)
-    if mono.size == 0:
-        mono = np.zeros(1)
-    zcr = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) \
-        if mono.size > 1 else 0.0
-    spec = np.abs(np.fft.rfft(mono)) ** 2
-    bands = np.array([b.sum() for b in np.array_split(spec, 8)])
-    total = bands.sum()
-    bands = bands / total if total > 0 else bands
-    ch = samples.shape[1] if samples.ndim > 1 else 1
-    return np.concatenate([
-        [mono.mean(), mono.std(), np.sqrt(np.mean(mono ** 2)),
-         np.abs(mono).max(), zcr],
-        bands,
-        [np.log1p(n / max(sample_rate, 1)), np.log1p(sample_rate) / 20.0,
-         ch / 8.0],
-    ])
-
-
-# --------------------------------------------------------------------------
-# video container: RVID — a minimal real container (magic + fps + frame
-# count + length-prefixed PPM-P6 frames) decodable in pure numpy with
-# frame-accurate seeks, so the Spark-side video patterns (frame sampling,
-# lazy per-frame decode, feature pooling) are REAL end to end. Compressed
-# codecs (H.264/VP9/...) remain the documented ffmpeg plug point.
-# --------------------------------------------------------------------------
-
-RVID_MAGIC = b"RVID"
-
-
-def encode_rvid(frames: list, fps: int = 30) -> bytes:
-    """List of (h, w, 3) uint8 frames -> RVID container bytes."""
-    out = [RVID_MAGIC, len(frames).to_bytes(4, "little"),
-           int(fps).to_bytes(4, "little")]
-    for f in frames:
-        enc = encode_ppm(np.asarray(f, dtype=np.uint8))
-        out.append(len(enc).to_bytes(4, "little"))
-        out.append(enc)
-    return b"".join(out)
-
-
-def rvid_info(payload: bytes) -> tuple[int, int, list[tuple[int, int]]]:
-    """(n_frames, fps, [(offset, length) per frame]) — header walk only,
-    no frame decode (the seek index for lazy per-frame access)."""
-    if payload[:4] != RVID_MAGIC:
-        raise ValueError("not an RVID payload")
-    n = int.from_bytes(payload[4:8], "little")
-    fps = int.from_bytes(payload[8:12], "little")
-    spans, i = [], 12
-    for _ in range(n):
-        ln = int.from_bytes(payload[i : i + 4], "little")
-        spans.append((i + 4, ln))
-        i += 4 + ln
-    return n, fps, spans
-
-
-def rvid_frame(payload: bytes, idx: int) -> np.ndarray:
-    """Decode ONE frame by index — only that frame's bytes are touched."""
-    _, _, spans = rvid_info(payload)
-    off, ln = spans[idx]
-    return decode_ppm(payload[off : off + ln])
-
-
-def video_features(payload: bytes, max_samples: int = 4) -> np.ndarray:
-    """FEATURE_DIM features from up to ``max_samples`` evenly-spaced
-    frames: mean of the per-frame image features — only sampled frames
-    are decoded (the 100-TB pattern: a 2-hour clip costs 4 frame decodes,
-    not 216k)."""
-    n, fps, spans = rvid_info(payload)
-    if n == 0:
-        return np.zeros(FEATURE_DIM)
-    picks = sorted({int(i) for i in np.linspace(0, n - 1, min(n, max_samples))})
-    feats = [
-        image_features(decode_ppm(payload[off : off + ln]))
-        for off, ln in (spans[i] for i in picks)
-    ]
-    return np.mean(feats, axis=0)
 
 
 def _optional_image_decode(payload: bytes) -> np.ndarray | None:
@@ -714,64 +356,13 @@ def _optional_image_decode(payload: bytes) -> np.ndarray | None:
     return arr.astype(np.uint8)
 
 
-def _optional_audio_decode(payload: bytes) -> tuple[np.ndarray, int] | None:
-    """Compressed/other-container audio decode (FLAC/OGG/...) via
-    soundfile WHEN INSTALLED; (samples float64 in [-1, 1] — the same
-    scale decode_wav produces, so features are comparable across
-    containers of the same signal, rate) or None."""
-    try:
-        import soundfile as sf
-    except ImportError:
-        return None
-    import io
-
-    data, rate = sf.read(io.BytesIO(payload), dtype="float64")
-    return np.asarray(data), int(rate)
-
-
-def _optional_video_features(payload: bytes,
-                             max_samples: int = 4) -> np.ndarray | None:
-    """Compressed-video decode (H.264/VP9/...) via PyAV WHEN INSTALLED:
-    decode only ~max_samples evenly-spaced frames (same sampling policy
-    as the RVID path) and mean their image features; None without av."""
-    try:
-        import av
-    except ImportError:
-        return None
-    import io
-
-    with av.open(io.BytesIO(payload)) as container:
-        stream = container.streams.video[0]
-        n = stream.frames or 0
-        picks = (
-            sorted({int(i) for i in np.linspace(0, n - 1, min(n, max_samples))})
-            if n else list(range(max_samples))
-        )
-        feats, fi = [], 0
-        want = set(picks)
-        for frame in container.decode(stream):
-            if fi in want:
-                feats.append(
-                    image_features(frame.to_ndarray(format="rgb24"))
-                )
-            fi += 1
-            if len(feats) == len(want):
-                break
-    if not feats:
-        return np.zeros(FEATURE_DIM)
-    return np.mean(feats, axis=0)
-
-
 def media_decoder(payload: bytes, kind: str) -> np.ndarray:
-    """REAL decoder for image (PPM/BMP + compressed PNG via stdlib
-    zlib), audio (WAV: PCM + compressed G.711 mu-law/A-law + IMA ADPCM)
-    and video (RVID container) kinds, no
-    external library end to end. Remaining compressed formats
-    (JPEG/WebP, FLAC/OGG, H.264/...) decode through import-guarded
-    OPTIONAL public libraries (Pillow / soundfile / PyAV) when present;
-    without them they fall through to strict_decoder's documented
-    NotImplementedError — strict_decoder is unreachable when the
-    optional dependencies exist."""
+    """REAL decoder for the image kind (PPM/BMP + compressed PNG via
+    stdlib zlib), no external library. Other image formats (JPEG/WebP/
+    ...) decode through the import-guarded OPTIONAL Pillow when present;
+    without it, and for every other kind, they fall through to
+    strict_decoder's documented NotImplementedError — strict_decoder is
+    unreachable for images when the optional dependency exists."""
     if kind == "image":
         try:
             return image_features(decode_image_bytes(payload))
@@ -779,19 +370,6 @@ def media_decoder(payload: bytes, kind: str) -> np.ndarray:
             arr = _optional_image_decode(payload)
             if arr is not None:
                 return image_features(arr)
-    elif kind == "audio":
-        try:
-            return audio_features(*decode_wav(payload))
-        except ValueError:
-            dec = _optional_audio_decode(payload)
-            if dec is not None:
-                return audio_features(*dec)
-    elif kind == "video":
-        if payload[:4] == RVID_MAGIC:
-            return video_features(payload)
-        feats = _optional_video_features(payload)
-        if feats is not None:
-            return feats
     return strict_decoder(payload, kind)
 
 
@@ -809,59 +387,6 @@ def synth_image_assets(n: int, seed: int = 42) -> pd.DataFrame:
         rows.append({
             "asset_id": i, "kind": "image", "payload": enc(arr),
             "width": w, "height": h, "sample_rate": None, "n_frames": None,
-        })
-    return pd.DataFrame(rows)
-
-
-def synth_audio_assets(n: int, seed: int = 42) -> pd.DataFrame:
-    """Deterministic REAL audio assets: sine+noise mixes encoded as
-    RIFF/WAVE — PCM (16-bit / 8-bit, mono / stereo) plus the COMPRESSED
-    tags (G.711 mu-law / A-law, IMA ADPCM) round-robin, with true
-    sample_rate metadata."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        rate = (8000, 16000, 44100)[i % 3]
-        dur = int(rng.integers(32, 2048))
-        freq = float(rng.uniform(50, rate / 4))
-        t = np.arange(dur) / rate
-        x = 0.6 * np.sin(2 * np.pi * freq * t) + 0.1 * rng.standard_normal(dur)
-        codec = ("pcm", "ulaw", "pcm", "alaw", "adpcm")[i % 5]
-        bits = 8 if i % 10 == 2 else 16
-        # 8-bit WAV carries values in [-128, 127]; scale the synthesis
-        # range accordingly (full-range int16 into encode_wav(bits=8)
-        # would saturate to a square wave at the clip)
-        amp = 127.0 if codec == "pcm" and bits == 8 else 32767.0
-        pcm = np.clip(x * amp, -amp - 1, amp).astype(np.int16)
-        if i % 2 and codec != "adpcm":  # stereo (ADPCM path is mono)
-            pcm = np.stack([pcm, pcm // 2], axis=1)
-        rows.append({
-            "asset_id": i, "kind": "audio",
-            "payload": encode_wav(pcm, rate, bits=bits, codec=codec),
-            "width": None, "height": None,
-            "sample_rate": rate, "n_frames": None,
-        })
-    return pd.DataFrame(rows)
-
-
-def synth_video_assets(n: int, seed: int = 42) -> pd.DataFrame:
-    """Deterministic REAL video assets: small random-frame RVID clips
-    with true n_frames metadata."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    for i in range(n):
-        nf = int(rng.integers(1, 40))
-        h = int(rng.integers(2, 10))
-        w = int(rng.integers(2, 10))
-        frames = [
-            rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-            for _ in range(nf)
-        ]
-        rows.append({
-            "asset_id": i, "kind": "video",
-            "payload": encode_rvid(frames, fps=(15, 24, 30)[i % 3]),
-            "width": w, "height": h,
-            "sample_rate": None, "n_frames": nf,
         })
     return pd.DataFrame(rows)
 
@@ -909,59 +434,3 @@ def extract_features(assets: DataFrame, decoder=deterministic_fake_decoder) -> D
             )
 
     return assets.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def frame_sample_features(assets: DataFrame, every_n: int = 30) -> DataFrame:
-    """1->N frame sampling WITH real decode: one output row per sampled
-    frame of each RVID video, carrying that frame's image features —
-    only sampled frames are ever decoded (frame-accurate seeks via the
-    container index). The mapInPandas fan-out + lazy-decode shape a
-    100-TB video pipeline uses."""
-
-    def run(batches):
-        for pdf in batches:
-            vids = pdf[pdf["kind"] == "video"]
-            ids, idxs, feats = [], [], []
-            for r in vids.itertuples():
-                payload = bytes(r.payload)
-                if payload[:4] != RVID_MAGIC:
-                    continue  # compressed codecs: ffmpeg plug point
-                nf, _fps, spans = rvid_info(payload)
-                for fi in range(0, nf, every_n):
-                    off, ln = spans[fi]
-                    ids.append(r.asset_id)
-                    idxs.append(fi)
-                    feats.append(
-                        image_features(
-                            decode_ppm(payload[off : off + ln])
-                        ).tolist()
-                    )
-            yield pd.DataFrame({
-                "asset_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "feature": feats,
-            })
-
-    return assets.mapInPandas(
-        run, schema="asset_id long, frame_idx int, feature array<double>"
-    )
-
-
-def frame_sample(assets: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling plumbing: emits one row per sampled frame
-    index from METADATA only (no decode). Shows the 1->N mapInPandas
-    fan-out shape; frame_sample_features adds the real decode."""
-
-    def run(batches):
-        for pdf in batches:
-            vids = pdf[pdf["kind"] == "video"]
-            out = []
-            for r in vids.itertuples():
-                nf = int(r.n_frames or 0)
-                for fi in range(0, nf, every_n):
-                    out.append((r.asset_id, fi))
-            yield pd.DataFrame(out, columns=["asset_id", "frame_idx"]).astype(
-                {"asset_id": "int64", "frame_idx": "int32"}
-            )
-
-    return assets.mapInPandas(run, schema="asset_id long, frame_idx int")

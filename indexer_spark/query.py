@@ -56,6 +56,7 @@ from .compress import (
     decode_positions_select,
     decode_postings,
 )
+from .boolquery import from_root, parse, rewrite_prefixes
 from .lexer import term_occurrences, tokenize
 
 _SCORE_SCHEMA = "doc_id long, score double"
@@ -1919,6 +1920,20 @@ def _rows_by_term(rows: _Rows) -> dict[str, set]:
     return out
 
 
+class _Plan(NamedTuple):
+    """One query planned once (IndexReader._plan) for every route."""
+    mode: str  # a search mode; TF-IDF plans as 'exhaustive'
+    kind: str  # 'bm25' | 'tfidf'
+    k: int
+    present: list  # query terms the corpus holds, sorted (bool: NOT-ed too)
+    weights: dict  # scored term -> idf (BM25) or TF-IDF weight
+    require: int  # AND: the number of terms every match holds; else 0
+    scorer: object  # the driver scorer, shared by the distributed plan
+    cols: list  # the stored postings columns that scorer reads
+    grouped: bool  # phrase / near / bool: the shard-grouped scorers
+    bound: int  # df-derived upper bound on the matching docs
+
+
 class IndexReader:
     """Query handle over an index directory (MainIndex analog,
     tree.rs:251-265 — but stateless: all state is in tables + stats)."""
@@ -1939,13 +1954,13 @@ class IndexReader:
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
         self.fast_path_bytes = fast_path_bytes
-        self.last_path: str | None = None  # "fast" | "distributed"
+        # route of the last answered query: "fast", "fast_phrase",
+        # "fast_near", "fast_bool" (_route) or "distributed"
+        self.last_path: str | None = None
         self._df_cache: dict[str, int] = {}
         self._nbytes_cache: dict[str, int] = {}
         self._poss_nbytes_cache: dict[str, int] = {}
         self._prefix_cache: dict[tuple[str, int], list[str]] = {}
-        self._has_nbytes: bool | None = None
-        self._has_poss_nbytes: bool | None = None
         # decoded-postings cache namespace: (index identity, epoch). The
         # epoch (bumped on every stats commit) invalidates entries across
         # mutations of ONE index; the dir identity separates different
@@ -2075,8 +2090,6 @@ class IndexReader:
         self._poss_nbytes_cache.clear()
         self._prefix_cache.clear()
         self._cached_terms.clear()
-        self._has_nbytes = None  # re-probe the refreshed schema lazily
-        self._has_poss_nbytes = None
         # re-derive the whole-file-task pin: the mutation may have grown
         # max_postings_file_bytes past the pin taken at init
         self._pin_split_size()
@@ -2161,24 +2174,19 @@ class IndexReader:
                 for t in missing:
                     out[t] = self._df_cache[t] = 0
                 return out
-            self._has_nbytes = "nbytes" in names
-            self._has_poss_nbytes = "poss_nbytes" in names
             rows = ts.read([c for c in _TS_COLS if c in names],
                            keys=sorted(set(missing)))
             tlist = rows["term"]
             found = dict(zip(tlist, rows["df"]))
-            if self._has_nbytes:
-                # `or 0`: NULL nbytes (e.g. a mixed-format index that
-                # slipped past the version guard) must not crash queries
-                nb = dict(zip(tlist, (x or 0 for x in rows["nbytes"])))
-                for t in missing:
-                    self._nbytes_cache[t] = nb.get(t, 0)
-            if self._has_poss_nbytes:
-                pnb = dict(zip(tlist, (x or 0 for x in rows["poss_nbytes"])))
-                for t in missing:
-                    self._poss_nbytes_cache[t] = pnb.get(t, 0)
+            # `or 0`: NULL nbytes (e.g. a mixed-format index that slipped
+            # past the version guard) must not crash queries; an index
+            # without positions has no poss_nbytes column
+            nb = dict(zip(tlist, (x or 0 for x in rows["nbytes"])))
+            pnb = dict(zip(tlist, (x or 0 for x in rows.get("poss_nbytes", ()))))
             for t in missing:
                 out[t] = self._df_cache[t] = found.get(t, 0)
+                self._nbytes_cache[t] = nb.get(t, 0)
+                self._poss_nbytes_cache[t] = pnb.get(t, 0)
             return out
 
         return self._with_reads(lookup)
@@ -2205,38 +2213,26 @@ class IndexReader:
             ts = reads["term_stats"]
             names = ts.schema.names
             if "term" not in names:  # zero-postings index
-                return names, None
-            return names, ts.read(
+                return None
+            return ts.read(
                 [c for c in _TS_COLS if c in names],
                 key_range=(prefix, prefix + "\U0010ffff"),
             )
 
-        names, rows = self._with_reads(scan)
+        rows = self._with_reads(scan)
         if rows is None:
             self._prefix_cache[key] = []
             return []
-        self._has_nbytes = "nbytes" in names
-        self._has_poss_nbytes = "poss_nbytes" in names
         terms = rows["term"]
-        dfs = rows["df"]
-        nbs = (
-            [x or 0 for x in rows["nbytes"]]
-            if self._has_nbytes else [0] * len(terms)
-        )
-        pnbs = (
-            [x or 0 for x in rows["poss_nbytes"]]
-            if self._has_poss_nbytes else [0] * len(terms)
-        )
+        pnbs = rows.get("poss_nbytes") or [0] * len(terms)
         pairs = []
-        for t, d, nb, pnb in zip(terms, dfs, nbs, pnbs):
+        for t, d, nb, pnb in zip(terms, rows["df"], rows["nbytes"], pnbs):
             if not t.startswith(prefix):
                 continue
             pairs.append((t, d))
             self._df_cache[t] = d
-            if self._has_nbytes:
-                self._nbytes_cache[t] = nb
-            if self._has_poss_nbytes:
-                self._poss_nbytes_cache[t] = pnb
+            self._nbytes_cache[t] = nb or 0
+            self._poss_nbytes_cache[t] = pnb or 0
         out = cap_expansions(pairs, cap)
         self._prefix_cache[key] = out
         return out
@@ -2274,7 +2270,6 @@ class IndexReader:
         tbl = self._with_reads(scan)
         if tbl is None:
             return []
-        self._has_nbytes = True
         top = tbl.take(
             pc.select_k_unstable(
                 tbl, k=min(n_terms, tbl.num_rows),
@@ -2528,72 +2523,53 @@ class IndexReader:
             warmed += 1
         return warmed
 
-    def _fast_from_cache(self, present: list[str], weights: dict[str, float],
-                         k: int, require_all: int = 0,
-                         kind: str = "bm25") -> list | None:
-        """Score a query entirely from the decoded-postings cache — no
-        parquet read at all. Engages when every matched term's
-        (shard, df, payload_len) rows are recorded as cached (by
-        warm_hot_terms or a previous fast query); returns None — falling
-        back to the reading paths — if any entry was LRU-evicted. Same
-        chunks, same arithmetic, same aggregation as the reading fast
-        path, so results are identical. BM25 reads the compact normpart
-        (-2) entries; TF-IDF reads the raw decoded (-1) tuples (stored by
-        a previous tfidf scorer pass — its contribution w*tf needs the
-        raw tf, not the BM25 normalization)."""
-        if self.fast_path_bytes <= 0:
+    def _route(self, plan: _Plan, whole: bool = False) -> list | None:
+        """The driver routes, in order: a shard-grouped scorer (phrase /
+        near / bool) takes _fast_phrase; the others take
+        _fast_from_cache, then _fast_hybrid, then _fast_scored. Returns
+        the first route's answer and records it in last_path, or None
+        when every route declines (the caller runs the distributed plan,
+        _distributed). ``whole``: gate the whole matched payload up
+        front, so a consumer of every match (facets, filters) gets it
+        from one driver route or from none."""
+        if self.fast_path_bytes <= 0 or (
+                whole and not self._fits(plan.present, "poss" in plan.cols)):
             return None
-        # one read per term: another thread may evict between reads
-        known = {t: self._cached_terms.get(t) for t in present}
-        if any(v is None for v in known.values()):
-            return None
-        slot = -2 if kind == "bm25" else -1
-        by_shard: dict[int, tuple[list, list]] = {}
-        for t in sorted(present):  # sorted-term order pins float order
-            w = weights[t]
-            for sh, df, ln in sorted(known[t]):
-                hit = _DECODED_CACHE.get((self._epoch, sh, t, df, ln, slot))
-                if hit is None:
-                    return None  # evicted: take the read path
-                if kind == "bm25":
-                    d, arr = hit
-                else:
-                    d, arr, _dl = hit
-                idc, scc = by_shard.setdefault(sh, ([], []))
-                idc.append(d)
-                # (w, arr) pair: multiplied inside the per-shard worker
-                scc.append((w, arr))
-        # P8's exact-zero drop (tree.rs:456-459) is enforced inside the
-        # aggregation: it never emits zero sums
-        uids, sums = _aggregate_scores_sharded(by_shard, k, require_all)
-        uids, sums = _topk_merge(uids, sums, k)
-        self.last_path = "fast"
-        return [(int(d), float(s)) for d, s in zip(uids, sums)]
+        if plan.grouped:
+            hits, path = self._fast_phrase(plan), f"fast_{plan.mode}"
+        else:
+            cov = self._coverage(plan)
+            hits = self._fast_from_cache(plan, cov)
+            if hits is None:
+                hits = self._fast_hybrid(plan, cov)
+            if hits is None:
+                hits = self._fast_scored(plan)
+            path = "fast"
+        if hits is not None:
+            self.last_path = path
+        return hits
 
-    def _fast_hybrid(self, present: list[str], weights: dict[str, float],
-                     k: int, require_all: int = 0,
-                     kind: str = "bm25") -> list | None:
-        """Partial-coverage driver path: score cache-covered terms from
-        the decoded LRU and read ONLY the uncovered terms' rows from
-        parquet, gating ``fast_path_bytes`` on the UNCOVERED payload
-        alone. This serves the common service shape where a query mixes
-        warmed hot terms with mid-frequency ones: the full payload may
-        exceed the driver threshold while the unread remainder is small
-        (measured at 8M turns: a 5-term hot query with 2/5 terms warmed
-        fell all the way back to the ~2 s distributed path; the uncovered
-        3 terms' payload alone fit the driver budget). Decoded rows are
-        cached and recorded, so the NEXT repeat takes the pure
-        _fast_from_cache path. Same per-row arithmetic and sorted-term
-        chunk order as the exhaustive scorer — results bit-identical.
-        kind='bm25' works over the compact normpart (-2) entries;
-        kind='tfidf' over the raw decoded (-1) tuples (contribution
-        w*tf needs the raw tf, not the BM25 normalization)."""
-        if self.fast_path_bytes <= 0 or not self._has_nbytes:
-            return None
-        slot = -2 if kind == "bm25" else -1
+    def _fits(self, terms: list[str], poss: bool) -> bool:
+        """The fast_path_bytes gate: the postings payload of ``terms``
+        (term_stats nbytes), plus their positions payload (poss_nbytes)
+        when the read includes ``poss``, fits the driver budget."""
+        total = sum(self._nbytes_cache.get(t, 0) for t in terms)
+        if poss:
+            total += sum(self._poss_nbytes_cache.get(t, 0) for t in terms)
+        return total <= self.fast_path_bytes
+
+    def _coverage(self, plan: _Plan) -> tuple[dict, list]:
+        """Which of the plan's terms the decoded-postings cache covers:
+        ({term: [(shard, entry)]} over every shard row recorded for the
+        term, [uncovered terms]). A term counts as uncovered when it has
+        no recorded rows or any of its entries was evicted. BM25 reads
+        the compact normpart (-2) entries, TF-IDF the raw decoded (-1)
+        tuples (its contribution w*tf needs the raw tf)."""
+        slot = -2 if plan.kind == "bm25" else -1
         covered: dict[str, list] = {}
         uncovered: list[str] = []
-        for t in present:
+        for t in plan.present:
+            # one read per term: another thread may evict between reads
             rows = self._cached_terms.get(t)
             chunks = None
             if rows is not None:
@@ -2609,12 +2585,54 @@ class IndexReader:
                 uncovered.append(t)
             else:
                 covered[t] = chunks
-        if not uncovered or len(uncovered) == len(present):
+        return covered, uncovered
+
+    @staticmethod
+    def _cached_top_k(plan: _Plan, chunks: dict) -> list:
+        """Top-k of per-term [(shard, (doc_ids, normpart or tf))] cache
+        entries: the same per-shard aggregation and sorted-term chunk
+        order as the exhaustive scorer, so results are bit-identical."""
+        by_shard: dict[int, tuple[list, list]] = {}
+        for t in plan.present:  # sorted-term order pins float order
+            w = plan.weights[t]
+            for sh, hit in chunks.get(t, ()):
+                idc, scc = by_shard.setdefault(sh, ([], []))
+                idc.append(hit[0])
+                # (w, arr) pair: multiplied inside the per-shard worker
+                scc.append((w, hit[1]))
+        # P8's exact-zero drop (tree.rs:456-459) is enforced inside the
+        # aggregation: it never emits zero sums
+        uids, sums = _aggregate_scores_sharded(by_shard, plan.k, plan.require)
+        uids, sums = _topk_merge(uids, sums, plan.k)
+        return [(int(d), float(s)) for d, s in zip(uids, sums)]
+
+    def _fast_from_cache(self, plan: _Plan, cov: tuple) -> list | None:
+        """Score a query entirely from the decoded-postings cache — no
+        parquet read at all. Engages when _coverage found every term's
+        recorded rows (by warm_hot_terms or a previous fast query) still
+        cached; None otherwise, falling back to the reading paths."""
+        covered, uncovered = cov
+        return None if uncovered else self._cached_top_k(plan, covered)
+
+    def _fast_hybrid(self, plan: _Plan, cov: tuple) -> list | None:
+        """Partial-coverage driver path: score cache-covered terms from
+        the decoded LRU and read ONLY the uncovered terms' rows from
+        parquet, gating ``fast_path_bytes`` on the UNCOVERED payload
+        alone. This serves the common service shape where a query mixes
+        warmed hot terms with mid-frequency ones: the full payload may
+        exceed the driver threshold while the unread remainder is small
+        (measured at 8M turns: a 5-term hot query with 2/5 terms warmed
+        fell all the way back to the ~2 s distributed path; the uncovered
+        3 terms' payload alone fit the driver budget). Decoded rows are
+        cached and recorded, so the NEXT repeat takes the pure
+        _fast_from_cache path. kind='bm25' caches the compact normpart
+        (-2) entries; kind='tfidf' the raw decoded (-1) tuples."""
+        covered, uncovered = cov
+        if not covered or not uncovered:
             # fully covered is _fast_from_cache's job; fully uncovered is
             # _fast_scored's — this path only pays off in between
             return None
-        if sum(self._nbytes_cache.get(t, 0) for t in uncovered) \
-                > self.fast_path_bytes:
+        if not self._fits(uncovered, False):
             return None
         read = self._post_table(list(_POST_COLS), uncovered)
         by_term: dict[str, list] = {}
@@ -2623,6 +2641,7 @@ class IndexReader:
             by_term.setdefault(t, []).append((sh, df, docs, tfs, lens))
         st = self.stats
         k1, b_, avgdl = st["k1"], st["b"], st["avgdl"]
+        slot = -2 if plan.kind == "bm25" else -1
         looked: dict[str, list] = {}
         misses = []
         for t in uncovered:  # cache lookups; the misses decode after
@@ -2636,53 +2655,37 @@ class IndexReader:
                     misses.append((docs, tfs, lens, df))
                 looked.setdefault(t, []).append((row, base, hit, miss))
         fresh = _decode_rows(misses)
-        by_shard: dict[int, tuple[list, list]] = {}
+        chunks = dict(covered)
         decoded: dict[str, set] = {}
-        for t in sorted(present):  # sorted-term order pins float order
-            w = weights[t]
-            if t in covered:
-                for sh, hit in covered[t]:
-                    idc, scc = by_shard.setdefault(sh, ([], []))
-                    idc.append(hit[0])
-                    scc.append((w, hit[1]))  # normpart (bm25) or tf
-                continue
+        for t in uncovered:
             for row, base, hit, miss in looked.get(t, ()):
                 if hit is None:
                     d, tfv, dl = fresh[miss]
-                    if kind == "bm25":
+                    if plan.kind == "bm25":
                         normpart = _bm25_normpart(
                             tfv.astype(np.float64), dl, k1, b_, avgdl)
                         hit = (d, normpart)
                     else:
                         hit = (d, tfv, dl)
                     _DECODED_CACHE.put(base + (slot,), hit)
-                idc, scc = by_shard.setdefault(row[0], ([], []))
-                idc.append(hit[0])
-                scc.append((w, hit[1]))
+                chunks.setdefault(t, []).append((row[0], hit))
                 decoded.setdefault(t, set()).add(row)
         self._publish_cached(decoded)
-        uids, sums = _aggregate_scores_sharded(by_shard, k, require_all)
-        uids, sums = _topk_merge(uids, sums, k)
-        self.last_path = "fast"
-        return [(int(d), float(s)) for d, s in zip(uids, sums)]
+        return self._cached_top_k(plan, chunks)
 
-    def _fast_scored(self, present: list[str], scorer) -> list | None:
+    def _fast_scored(self, plan: _Plan) -> list | None:
         """Driver fast path: when the matched postings payload is small
         (per-term nbytes from term_stats), point-read the matched rows
         (_post_table) and pass those _Rows straight to the SAME numpy
         exhaustive scorer a distributed task runs on each shard's rows —
         identical arithmetic, identical results, no Spark job. Returns
-        None when the payload exceeds fast_path_bytes (or the index
-        predates the nbytes column), falling back to the distributed
-        plan."""
-        if self.fast_path_bytes <= 0 or not self._has_nbytes:
-            return None
-        total = sum(self._nbytes_cache.get(t, 0) for t in present)
-        if total > self.fast_path_bytes:
+        None when the payload exceeds fast_path_bytes, falling back to
+        the distributed plan."""
+        if not self._fits(plan.present, False):
             return None
         # shard included: the decoded-postings cache keys on it
-        rows = self._post_table(list(_POST_COLS), present)
-        uids, sums = scorer(rows)
+        rows = self._post_table(plan.cols, plan.present)
+        uids, sums = plan.scorer(rows)
         # record EVERY matched row so repeat queries can skip the parquet
         # read (_fast_from_cache). Unconditional on purpose: recording
         # only cache-resident rows would leave a term's entry PARTIAL
@@ -2691,23 +2694,16 @@ class IndexReader:
         # list, any evicted entry is a get() miss -> clean fallback to
         # the reading path.
         self._publish_cached(_rows_by_term(rows))
-        self.last_path = "fast"
         return list(zip(uids.tolist(), sums.tolist()))
 
-    def _fast_phrase(self, present: list[str], scorer,
-                     label: str = "fast_phrase",
-                     cols: list[str] | None = None) -> list | None:
+    def _fast_phrase(self, plan: _Plan) -> list | None:
         """Driver fast path for the shard-grouped scorer modes (phrase /
         near / bool): per-term byte budget gate like _fast_scored, but
         counting the positions payload too when the read includes it
-        (poss_nbytes from term_stats; indexes built before that column
-        existed fall back to estimating poss at 1x the postings payload
-        — the measured whole-index ratio at 2M turns was poss ~0.6x, so
-        the estimate errs toward the distributed plan, never toward an
-        unbounded driver read). Then a point read of ``cols`` (default
-        includes the poss column) whose _Rows go to the SAME scorer a
-        distributed task runs per shard, called ONCE on all the matched
-        rows: it merges each term's shard rows
+        (poss_nbytes from term_stats). Then a point read of the plan's
+        columns whose _Rows go to the SAME scorer a distributed task
+        runs per shard, called ONCE on all the matched rows: it merges
+        each term's shard rows
         into one sorted doc array (_decode_merged_terms, which fails
         loudly on overlapping shard ranges) after decoding the uncached
         rows (_decode_rows), so one scorer pass serves the terms whether
@@ -2722,20 +2718,8 @@ class IndexReader:
         (slots -1 postings, -3/-4 positions); any evicted entry raises
         _FastCacheMiss and the call falls back to the reading path.
         Result-identical to the distributed plan on every path."""
-        if self.fast_path_bytes <= 0 or not self._has_nbytes:
-            return None
-        cols = cols or [*_POST_COLS, "poss"]
-        total = sum(self._nbytes_cache.get(t, 0) for t in present)
-        if "poss" in cols:
-            if self._has_poss_nbytes:
-                total += sum(
-                    self._poss_nbytes_cache.get(t, 0) for t in present
-                )
-            else:
-                total += sum(
-                    self._nbytes_cache.get(t, 0) for t in present
-                )
-        if total > self.fast_path_bytes:
+        present, scorer, cols = plan.present, plan.scorer, plan.cols
+        if not self._fits(present, "poss" in cols):
             return None
         # cache-fed replay: all terms' rows known from a previous read
         known = {t: self._cached_terms.get(t) for t in present}
@@ -2760,7 +2744,6 @@ class IndexReader:
             # partial-entry reason)
             self._publish_cached(_rows_by_term(read))
             hits = scorer(read)
-        self.last_path = label
         uids, sums = hits
         return list(zip(uids.tolist(), sums.tolist()))
 
@@ -2783,52 +2766,6 @@ class IndexReader:
             *(c for c in cols if c != "doc_len"))
 
     # -- search ----------------------------------------------------------
-
-    def _bool_prep(self, query: str, k: int,
-                   max_expansions: int | None = None):
-        """Shared setup for the boolean paths: parse, expand prefix
-        atoms against the dictionary, resolve dfs, build the scorer.
-        Returns None when the query matches nothing by construction
-        (collapses to no atoms, or no positive term exists in the
-        corpus). Raises ValueError on syntax errors, pure-negative
-        queries, and phrase atoms on a position-less index (from
-        boolquery.parse / here)."""
-        from .boolquery import from_root, parse, rewrite_prefixes
-
-        pq = parse(query)
-        if pq.root is None:
-            return None
-        if pq.has_prefix:
-            root = rewrite_prefixes(
-                pq.root, lambda p: self.expand_prefix(p, max_expansions)
-            )
-            pq = from_root(root)
-            if pq.root is None:
-                return None
-        if pq.has_phrase and not self.stats.get("positions"):
-            raise ValueError(
-                "quoted phrases in a boolean query need an index built "
-                "with BuildConfig(positions=True); this index has no "
-                "positions payload"
-            )
-        all_terms = sorted(set(pq.pos_terms) | set(pq.neg_terms))
-        dfs = self.global_dfs(all_terms)
-        present = [t for t in all_terms if dfs[t] > 0]
-        if not any(dfs[t] > 0 for t in pq.pos_terms):
-            return None  # every positive term absent -> nothing matches
-        st = self.stats
-        idf = {
-            t: _bm25_idf(st["n_docs"], dfs[t])
-            for t in pq.pos_terms if dfs[t] > 0
-        }
-        scorer = _make_bool_scorer(
-            pq, idf, st["k1"], st["b"], st["avgdl"], k, pq.has_phrase,
-            epoch=self._epoch,
-        )
-        cols = list(_POST_COLS)
-        if pq.has_phrase:
-            cols.append("poss")
-        return present, scorer, cols
 
     def search_rerank(
         self, query: str, embeddings_path: str, k: int = 10,
@@ -2854,11 +2791,7 @@ class IndexReader:
         table."""
         if (query_vec is None) == (query_vec_id is None):
             raise ValueError("exactly one of query_vec / query_vec_id")
-        hits = (
-            self.search_bool(query, k=n_candidates) if mode == "bool"
-            else self.search(query, k=n_candidates, mode=mode,
-                             window=window)
-        )
+        hits = self.search(query, k=n_candidates, mode=mode, window=window)
         if not hits:
             return []
         import pyarrow.dataset as pads
@@ -2939,38 +2872,7 @@ class IndexReader:
     #: warm, while an 8x-smaller one wins).
     FACET_BROADCAST_MIN_RATIO = 8
 
-    def _match_upper_bound(self, query: str, mode: str) -> int | None:
-        """Upper bound on the number of matching docs, from term_stats
-        dfs alone (no postings read). None when no bound is derivable."""
-        try:
-            if mode == "bool":
-                from .boolquery import from_root, parse, rewrite_prefixes
-
-                pq = parse(query)
-                if pq.root is None:
-                    return 0
-                if pq.has_prefix:
-                    root = rewrite_prefixes(pq.root, self.expand_prefix)
-                    pq = from_root(root)
-                    if pq.root is None:
-                        return 0
-                terms = sorted(set(pq.pos_terms))
-                if not terms:
-                    return 0
-                dfs = self.global_dfs(terms)
-                return int(sum(dfs[t] for t in terms))
-            terms = sorted(set(tokenize(query)))
-            if not terms:
-                return 0
-            dfs = self.global_dfs(terms)
-            vals = [dfs[t] for t in terms]
-            if mode in ("and", "phrase", "near"):
-                return int(min(vals))
-            return int(sum(vals))
-        except ValueError:
-            return None
-
-    def _join_docstore(self, scored, cols: list[str], bound: int | None):
+    def _join_docstore(self, scored, cols: list[str], bound: int):
         """Join the scored set to the docstore projection, broadcasting
         the scored side when the df-derived match bound allows — the
         corpus-sized tok scan then never shuffles (one broadcast + the
@@ -2978,8 +2880,7 @@ class IndexReader:
         Row-identical to the shuffle join either way."""
         docs = self._docstore_docids(cols)
         if (
-            bound is not None
-            and bound <= self.FACET_BROADCAST_MAX_DOCS
+            bound <= self.FACET_BROADCAST_MAX_DOCS
             and bound * self.FACET_BROADCAST_MIN_RATIO
             <= int(self.stats["n_docs"])
         ):
@@ -3007,7 +2908,10 @@ class IndexReader:
                 f"facet column {by!r} not in the docstore "
                 "(role / conv_id / turn_idx)"
             )
-        hits = self._facet_driver_hits(query, mode, window)
+        plan = self._plan(query, mode, 1 << 30, window)
+        if plan is None:
+            return []
+        hits = self._route(plan, whole=True)
         if hits == []:
             return []
         if hits is not None and len(hits) <= self.FACET_DRIVER_MAX_DOCS:
@@ -3027,16 +2931,10 @@ class IndexReader:
             out = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
             return out[:k]
         # distributed: full scored set, no global order, tiny final agg
-        scored = (
-            self.search_bool_df(query, _all=True) if mode == "bool"
-            else self.search_df(query, mode=mode, window=window, _all=True)
-        )
-        if scored is None:
-            return []
         rows = (
             self._join_docstore(
-                scored.select("doc_id"), [by],
-                self._match_upper_bound(query, mode),
+                self._distributed(plan, _all=True).select("doc_id"), [by],
+                plan.bound,
             )
             .groupBy(by)
             .agg(F.count("*").alias("n"))
@@ -3060,11 +2958,8 @@ class IndexReader:
         (no global sort — an export has no rank) joins the docstore on a
         doc_id derived from local_idx + a broadcast shard-offset map, so
         nothing corpus-sized ever reaches the driver."""
-        scored = (
-            self.search_bool_df(query, _all=True) if mode == "bool"
-            else self.search_df(query, mode=mode, window=window, _all=True)
-        )
-        if scored is None:
+        plan = self._plan(query, mode, 1 << 30, window)
+        if plan is None:
             # empty by construction: write an empty frame with the same
             # schema so downstream readers see a dataset either way
             schema = "conv_id string, turn_idx int, doc_id long" + (
@@ -3077,8 +2972,8 @@ class IndexReader:
             ["score"] if with_scores else []
         )
         out = self._join_docstore(
-            scored, ["conv_id", "turn_idx"],
-            self._match_upper_bound(query, mode),
+            self._distributed(plan, _all=True), ["conv_id", "turn_idx"],
+            plan.bound,
         ).select(*cols)
         out.write.mode("overwrite").parquet(out_path)
         return self.spark.read.parquet(out_path).count()
@@ -3111,7 +3006,10 @@ class IndexReader:
             c: set(v) if isinstance(v, (list, tuple, set)) else {v}
             for c, v in where.items()
         }
-        hits = self._facet_driver_hits(query, mode, window)
+        plan = self._plan(query, mode, 1 << 30, window)
+        if plan is None:
+            return []
+        hits = self._route(plan, whole=True)
         if hits == []:
             return []
         if hits is not None and len(hits) <= self.FACET_DRIVER_MAX_DOCS:
@@ -3134,19 +3032,13 @@ class IndexReader:
                     if len(out) >= k:
                         break
             return out
-        scored = (
-            self.search_bool_df(query, _all=True) if mode == "bool"
-            else self.search_df(query, mode=mode, window=window, _all=True)
-        )
-        if scored is None:
-            return []
         cond = None
         for c in cols:
             clause = F.col(c).isin([v for v in allow[c]])
             cond = clause if cond is None else (cond & clause)
         rows = (
             self._join_docstore(
-                scored, cols, self._match_upper_bound(query, mode),
+                self._distributed(plan, _all=True), cols, plan.bound,
             )
             .filter(cond)
             .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -3155,66 +3047,12 @@ class IndexReader:
         )
         return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
-    def _facet_driver_hits(self, query, mode, window):
-        """Full matched list [(doc_id, score)] via the driver fast path;
-        [] when the query matches nothing by construction; None when the
-        payload gate refuses (caller must go distributed)."""
-        if mode in ("phrase", "near") and not self.stats.get("positions"):
-            # surfaced before any empty-by-construction early return,
-            # matching search_df's contract: a caller pointing positional
-            # facets/filters at a position-less index must hear about it
-            # even when this particular query would come back empty
-            raise ValueError(
-                f"{mode} search needs an index built with "
-                "BuildConfig(positions=True); this index has no "
-                "positions payload"
-            )
-        if mode == "bool":
-            prep = self._bool_prep(query, 1 << 30)
-            if prep is None:
-                return []
-            present, scorer, cols = prep
-            return self._fast_phrase(present, scorer, label="fast_bool",
-                                     cols=cols)
-        terms = sorted(set(tokenize(query)))
-        if not terms:
-            return []
-        dfs = self.global_dfs(terms)
-        present = [t for t in terms if dfs[t] > 0]
-        if not present:
-            return []
-        if mode in ("and", "phrase", "near") and len(present) < len(terms):
-            return []
-        if self.fast_path_bytes <= 0 or not self._has_nbytes:
-            return None
-        total = sum(self._nbytes_cache.get(t, 0) for t in present)
-        if mode in ("phrase", "near"):
-            # the SAME poss-aware accounting _fast_phrase applies: a
-            # mismatch here would pass this gate, then have search()'s
-            # stricter gate refuse and collect the full match set off
-            # the distributed plan instead of the driver path this
-            # function promises
-            if self._has_poss_nbytes:
-                total += sum(
-                    self._poss_nbytes_cache.get(t, 0) for t in present
-                )
-            else:
-                total += sum(
-                    self._nbytes_cache.get(t, 0) for t in present
-                )
-        if total > self.fast_path_bytes:
-            return None
-        # gate passed: search() is guaranteed to stay on a driver path
-        return self.search(query, k=1 << 30, mode=mode, window=window)
-
     def positive_terms(self, query: str, mode: str = "pruned") -> set[str]:
         """The distinct index terms a query scores on — what a snippet
         highlighter should mark. Plain modes: every query term; boolean
         mode: positive atoms only (a NOT-ed term is evidence of
         non-match), with prefix atoms expanded against the dictionary."""
         if mode == "bool":
-            from .boolquery import from_root, parse, rewrite_prefixes
-
             pq = parse(query)
             if pq.root is None:
                 return set()
@@ -3225,6 +3063,152 @@ class IndexReader:
             return set(pq.pos_terms)
         return set(tokenize(query))
 
+    def _plan(self, query: str, mode: str, k: int | None, window: int = 8,
+              max_expansions: int | None = None,
+              kind: str = "bm25") -> _Plan | None:
+        """Pass 1 of the reference search (tree.rs:395-416), once per
+        query for every route: lex the query (or parse it as boolean,
+        expanding prefix atoms), look its terms' dfs up, weight the
+        scored terms and build the driver scorer. None when the query
+        matches nothing by construction. ``kind='tfidf'`` plans the
+        reference TF-IDF (mode 'exhaustive'; ``k`` None = every match).
+        Raises ValueError on an unknown mode, a boolean syntax error or
+        pure-negative query, and a positional query on a position-less
+        index — checked before any early return, so a caller pointing
+        phrase queries at such an index hears about it even when this
+        query would come back empty."""
+        if mode not in ("pruned", "exhaustive", "and", "phrase", "near",
+                        "bool"):
+            raise ValueError(
+                f"unknown search mode {mode!r}: valid modes are pruned, "
+                "exhaustive, and, phrase, near and bool"
+            )
+        pq = parse(query) if mode == "bool" else None
+        positional = (pq.has_phrase if pq is not None
+                      else mode in ("phrase", "near"))
+        if positional and not self.stats.get("positions"):
+            what = ("a quoted phrase in a boolean query" if pq is not None
+                    else f"{mode} search")
+            raise ValueError(
+                f"{what} needs an index built with "
+                "BuildConfig(positions=True); this index has no "
+                "positions payload"
+            )
+        qoffsets = mult = None
+        if pq is not None:
+            if pq.has_prefix:
+                pq = from_root(rewrite_prefixes(
+                    pq.root, lambda p: self.expand_prefix(p, max_expansions)
+                ))
+            if pq.root is None:
+                return None
+            terms = sorted(set(pq.pos_terms) | set(pq.neg_terms))
+            scored = pq.pos_terms
+        elif mode == "phrase":
+            qoffsets = {
+                t: np.asarray(v, dtype=np.int64)
+                for t, v in term_occurrences(query).items()
+            }
+            terms = scored = sorted(qoffsets)
+        elif kind == "tfidf":
+            mult = Counter(tokenize(query))
+            terms = scored = sorted(mult)
+        else:
+            terms = scored = sorted(set(tokenize(query)))
+        if not terms:
+            return None
+        dfs = self.global_dfs(terms)
+        present = [t for t in terms if dfs[t] > 0]
+        if mode in ("and", "phrase", "near") and len(present) < len(terms):
+            return None  # a term absent from the corpus empties these
+        st = self.stats
+        n = st["n_docs"]
+        if mult is not None:
+            weights = {}
+            for t in present:
+                m = mult[t]
+                weights[t] = m * m * abs(math.log(n / float(m * dfs[t])))
+            k1, b, avgdl, k = 0, 0, 1.0, n if k is None else k
+        else:
+            weights = {t: _bm25_idf(n, dfs[t]) for t in scored if dfs[t]}
+            k1, b, avgdl = st["k1"], st["b"], st["avgdl"]
+        if not weights:
+            return None  # no scored term exists in the corpus
+        require = len(present) if mode == "and" else 0
+        if pq is not None:
+            bound = sum(dfs[t] for t in pq.pos_terms)
+        elif mode in ("and", "phrase", "near"):
+            bound = min(dfs.values())
+        else:
+            bound = sum(dfs.values())
+        if pq is not None:
+            scorer = _make_bool_scorer(pq, weights, k1, b, avgdl, k,
+                                       pq.has_phrase, epoch=self._epoch)
+        elif mode == "phrase":
+            scorer = _make_phrase_scorer(weights, k1, b, avgdl, k, qoffsets,
+                                         epoch=self._epoch)
+        elif mode == "near":
+            scorer = _make_near_scorer(weights, k1, b, avgdl, k, window,
+                                       epoch=self._epoch)
+        else:
+            # the driver always scores exhaustively: with the O(n) dense
+            # aggregation + argpartition top-k, one vectorized pass beats
+            # the segment-at-a-time pruning loop run serially over every
+            # shard (measured 10x on hot terms driver-side; pruning pays
+            # off only where per-shard work runs in parallel, i.e. the
+            # distributed plan). Results are identical (pruning is exact)
+            scorer = _make_exhaustive_scorer(
+                weights, k1, b, avgdl, k, kind, epoch=self._epoch,
+                require_all=require,
+            )
+        return _Plan(
+            mode, kind, k, present, weights, require, scorer,
+            [*_POST_COLS, "poss"] if positional else list(_POST_COLS),
+            mode in ("phrase", "near", "bool"), bound,
+        )
+
+    def _top_k(self, plan: _Plan | None) -> list[tuple[int, float]]:
+        """A planned query's top-k: the first driver route that answers
+        (_route), else the distributed plan, collected."""
+        if plan is None:
+            return []
+        hits = self._route(plan)
+        if hits is None:
+            hits = [(r["doc_id"], r["score"])
+                    for r in self._distributed(plan).collect()]
+        return hits
+
+    def _distributed(self, plan: _Plan, _all: bool = False) -> DataFrame:
+        """The distributed plan of a planned query: its top-k by (score
+        desc, doc_id asc), or with ``_all`` every matching doc, unordered
+        (facet/export plans — a global sort of the full matched set is
+        exactly what those consumers don't want). Pruned and AND queries
+        score with their block-max scorers here, which only a
+        distributed task runs; with ``_all`` pruning can skip nothing,
+        so pruned keeps the exhaustive scorer."""
+        st = self.stats
+        scorer, cols = plan.scorer, plan.cols
+        if plan.mode == "and":
+            scorer = _make_and_scorer(
+                plan.weights, st["k1"], st["b"], st["avgdl"], plan.k,
+                st["block_size"], n_required=plan.require,
+                epoch=self._epoch,
+            )
+            cols = [*cols, "blocks"]
+        elif plan.mode == "pruned" and not _all:
+            scorer = _make_pruned_scorer(
+                plan.weights, st["k1"], st["b"], st["avgdl"], plan.k,
+                st["block_size"], shard_ub_scale=self._ub_scale or None,
+                epoch=self._epoch,
+            )
+            cols = [*cols, "blocks"]
+        scored = self._apply_scorer(self._postings_for(plan.present, cols),
+                                    scorer)
+        self.last_path = "distributed"
+        if _all:
+            return scored
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(plan.k)
+
     def search_bool(self, query: str, k: int = 10,
                     max_expansions: int | None = None,
                     ) -> list[tuple[int, float]]:
@@ -3233,35 +3217,8 @@ class IndexReader:
         implicit AND. Matching docs score BM25 over the distinct
         positive terms they contain. Also reachable as
         search(query, k, mode='bool')."""
-        prep = self._bool_prep(query, k, max_expansions)
-        if prep is None:
-            return []
-        present, scorer, cols = prep
-        hit = self._fast_phrase(present, scorer, label="fast_bool",
-                                cols=cols)
-        if hit is not None:
-            return hit
-        df = self.search_bool_df(query, k, max_expansions)
-        if df is None:
-            return []
-        return [(r["doc_id"], r["score"]) for r in df.collect()]
-
-    def search_bool_df(self, query: str, k: int = 10,
-                       max_expansions: int | None = None,
-                       _all: bool = False):
-        # _all: every matching doc, unordered (facet/export plans — a
-        # global sort of the full matched set is exactly what those
-        # consumers don't want)
-        prep = self._bool_prep(query, (1 << 30) if _all else k,
-                               max_expansions)
-        if prep is None:
-            return None
-        present, scorer, cols = prep
-        scored = self._apply_scorer(self._postings_for(present, cols), scorer)
-        self.last_path = "distributed"
-        if _all:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._top_k(self._plan(query, "bool", k,
+                                      max_expansions=max_expansions))
 
     def search(
         self, query: str, k: int = 10, mode: str = "pruned",
@@ -3282,168 +3239,20 @@ class IndexReader:
 
         mode 'bool' treats the query as the boolean language
         (search_bool): AND / OR / NOT, parentheses, quoted phrases.
+        Any other mode raises ValueError.
 
-        Small matched postings sets take the driver fast path (see
-        _fast_scored) regardless of mode — its scoring is
-        result-identical to the distributed modes."""
-        if mode == "bool":
-            return self.search_bool(query, k)
-        if mode in ("phrase", "near"):
-            if not self.stats.get("positions"):
-                raise ValueError(
-                    f"{mode} search needs an index built with "
-                    "BuildConfig(positions=True); this index has no "
-                    "positions payload"
-                )
-            terms = sorted(set(tokenize(query)))
-            if not terms:
-                return []
-            dfs = self.global_dfs(terms)
-            if any(dfs[t] == 0 for t in terms):
-                return []
-            st = self.stats
-            idf = {t: _bm25_idf(st["n_docs"], dfs[t]) for t in terms}
-            if mode == "phrase":
-                qoffsets = {
-                    t: np.asarray(v, dtype=np.int64)
-                    for t, v in term_occurrences(query).items()
-                }
-                scorer = _make_phrase_scorer(
-                    idf, st["k1"], st["b"], st["avgdl"], k, qoffsets,
-                    epoch=self._epoch,
-                )
-            else:
-                scorer = _make_near_scorer(
-                    idf, st["k1"], st["b"], st["avgdl"], k, window,
-                    epoch=self._epoch,
-                )
-            hit = self._fast_phrase(terms, scorer, label=f"fast_{mode}")
-            if hit is not None:
-                return hit
-            df = self.search_df(query, k, mode, window=window)
-            if df is None:
-                return []
-            return [(r["doc_id"], r["score"]) for r in df.collect()]
-        terms = sorted(set(tokenize(query)))
-        if not terms:
-            return []
-        dfs = self.global_dfs(terms)
-        present = [t for t in terms if dfs[t] > 0]
-        if not present:
-            return []
-        require = 0
-        if mode == "and":
-            if len(present) < len(terms):
-                return []  # a term absent from the corpus empties an AND
-            require = len(present)
-        st = self.stats
-        idf = {t: _bm25_idf(st["n_docs"], dfs[t]) for t in present}
-        # fastest path first: fully-cached terms score without touching
-        # parquet at all (identical arithmetic)
-        hit = self._fast_from_cache(present, idf, k, require_all=require)
-        if hit is not None:
-            return hit
-        # partial coverage: cached terms from the LRU, the (small)
-        # uncovered remainder from parquet
-        hit = self._fast_hybrid(present, idf, k, require_all=require)
-        if hit is not None:
-            return hit
-        # the fast path always scores exhaustively: with the O(n) dense
-        # aggregation + argpartition top-k, one vectorized pass beats the
-        # segment-at-a-time pruning loop run serially over every shard
-        # (measured 10x on hot terms driver-side; pruning pays off only
-        # where per-shard work runs in parallel, i.e. the distributed
-        # plan). Results are identical either way (pruning is exact).
-        fast = self._fast_scored(
-            present,
-            _make_exhaustive_scorer(
-                idf, st["k1"], st["b"], st["avgdl"], k, "bm25",
-                epoch=self._epoch, require_all=require,
-            ),
-        )
-        if fast is not None:
-            return fast
-        df = self.search_df(query, k, mode)
-        if df is None:
-            return []
-        return [(r["doc_id"], r["score"]) for r in df.collect()]
+        Small matched postings sets take a driver route (see _route)
+        regardless of mode — its scoring is result-identical to the
+        distributed modes."""
+        return self._top_k(self._plan(query, mode, k, window))
 
     def search_df(self, query: str, k: int = 10, mode: str = "pruned",
                   window: int = 8, _all: bool = False):
-        # _all: every matching doc, unordered (facet/export plans)
-        if _all:
-            k = 1 << 30
-            if mode == "pruned":
-                # block-max pruning can skip nothing when every doc is
-                # wanted; the exhaustive scorer does the same work minus
-                # the upper-bound bookkeeping
-                mode = "exhaustive"
-        if mode == "bool":
-            return self.search_bool_df(query, k, _all=_all)
-        if mode in ("phrase", "near") and not self.stats.get("positions"):
-            # checked before any early return: a caller pointing phrase
-            # queries at a position-less index should hear about it even
-            # when this particular query would come back empty
-            raise ValueError(
-                f"{mode} search needs an index built with "
-                "BuildConfig(positions=True); this index has no "
-                "positions payload"
-            )
-        terms = sorted(set(tokenize(query)))
-        if not terms:
-            return None
-        dfs = self.global_dfs(terms)
-        present = [t for t in terms if dfs[t] > 0]
-        if not present:
-            return None
-        n = self.stats["n_docs"]
-        idf = {t: _bm25_idf(n, dfs[t]) for t in present}
-        st = self.stats
-        if mode in ("phrase", "near"):
-            if len(present) < len(terms):
-                # a term absent from the corpus empties a phrase/near
-                return None
-            if mode == "phrase":
-                qoffsets = {
-                    t: np.asarray(v, dtype=np.int64)
-                    for t, v in term_occurrences(query).items()
-                }
-                scorer = _make_phrase_scorer(
-                    idf, st["k1"], st["b"], st["avgdl"], k, qoffsets,
-                    epoch=self._epoch,
-                )
-            else:
-                scorer = _make_near_scorer(
-                    idf, st["k1"], st["b"], st["avgdl"], k, window,
-                    epoch=self._epoch,
-                )
-            cols = [*_POST_COLS, "poss"]
-        elif mode == "and":
-            if len(present) < len(terms):
-                return None
-            scorer = _make_and_scorer(
-                idf, st["k1"], st["b"], st["avgdl"], k, st["block_size"],
-                n_required=len(present), epoch=self._epoch,
-            )
-            cols = [*_POST_COLS, "blocks"]
-        elif mode == "pruned":
-            scorer = _make_pruned_scorer(
-                idf, st["k1"], st["b"], st["avgdl"], k, st["block_size"],
-                shard_ub_scale=self._ub_scale or None,
-                epoch=self._epoch,
-            )
-            cols = [*_POST_COLS, "blocks"]
-        else:
-            scorer = _make_exhaustive_scorer(
-                idf, st["k1"], st["b"], st["avgdl"], k, "bm25",
-                epoch=self._epoch,
-            )
-            cols = list(_POST_COLS)
-        scored = self._apply_scorer(self._postings_for(present, cols), scorer)
-        self.last_path = "distributed"
-        if _all:
-            return scored
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        """The distributed plan of ``search`` as an uncollected DataFrame
+        (doc_id, score), or None when the query matches nothing by
+        construction. ``_all``: every matching doc, unordered."""
+        plan = self._plan(query, mode, (1 << 30) if _all else k, window)
+        return None if plan is None else self._distributed(plan, _all)
 
     def _apply_scorer(self, postings: DataFrame, scorer):
         """Shuffle-free when whole-file tasks are guaranteed (score in
@@ -3475,47 +3284,7 @@ class IndexReader:
 
     def search_tfidf(self, query: str, k: int | None = 10) -> list[tuple[int, float]]:
         """Reference-parity TF-IDF search incl. quirks Q3/Q9 (tree.rs:388-465)."""
-        mult = Counter(tokenize(query))
-        if not mult:
-            return []
-        terms = sorted(mult)
-        dfs = self.global_dfs(terms)
-        n = self.stats["n_docs"]
-        weights = {}
-        for t in terms:
-            if dfs[t] == 0:
-                continue
-            m = mult[t]
-            global_df = float(m * dfs[t])
-            weights[t] = m * m * abs(math.log(n / global_df))
-        if not weights:
-            return []
-        present = sorted(weights)
-        kk = k if k is not None else n
-        # fastest path first: a repeat tfidf query whose raw decoded
-        # postings are still cache-resident scores without touching
-        # parquet (the tfidf twin of the bm25 all-cached shortcut)
-        hit = self._fast_from_cache(present, weights, kk, kind="tfidf")
-        if hit is not None:
-            return hit
-        # partial coverage: warmed/previously-decoded raw lists from the
-        # LRU + a pyarrow read of only the uncovered remainder (the
-        # tfidf twin of the bm25 hybrid; at 20M turns a repeat tfidf on
-        # a hot term otherwise pays the distributed plan every time)
-        hit = self._fast_hybrid(present, weights, kk, kind="tfidf")
-        if hit is not None:
-            return hit
-        scorer = _make_exhaustive_scorer(
-            weights, 0, 0, 1.0, kk, "tfidf", epoch=self._epoch
-        )
-        fast = self._fast_scored(present, scorer)
-        if fast is not None:
-            return fast
-        self.last_path = "distributed"
-        scored = self._apply_scorer(
-            self._postings_for(present, list(_POST_COLS)), scorer)
-        out = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(kk)
-        return [(r["doc_id"], r["score"]) for r in out.collect()]
+        return self._top_k(self._plan(query, "exhaustive", k, kind="tfidf"))
 
     def _tok_rows(self, hits: list[tuple[int, float]], columns: list[str]):
         """doc_id -> (shard, local_idx) via the stats map, then one point

@@ -404,7 +404,6 @@ def test_refresh_snapshot_repins_split_size(spark, tmp_path):
         r._refresh_snapshot()
         new_max = int(read_stats(d)["max_postings_file_bytes"])
         assert r._need_bytes == new_max + 1
-        assert r._has_nbytes is None  # schema re-probed lazily
         # the session conf covers the refreshed pin
         cur = _parse_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes")

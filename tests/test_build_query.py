@@ -1044,8 +1044,8 @@ def test_warm_pinned_hot_set_survives_eviction_pressure(spark, built_index):
 
 
 def test_routes_agree_on_gathered_lengths(spark, pos_index, monkeypatch):
-    """bm25 (exhaustive and pruned), tfidf, and, phrase and near answer
-    alike on the driver route (lengths from the point-read layer), the
+    """bm25 (exhaustive and pruned), tfidf, and, phrase, near and bool
+    answer alike on the driver route (lengths from the point-read layer), the
     shuffle-free mapInArrow plan and the applyInArrow exchange (lengths
     read by each task for its own shard) of a multi-shard positional
     index; and the task-side loader, given one shard, opens only that
@@ -1067,35 +1067,41 @@ def test_routes_agree_on_gathered_lengths(spark, pos_index, monkeypatch):
     exchange._whole_file_tasks = False
     queries = [q for _, q, _ in gen_queries() if q.strip()][:6]
     queries += ["run dog", "the dog", "fox lazy dog"]
-    n_hits = 0
+    cases = [(q, mode) for q in queries
+             for mode in ("exhaustive", "pruned", "and", "phrase", "near",
+                          "tfidf")]
+    # boolean: OR, a quoted phrase, AND NOT and a prefix atom
+    cases += [(q, "bool") for q in (
+        "url OR amyeh", '"url wcsfcn" OR hkzw', "wcsfcn AND NOT url",
+        "yu* AND rxtjzkix", '("url wcsfcn" OR hq*) AND NOT yuqk')]
+    n_hits = n_bool = 0
     try:
         assert mapped._whole_file_tasks
-        for q in queries:
-            for mode in ("exhaustive", "pruned", "and", "phrase", "near",
-                         "tfidf"):
-                def run(r):
-                    r.last_path = None  # an empty-by-construction
-                    if mode == "tfidf":  # query sets no route
-                        return r.search_tfidf(q, 10)
-                    return r.search(q, 10, mode=mode)
-                want = run(driver)
-                assert driver.last_path in (None, "fast",
-                                            f"fast_{mode}"), (q, mode)
-                got_map, got_ex = run(mapped), run(exchange)
-                assert mapped.last_path == exchange.last_path
-                assert got_map == got_ex, (q, mode)
-                if want:
-                    assert mapped.last_path == "distributed", (q, mode)
-                assert [d for d, _ in got_map] == [d for d, _ in want], (
-                    q, mode)
-                np.testing.assert_allclose(
-                    [s for _, s in got_map], [s for _, s in want],
-                    rtol=REL_TOL, atol=0)
-                n_hits += len(want)
+        for q, mode in cases:
+            def run(r):
+                r.last_path = None  # an empty-by-construction
+                if mode == "tfidf":  # query sets no route
+                    return r.search_tfidf(q, 10)
+                return r.search(q, 10, mode=mode)
+            want = run(driver)
+            assert driver.last_path in (None, "fast",
+                                        f"fast_{mode}"), (q, mode)
+            got_map, got_ex = run(mapped), run(exchange)
+            assert mapped.last_path == exchange.last_path
+            assert got_map == got_ex, (q, mode)
+            if want:
+                assert mapped.last_path == "distributed", (q, mode)
+            assert [d for d, _ in got_map] == [d for d, _ in want], (
+                q, mode)
+            np.testing.assert_allclose(
+                [s for _, s in got_map], [s for _, s in want],
+                rtol=REL_TOL, atol=0)
+            n_hits += len(want)
+            n_bool += mode == "bool" and bool(want)
     finally:
         for r in (driver, mapped, exchange):
             r.close()
-    assert n_hits
+    assert n_hits and n_bool >= 4
 
     tok_root = os.path.join(index_dir, "tok")
     offsets = {int(s): int(o) for s, o in stats["shard_offsets"].items()}
@@ -1127,3 +1133,62 @@ def test_routes_agree_on_gathered_lengths(spark, pos_index, monkeypatch):
         got = lens(np.sort(local) + offsets[shard])
         assert got.tolist() == want["doc_len"].to_numpy()[
             np.argsort(local)].tolist()
+
+
+def test_unknown_mode_is_rejected(spark, built_index):
+    """A mistyped mode raises ValueError naming the valid modes on every
+    entry point that takes one, instead of answering as OR-BM25."""
+    index_dir, _ = built_index
+    r = IndexReader(spark, index_dir)
+    try:
+        for fn in (
+            lambda: r.search("url", 10, mode="phrse"),
+            lambda: r.search_df("url", 10, mode="phrse"),
+            lambda: r.facet_counts("url", mode="phrse"),
+            lambda: r.export_matches("url", "/nonexistent", mode="phrse"),
+            lambda: r.search_where("url", {"role": "user"}, mode="phrse"),
+            lambda: r.search_rerank("url", "/nonexistent", mode="phrse",
+                                    query_vec=[1.0]),
+        ):
+            with pytest.raises(ValueError, match="valid modes"):
+                fn()
+    finally:
+        r.close()
+
+
+def test_distributed_route_plans_once(spark, pos_index, corpus_pdf,
+                                      monkeypatch):
+    """A phrase query and a pruned query that fall through to the
+    distributed plan (fast_path_bytes=0) lex the query once, look the
+    dfs up once and build their scorer once."""
+    import indexer_spark.query as qmod
+
+    calls = {}
+
+    def counted(name, fn):
+        def wrapper(*a, **kw):
+            calls[name] = calls.get(name, 0) + 1
+            return fn(*a, **kw)
+        return wrapper
+
+    for name in ("tokenize", "term_occurrences", "_make_phrase_scorer",
+                 "_make_pruned_scorer"):
+        monkeypatch.setattr(qmod, name, counted(name, getattr(qmod, name)))
+    monkeypatch.setattr(IndexReader, "global_dfs", counted(
+        "global_dfs", IndexReader.global_dfs))
+    words = str(corpus_pdf["text"].iloc[0]).split()
+    phrase = f"{words[0]} {words[1]}"
+    index_dir, _ = pos_index
+    r = IndexReader(spark, index_dir, fast_path_bytes=0)
+    try:
+        for mode, scorer in (("phrase", "_make_phrase_scorer"),
+                             ("pruned", "_make_pruned_scorer")):
+            calls.clear()
+            assert r.search(phrase, 10, mode=mode), mode
+            assert r.last_path == "distributed", mode
+            lexed = calls.get("tokenize", 0) + calls.get("term_occurrences", 0)
+            assert lexed == 1, (mode, calls)
+            assert calls["global_dfs"] == 1, (mode, calls)
+            assert calls[scorer] == 1, (mode, calls)
+    finally:
+        r.close()

@@ -236,10 +236,7 @@ def _queries(corpus, partial_terms):
 
 
 def _plan_hits(reader, mode, q):
-    if mode == "bool":
-        plan = reader.search_bool_df(q, k=10)
-    else:
-        plan = reader.search_df(q, k=10, mode=mode)
+    plan = reader.search_df(q, k=10, mode=mode)
     return [] if plan is None else [
         (r["doc_id"], r["score"]) for r in plan.collect()]
 

@@ -66,7 +66,7 @@ def main():
     sections.append((
         "NEAR top-k (positional; same zero-exchange shape as phrase)",
         grab(nearq)))
-    bq = pos_reader.search_bool_df('(run OR dog) NOT fast', 10)
+    bq = pos_reader.search_df('(run OR dog) NOT fast', 10, mode="bool")
     sections.append((
         "boolean top-k (all expression terms in ONE pushed term IN "
         "filter; zero exchange)", grab(bq)))
