@@ -7,11 +7,13 @@ postings -> flush 100-doc segments behind a global RwLock
 computation is expressed with no lock and no driver bottleneck:
 
   stage "ids"      repartitionByRange(conv_id, turn_idx) -> tokenize
-                   (Arrow-batched mapInPandas) -> write the forward index
-                   ("tok": doc row + delimited terms/tfs + doc_len +
-                   LOCAL per-shard index) partitioned by
+                   (Arrow-batched mapInPandas) -> write the forward rows
+                   (doc row + delimited terms/tfs + doc_len + LOCAL
+                   per-shard index) to a staging dir partitioned by
                    shard == the stage-1 partition id, in ONE job — the
-                   corpus is materialized exactly once. Dense global
+                   corpus is materialized exactly once — then the
+                   docstore ("tok": the forward rows minus their terms
+                   payload) from that staging dir. Dense global
                    doc_id = shard_offset + local_idx (replaces the
                    AtomicU64 counter, tree.rs:63-82, with no global
                    window and no pre-count pass): per-shard offsets are
@@ -22,8 +24,8 @@ computation is expressed with no lock and no driver bottleneck:
                    analog of the reference's 100-doc segment
                    (tree.rs:269).
 
-  stage "postings" per pending shard: whole-file tasks stream compact
-                   doc rows (not exploded rows) into a mapInArrow
+  stage "postings" per pending shard: whole-file tasks stream the staged
+                   forward rows (not exploded rows) into a mapInArrow
                    builder that explodes with numpy, lexsorts (term,
                    doc_id) and lays the doc-id gaps and tfs out as
                    integer list columns (compress.postings_columns), one
@@ -37,7 +39,11 @@ computation is expressed with no lock and no driver bottleneck:
                    count spread evenly across ALL shards, never one
                    reducer. This is the salted-merge insight taken to its
                    limit: the doc-partitioned layout makes term salt
-                   unnecessary on the build side.
+                   unnecessary on the build side. Once every shard's
+                   postings are committed the staging dir is deleted:
+                   like the reference, the index at rest is a docstore
+                   plus postings (compaction and update regenerate the
+                   forward rows by inverting the postings).
 
   stage "stats"    global df per term (partial per shard -> final sum,
                    exactly the tree.rs:212/413 partial/final split) +
@@ -55,6 +61,7 @@ import json
 import math
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -64,6 +71,21 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .compress import encode_positions_doc
 from .lexer import term_counts, term_occurrences
 
+# tok is the docstore: one row per document, keyed by (shard, local_idx),
+# with what a query resolves (conv_id, turn_idx, role) and scores with
+# (doc_len). It stores no terms: like the reference's DocumentStore next
+# to its postings, the index at rest is this table plus the postings.
+TOK_COLUMNS = ("local_idx", "shard", "conv_id", "turn_idx", "role",
+               "doc_len")
+TOK_SCHEMA = (
+    "local_idx long, shard int, conv_id string, turn_idx int, role string, "
+    "doc_len int"
+)
+
+# forward rows = tok + each document's terms payload. They live in the
+# staging dir only while a build, append, update or compaction needs
+# them (the postings stage reads them); compaction and update regenerate
+# them from the postings (_forward_rows).
 # terms = "\n"-joined tokens (tokens never contain whitespace, so "\n" is
 # a safe delimiter); tfs = packed little-endian int32 bytes. Flat strings /
 # binary convert through Arrow at C speed — list<string> columns cost
@@ -71,17 +93,13 @@ from .lexer import term_counts, term_occurrences
 # docs; packed int32 beats the earlier ","-joined decimal string on both
 # sides (no str() per count at tokenize, np.frombuffer instead of text
 # parsing at postings build).
-TOK_SCHEMA = (
-    "local_idx long, shard int, conv_id string, turn_idx int, role string, "
-    "doc_len int, terms string, tfs binary"
-)
+FORWARD_SCHEMA = TOK_SCHEMA + ", terms string, tfs binary"
 
 # positional variant (BuildConfig.positions): one extra binary column,
 # poss = per-term delta-varint position lists concatenated in terms order.
 # Each term's blob holds its tf varints, so the postings builder splits it
-# at the varint ends without a stored length. Parquet column pruning means
-# non-positional readers never touch it.
-TOK_SCHEMA_POS = TOK_SCHEMA + ", poss binary"
+# at the varint ends without a stored length.
+FORWARD_SCHEMA_POS = FORWARD_SCHEMA + ", poss binary"
 
 # one row per (shard, term): docs = doc-id gaps (the first absolute),
 # tfs = term frequencies, as integer lists the reader views as numpy
@@ -132,6 +150,8 @@ class BuildConfig:
 
 
 def _tok_path(d): return os.path.join(d, "tok")
+def _staging_root(d): return os.path.join(d, "_staging")
+def _staging_path(d): return os.path.join(_staging_root(d), "fwd")
 def _postings_path(d): return os.path.join(d, "postings")
 def _term_stats_path(d): return os.path.join(d, "term_stats")
 def _stats_path(d): return os.path.join(d, "stats.json")
@@ -283,10 +303,11 @@ SHARD_MAP_JSON_MAX = 4096
 # checked on every open. v2 = per-term nbytes column in postings +
 # packed-int32-binary tfs in tok; v3 = postings docs/tfs/dls as integer
 # lists (no varint blobs, no block byte offsets) and no tok poss_lens;
-# v4 = no postings dls (document lengths only in tok doc_len).
+# v4 = no postings dls (document lengths only in tok doc_len); v5 = tok
+# is the docstore only (no terms/tfs/poss at rest).
 # Indexes without the stamp predate v2. Readers/appenders fail fast on
 # mismatch instead of silently mixing formats.
-FORMAT_VERSION = 4
+FORMAT_VERSION = 5
 
 # Sentinel term for the per-(shard, task) metadata row the postings
 # builder emits alongside the real rows: carries n_postings (df), n_terms
@@ -394,6 +415,23 @@ def _write_stats(index_dir: str, stats: dict) -> None:
 # stage "ids": deterministic dense doc ids + tokenize -> forward index
 # --------------------------------------------------------------------------
 
+def _forward_cells(text, positions: bool = False) -> tuple:
+    """One text's forward-row cells: (doc_len, terms, tfs), plus poss
+    when ``positions`` (see FORWARD_SCHEMA). The tokenizer and
+    update_index's re-tokenizer both build their rows from this."""
+    if positions:
+        occ = term_occurrences(text)
+        tfs = [len(v) for v in occ.values()]
+    else:
+        occ = term_counts(text)
+        tfs = list(occ.values())
+    cells = (sum(tfs), "\n".join(occ),
+             np.fromiter(tfs, dtype=np.int32, count=len(tfs)).tobytes())
+    if positions:
+        cells += (encode_positions_doc(occ.values()),)
+    return cells
+
+
 def _make_tokenizer(shard_base: int = 0, verify_sorted: bool = False,
                     positions: bool = False):
     """mapInPandas fn: tokenize + assign LOCAL per-shard doc indices.
@@ -410,7 +448,6 @@ def _make_tokenizer(shard_base: int = 0, verify_sorted: bool = False,
     exactly ONE parquet file, which is what lets the postings stage read
     whole shards per task with no shuffle at all.
     """
-
     def fn(batches):
         shard = None
         local = 0
@@ -444,43 +481,18 @@ def _make_tokenizer(shard_base: int = 0, verify_sorted: bool = False,
             n = len(pdf)
             doc_ids = local + np.arange(n, dtype=np.int64)
             local += n
-            terms_col, tfs_col, poss_col = [], [], []
-            dls = np.zeros(n, dtype=np.int32)
-            texts = pdf["text"].tolist()
-            for i, text in enumerate(texts):
-                if positions:
-                    occ = term_occurrences(text)
-                    dls[i] = sum(len(v) for v in occ.values())
-                    terms_col.append("\n".join(occ.keys()))
-                    tfs_col.append(
-                        np.fromiter(
-                            (len(v) for v in occ.values()),
-                            dtype=np.int32, count=len(occ),
-                        ).tobytes()
-                    )
-                    poss_col.append(encode_positions_doc(occ.values()))
-                    continue
-                counts = term_counts(text)
-                dls[i] = sum(counts.values())
-                terms_col.append("\n".join(counts.keys()))
-                tfs_col.append(
-                    np.fromiter(
-                        counts.values(), dtype=np.int32, count=len(counts)
-                    ).tobytes()
-                )
-            out = {
+            dls, *payload = zip(*(_forward_cells(t, positions)
+                                  for t in pdf["text"].tolist()))
+            yield pd.DataFrame({
                 "local_idx": doc_ids,
                 "shard": np.full(n, shard, dtype=np.int32),
                 "conv_id": pdf["conv_id"].values,
                 "turn_idx": pdf["turn_idx"].values,
                 "role": pdf["role"].values,
-                "doc_len": dls,
-                "terms": terms_col,
-                "tfs": tfs_col,
-            }
-            if positions:
-                out["poss"] = poss_col
-            yield pd.DataFrame(out)
+                "doc_len": np.array(dls, dtype=np.int32),
+                # terms, tfs[, poss]
+                **dict(zip(("terms", "tfs", "poss"), map(list, payload))),
+            })
 
     return fn
 
@@ -522,6 +534,70 @@ def _collect_shard_stats(spark, index_dir, p):
     return offsets, counts, acc, total_len
 
 
+@contextmanager
+def _whole_file_scans(spark):
+    """Pin file-scan splitting so every scan task reads WHOLE files:
+    Spark only splits files larger than maxPartitionBytes, and packs
+    small ones up to it at openCostInBytes apiece. Scans planned by an
+    action run inside this block give each shard's one file its own
+    task, which the postings builder (one shard per task: its memory
+    bound) and the one-file-per-shard tok writes rely on."""
+    conf = spark.conf
+    keys = ("spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes")
+    old = {k: conf.get(k) for k in keys}
+    for k in keys:
+        conf.set(k, str(256 << 20))
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            conf.set(k, v)
+
+
+def _write_forward(spark, fwd: DataFrame, index_dir: str, mode: str,
+                   shards: list[int] | None = None) -> int:
+    """Commit forward rows (FORWARD_SCHEMA[_POS]): the full rows go to
+    the staging dir, where the postings stage reads them, and tok is
+    written from there with the docstore columns only (one file per
+    shard: whole-file scan tasks) — the tokenizer or inverter runs once.
+    ``mode`` is the partition overwrite mode of both writes; ``shards``
+    restricts the tok write to the shards this call staged (None: all of
+    them). Returns the tok write's wall ms.
+
+    Every tok and postings writer sorts by (shard, key): the driver
+    point reads (query._FileIndex) search each file's key, so it must be
+    strictly increasing within a file. Led by the partition column, this
+    order also satisfies the sort Spark plans under a partitioned write,
+    so that sort (which can interleave rows of one shard when it spills)
+    is not added on top."""
+    stage = _staging_path(index_dir)
+    (
+        fwd.sortWithinPartitions("shard", "local_idx")
+        .write.partitionBy("shard")
+        .option("partitionOverwriteMode", mode)
+        .mode("overwrite")
+        .parquet(stage)
+    )
+    t0 = time.time()
+    staged = _list_shards(stage) if shards is None else shards
+    paths = [os.path.join(stage, f"shard={int(s)}") for s in staged
+             if _shard_files(stage, s)]
+    if not paths:  # nothing staged (an empty corpus or batch)
+        return 0
+    with _whole_file_scans(spark):
+        (
+            spark.read.schema(TOK_SCHEMA).option("basePath", stage)
+            .parquet(*paths)
+            .sortWithinPartitions("shard", "local_idx")
+            .write.partitionBy("shard")
+            .option("partitionOverwriteMode", mode)
+            .mode("overwrite")
+            .parquet(_tok_path(index_dir))
+        )
+    return _ms_since(t0)
+
+
 def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
     t0 = time.time()
     if cfg.presorted_source:
@@ -554,29 +630,17 @@ def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
     # ONE pass over the corpus: shuffle -> tokenize -> write. Global ids
     # are derived afterwards from per-shard counts (metadata-cheap scan
     # of the written files), not from a pre-count of a cached shuffle.
-    tok = parted.mapInPandas(
+    fwd = parted.mapInPandas(
         _make_tokenizer(verify_sorted=cfg.presorted_source,
                         positions=cfg.positions),
-        schema=TOK_SCHEMA_POS if cfg.positions else TOK_SCHEMA,
+        schema=FORWARD_SCHEMA_POS if cfg.positions else FORWARD_SCHEMA,
     )
     t1 = time.time()
     # static overwrite: this is always a fresh dir (build_index removes
     # stale data), and the dynamic-overwrite commit's per-partition
     # staging+moves are pure fixed cost here (the appenders that DO need
     # dynamic pass it explicitly).
-    # Every tok and postings writer sorts by (shard, key): the driver
-    # point reads (query._FileIndex) search each file's key, so it must
-    # be strictly increasing within a file. Led by the partition column,
-    # this order also satisfies the sort Spark plans under a partitioned
-    # write, so that sort (which can interleave rows of one shard when
-    # it spills) is not added on top.
-    (
-        tok.sortWithinPartitions("shard", "local_idx")
-        .write.partitionBy("shard")
-        .option("partitionOverwriteMode", "static")
-        .mode("overwrite")
-        .parquet(_tok_path(index_dir))
-    )
+    docstore_ms = _write_forward(spark, fwd, index_dir, "static")
     tokenize_ms = _ms_since(t1)
 
     t1 = time.time()
@@ -612,7 +676,8 @@ def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
             "stage": "ids", "shard": -1, "status": "done",
             "n_terms": 0, "n_postings": 0, "n_bytes": 0,
             "lineage": lineage, "wall_ms": _ms_since(t0),
-            "tokenize_ms": tokenize_ms, "shard_stats_ms": shard_stats_ms,
+            "tokenize_ms": tokenize_ms, "docstore_ms": docstore_ms,
+            "shard_stats_ms": shard_stats_ms,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }],
     )
@@ -640,18 +705,61 @@ def _binary_values(a) -> np.ndarray:
     return np.frombuffer(data, dtype=np.uint8)[off[0]:off[-1]]
 
 
+def _binary_array(offsets: np.ndarray, data: np.ndarray):
+    """A binary Arrow array over ``data`` (uint8) cut at ``offsets``
+    (len n + 1, starting at 0), with no per-value bytes objects."""
+    import pyarrow as pa
+
+    return pa.Array.from_buffers(pa.binary(), offsets.size - 1, [
+        None, pa.py_buffer(np.ascontiguousarray(offsets, dtype=np.int32)),
+        pa.py_buffer(np.ascontiguousarray(data)),
+    ])
+
+
+def _permute_entries(big: np.ndarray, tfs: np.ndarray, order: np.ndarray,
+                     where: str):
+    """Reorder the entries of a positions stream WITHOUT per-entry
+    Python slicing: one uint8 buffer + a vectorized gather index (output
+    byte -> input byte). Entries tile ``big`` contiguously and entry i
+    holds tfs[i] varints, so every entry ends at the end of varint
+    cumsum(tfs)[i] - 1 (no stored lengths). Returns (the entries'
+    bytes in ``order``, each one's byte length in that order, and its
+    start offsets with the total appended)."""
+    from .compress import varint_ends
+
+    ends = varint_ends(big)
+    if ends.size != int(tfs.sum()):
+        raise RuntimeError(
+            f"positions misaligned in {where}: "
+            f"{ends.size} varints vs {int(tfs.sum())} positions"
+        )
+    if (int(ends[-1]) if ends.size else 0) != big.size:
+        raise RuntimeError(f"positions byte-length mismatch in {where}")
+    ent_end = ends[np.cumsum(tfs) - 1]
+    ent_len = np.diff(ent_end, prepend=0)
+    s_o = (ent_end - ent_len)[order]
+    l_o = ent_len[order]
+    out_prev = np.concatenate(([0], np.cumsum(l_o)))
+    gather = (
+        np.arange(int(out_prev[-1]), dtype=np.int64)
+        - np.repeat(out_prev[:-1], l_o)
+        + np.repeat(s_o, l_o)
+    )
+    return big[gather], l_o, out_prev
+
+
 def _make_postings_builder(
     avgdl: float, k1: float, b: float, block_size: int,
     offsets: dict[int, int], positions: bool = False,
 ):
-    """One shard's tok rows (an Arrow table) -> its postings rows as
+    """One shard's forward rows (an Arrow table) -> its postings rows as
     Arrow record batches: the sentinel meta row, then one row per term
     in term order (see POSTINGS_SCHEMA), or nothing for a shard without
     a single term."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from .compress import postings_columns, varint_ends
+    from .compress import postings_columns
 
     def fn(tbl):
         shard = int(tbl.column("shard")[0].as_py())
@@ -703,47 +811,17 @@ def _make_postings_builder(
         ]
         if positions:
             # permute each doc row's concatenated per-term position blobs
-            # into (term, doc_id) order WITHOUT per-entry Python slicing:
-            # one big uint8 buffer + a vectorized gather-index (output
-            # position -> input position), then per-term splits at byte
-            # boundaries. The per-doc delta chains stay intact, so the
-            # query side decodes a term's whole payload in one varint
-            # pass. Entries tile the buffer contiguously in explode order
-            # (doc-major, term-within-doc: how the tokenizer wrote them)
-            # and entry i holds tfs[i] varints, so every entry's end is
-            # the end of varint cumsum(tfs)[i] - 1.
-            big = _binary_values(col["poss"])
-            ends = varint_ends(big)
-            if ends.size != int(tfs.sum()):
-                raise RuntimeError(
-                    f"positions misaligned in shard {shard}: "
-                    f"{ends.size} varints vs {int(tfs.sum())} positions"
-                )
-            if (int(ends[-1]) if ends.size else 0) != big.size:
-                raise RuntimeError(
-                    f"positions byte-length mismatch in shard {shard}"
-                )
-            ent_end = ends[np.cumsum(tfs) - 1]
-            ent_len = np.diff(ent_end, prepend=0)
-            # gather in (term, doc) order
-            s_o = (ent_end - ent_len)[order]
-            l_o = ent_len[order]
-            out_prev = np.concatenate(([0], np.cumsum(l_o)))
-            gather = (
-                np.arange(int(out_prev[-1]), dtype=np.int64)
-                - np.repeat(out_prev[:-1], l_o)
-                + np.repeat(s_o, l_o)
-            )
+            # into (term, doc_id) order (_permute_entries); the per-doc
+            # delta chains stay intact, so the query side decodes a
+            # term's whole payload in one varint pass
+            big, ent_len, ent_off = _permute_entries(
+                _binary_values(col["poss"]), tfs, order, f"shard {shard}")
             # per-term positions payload bytes, known for free here (the
             # fast-path gate reads them via term_stats, never the payload)
-            term_bytes = np.add.reduceat(l_o, starts[:-1])
+            term_bytes = np.add.reduceat(ent_len, starts[:-1])
             names += ["poss", "poss_nbytes"]
             arrays += [
-                pa.Array.from_buffers(pa.binary(), n_terms, [
-                    None,
-                    pa.py_buffer(out_prev[starts].astype(np.int32)),
-                    pa.py_buffer(big[gather]),
-                ]),
+                _binary_array(ent_off[starts], big),
                 pa.array(term_bytes.astype(np.int64)),
             ]
         data = pa.RecordBatch.from_arrays(arrays, names=names)
@@ -786,64 +864,184 @@ def _make_streaming_builder(avgdl, k1, b, block_size, offsets,
     return fn
 
 
+def _invert_postings(tbl, shard: int, base: int, positions: bool = False):
+    """Shard ``shard``'s postings rows (an Arrow table; its meta row is
+    skipped; ``base`` is the shard's doc-id offset) -> its forward
+    payload, the inverse of _make_postings_builder: one record batch
+    (shard, local_idx, terms, tfs[, poss]) with a row per document that
+    holds a term, in local_idx order, or nothing for a shard without
+    postings. Each row's terms come in term order; every term's position
+    blob is its own delta chain, so the builder lays the same postings
+    out of either order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = tbl.filter(pc.not_equal(tbl.column("term"), META_TERM)) \
+        .combine_chunks()
+    if tbl.num_rows == 0:
+        return
+    col = {c: tbl.column(c).chunk(0) for c in tbl.column_names}
+    df = col["df"].to_numpy().astype(np.int64)
+    gaps = pc.list_flatten(col["docs"]).to_numpy().astype(np.int64)
+    tfs = pc.list_flatten(col["tfs"]).to_numpy().astype(np.int64)
+    if not gaps.size == tfs.size == int(df.sum()):
+        raise ValueError(f"postings of shard {shard} do not hold df values")
+    # each term row's gaps start absolute: one cumsum, minus the running
+    # total carried into each row
+    heads = np.cumsum(df) - df
+    cs = np.cumsum(gaps)
+    local = cs - np.repeat(cs[heads] - gaps[heads], df) - base
+    # doc-major; stable, so a doc's entries keep the rows' term order
+    order = np.argsort(local, kind="stable")
+    local = local[order]
+    starts = np.concatenate(
+        ([0], np.flatnonzero(np.diff(local)) + 1, [local.size]))
+    entry_terms = col["term"].take(
+        pa.array(np.repeat(np.arange(df.size), df)[order]))
+    names = ["shard", "local_idx", "terms", "tfs"]
+    arrays = [
+        pa.array(np.full(starts.size - 1, shard, dtype=np.int32)),
+        pa.array(local[starts[:-1]]),
+        pc.binary_join(pa.ListArray.from_arrays(
+            pa.array(starts.astype(np.int32)), entry_terms), "\n"),
+        _binary_array(starts * 4, tfs[order].astype(np.int32).view(np.uint8)),
+    ]
+    if positions:
+        big, _len, ent_off = _permute_entries(
+            _binary_values(col["poss"]), tfs, order, f"shard {shard}")
+        names.append("poss")
+        arrays.append(_binary_array(ent_off[starts], big))
+    yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+
+def _forward_rows(spark, index_dir: str, stats: dict, positions: bool,
+                  shards: list[int] | None = None) -> DataFrame:
+    """The forward rows (FORWARD_SCHEMA[_POS]) of an index's documents,
+    regenerated from its postings: a mapInArrow whose tasks (about one
+    per core) each read whole postings files of their shards with
+    pyarrow, as query._TaskDocLens reads tok, and run _invert_postings
+    on them, left-joined onto the docstore so documents without a term
+    (empty, stop-word-only or tombstoned turns) keep their empty row.
+    ``shards``: only those shards' documents. What compaction and update
+    re-shard or re-tokenize, now that the index keeps no forward payload
+    at rest. The list columns never pass through the JVM: converting
+    them to Arrow row by row cost more than the inversion."""
+    offsets = {int(s): int(o) for s, o in stats["shard_offsets"].items()}
+    root = _postings_path(index_dir)
+    cols = ["term", "df", "docs", "tfs"] + (["poss"] if positions else [])
+    schema = "shard int, local_idx long, terms string, tfs binary"
+    if positions:
+        schema += ", poss binary"
+
+    def invert(batches):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        for rb in batches:
+            for sh in rb.column("shard").to_pylist():
+                files = _shard_files(root, sh)
+                if files:
+                    yield from _invert_postings(
+                        pa.concat_tables(
+                            pq.read_table(f, columns=cols) for f in files),
+                        sh, offsets[sh], positions)
+
+    todo = _list_shards(root) if shards is None else shards
+    inv = spark.createDataFrame(
+        [(int(s),) for s in todo], "shard int"
+    ).mapInArrow(invert, schema=schema)
+    # explicit schema: no footer-inference job
+    tok = spark.read.schema(TOK_SCHEMA).parquet(_tok_path(index_dir))
+    if shards is not None:
+        tok = tok.filter(F.col("shard").isin(shards))
+    empty = F.lit(b"").cast("binary")
+    payload = [F.coalesce("terms", F.lit("")).alias("terms"),
+               F.coalesce("tfs", empty).alias("tfs")]
+    if positions:
+        payload.append(F.coalesce("poss", empty).alias("poss"))
+    # a sort-merge join: under the broadcast threshold Spark would build
+    # the hash side from the payload, collecting it through the driver
+    return tok.join(inv.hint("merge"), ["shard", "local_idx"], "left") \
+        .select(*TOK_COLUMNS, *payload)
+
+
+def _drop_staged(index_dir: str, shards: list[int]) -> None:
+    """Delete the staged forward rows of ``shards`` (their postings are
+    committed), and the whole staging dir once no shard is left in it: a
+    partial build (build_index's ``_only_shards``) keeps the rest for
+    its resume."""
+    import shutil
+
+    stage = _staging_path(index_dir)
+    for s in shards:
+        shutil.rmtree(os.path.join(stage, f"shard={int(s)}"),
+                      ignore_errors=True)
+    if not _list_shards(stage):
+        shutil.rmtree(_staging_root(index_dir), ignore_errors=True)
+
+
 def _stage_postings(
     spark, index_dir, cfg: BuildConfig, stats: dict, pending: list[int],
     lineage: str,
 ) -> None:
     if not pending:
+        _drop_staged(index_dir, [])
         return
     t0 = time.time()
-    # shard == stage-1 partition => exactly one tok file per shard, so a
-    # scan whose tasks get WHOLE files needs no shuffle at all: each task
-    # streams its shard(s) straight from parquet into the builder. Spark
-    # only splits files larger than maxPartitionBytes; we pin it (and the
-    # packing cost) so small shard files are never split and rarely
-    # packed. A duplicate-(shard,term) guard below turns any violation of
-    # that assumption into a loud build failure rather than silent
-    # postings corruption.
-    tok_root = _tok_path(index_dir)
-    paths = [
-        os.path.join(tok_root, f"shard={int(s)}") for s in pending
-        if os.path.exists(os.path.join(tok_root, f"shard={int(s)}"))
-    ]
+    # shard == stage-1 partition => exactly one staged file per shard, so
+    # a scan whose tasks get WHOLE files needs no shuffle at all: each
+    # task streams its shard(s) straight from parquet into the builder
+    # (_whole_file_scans). A duplicate-(shard,term) guard below turns any
+    # violation of that assumption into a loud build failure rather than
+    # silent postings corruption.
+    stage = _staging_path(index_dir)
+    paths = []
+    for s in pending:
+        if _shard_files(stage, s):
+            paths.append(os.path.join(stage, f"shard={int(s)}"))
+        elif _shard_files(_tok_path(index_dir), s):
+            # a shard with documents but no forward rows: building from
+            # nothing would commit empty postings for it
+            raise RuntimeError(
+                f"shard {int(s)} of {index_dir} has no staged forward "
+                f"rows under {stage}, so its postings cannot be built; "
+                "rebuild the index with build_index"
+            )
     postings_ms = 0
     if paths:
-        conf = spark.conf
-        old_mpb = conf.get("spark.sql.files.maxPartitionBytes")
-        old_oc = conf.get("spark.sql.files.openCostInBytes")
-        conf.set("spark.sql.files.maxPartitionBytes", str(256 << 20))
-        conf.set("spark.sql.files.openCostInBytes", str(256 << 20))
-        try:
-            positions = bool(stats.get("positions", cfg.positions))
-            tok_cols = ["shard", "local_idx", "doc_len", "terms", "tfs"]
-            if positions:
-                tok_cols.append("poss")
-            src = (
-                spark.read.option("basePath", tok_root)
-                .parquet(*paths)
-                .select(*tok_cols)
-            )
-            offsets = {int(s): int(o) for s, o in stats["shard_offsets"].items()}
-            built = src.mapInArrow(
-                _make_streaming_builder(
-                    stats["avgdl"], cfg.k1, cfg.b, cfg.block_size, offsets,
-                    positions=positions,
-                ),
-                schema=POSTINGS_SCHEMA_POS if positions else POSTINGS_SCHEMA,
-            )
-            # builder emits term-sorted rows per shard; small row groups
-            # turn parquet term stats into the reference's term
-            # dictionary (tree.rs:116-125).
-            # Fresh full build (no existing postings dir) -> static
-            # overwrite commit; resume/append/update must preserve the
-            # other shards' partitions -> dynamic.
-            overwrite_mode = (
-                "dynamic" if os.path.exists(_postings_path(index_dir))
-                else "static"
-            )
-            t1 = time.time()
+        positions = bool(stats.get("positions", cfg.positions))
+        fwd_cols = ["shard", "local_idx", "doc_len", "terms", "tfs"]
+        if positions:
+            fwd_cols.append("poss")
+        src = (
+            spark.read.schema(
+                FORWARD_SCHEMA_POS if positions else FORWARD_SCHEMA)
+            .option("basePath", stage)
+            .parquet(*paths)
+            .select(*fwd_cols)
+        )
+        offsets = {int(s): int(o) for s, o in stats["shard_offsets"].items()}
+        built = src.mapInArrow(
+            _make_streaming_builder(
+                stats["avgdl"], cfg.k1, cfg.b, cfg.block_size, offsets,
+                positions=positions,
+            ),
+            schema=POSTINGS_SCHEMA_POS if positions else POSTINGS_SCHEMA,
+        )
+        # builder emits term-sorted rows per shard; small row groups
+        # turn parquet term stats into the reference's term
+        # dictionary (tree.rs:116-125).
+        # Fresh full build (no existing postings dir) -> static
+        # overwrite commit; resume/append/update must preserve the
+        # other shards' partitions -> dynamic.
+        overwrite_mode = (
+            "dynamic" if os.path.exists(_postings_path(index_dir))
+            else "static"
+        )
+        t1 = time.time()
+        with _whole_file_scans(spark):
             (
-                # (shard, term) order: see _stage_ids
+                # (shard, term) order: see _write_forward
                 built.sortWithinPartitions("shard", "term")
                 .write.partitionBy("shard")
                 .option("partitionOverwriteMode", overwrite_mode)
@@ -864,10 +1062,7 @@ def _stage_postings(
                 .mode("overwrite")
                 .parquet(_postings_path(index_dir))
             )
-            postings_ms = _ms_since(t1)
-        finally:
-            conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-            conf.set("spark.sql.files.openCostInBytes", old_oc)
+        postings_ms = _ms_since(t1)
     wall = _ms_since(t0)
 
     # per-shard metrics + split-shard guard from the builder's own
@@ -966,6 +1161,7 @@ def _stage_postings(
             "finished_at": now,
         })
     _append_manifest(index_dir, rows)
+    _drop_staged(index_dir, pending)
 
 
 def _stage_term_stats(spark, index_dir) -> None:
@@ -1038,7 +1234,8 @@ def build_index(
         # AND the stale data dirs. Dynamic partition overwrite only
         # replaces shards present in the NEW build — a smaller rebuild
         # (fewer shards) would otherwise leave ghost tok/postings shards
-        # that inflate n_docs/offsets and keep serving dead postings.
+        # that inflate n_docs/offsets and keep serving dead postings,
+        # and a killed build's staged forward rows would stay on disk.
         import shutil
 
         if os.path.exists(_manifest_path(index_dir)):
@@ -1046,7 +1243,8 @@ def build_index(
         if os.path.exists(_stats_path(index_dir)):
             os.remove(_stats_path(index_dir))
         for stale in (_tok_path(index_dir), _postings_path(index_dir),
-                      _term_stats_path(index_dir), _shard_map_path(index_dir)):
+                      _term_stats_path(index_dir), _shard_map_path(index_dir),
+                      _staging_root(index_dir)):
             if os.path.exists(stale):
                 shutil.rmtree(stale)
 
@@ -1080,12 +1278,13 @@ def compact_index(
     An append/streaming workload accumulates one small shard per batch
     (each with its own tok/postings files and term_stats rows); over
     time the shard count — not the data volume — becomes the cost
-    driver. Compaction re-shards the stored forward index (tok) by the
-    canonical (conv_id, turn_idx) order into ceil(n_docs / shard_docs)
-    shards, reassigns dense doc ids, and reruns the postings + stats
-    stages over the CARRIED terms/tfs[/poss] columns — the expensive
-    lexing work is never repeated (no `text` is ever read; the source
-    table isn't touched at all).
+    driver. Compaction regenerates the forward rows by inverting the
+    stored postings (_forward_rows: terms, tfs[, poss] per document,
+    joined onto the docstore), re-shards them by the canonical
+    (conv_id, turn_idx) order into ceil(n_docs / shard_docs) shards,
+    reassigns dense doc ids, and reruns the postings + stats stages —
+    the expensive lexing work is never repeated (no `text` is ever read;
+    the source table isn't touched at all).
 
     Produces a NEW immutable index at ``out_dir`` and leaves ``src_dir``
     untouched — the round-5 serving posture (replicas over immutable
@@ -1124,7 +1323,8 @@ def compact_index(
         if os.path.exists(stale):
             os.remove(stale)
     for stale in (_tok_path(out_dir), _postings_path(out_dir),
-                  _term_stats_path(out_dir), _shard_map_path(out_dir)):
+                  _term_stats_path(out_dir), _shard_map_path(out_dir),
+                  _staging_root(out_dir)):
         if os.path.exists(stale):
             shutil.rmtree(stale)
 
@@ -1140,9 +1340,10 @@ def compact_index(
     carry = ["conv_id", "turn_idx", "role", "doc_len", "terms", "tfs"]
     if cfg.positions:
         carry.append("poss")
-    tok = spark.read.parquet(_tok_path(src_dir)).select(*carry)
     parted = (
-        tok.repartitionByRange(p, "conv_id", "turn_idx")
+        _forward_rows(spark, src_dir, src_stats, cfg.positions)
+        .select(*carry)
+        .repartitionByRange(p, "conv_id", "turn_idx")
         .sortWithinPartitions("conv_id", "turn_idx")
         .withColumn("pid", F.spark_partition_id())
     )
@@ -1163,17 +1364,11 @@ def compact_index(
                 out[c] = pdf[c].values
             yield pd.DataFrame(out)
 
-    (
-        parted.mapInPandas(
-            reassign,
-            schema=TOK_SCHEMA_POS if cfg.positions else TOK_SCHEMA,
-        )
-        .sortWithinPartitions("shard", "local_idx")  # see _stage_ids
-        .write.partitionBy("shard")
-        .option("partitionOverwriteMode", "static")
-        .mode("overwrite")
-        .parquet(_tok_path(out_dir))
+    fwd = parted.mapInPandas(
+        reassign,
+        schema=FORWARD_SCHEMA_POS if cfg.positions else FORWARD_SCHEMA,
     )
+    _write_forward(spark, fwd, out_dir, "static")
     offsets, counts, n_out, total_len = _collect_shard_stats(
         spark, out_dir, p
     )
@@ -1329,21 +1524,15 @@ def append_index(
         .sortWithinPartitions("conv_id", "turn_idx")
         .withColumn("pid", F.spark_partition_id())
     )
-    tok = parted.mapInPandas(
+    fwd = parted.mapInPandas(
         _make_tokenizer(shard_base=base_shards, positions=cfg.positions),
-        schema=TOK_SCHEMA_POS if cfg.positions else TOK_SCHEMA,
+        schema=FORWARD_SCHEMA_POS if cfg.positions else FORWARD_SCHEMA,
     )
+    new_shards = list(range(base_shards, base_shards + p))
     t1 = time.time()
-    (
-        tok.sortWithinPartitions("shard", "local_idx")  # see _stage_ids
-        .write.partitionBy("shard")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(_tok_path(index_dir))
-    )
+    _write_forward(spark, fwd, index_dir, "dynamic", new_shards)
     tokenize_ms = _ms_since(t1)
 
-    new_shards = list(range(base_shards, base_shards + p))
     if p <= DRIVER_META_MAX_SHARDS:
         per_shard = _tok_shard_stats_local(index_dir, new_shards)
     else:
@@ -1439,7 +1628,9 @@ def update_index(
         path for new turns).
 
     Shard-granular: only shards owning a changed key have their tok +
-    postings files rewritten (dynamic partition overwrite); stats
+    postings files rewritten (dynamic partition overwrite): their forward
+    rows are regenerated from their postings (_forward_rows), the
+    changed turns re-tokenized, and the postings rebuilt; stats
     (total_len/avgdl) and term_stats are refreshed. avgdl drift in either
     direction stays safe for pruned search: upward drift is rescaled by
     the reader (per-shard avgdl_build), downward drift only makes stored
@@ -1481,7 +1672,7 @@ def update_index(
         )
         .dropDuplicates(["conv_id", "turn_idx"])
     )
-    tok = spark.read.parquet(_tok_path(index_dir))
+    tok = spark.read.schema(TOK_SCHEMA).parquet(_tok_path(index_dir))
     # owner discovery, pruned: candidate shards from the footer conv_id
     # bounds first (zero data reads), then the exact broadcast semi-join
     # scans only those shards' files (partition pruning on `shard`)
@@ -1522,60 +1713,33 @@ def update_index(
         }
 
     pos_on = bool(cfg.positions)
+    payload = ["terms", "tfs"] + (["poss"] if pos_on else [])
 
     def retok(batches):
-        out_cols = [
-            "local_idx", "shard", "conv_id", "turn_idx", "role",
-            "doc_len", "terms", "tfs",
-        ] + (["poss"] if pos_on else [])
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mask = pdf["_new_text"].notna()
+            mask = pdf["_new_text"].notna().to_numpy()
             if mask.any():
                 pdf = pdf.copy()
-                for i in np.nonzero(mask.to_numpy())[0]:
-                    text = pdf["_new_text"].iloc[int(i)]
-                    if pos_on:
-                        occ = term_occurrences(text)
-                        counts = {t: len(v) for t, v in occ.items()}
-                        pdf.iloc[int(i), pdf.columns.get_loc("poss")] = (
-                            encode_positions_doc(occ.values())
-                        )
-                    else:
-                        counts = term_counts(text)
-                    pdf.iloc[
-                        int(i), pdf.columns.get_loc("doc_len")
-                    ] = sum(counts.values())
-                    pdf.iloc[
-                        int(i), pdf.columns.get_loc("terms")
-                    ] = "\n".join(counts.keys())
-                    pdf.iloc[int(i), pdf.columns.get_loc("tfs")] = (
-                        np.fromiter(
-                            counts.values(), dtype=np.int32, count=len(counts)
-                        ).tobytes()
-                    )
-            yield pdf[out_cols]
+                loc = [pdf.columns.get_loc(c) for c in ("doc_len", *payload)]
+                for i in np.flatnonzero(mask):
+                    cells = _forward_cells(pdf["_new_text"].iat[i], pos_on)
+                    for j, v in zip(loc, cells):
+                        pdf.iat[i, j] = v
+            yield pdf[[*TOK_COLUMNS, *payload]]
 
     sub = (
-        tok.filter(F.col("shard").isin(affected))
+        _forward_rows(spark, index_dir, stats, pos_on, affected)
         .join(F.broadcast(keys), ["conv_id", "turn_idx"], "left")
         # one task per shard (hash repartition on shard) => each rewritten
-        # shard dir keeps exactly ONE file, preserving the whole-file-task
-        # invariant the shuffle-free paths rely on
+        # shard dir keeps exactly ONE staged file, preserving the
+        # whole-file-task invariant the postings stage relies on
         .repartition(len(affected), "shard")
     )
-    (
-        sub.mapInPandas(retok,
-                        schema=TOK_SCHEMA_POS if pos_on else TOK_SCHEMA)
-        # the shuffle interleaves the splits of a shard's input file
-        # (see _stage_ids for the order)
-        .sortWithinPartitions("shard", "local_idx")
-        .write.partitionBy("shard")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(_tok_path(index_dir))
-    )
+    fwd = sub.mapInPandas(
+        retok, schema=FORWARD_SCHEMA_POS if pos_on else FORWARD_SCHEMA)
+    _write_forward(spark, fwd, index_dir, "dynamic", affected)
 
     if len(affected) <= DRIVER_META_MAX_SHARDS:
         post = _tok_shard_stats_local(index_dir, affected)
@@ -1644,8 +1808,8 @@ def delete_turns(
 
 
 def docstore(spark: SparkSession, index_dir: str) -> DataFrame:
-    """Docstore view (tree.rs:21-31 analog): the forward index minus the
-    terms column — parquet column pruning makes this a cheap projection.
+    """Docstore view (tree.rs:21-31 analog): the tok table, which holds
+    only the docstore columns (no terms payload at rest), with
     doc_id = shard_offset + local_idx via a broadcast join on the tiny
     shard->offset map (at 10^12 scale the map is a broadcast table)."""
     stats = read_stats(index_dir)

@@ -318,12 +318,13 @@ def test_manifest_records_stage_walls(built_index):
         assert 0 < r["postings_ms"] <= r["wall_ms"] and r["meta_ms"] >= 0
 
 
-def test_postings_layout_v4(spark, pos_index, tmp_path):
+def test_postings_layout_v5(spark, pos_index, tmp_path):
     """On disk, postings docs/tfs are integer lists (doc-id gaps as
     int64, tfs as int32) and store no dls (document lengths live once
-    per document, in tok doc_len), blocks carry no byte offsets, tok has
-    no poss_lens, and a postings row whose docs/tfs lists do not hold df
-    values fails the query loudly instead of scoring garbage."""
+    per document, in tok doc_len), blocks carry no byte offsets, tok
+    holds exactly the docstore columns (no terms/tfs/poss payload), and
+    a postings row whose docs/tfs lists do not hold df values fails the
+    query loudly instead of scoring garbage."""
     import os
     import shutil
 
@@ -334,7 +335,7 @@ def test_postings_layout_v4(spark, pos_index, tmp_path):
     from indexer_spark.build import FORMAT_VERSION, META_TERM
 
     index_dir, stats = pos_index
-    assert FORMAT_VERSION == 4 and stats["format_version"] == 4
+    assert FORMAT_VERSION == 5 and stats["format_version"] == 5
     post = pads.dataset(os.path.join(index_dir, "postings"),
                         format="parquet", partitioning="hive").schema
     assert post.field("docs").type == pa.list_(pa.field("element",
@@ -348,7 +349,8 @@ def test_postings_layout_v4(spark, pos_index, tmp_path):
     assert post.field("poss").type == pa.binary()
     tok = pads.dataset(os.path.join(index_dir, "tok"), format="parquet",
                        partitioning="hive").schema
-    assert "poss" in tok.names and "poss_lens" not in tok.names
+    assert sorted(tok.names) == sorted([
+        "local_idx", "shard", "conv_id", "turn_idx", "role", "doc_len"])
     assert tok.field("doc_len").type == pa.int32()
 
     # one row's df off by one, in a copy of the index
@@ -373,9 +375,10 @@ def test_postings_layout_v4(spark, pos_index, tmp_path):
 
 
 def test_older_format_is_refused(spark, built_index, corpus_pdf, tmp_path):
-    """An index whose stats.json says format v2 or v3 (the v3 postings
-    still carry dls) is refused by the reader and by append_index, with
-    the rebuild message naming v4."""
+    """An index whose stats.json says format v2, v3 (the v3 postings
+    still carry dls) or v4 (the v4 tok still carries the terms payload)
+    is refused by the reader and by append_index, with the rebuild
+    message naming v5."""
     import json
     import os
     import shutil
@@ -383,7 +386,7 @@ def test_older_format_is_refused(spark, built_index, corpus_pdf, tmp_path):
     from indexer_spark.build import append_index
 
     batch = spark.createDataFrame(corpus_pdf.head(5))
-    for version in (2, 3):
+    for version in (2, 3, 4):
         old = str(tmp_path / f"v{version}")
         shutil.copytree(built_index[0], old)
         with open(os.path.join(old, "stats.json")) as f:
@@ -391,7 +394,7 @@ def test_older_format_is_refused(spark, built_index, corpus_pdf, tmp_path):
         st["format_version"] = version
         with open(os.path.join(old, "stats.json"), "w") as f:
             json.dump(st, f)
-        want = rf"format v{version}.*reads/writes v4"
+        want = rf"format v{version}.*reads/writes v5"
         with pytest.raises(RuntimeError, match=want):
             IndexReader(spark, old)
         with pytest.raises(RuntimeError, match=want):

@@ -718,7 +718,9 @@ def test_update_keeps_tok_files_sorted(spark, tmp_path):
                 conf.set(k, v)
 
     try:
-        conf.set("parquet.block.size", str(8 << 10))  # many row groups
+        # many row groups: tok rows are the docstore columns only (~30 B
+        # each raw), so 300-row shard files need a 2 KiB target for >2
+        conf.set("parquet.block.size", str(2 << 10))
         build_index(spark, spark.createDataFrame(a), d,
                     BuildConfig(block_size=32, id_partitions=2))
         restore()

@@ -9,6 +9,9 @@ from pyspark.sql import functions as F
 
 from indexer_spark.build import (
     BuildConfig,
+    _list_shards,
+    _postings_path,
+    _staging_path,
     build_index,
     read_manifest,
     read_stats,
@@ -29,7 +32,7 @@ def _postings_signature(spark, index_dir):
     """Every postings row's content (doc gaps, tfs, block metadata and
     nbytes, the last two computed from the document lengths) and every
     document's length (tok doc_len, which the reader gathers)."""
-    from indexer_spark.build import _postings_path, _tok_path
+    from indexer_spark.build import _tok_path
 
     rows = (
         spark.read.parquet(_postings_path(index_dir))
@@ -60,6 +63,9 @@ def test_partial_then_resume_equals_fresh(spark, small_corpus, tmp_path):
     m = read_manifest(part_dir)
     done = {r["shard"] for r in m if r["stage"] == "postings"}
     assert done == {0}
+    # the staged forward rows of the shards still pending are kept for
+    # the resume; the committed shard's are gone
+    assert _list_shards(_staging_path(part_dir)) == [1, 2, 3]
 
     # resume completes the remaining shards only. epoch is a monotonic
     # commit counter (like a txid): a crash+resume history has more
@@ -77,6 +83,24 @@ def test_partial_then_resume_equals_fresh(spark, small_corpus, tmp_path):
     assert _postings_signature(spark, part_dir) == _postings_signature(
         spark, fresh_dir
     )
+    assert not os.path.exists(os.path.join(part_dir, "_staging"))
+
+
+def test_resume_without_staging_refuses(spark, small_corpus, tmp_path):
+    """Postings still pending but their staged forward rows gone (the
+    index keeps no terms payload at rest): resume raises, naming a
+    rebuild, and commits no empty postings."""
+    import shutil
+
+    d = str(tmp_path / "lost")
+    cfg = BuildConfig(**CFG)
+    build_index(spark, small_corpus, d, cfg, _only_shards=[0])
+    shutil.rmtree(os.path.join(d, "_staging"))
+    with pytest.raises(RuntimeError, match="rebuild the index"):
+        build_index(spark, small_corpus, d, cfg, resume=True)
+    m = read_manifest(d)
+    assert {r["shard"] for r in m if r["stage"] == "postings"} == {0}
+    assert _list_shards(_postings_path(d)) == [0]
 
 
 def test_resume_is_idempotent_when_complete(spark, small_corpus, tmp_path):
