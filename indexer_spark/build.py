@@ -556,14 +556,14 @@ def _whole_file_scans(spark):
 
 
 def _write_forward(spark, fwd: DataFrame, index_dir: str, mode: str,
-                   shards: list[int] | None = None) -> int:
+                   shards: list[int] | None = None) -> None:
     """Commit forward rows (FORWARD_SCHEMA[_POS]): the full rows go to
     the staging dir, where the postings stage reads them, and tok is
     written from there with the docstore columns only (one file per
     shard: whole-file scan tasks) — the tokenizer or inverter runs once.
     ``mode`` is the partition overwrite mode of both writes; ``shards``
     restricts the tok write to the shards this call staged (None: all of
-    them). Returns the tok write's wall ms.
+    them).
 
     Every tok and postings writer sorts by (shard, key): the driver
     point reads (query._FileIndex) search each file's key, so it must be
@@ -576,15 +576,18 @@ def _write_forward(spark, fwd: DataFrame, index_dir: str, mode: str,
         fwd.sortWithinPartitions("shard", "local_idx")
         .write.partitionBy("shard")
         .option("partitionOverwriteMode", mode)
+        # staged rows are read once, and their payload is near-unique:
+        # dictionary pages only cost write time (200,000 positional
+        # rows: 2.0 -> 1.8 s)
+        .option("parquet.enable.dictionary", "false")
         .mode("overwrite")
         .parquet(stage)
     )
-    t0 = time.time()
     staged = _list_shards(stage) if shards is None else shards
     paths = [os.path.join(stage, f"shard={int(s)}") for s in staged
              if _shard_files(stage, s)]
     if not paths:  # nothing staged (an empty corpus or batch)
-        return 0
+        return
     with _whole_file_scans(spark):
         (
             spark.read.schema(TOK_SCHEMA).option("basePath", stage)
@@ -595,7 +598,6 @@ def _write_forward(spark, fwd: DataFrame, index_dir: str, mode: str,
             .mode("overwrite")
             .parquet(_tok_path(index_dir))
         )
-    return _ms_since(t0)
 
 
 def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
@@ -640,7 +642,7 @@ def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
     # stale data), and the dynamic-overwrite commit's per-partition
     # staging+moves are pure fixed cost here (the appenders that DO need
     # dynamic pass it explicitly).
-    docstore_ms = _write_forward(spark, fwd, index_dir, "static")
+    _write_forward(spark, fwd, index_dir, "static")
     tokenize_ms = _ms_since(t1)
 
     t1 = time.time()
@@ -676,8 +678,7 @@ def _stage_ids(spark, df, index_dir, cfg: BuildConfig, lineage: str) -> dict:
             "stage": "ids", "shard": -1, "status": "done",
             "n_terms": 0, "n_postings": 0, "n_bytes": 0,
             "lineage": lineage, "wall_ms": _ms_since(t0),
-            "tokenize_ms": tokenize_ms, "docstore_ms": docstore_ms,
-            "shard_stats_ms": shard_stats_ms,
+            "tokenize_ms": tokenize_ms, "shard_stats_ms": shard_stats_ms,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }],
     )
@@ -864,26 +865,36 @@ def _make_streaming_builder(avgdl, k1, b, block_size, offsets,
     return fn
 
 
-def _invert_postings(tbl, shard: int, base: int, positions: bool = False):
-    """Shard ``shard``'s postings rows (an Arrow table; its meta row is
-    skipped; ``base`` is the shard's doc-id offset) -> its forward
-    payload, the inverse of _make_postings_builder: one record batch
-    (shard, local_idx, terms, tfs[, poss]) with a row per document that
-    holds a term, in local_idx order, or nothing for a shard without
-    postings. Each row's terms come in term order; every term's position
-    blob is its own delta chain, so the builder lays the same postings
-    out of either order."""
+def _invert_postings(docs, post, shard: int, base: int,
+                     positions: bool = False) -> dict:
+    """One shard's documents ``docs`` (an Arrow table: each one's
+    local_idx in the shard and the columns to carry with it) and its
+    postings rows ``post`` (the meta row is skipped; None: the shard has
+    no postings) -> docs' columns in local_idx order plus each
+    document's terms, tfs[, poss] (FORWARD_SCHEMA's payload), as a dict
+    of Arrow arrays: the inverse of _make_postings_builder. A document
+    without a term (an empty, stop-word-only or tombstoned turn) gets an
+    empty payload. ``base`` is the shard's doc-id offset. Each row's
+    terms come in term order; every term's position blob is its own
+    delta chain, so the builder lays the same postings out of either
+    order."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tbl = tbl.filter(pc.not_equal(tbl.column("term"), META_TERM)) \
-        .combine_chunks()
-    if tbl.num_rows == 0:
-        return
-    col = {c: tbl.column(c).chunk(0) for c in tbl.column_names}
-    df = col["df"].to_numpy().astype(np.int64)
-    gaps = pc.list_flatten(col["docs"]).to_numpy().astype(np.int64)
-    tfs = pc.list_flatten(col["tfs"]).to_numpy().astype(np.int64)
+    docs = docs.sort_by("local_idx")
+    n = docs.num_rows
+    if not np.array_equal(docs.column("local_idx").to_numpy(), np.arange(n)):
+        raise ValueError(f"docstore rows of shard {shard} are not dense")
+    if post is None:
+        post = pa.table({"term": pa.array([], pa.string()),
+                         "df": pa.array([], pa.int64()),
+                         "docs": pa.array([], pa.list_(pa.int64())),
+                         "tfs": pa.array([], pa.list_(pa.int32())),
+                         "poss": pa.array([], pa.binary())})
+    post = post.filter(pc.not_equal(post.column("term"), META_TERM))
+    df = post.column("df").to_numpy().astype(np.int64)
+    gaps = pc.list_flatten(post.column("docs")).to_numpy().astype(np.int64)
+    tfs = pc.list_flatten(post.column("tfs")).to_numpy().astype(np.int64)
     if not gaps.size == tfs.size == int(df.sum()):
         raise ValueError(f"postings of shard {shard} do not hold df values")
     # each term row's gaps start absolute: one cumsum, minus the running
@@ -891,78 +902,85 @@ def _invert_postings(tbl, shard: int, base: int, positions: bool = False):
     heads = np.cumsum(df) - df
     cs = np.cumsum(gaps)
     local = cs - np.repeat(cs[heads] - gaps[heads], df) - base
+    if local.size and not 0 <= local.min() <= local.max() < n:
+        raise ValueError(f"postings of shard {shard} name a doc outside "
+                         "its docstore")
     # doc-major; stable, so a doc's entries keep the rows' term order
     order = np.argsort(local, kind="stable")
-    local = local[order]
-    starts = np.concatenate(
-        ([0], np.flatnonzero(np.diff(local)) + 1, [local.size]))
-    entry_terms = col["term"].take(
-        pa.array(np.repeat(np.arange(df.size), df)[order]))
-    names = ["shard", "local_idx", "terms", "tfs"]
-    arrays = [
-        pa.array(np.full(starts.size - 1, shard, dtype=np.int32)),
-        pa.array(local[starts[:-1]]),
-        pc.binary_join(pa.ListArray.from_arrays(
-            pa.array(starts.astype(np.int32)), entry_terms), "\n"),
-        _binary_array(starts * 4, tfs[order].astype(np.int32).view(np.uint8)),
-    ]
+    starts = np.concatenate(([0], np.cumsum(np.bincount(local,
+                                                        minlength=n))))
+    entry_terms = post.column("term").take(
+        pa.array(np.repeat(np.arange(df.size), df)[order])).combine_chunks()
+    cols = {c: docs.column(c).combine_chunks() for c in docs.column_names}
+    cols["terms"] = pc.binary_join(pa.ListArray.from_arrays(
+        pa.array(starts.astype(np.int32)), entry_terms), "\n")
+    cols["tfs"] = _binary_array(
+        starts * 4, tfs[order].astype(np.int32).view(np.uint8))
     if positions:
         big, _len, ent_off = _permute_entries(
-            _binary_values(col["poss"]), tfs, order, f"shard {shard}")
-        names.append("poss")
-        arrays.append(_binary_array(ent_off[starts], big))
-    yield pa.RecordBatch.from_arrays(arrays, names=names)
+            _binary_values(post.column("poss").combine_chunks()), tfs,
+            order, f"shard {shard}")
+        cols["poss"] = _binary_array(ent_off[starts], big)
+    return cols
 
 
 def _forward_rows(spark, index_dir: str, stats: dict, positions: bool,
-                  shards: list[int] | None = None) -> DataFrame:
+                  shards: list[int] | None = None,
+                  remap: str | None = None) -> DataFrame:
     """The forward rows (FORWARD_SCHEMA[_POS]) of an index's documents,
-    regenerated from its postings: a mapInArrow whose tasks (about one
-    per core) each read whole postings files of their shards with
-    pyarrow, as query._TaskDocLens reads tok, and run _invert_postings
-    on them, left-joined onto the docstore so documents without a term
-    (empty, stop-word-only or tombstoned turns) keep their empty row.
-    ``shards``: only those shards' documents. What compaction and update
+    regenerated from its postings with no shuffle: a mapInArrow whose
+    tasks (at most one per core) each read their shards' whole tok and
+    postings files with pyarrow, as query._TaskDocLens reads tok, and
+    run _invert_postings on each shard, so every shard's rows come from
+    one task. ``shards``: only those shards' documents. ``remap``: a dir
+    partitioned like tok whose rows replace tok's and also give each
+    document its new key (to_shard, to_local), which its row then
+    carries (compaction's re-sharding). What compaction and update
     re-shard or re-tokenize, now that the index keeps no forward payload
     at rest. The list columns never pass through the JVM: converting
     them to Arrow row by row cost more than the inversion."""
     offsets = {int(s): int(o) for s, o in stats["shard_offsets"].items()}
-    root = _postings_path(index_dir)
-    cols = ["term", "df", "docs", "tfs"] + (["poss"] if positions else [])
-    schema = "shard int, local_idx long, terms string, tfs binary"
-    if positions:
-        schema += ", poss binary"
+    tok_root, post_root = _tok_path(index_dir), _postings_path(index_dir)
+    doc_cols = [c for c in TOK_COLUMNS if c != "shard"]
+    if remap:
+        doc_cols += ["to_shard", "to_local"]
+    post_cols = ["term", "df", "docs", "tfs"] + (["poss"] if positions
+                                                 else [])
+    names = [*TOK_COLUMNS, "terms", "tfs"] + (["poss"] if positions else [])
 
     def invert(batches):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for rb in batches:
-            for sh in rb.column("shard").to_pylist():
-                files = _shard_files(root, sh)
-                if files:
-                    yield from _invert_postings(
-                        pa.concat_tables(
-                            pq.read_table(f, columns=cols) for f in files),
-                        sh, offsets[sh], positions)
+        def read(root, sh, cols):
+            files = _shard_files(root, sh)
+            if files:
+                return pa.concat_tables(pq.read_table(f, columns=cols)
+                                        for f in files)
 
-    todo = _list_shards(root) if shards is None else shards
-    inv = spark.createDataFrame(
-        [(int(s),) for s in todo], "shard int"
-    ).mapInArrow(invert, schema=schema)
-    # explicit schema: no footer-inference job
-    tok = spark.read.schema(TOK_SCHEMA).parquet(_tok_path(index_dir))
-    if shards is not None:
-        tok = tok.filter(F.col("shard").isin(shards))
-    empty = F.lit(b"").cast("binary")
-    payload = [F.coalesce("terms", F.lit("")).alias("terms"),
-               F.coalesce("tfs", empty).alias("tfs")]
-    if positions:
-        payload.append(F.coalesce("poss", empty).alias("poss"))
-    # a sort-merge join: under the broadcast threshold Spark would build
-    # the hash side from the payload, collecting it through the driver
-    return tok.join(inv.hint("merge"), ["shard", "local_idx"], "left") \
-        .select(*TOK_COLUMNS, *payload)
+        for rb in batches:
+            for sh in map(todo.__getitem__, rb.column("id").to_pylist()):
+                docs = read(remap or tok_root, sh, doc_cols)
+                if docs is None:
+                    continue
+                cols = _invert_postings(docs, read(post_root, sh, post_cols),
+                                        sh, offsets[sh], positions)
+                if remap:
+                    cols["local_idx"] = cols["to_local"]
+                    cols["shard"] = cols["to_shard"]
+                else:
+                    cols["shard"] = pa.array(
+                        np.full(docs.num_rows, sh, dtype=np.int32))
+                yield pa.RecordBatch.from_arrays([cols[c] for c in names],
+                                                 names=names)
+
+    todo = _list_shards(tok_root) if shards is None else [int(s)
+                                                          for s in shards]
+    # spark.range, not createDataFrame over the list: the first local
+    # relation of a session costs ~2 s of JVM warm-up
+    tasks = max(1, min(len(todo), spark.sparkContext.defaultParallelism))
+    return spark.range(0, len(todo), 1, tasks).mapInArrow(
+        invert, schema=FORWARD_SCHEMA_POS if positions else FORWARD_SCHEMA)
 
 
 def _drop_staged(index_dir: str, shards: list[int]) -> None:
@@ -1262,6 +1280,9 @@ def build_index(
     pending = [s for s in range(n_shards) if s not in done]
     if _only_shards is not None:
         pending = [s for s in pending if s in set(_only_shards)]
+    # committed shards' staged rows: a build killed between its postings
+    # commit and the staging drop left them behind
+    _drop_staged(index_dir, sorted(done))
     _stage_postings(spark, index_dir, cfg, stats, pending, lineage)
     _stage_term_stats(spark, index_dir)
     return stats
@@ -1279,8 +1300,8 @@ def compact_index(
     (each with its own tok/postings files and term_stats rows); over
     time the shard count — not the data volume — becomes the cost
     driver. Compaction regenerates the forward rows by inverting the
-    stored postings (_forward_rows: terms, tfs[, poss] per document,
-    joined onto the docstore), re-shards them by the canonical
+    stored postings (_forward_rows: each document's docstore row with
+    its terms, tfs[, poss]), re-shards them by the canonical
     (conv_id, turn_idx) order into ceil(n_docs / shard_docs) shards,
     reassigns dense doc ids, and reruns the postings + stats stages —
     the expensive lexing work is never repeated (no `text` is ever read;
@@ -1337,37 +1358,29 @@ def compact_index(
     )
     n_docs = int(src_stats["n_docs"])
     p = cfg.id_partitions or max(1, math.ceil(n_docs / cfg.shard_docs))
-    carry = ["conv_id", "turn_idx", "role", "doc_len", "terms", "tfs"]
-    if cfg.positions:
-        carry.append("poss")
-    parted = (
-        _forward_rows(spark, src_dir, src_stats, cfg.positions)
-        .select(*carry)
+    # the new doc ids come from the docstore alone: range-partition it
+    # by the canonical key into p shards (shard = partition id, local_idx
+    # = row number in the sorted partition: the low 33 bits of the
+    # monotonic id) and record them per source shard, where the
+    # inverter picks them up. Only the payload's move to its new shard
+    # is a shuffle, and no Python stage runs twice (a range partitioner
+    # samples its input in a job of its own).
+    remap = os.path.join(_staging_root(out_dir), "remap")
+    pid = F.spark_partition_id()
+    (
+        spark.read.schema(TOK_SCHEMA).parquet(_tok_path(src_dir))
         .repartitionByRange(p, "conv_id", "turn_idx")
         .sortWithinPartitions("conv_id", "turn_idx")
-        .withColumn("pid", F.spark_partition_id())
+        .select("shard", "local_idx", pid.alias("to_shard"),
+                (F.monotonically_increasing_id()
+                 - F.shiftleft(pid.cast("long"), 33)).alias("to_local"),
+                "conv_id", "turn_idx", "role", "doc_len")
+        .write.partitionBy("shard").mode("overwrite").parquet(remap)
     )
-
-    def reassign(batches):
-        shard = None
-        local = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if shard is None:
-                shard = int(pdf["pid"].iloc[0])
-            n = len(pdf)
-            out = {"local_idx": local + np.arange(n, dtype=np.int64),
-                   "shard": np.full(n, shard, dtype=np.int32)}
-            local += n
-            for c in carry:
-                out[c] = pdf[c].values
-            yield pd.DataFrame(out)
-
-    fwd = parted.mapInPandas(
-        reassign,
-        schema=FORWARD_SCHEMA_POS if cfg.positions else FORWARD_SCHEMA,
-    )
+    # hashed on the new shard: each shard's rows meet in one task, so
+    # it stages exactly one file
+    fwd = _forward_rows(spark, src_dir, src_stats, cfg.positions,
+                        remap=remap).repartition(p, "shard")
     _write_forward(spark, fwd, out_dir, "static")
     offsets, counts, n_out, total_len = _collect_shard_stats(
         spark, out_dir, p
@@ -1729,14 +1742,12 @@ def update_index(
                         pdf.iat[i, j] = v
             yield pdf[[*TOK_COLUMNS, *payload]]
 
-    sub = (
-        _forward_rows(spark, index_dir, stats, pos_on, affected)
-        .join(F.broadcast(keys), ["conv_id", "turn_idx"], "left")
-        # one task per shard (hash repartition on shard) => each rewritten
-        # shard dir keeps exactly ONE staged file, preserving the
-        # whole-file-task invariant the postings stage relies on
-        .repartition(len(affected), "shard")
-    )
+    # no shuffle: each shard's regenerated rows come from one task and
+    # the broadcast join keeps them there, so each rewritten shard dir
+    # keeps exactly ONE staged file, the whole-file-task invariant the
+    # postings stage relies on
+    sub = _forward_rows(spark, index_dir, stats, pos_on, affected).join(
+        F.broadcast(keys), ["conv_id", "turn_idx"], "left")
     fwd = sub.mapInPandas(
         retok, schema=FORWARD_SCHEMA_POS if pos_on else FORWARD_SCHEMA)
     _write_forward(spark, fwd, index_dir, "dynamic", affected)

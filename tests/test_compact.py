@@ -1,6 +1,6 @@
 """Index compaction (build.compact_index): re-shard an appended index's
 accumulated small shards into full-size ones WITHOUT retokenizing —
-carried terms/tfs[/poss] columns only, text never read. The compacted
+terms/tfs[/poss] regenerated from the postings, text never read. The compacted
 index must be query-identical to a fresh build over the same corpus.
 """
 

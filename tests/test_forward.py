@@ -70,20 +70,26 @@ def _texts():
 
 @pytest.mark.parametrize("positions", [False, True])
 def test_invert_postings_round_trip(positions):
-    """builder -> inverter gives back, for every document, the term ->
-    (tf, positions) map of its text, with terms in UTF-8 order, at doc
-    ids past 2**32; the empty, None and stop-word-only turns own no row.
-    Postings rebuilt from the inverted rows equal the originals."""
+    """builder -> inverter gives back, for every document, its docstore
+    row and the term -> (tf, positions) map of its text, with terms in
+    UTF-8 order, at doc ids past 2**32; the empty, None and
+    stop-word-only turns get an empty payload. Postings rebuilt from the
+    inverted rows equal the originals."""
     texts = _texts()
     shard, base = 3, 2**32 + 5
     cells = list(zip(*(_forward_cells(t, positions) for t in texts)))
-    cols = {
-        "shard": pa.array([shard] * len(texts), pa.int32()),
-        "local_idx": pa.array(np.arange(len(texts), dtype=np.int64)),
+    n = len(texts)
+    tok = pa.table({
+        "local_idx": pa.array(np.arange(n, dtype=np.int64)),
+        "conv_id": pa.array([f"c{i // 7}" for i in range(n)]),
+        "turn_idx": pa.array([i % 7 for i in range(n)], pa.int32()),
+        "role": pa.array(["user", "assistant"] * (n // 2) + ["user"] * (n % 2)),
         "doc_len": pa.array(cells[0], pa.int32()),
-        "terms": pa.array(cells[1], pa.string()),
-        "tfs": pa.array(cells[2], pa.binary()),
-    }
+    })
+    cols = {"shard": pa.array([shard] * n, pa.int32()),
+            "local_idx": tok["local_idx"], "doc_len": tok["doc_len"],
+            "terms": pa.array(cells[1], pa.string()),
+            "tfs": pa.array(cells[2], pa.binary())}
     if positions:
         cols["poss"] = pa.array(cells[3], pa.binary())
     fwd = pa.table(cols)
@@ -96,27 +102,33 @@ def test_invert_postings_round_trip(positions):
     assert common["df"][0].as_py() == 41 and len(common["blocks"][0]) > 1
     assert min(b["last_doc_id"] for b in common["blocks"][0].as_py()) > 2**32
 
-    inv = pa.Table.from_batches(list(_invert_postings(post, shard, base,
-                                                      positions)))
+    # the docstore rows in any order: the inverter sorts them
+    inv = pa.table(_invert_postings(
+        tok.take(pa.array(np.arange(n)[::-1])), post, shard, base,
+        positions))
+    assert inv.select(tok.column_names).equals(tok)
     rows = inv.to_pylist()
-    assert [r["local_idx"] for r in rows] == [
-        i for i, t in enumerate(texts) if _want(t, positions)]
-    assert {0, 1, 2}.isdisjoint(r["local_idx"] for r in rows)
     for r in rows:
         text = texts[r["local_idx"]]
-        assert r["shard"] == shard
         assert _got(r["terms"], r["tfs"], r.get("poss"), positions) == \
             _want(text, positions)
         terms = r["terms"].split("\n")
         assert terms == sorted(terms, key=lambda t: t.encode("utf-8"))
+    assert [i for i, r in enumerate(rows) if not r["terms"]] == [0, 1, 2]
     assert any(not t.isascii() for r in rows for t in r["terms"].split("\n"))
 
-    # the inverted rows (with their documents' lengths) rebuild the same
-    # postings, block metadata and positions included
-    lens = fwd["doc_len"].take(inv["local_idx"])
-    again = pa.Table.from_batches(list(build(inv.append_column("doc_len",
-                                                               lens))))
+    # the inverted rows rebuild the same postings, block metadata and
+    # positions included
+    again = pa.Table.from_batches(list(build(
+        inv.append_column("shard", pa.array([shard] * n, pa.int32())))))
     assert again.equals(post)
+
+    # a shard whose every document is term-less has no postings at all
+    none = _invert_postings(tok.slice(0, 3), None, shard, base, positions)
+    assert none["terms"].to_pylist() == [""] * 3
+    assert none["tfs"].to_pylist() == [b""] * 3
+    if positions:
+        assert none["poss"].to_pylist() == [b""] * 3
 
 
 def _shard_forward_maps(spark, index_dir, positions):

@@ -103,6 +103,36 @@ def test_resume_without_staging_refuses(spark, small_corpus, tmp_path):
     assert _list_shards(_postings_path(d)) == [0]
 
 
+def test_resume_after_commit_drops_staged_rows(spark, small_corpus, tmp_path,
+                                               monkeypatch):
+    """A build killed after its postings commit but before the staging
+    drop: the manifest lists every shard as done, so the resume has
+    nothing pending, and it still removes the staged forward rows."""
+    from indexer_spark import build as B
+
+    d = str(tmp_path / "killed")
+    cfg = BuildConfig(**CFG)
+    drop = B._drop_staged
+
+    def killed(index_dir, shards):
+        if shards:
+            raise RuntimeError("killed before the staging drop")
+        drop(index_dir, shards)
+
+    monkeypatch.setattr(B, "_drop_staged", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        build_index(spark, small_corpus, d, cfg)
+    monkeypatch.undo()
+    m = read_manifest(d)
+    assert {r["shard"] for r in m if r["stage"] == "postings"} == {0, 1, 2, 3}
+    assert _list_shards(_staging_path(d)) == [0, 1, 2, 3]
+
+    build_index(spark, small_corpus, d, cfg, resume=True)
+    assert sorted(os.listdir(d)) == ["manifest.jsonl", "postings",
+                                     "stats.json", "term_stats", "tok"]
+    assert IndexReader(spark, d).search("run dog", 5)
+
+
 def test_resume_is_idempotent_when_complete(spark, small_corpus, tmp_path):
     d = str(tmp_path / "idx")
     cfg = BuildConfig(**CFG)
