@@ -5,9 +5,10 @@ inverted index over sf0.001 documents, BM25-query it, resolve hits).
 
 ``queries()`` / ``oracle_sql()`` expose the SQL-expressible operators of
 SURVEY.md §2 (tokenize/tf A1, df A3-A4, idf F2, tf-idf & BM25 scoring
-A5/F2-F3, top-k T3-T4, doc-id assignment J2/§2.5, dedup + similarity +
-text-stats extras) over the driver's pre-registered tables, each paired
-with a DuckDB oracle. Non-SQL-expressible stages (stemming, varint codec,
+A5/F2-F3, top-k T3-T4, doc-id assignment J2/§2.5, dedup and similarity
+demos written inline here, and the extras' SimHash, shingle and text-stats
+operators) over the driver's pre-registered tables, each paired with a
+DuckDB oracle. Non-SQL-expressible stages (stemming, varint codec,
 block-max pruning, resume) are verified in tests/ against the oracle
 (SURVEY.md §5); rows-only entries here cover the UDF-backed ones.
 
@@ -211,7 +212,7 @@ def _q_bm25_topk(spark, sf_dir):
 def _q_bm25_and_topk(spark, sf_dir):
     # conjunctive (AND) BM25: same scorer as bm25_topk, but only docs
     # containing ALL query terms survive (engine: search(mode="and"),
-    # query.py _aggregate_scores_and; extension beyond the OR-only
+    # query.py _aggregate_scores(n_required); extension beyond the OR-only
     # reference, SURVEY §2.7)
     import math
 
@@ -349,8 +350,7 @@ def _q_minhash_pairs(spark, sf_dir):
     (a band matches only when all 4 minhashes agree => candidates need high
     estimated Jaccard). Hash = md5('i#term') hex string (lexicographic min
     over lowercase hex is identical in Spark and DuckDB), so this entry is
-    fully oracle-checkable; the engine's `minhash_signatures` keeps
-    xxhash64 (cheaper JVM-side, same algorithm)."""
+    fully oracle-checkable."""
     tok = _tokens(spark, sf_dir).distinct()
     sigs = tok.groupBy("doc_id").agg(
         *[
@@ -477,9 +477,9 @@ def _q_tokenize_udf(spark, sf_dir):
 
 
 def _q_simhash(spark, sf_dir):
-    """60-bit SimHash per doc over md5-derived term hashes — the portable
-    variant of the engine's xxhash64 `simhash64`, chosen here because
-    DuckDB computes the identical value (full oracle check)."""
+    """60-bit SimHash per doc over md5-derived term hashes
+    (extras.dedup.simhash_portable); DuckDB computes the identical value
+    (full oracle check)."""
     _ship_package(spark)
     from indexer_spark.extras.dedup import simhash_portable
 
@@ -506,10 +506,9 @@ def _q_lang_id(spark, sf_dir):
 
 
 def _q_fingerprints(spark, sf_dir):
-    """Document fingerprints via the md5-derived 60-bit portable twin
-    (fully oracle-checkable in DuckDB; identical normalization + dedup
-    semantics). The engine's hot path keeps the numpy mod-2^64 polynomial
-    variant (`fingerprints`), pytest-verified in tests/test_extras.py."""
+    """Document fingerprints: 60-bit md5 over whitespace-normalized text
+    (extras.textstats.fingerprints_portable), fully oracle-checkable in
+    DuckDB."""
     _ship_package(spark)
     from indexer_spark.extras.textstats import fingerprints_portable
 

@@ -1184,6 +1184,20 @@ def _stage_postings(
 
 def _stage_term_stats(spark, index_dir) -> None:
     positional = bool(read_stats(index_dir).get("positions"))
+    if not os.path.isdir(_postings_path(index_dir)):
+        # no shard has a document (an empty corpus): commit an empty
+        # term dictionary from the driver, no Spark job
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        cols = ["df", "nbytes"] + (["poss_nbytes"] if positional else [])
+        os.makedirs(_term_stats_path(index_dir), exist_ok=True)
+        pq.write_table(
+            pa.schema([("term", pa.string())]
+                      + [(c, pa.int64()) for c in cols]).empty_table(),
+            os.path.join(_term_stats_path(index_dir), "part-00000.parquet"),
+        )
+        return
     schema = POSTINGS_SCHEMA_POS if positional else POSTINGS_SCHEMA
     post = spark.read.schema(schema).parquet(_postings_path(index_dir))
     # nbytes = compressed postings payload per term: the reader's driver

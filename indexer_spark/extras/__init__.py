@@ -1,8 +1,9 @@
-"""Training-data pipeline operators beyond the reference's surface:
-deduplication, similarity search, text analysis, multimodal plumbing.
+"""Text-analysis and multimodal operators the driver harness declares,
+beyond the paper's full-text index: SimHash and character shingles
+(dedup), language ID, quality scores, token counts and fingerprints
+(textstats), and the image/media plumbing (multimodal).
 
-These are first-class engine components designed for the same 100 TB
-deployment as the index build: JVM-side expressions where possible,
-Arrow-batched pandas UDFs where not, shuffle strategies documented per
-function.
+Each text operator is a JVM-side expression that a DuckDB query mirrors
+bit for bit (the harness's `oracle_sql`); the multimodal decoders run
+through Arrow-batched mapInPandas.
 """

@@ -1,39 +1,8 @@
-"""Deduplication operators: exact, MinHash+LSH, SimHash, n-gram Jaccard,
-embedding-cosine near-dup.
-
-Scale notes (the 100 TB story):
-- every candidate-generation step is a hash-partitioned groupBy/self-join
-  on a bucket key, never an all-pairs product;
-- signatures are fixed-width (64 aggregate columns max), computed in one
-  shuffle over the exploded token table with map-side partial aggregation;
-- bucket self-joins are equi-joins on (band, bucket) — AQE skew-join
-  handles pathological buckets; `max_bucket_size` drops degenerate buckets
-  (e.g. the empty-text bucket) the way production dedup pipelines do;
-- verification (exact Jaccard / cosine) runs only on candidate pairs.
-"""
-
-# NOTE: no `from __future__ import annotations` - pandas_udf needs real hints
+"""Near-duplicate operators the driver harness declares: SimHash over
+md5-derived term hashes and character n-gram shingles. Both are JVM-side
+and mirrorable in ANSI SQL, so a DuckDB oracle checks them bit for bit."""
 
 from pyspark.sql import DataFrame, functions as F
-
-# one live persisted frame per operator: each call releases its
-# predecessor, so long-lived sessions (benches, services) never
-# accumulate cached candidate frames (review finding: persists had no
-# unpersist path). A caller still holding the PREVIOUS returned frame
-# merely loses the cache and recomputes — correctness is unaffected.
-_LIVE_CACHE: dict = {}
-
-
-def _persist_slot(name: str, df: DataFrame) -> DataFrame:
-    old = _LIVE_CACHE.get(name)
-    if old is not None:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    df = df.persist()
-    _LIVE_CACHE[name] = df
-    return df
 
 
 def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -43,178 +12,14 @@ def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def exact_duplicates(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
-    """Exact dedup via content-hash groupBy (one shuffle on the hash)."""
-    return (
-        df.groupBy(F.md5(F.col(text_col)).alias("content_hash"))
-        .agg(
-            F.count("*").alias("n_dups"),
-            F.min(id_col).alias("keeper"),
-            F.collect_list(id_col).alias("members"),
-        )
-        .filter(F.col("n_dups") > 1)
-    )
-
-
-def minhash_signatures(
-    df: DataFrame, text_col="text", id_col="doc_id", num_hashes: int = 32
-) -> DataFrame:
-    """MinHash signatures: min over xxhash64(term, i) per doc — one
-    exploded-token shuffle, num_hashes JVM-side min() aggregates (partial
-    map-side combine keeps the shuffle at O(docs), not O(tokens))."""
-    tok = _tokens(df, text_col, id_col).distinct()
-    aggs = [
-        F.min(F.xxhash64(F.col("term"), F.lit(i))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return tok.groupBy(id_col).agg(*aggs)
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    id_col="doc_id",
-    bands: int = 8,
-    rows_per_band: int = 4,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """Band the signatures and self-join on (band, bucket).
-
-    A pair is a candidate iff all `rows_per_band` minhashes agree in some
-    band (P[candidate] ≈ 1-(1-j^r)^b for Jaccard j). Buckets larger than
-    `max_bucket_size` are dropped (degenerate content; avoids the
-    quadratic blowup a hot bucket causes at scale)."""
-    band_frames = []
-    for bnd in range(bands):
-        cols = [F.col(f"mh{bnd * rows_per_band + r}") for r in range(rows_per_band)]
-        band_frames.append(
-            sigs.select(
-                F.col(id_col).alias("doc"),
-                F.lit(bnd).alias("band"),
-                F.xxhash64(*cols).alias("bucket"),
-            )
-        )
-    allb = band_frames[0]
-    for x in band_frames[1:]:
-        allb = allb.unionByName(x)
-    # persist: the banded frame feeds the bucket-size agg AND both sides
-    # of the self-join; without this the signature computation's
-    # correctness-as-one-snapshot relies on Spark's ReuseExchange finding
-    # identical subplans (it does today, but that's an optimizer detail).
-    # Spark's LRU cache eviction bounds the footprint; a 100 TB pipeline
-    # would checkpoint the signatures to a table here instead.
-    allb = _persist_slot("minhash_bands", allb)
-    sized = allb.join(
-        allb.groupBy("band", "bucket").count(), ["band", "bucket"]
-    ).filter(F.col("count") <= max_bucket_size)
-    a, b = sized.alias("a"), sized.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-
-
-#: broadcast the candidate-id set into the token scan when there are at
-#: most this many candidate docs (2x the pair count): the collect_set
-#: aggregation then runs over candidates only instead of the whole
-#: corpus (measured 20.2 s of the 45.1 s MinHash end-to-end at 2M docs
-#: was this verify step, with candidates ~10% of docs). Above the cap,
-#: the corpus-wide aggregation path stays (always safe).
-VERIFY_BROADCAST_MAX_IDS = 5_000_000
-
-
-def verify_jaccard(
-    df: DataFrame, pairs: DataFrame, text_col="text", id_col="doc_id",
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Exact token-set Jaccard on candidate pairs only (two broadcast-or-
-    shuffle hash joins against the per-doc token sets, then JVM array
-    intersection — no UDF). Token sets are aggregated for CANDIDATE docs
-    only when the candidate-id set is broadcastable (semi-join pushed
-    below the aggregation — only rows that would survive the pair joins
-    are ever aggregated, so results are unchanged)."""
-    pairs = _persist_slot("verify_pairs", pairs)
-    n_pairs = pairs.count()  # materializes the persisted candidates once
-    tok = _tokens(df, text_col, id_col)
-    if 2 * n_pairs <= VERIFY_BROADCAST_MAX_IDS:
-        cand_ids = (
-            pairs.select(F.col("doc_a").alias(id_col))
-            .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
-            .distinct()
-        )
-        tok = tok.join(F.broadcast(cand_ids), id_col, "left_semi")
-    sets = (
-        tok.groupBy(id_col)
-        .agg(F.collect_set("term").alias("terms"))
-    )
-    j = (
-        pairs.join(sets.withColumnRenamed(id_col, "doc_a")
-                   .withColumnRenamed("terms", "terms_a"), "doc_a")
-        .join(sets.withColumnRenamed(id_col, "doc_b")
-              .withColumnRenamed("terms", "terms_b"), "doc_b")
-    )
-    inter = F.size(F.array_intersect("terms_a", "terms_b"))
-    union = F.size(F.array_union("terms_a", "terms_b"))
-    return (
-        j.select(
-            "doc_a", "doc_b",
-            (inter / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def minhash_near_duplicates(
-    df: DataFrame, text_col="text", id_col="doc_id",
-    num_hashes=32, bands=8, threshold=0.8,
-) -> DataFrame:
-    """Full MinHash+LSH pipeline: signatures -> banding -> candidate pairs
-    -> exact-Jaccard verification at `threshold`."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes)
-    pairs = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
-    return verify_jaccard(df, pairs, text_col, id_col, threshold)
-
-
-def simhash64(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
-    """64-bit SimHash over tf-weighted term hashes, fully JVM-side:
-    per bit i, sum(tf * (+1 if bit set else -1)); bit i of the output is
-    1 iff that sum > 0. One exploded shuffle, 64 conditional-sum
-    aggregates with map-side combine."""
-    tok = (
-        _tokens(df, text_col, id_col)
-        .groupBy(id_col, "term")
-        .agg(F.count("*").alias("tf"))
-        .withColumn("h", F.xxhash64("term"))
-    )
-    aggs = []
-    for i in range(64):
-        bit = F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1))
-        aggs.append(
-            F.sum(F.when(bit == 1, F.col("tf")).otherwise(-F.col("tf"))).alias(f"s{i}")
-        )
-    sums = tok.groupBy(id_col).agg(*aggs)
-    sim = F.lit(0).cast("long")
-    for i in range(64):
-        sim = sim + F.when(
-            F.col(f"s{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)
-        ).otherwise(F.lit(0).cast("long"))
-    return sums.select(id_col, sim.alias("simhash"))
-
-
 def simhash_portable(
     df: DataFrame, text_col="text", id_col="doc_id", bits: int = 60
 ) -> DataFrame:
     """SimHash over md5-derived term hashes (first 15 hex chars -> 60-bit
-    int) instead of xxhash64 — same algorithm as `simhash64`, but every
-    step is expressible in ANSI SQL, so a DuckDB oracle can hash-match it
-    (the driver harness uses this variant; `simhash64` stays the engine
-    default because xxhash64 is cheaper JVM-side)."""
+    int): per bit i, sum(tf * (+1 if bit set else -1)); bit i of the
+    output is 1 iff that sum > 0. Every step is expressible in ANSI SQL,
+    so a DuckDB oracle can hash-match it (the driver harness's `simhash`
+    entry)."""
     tok = (
         _tokens(df, text_col, id_col)
         .groupBy(id_col, "term")
@@ -238,72 +43,11 @@ def simhash_portable(
     return sums.select(id_col, sim.alias("simhash"))
 
 
-def simhash_near_duplicates(
-    df: DataFrame, text_col="text", id_col="doc_id", max_hamming: int = 3,
-    max_block_size: int = 1000,
-) -> DataFrame:
-    """SimHash near-dup: block on 4 x 16-bit chunks (pigeonhole: any pair
-    within hamming distance 3 shares at least one exact chunk), then
-    verify the full hamming distance on candidates — the standard
-    Manku/Jain/Sarma chunk-join, linear in docs per block.
-
-    ``max_block_size`` drops chunk-key blocks above the cap before the
-    self-join, the same sized-join guard as lsh_candidate_pairs /
-    embedding_near_duplicates: a 16-bit chunk space has only 65,536 keys,
-    so at 10^7+ Zipf-ish docs the mean block alone goes quadratic
-    (C(305, 2) pairs/key/chunk at 20M docs ≈ 10^10 candidates). Docs in a
-    dropped block are near-identical boilerplate by construction; exact
-    dedup (hash-groupBy) owns that mass."""
-    sh = simhash64(df, text_col, id_col)
-    chunks = []
-    for c in range(4):
-        chunks.append(
-            sh.select(
-                F.col(id_col).alias("doc"),
-                F.col("simhash"),
-                F.lit(c).alias("chunk"),
-                F.shiftrightunsigned("simhash", c * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("key"),
-            )
-        )
-    allc = chunks[0]
-    for x in chunks[1:]:
-        allc = allc.unionByName(x)
-    # persist: feeds the block-size agg AND both self-join sides (one
-    # snapshot; same rationale as lsh_candidate_pairs)
-    allc = _persist_slot("simhash_chunks", allc)
-    allc = allc.join(
-        allc.groupBy("chunk", "key").count(), ["chunk", "key"]
-    ).filter(F.col("count") <= max_block_size)
-    a, b = allc.alias("a"), allc.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 def char_shingles(
     df: DataFrame, text_col="text", id_col="doc_id", n: int = 5
 ) -> DataFrame:
-    """Character n-gram shingles, JVM-side (sequence + substring), for
-    n-gram Jaccard dedup: feed the result into minhash on 'term'."""
+    """Character n-gram shingles, JVM-side (sequence + substring): the
+    shingle sets behind n-gram Jaccard dedup, one row per (doc, term)."""
     s = F.lower(F.col(text_col))
     idx = F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(1)))
     return df.select(
@@ -311,97 +55,3 @@ def char_shingles(
         F.explode(F.transform(idx, lambda i: s.substr(i, F.lit(n)))).alias("term"),
     ).filter(F.length("term") == n)
 
-
-def embedding_near_duplicates(
-    emb: DataFrame, vec_col="embedding", id_col="vec_id",
-    n_planes: int = 12, n_tables: int = 3, multiprobe: bool = True,
-    threshold: float = 0.95, max_bucket_size: int = 1000, seed: int = 42,
-) -> DataFrame:
-    """Embedding near-dup: random-hyperplane LSH, then exact cosine
-    verification on candidates only.
-
-    Scale + recall hardening:
-    - ``n_tables`` independent plane sets: a pair is a candidate if it
-      collides in ANY table (recall 1-(1-p)^T for per-table collision p);
-    - ``multiprobe``: each vector also lands in the n_planes buckets at
-      Hamming distance 1 from its code, so pairs whose codes differ by up
-      to 2 bits still collide (flip-flip meets in the middle). At 12
-      planes / cos 0.95 this lifts per-table recall from ~0.28 to ~0.89,
-      and 3 tables to >0.99 — asserted against brute force in
-      tests/test_extras.py;
-    - ``max_bucket_size``: buckets above the cap are dropped before the
-      self-join (degenerate content — e.g. all-zero embeddings — would
-      otherwise go quadratic), same sized-join guard as
-      lsh_candidate_pairs.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType
-
-    rng = np.random.default_rng(seed)
-    first = emb.select(F.size(vec_col).alias("d")).first()
-    dim = int(first["d"])
-    # (tables, dim, planes); each table tagged into a disjoint id space
-    planes = rng.standard_normal((n_tables, dim, n_planes))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def buckets_of(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy())  # (batch, dim)
-        out = []
-        codes_per_table = []
-        for t in range(n_tables):
-            bits = (m @ planes[t]) > 0
-            code = np.zeros(len(m), dtype=np.int64)
-            for i in range(n_planes):
-                code |= bits[:, i].astype(np.int64) << i
-            codes_per_table.append(code | (np.int64(t) << 56))
-        for r in range(len(m)):
-            row = []
-            for t in range(n_tables):
-                c = codes_per_table[t][r]
-                row.append(int(c))
-                if multiprobe:
-                    row.extend(int(c ^ (1 << i)) for i in range(n_planes))
-            out.append(row)
-        return pd.Series(out)
-
-    vd = emb.select(
-        id_col,
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-    ).withColumn("bucket", F.explode(buckets_of("v")))
-    # persist: the bucket frame feeds the size agg and both join sides —
-    # one pandas-UDF bucketing pass, not three (and no reliance on
-    # ReuseExchange); LRU eviction bounds memory, a 100 TB pipeline would
-    # write the buckets out as a table instead
-    vd = _persist_slot("embedding_buckets", vd)
-    # sized-join cap: drop degenerate buckets before the self-join
-    sized = vd.join(
-        vd.groupBy("bucket").count(), "bucket"
-    ).filter(F.col("count") <= max_bucket_size).drop("count")
-    a, b = sized.alias("a"), sized.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-    )
-    sq = lambda c: F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x * x), F.lit(0.0), lambda s, x: s + x
-    )
-    return (
-        cand.select(
-            "id_a", "id_b",
-            (dot / F.sqrt(sq(F.col("va")) * sq(F.col("vb")))).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )

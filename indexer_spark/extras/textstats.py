@@ -1,14 +1,9 @@
 """Text analysis operators: language ID, quality scoring, token counting,
-document fingerprinting. All JVM-side expressions except language ID
-(Arrow-batched pandas UDF over a tiny deterministic character/stopword
-profile — no external model, per sandbox rules)."""
+document fingerprinting. All are JVM-side expressions mirrorable in ANSI
+SQL; language ID scores a tiny deterministic character/stopword profile
+(no external model)."""
 
-# NOTE: no `from __future__ import annotations` - pandas_udf needs real hints
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import LongType, StringType
 
 # minimal, deterministic per-language profiles: distinctive stopwords +
 # distinctive characters. An n-gram heuristic, not a trained model.
@@ -26,8 +21,7 @@ def language_id(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
     CJK is detected by Unicode range (first 200 chars).
 
     Fully JVM-side (whole-stage codegen, no Python in the loop) and
-    mirrorable in ANSI SQL — `language_id_udf` keeps the original
-    Arrow-batched formulation; tests assert the two agree."""
+    mirrorable in ANSI SQL."""
     low = F.lower(F.col(text_col))
     words = F.slice(
         F.filter(F.split(low, r"\s+"), lambda x: x != ""), 1, 200
@@ -56,32 +50,6 @@ def language_id(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
         .otherwise("und")
     )
     return df.select(id_col, pred.alias("lang_pred"))
-
-
-def language_id_udf(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
-    """Arrow-batched pandas-UDF formulation of `language_id` (the original
-    round-1 path) — kept as the semantics oracle for the expression
-    version; identical output."""
-
-    @F.pandas_udf(StringType())
-    def lid(texts: pd.Series) -> pd.Series:
-        def one(t):
-            if not t:
-                return "und"
-            low = t.lower()
-            if any("一" <= c <= "鿿" for c in low[:200]):
-                return "zh"
-            words = set(low.split()[:200])
-            best, best_score = "und", 0
-            for lang, (stops, chars) in _LANG_PROFILES.items():
-                score = 2 * len(words & stops) + sum(low.count(c) for c in chars)
-                if score > best_score:
-                    best, best_score = lang, score
-            return best
-
-        return texts.map(one)
-
-    return df.select(id_col, lid(F.col(text_col)).alias("lang_pred"))
 
 
 def quality_scores(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
@@ -140,12 +108,11 @@ def token_counts(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
 
 def fingerprints_portable(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
     """Cross-engine-checkable document fingerprint: 60-bit integer from
-    md5 over whitespace-normalized text (same normalization as
-    `fingerprints`). Same dedup semantics — equal fingerprints <=>
-    identical normalized text — but computable bit-for-bit in DuckDB SQL
+    md5 over whitespace-normalized text (0 for empty text). Equal
+    fingerprints <=> identical normalized text, and the value is
+    computable bit-for-bit in DuckDB SQL
     (`('0x' || substr(md5(norm), 1, 15))::BIGINT`), so the driver harness
-    can oracle-check it; the engine keeps the numpy polynomial variant
-    (`fingerprints`) for the hot path. Fully JVM-side (md5 + conv)."""
+    can oracle-check it. Fully JVM-side (md5 + conv)."""
     norm = F.array_join(
         F.filter(
             F.split(F.coalesce(F.col(text_col), F.lit("")), r"\s+"),
@@ -160,31 +127,3 @@ def fingerprints_portable(df: DataFrame, text_col="text", id_col="doc_id") -> Da
         .otherwise(fp)
         .alias("fingerprint"),
     )
-
-
-_FP_BASE = np.uint64(1099511628211)
-
-
-def fingerprints(df: DataFrame, text_col="text", id_col="doc_id") -> DataFrame:
-    """64-bit document fingerprint: polynomial rolling hash
-    h = sum(byte_i * BASE^(n-1-i)) mod 2^64 over the UTF-8 bytes of
-    whitespace-normalized text. Fully numpy-vectorized per row (uint64
-    wraparound IS the modulus — no Python-level byte loop); stable across
-    partitions/runs, so equal fingerprints <=> near-certain duplicates."""
-
-    @F.pandas_udf(LongType())
-    def fp(texts: pd.Series) -> pd.Series:
-        def one(t):
-            if not t:
-                return 0
-            norm = " ".join(t.split())
-            b = np.frombuffer(norm.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-            pw = np.full(b.size, _FP_BASE, dtype=np.uint64)
-            pw[0] = 1
-            np.cumprod(pw, out=pw)  # [1, B, B^2, ...] mod 2^64
-            h = np.sum(b * pw[::-1], dtype=np.uint64)
-            return int(h.astype(np.int64))
-
-        return texts.map(one)
-
-    return df.select(id_col, fp(F.col(text_col)).alias("fingerprint"))

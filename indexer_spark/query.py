@@ -255,7 +255,7 @@ def _cache_cap_release() -> None:
             _CACHE_CAP_ORIG = None
 
 
-def _aggregate_scores(id_chunks, score_chunks):
+def _aggregate_scores(id_chunks, score_chunks, n_required: int = 0):
     """Per-term contribution arrays -> per-doc sums, O(n) with no sort.
 
     doc_ids are DENSE (engine-assigned, §2.5), so a [min, max] range
@@ -267,11 +267,20 @@ def _aggregate_scores(id_chunks, score_chunks):
     reduceat, so float results are bit-identical and stay pinned to the
     oracle's (sorted unique terms) order.
 
-    Exact-zero sums are dropped by the nonzero scan — for TF-IDF this IS
-    quirk P8 (tree.rs:456-459); BM25 contributions are strictly positive
-    (idf > 0 for df < N), so nothing real is lost."""
+    Disjunctive (OR, ``n_required`` 0): exact-zero sums are dropped by
+    the nonzero scan — for TF-IDF this IS quirk P8 (tree.rs:456-459);
+    BM25 contributions are strictly positive (idf > 0 for df < N), so
+    nothing real is lost.
+
+    Conjunctive (AND, ``n_required`` > 0): keeps only docs that appear
+    in exactly ``n_required`` chunks, zero sums included. Chunks are per
+    (term, shard) and shards partition doc_ids, so a doc appears in at
+    most one chunk per term — chunk-membership count == distinct-query-
+    term count. An int32 membership counter runs beside the accumulator
+    (the sparse fallback counts via reduceat group sizes); the sums are
+    the OR path's, bit for bit, for surviving docs."""
     nonempty = [c for c in id_chunks if c.size]
-    if not nonempty:
+    if not nonempty or len(nonempty) < n_required:
         z = np.zeros(0, dtype=np.int64)
         return z, np.zeros(0, dtype=np.float64)
     lo = min(int(c[0]) for c in nonempty)  # chunks are doc_id-sorted
@@ -291,69 +300,29 @@ def _aggregate_scores(id_chunks, score_chunks):
         np.not_equal(ids[1:], ids[:-1], out=firsts[1:])
         starts = np.nonzero(firsts)[0]
         sums = np.add.reduceat(sc, starts)
-        keep = sums != 0.0
+        if n_required:
+            keep = np.diff(np.append(starts, ids.size)) == n_required
+        else:
+            keep = sums != 0.0
         return ids[starts][keep], sums[keep]
     acc = np.zeros(span, dtype=np.float64)
+    cnt = np.zeros(span, dtype=np.int32) if n_required else None
     for d, s in zip(id_chunks, score_chunks):
         if d.size:
             acc[d - lo] += s
-    nz = np.nonzero(acc)[0]
-    return nz + lo, acc[nz]
-
-
-def _aggregate_scores_and(id_chunks, score_chunks, n_required: int):
-    """Conjunctive (AND) aggregation: per-doc sums KEEPING only docs that
-    appear in exactly ``n_required`` chunks. Chunks are per (term, shard)
-    and shards partition doc_ids, so a doc appears in at most one chunk
-    per term — chunk-membership count == distinct-query-term count.
-    Same dense range accumulator as _aggregate_scores (same chunk order,
-    so float sums are bit-identical to the OR path for surviving docs),
-    plus an int32 membership counter; the sparse fallback counts via
-    reduceat group sizes."""
-    nonempty = [c for c in id_chunks if c.size]
-    if len(nonempty) < n_required:
-        z = np.zeros(0, dtype=np.int64)
-        return z, np.zeros(0, dtype=np.float64)
-    lo = min(int(c[0]) for c in nonempty)
-    hi = max(int(c[-1]) for c in nonempty)
-    span = hi - lo + 1
-    n_total = sum(c.size for c in nonempty)
-    if span > max(4 * n_total, 1 << 20):
-        ids = np.concatenate(id_chunks)
-        sc = np.concatenate(score_chunks)
-        order = np.argsort(ids, kind="stable")
-        ids, sc = ids[order], sc[order]
-        firsts = np.empty(ids.size, dtype=bool)
-        firsts[0] = True
-        np.not_equal(ids[1:], ids[:-1], out=firsts[1:])
-        starts = np.nonzero(firsts)[0]
-        sums = np.add.reduceat(sc, starts)
-        sizes = np.diff(np.append(starts, ids.size))
-        keep = sizes == n_required
-        return ids[starts][keep], sums[keep]
-    acc = np.zeros(span, dtype=np.float64)
-    cnt = np.zeros(span, dtype=np.int32)
-    for d, s in zip(id_chunks, score_chunks):
-        if d.size:
-            acc[d - lo] += s
-            cnt[d - lo] += 1
-    hit = np.nonzero(cnt == n_required)[0]
+            if cnt is not None:
+                cnt[d - lo] += 1
+    hit = np.nonzero(acc if cnt is None else cnt == n_required)[0]
     return hit + lo, acc[hit]
 
 
 # per-shard driver aggregation goes thread-parallel past this many total
-# postings (below it, pool startup costs more than it saves); threads
-# default to 4 — numpy's scatter/nonzero kernels release the GIL enough
+# postings (below it, pool startup costs more than it saves) on 4
+# threads — numpy's scatter/nonzero kernels release the GIL enough
 # for ~3x there, and MORE threads regress on memory-bus contention
 # (measured on 306x63k-posting shards: seq 0.99 s, 4T 0.31 s, 16T 0.71 s)
 _SHARDED_MIN_POSTINGS = 500_000
-
-
-def _score_threads() -> int:
-    try:
-        return max(1, int(os.environ.get("INDEXER_SPARK_SCORE_THREADS", "4")))
-    except (TypeError, ValueError):
-        return 4
+_SCORE_THREADS = 4
 
 
 def _resolve_score_chunks(scc: list) -> list:
@@ -389,9 +358,7 @@ def _aggregate_scores_sharded(chunks_by_shard: dict, k: int,
 
     def agg(idc, scc):
         scc = _resolve_score_chunks(scc)
-        if require_all:
-            return _aggregate_scores_and(idc, scc, require_all)
-        return _aggregate_scores(idc, scc)
+        return _aggregate_scores(idc, scc, require_all)
 
     if len(shards) <= 1 or n_total < _SHARDED_MIN_POSTINGS:
         flat_ids = [c for sh in shards for c in chunks_by_shard[sh][0]]
@@ -409,7 +376,7 @@ def _aggregate_scores_sharded(chunks_by_shard: dict, k: int,
 
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(_score_threads()) as ex:
+    with ThreadPoolExecutor(_SCORE_THREADS) as ex:
         res = list(ex.map(work, shards))
     return (
         np.concatenate([r[0] for r in res]),
@@ -582,12 +549,7 @@ def _make_exhaustive_scorer(
                 contrib = w * tf
             id_chunks.append(d)
             sc_chunks.append(contrib)
-        if require_all:
-            uids, sums = _aggregate_scores_and(
-                id_chunks, sc_chunks, require_all
-            )
-        else:
-            uids, sums = _aggregate_scores(id_chunks, sc_chunks)
+        uids, sums = _aggregate_scores(id_chunks, sc_chunks, require_all)
         if kind == "tfidf":
             keep = sums != 0.0  # P8: drop exact-zero scores (tree.rs:456-459)
             uids, sums = uids[keep], sums[keep]
@@ -612,7 +574,7 @@ def _make_and_scorer(
     therefore touches O(df_rarest) postings of a hot term instead of all
     of them. Survivor scores use the same per-element arithmetic and
     sorted-term addition order as the exhaustive AND accumulator
-    (_aggregate_scores_and), so results are bit-identical to
+    (_aggregate_scores with n_required), so results are bit-identical to
     mode-exhaustive conjunction; blocks go through the worker-side
     decoded LRU under the pruned scorer's exact keys."""
     small_shard = SMALL_SHARD_THRESHOLD

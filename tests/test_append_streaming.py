@@ -251,6 +251,68 @@ def test_fresh_rebuild_removes_stale_shards(spark, tmp_path):
         assert r1.search(q, 10) == r2.search(q, 10)
 
 
+MODES = ("pruned", "exhaustive", "and", "phrase", "near", "bool")
+
+
+def _build_empty(spark, d):
+    """A positional index over a corpus with zero rows."""
+    a, _b = _batches(spark)
+    schema = spark.createDataFrame(a.iloc[:1]).schema
+    return build_index(spark, spark.createDataFrame([], schema), d,
+                       BuildConfig(positions=True, **CFG))
+
+
+def _answers(df):
+    """search_df's answer as rows; None means nothing matches."""
+    return [] if df is None else sorted(tuple(r) for r in df.collect())
+
+
+def test_zero_row_build(spark, tmp_path):
+    """A corpus with zero rows builds an n_docs 0 index that every search
+    mode answers with no hits, on the driver and in the distributed
+    plan."""
+    d = str(tmp_path / "empty")
+    stats = _build_empty(spark, d)
+    assert stats["n_docs"] == 0 and read_stats(d)["n_docs"] == 0
+    r = IndexReader(spark, d)
+    try:
+        for q in ("run dog", "fast table", "the"):
+            for mode in MODES:
+                assert r.search(q, 10, mode=mode) == []
+                assert _answers(r.search_df(q, 10, mode=mode)) == []
+            assert r.search_tfidf(q) == []
+            assert r.search_tfidf(q, k=None) == []
+    finally:
+        r.close()
+
+
+def test_append_onto_zero_row_index(spark, tmp_path):
+    """Appending a batch to a zero-row index answers like a fresh build
+    of the batch."""
+    a, _b = _batches(spark)
+    d, ref = str(tmp_path / "empty"), str(tmp_path / "ref")
+    _build_empty(spark, d)
+    got = append_index(spark, spark.createDataFrame(a), d, BuildConfig(**CFG))
+    want = build_index(spark, spark.createDataFrame(a), ref,
+                       BuildConfig(positions=True, **CFG))
+    for key in ("n_docs", "total_len", "avgdl", "positions"):
+        assert got[key] == want[key]
+    words = a["text"].iloc[0].split()
+    queries = ["run dog", "fast table", " ".join(words[:2])]
+    r1, r2 = IndexReader(spark, d), IndexReader(spark, ref)
+    try:
+        for q in queries:
+            for mode in MODES:
+                assert r1.search(q, 10, mode=mode) == r2.search(q, 10, mode=mode)
+                assert (_answers(r1.search_df(q, 10, mode=mode))
+                        == _answers(r2.search_df(q, 10, mode=mode)))
+            assert r1.search_tfidf(q, k=None) == r2.search_tfidf(q, k=None)
+        assert any(r2.search(q, 10) for q in queries)
+    finally:
+        r1.close()
+        r2.close()
+
+
 def test_append_pins_encoding_params(spark, tmp_path):
     """Appending with a mismatched block_size/k1/b must use the values the
     index was built with (a block_size mismatch corrupts per-block decode

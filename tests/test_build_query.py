@@ -936,7 +936,7 @@ def test_sharded_aggregation_and_mode_identity():
         by_shard[sh] = (idc, scc)
         flat_ids.extend(idc)
         flat_sc.extend(scc)
-    want_ids, want_sums = Q._aggregate_scores_and(flat_ids, flat_sc, 2)
+    want_ids, want_sums = Q._aggregate_scores(flat_ids, flat_sc, 2)
     want = dict(zip(want_ids.tolist(), want_sums.tolist()))
     orig = Q._SHARDED_MIN_POSTINGS
     try:
