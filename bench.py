@@ -3,7 +3,10 @@
 Synthesizes a deterministic transcripts corpus sized by the scale factor
 of $SPARK_GRAFT_SF_DIR (per BASELINE.json input_hint — the corpus shape is
 fixed; no external data), builds the full compressed inverted index with
-the engine, then runs the reference query set warm.
+the engine, then runs the reference query set warm. Outside the light
+mode it also builds a positional index of the same corpus and times the
+query set's adjacent-word pairs as phrase, near and bool ('"a b" OR b')
+queries (phrase_warm_total, near_warm_total, bool_warm_total).
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -218,6 +221,30 @@ def main():
                 r2.search(queries[2], 10, mode="and")
                 timings["bm25_and_dist"] = round(time.time() - t0, 3)
         log(f"queries: p50={timings['bm25_p50']}s p95={timings['bm25_p95']}s")
+        if not light:
+            # positional modes: the same query set as adjacent-word pairs,
+            # warm, on a second index built with positions (the one above
+            # has none; its build wall stays the headline's)
+            ops = {"and", "or", "not"}  # bool operators, not words
+            pairs = [(a, b) for q in queries
+                     for a, b in zip(q.split(), q.split()[1:])
+                     if not {a.lower(), b.lower()} & ops]
+            pos_dir = tempfile.mkdtemp(prefix="indexer_spark_bench_pos_")
+            try:
+                t0 = time.time()
+                build_index(spark, sdf, pos_dir, BuildConfig(
+                    block_size=128, id_partitions=n_shards, positions=True))
+                timings["build_positions"] = round(time.time() - t0, 3)
+                with IndexReader(spark, pos_dir) as pr:
+                    for mode, fmt in (("phrase", "{} {}"), ("near", "{} {}"),
+                                      ("bool", '"{} {}" OR {}')):
+                        t0 = time.time()
+                        for a, b in pairs:
+                            pr.search(fmt.format(a, b, b), 10, mode=mode)
+                        timings[f"{mode}_warm_total"] = round(
+                            time.time() - t0, 3)
+            finally:
+                shutil.rmtree(pos_dir, ignore_errors=True)
 
         # headline metric DEFINITION (changed round 4, documented in
         # BENCH/BASELINE.md): build + warm_hot + warm query set — the

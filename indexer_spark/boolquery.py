@@ -89,8 +89,12 @@ class ParsedQuery:
     root: object  # Term | Phrase | And | Or | None (None: matches nothing)
     pos_terms: list[str] = field(default_factory=list)  # sorted distinct
     neg_terms: list[str] = field(default_factory=list)
-    has_phrase: bool = False
+    phrase_terms: list[str] = field(default_factory=list)  # sorted distinct
     has_prefix: bool = False  # Prefix atoms present: rewrite before eval
+
+    @property
+    def has_phrase(self) -> bool:
+        return bool(self.phrase_terms)
 
 
 _TOK = re.compile(r'"([^"]*)"|(\()|(\))|([^\s()"]+)')
@@ -245,7 +249,7 @@ def _collect(node, pos: set, neg: set, under_not: bool, flags: dict):
     elif isinstance(node, Prefix):
         flags["prefix"] = True
     elif isinstance(node, Phrase):
-        flags["phrase"] = True
+        flags["phrase"].update(node.terms)
         (neg if under_not else pos).update(node.terms)
     elif isinstance(node, And):
         for c in node.pos:
@@ -276,10 +280,10 @@ def from_root(root) -> ParsedQuery:
     rewriting turns Prefix atoms into Or-of-Term groups)."""
     pos: set[str] = set()
     neg: set[str] = set()
-    flags = {"phrase": False, "prefix": False}
+    flags = {"phrase": set(), "prefix": False}
     _collect(root, pos, neg, False, flags)
-    return ParsedQuery(root, sorted(pos), sorted(neg), flags["phrase"],
-                       flags["prefix"])
+    return ParsedQuery(root, sorted(pos), sorted(neg),
+                       sorted(flags["phrase"]), flags["prefix"])
 
 
 def cap_expansions(pairs: list[tuple[str, int]],

@@ -99,22 +99,30 @@ def _bm25_idf(n: int, df: int) -> float:
     return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
 
-def _topk_merge(ids: np.ndarray, scores: np.ndarray, k: int):
-    """Exact top-k with (score desc, doc_id asc) tiebreak.
+def _top_order(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """Indices of the top ``k`` of (ids, scores) in (score desc, id asc)
+    order: an O(n) argpartition narrows to every element scoring >= the
+    k-th best, then a lexsort orders only those. Ties at the boundary
+    stay in the narrowed set, so the id-asc tiebreak is exact."""
+    if k < ids.size:
+        kth = -np.partition(-scores, k - 1)[k - 1]
+        sub = np.flatnonzero(scores >= kth)
+        return sub[np.lexsort((ids[sub], -scores[sub]))[:k]]
+    return np.lexsort((ids, -scores))[:k]
 
-    For large candidate sets, an O(n) argpartition narrows to every
-    element scoring >= the k-th best BEFORE the O(m log m) lexsort —
-    a full sort of millions of candidates for a top-10 was the single
-    biggest cost of hot-term queries. Ties at the boundary are kept in
-    the narrowed set, so the doc_id-asc tiebreak stays exact."""
+
+def _topk_merge(ids: np.ndarray, scores: np.ndarray, k: int | None):
+    """Exact top-k with (score desc, doc_id asc) tiebreak; ``k`` None
+    orders every element. Past 4k candidates it partitions first
+    (_top_order): a full sort of millions of candidates for a top-10
+    was the single biggest cost of hot-term queries, and at 2,000
+    candidates partition-then-lexsort already takes a tenth of the
+    lexsort's time."""
     n = ids.size
     if n == 0:
         return ids, scores
-    if n > max(4096, 4 * k) and k < n:
-        kth = -np.partition(-scores, k - 1)[k - 1]
-        mask = scores >= kth  # >= keeps boundary ties for the tiebreak
-        ids, scores = ids[mask], scores[mask]
-    order = np.lexsort((ids, -scores))[:k]
+    order = (_top_order(ids, scores, k) if k is not None and n > 4 * k
+             else np.lexsort((ids, -scores))[:k])
     return ids[order], scores[order]
 
 
@@ -174,6 +182,10 @@ class _DecodedLRU:
                     continue
                 old = self._d.pop(k)
                 self._bytes -= sum(a.nbytes for a in old)
+
+    def __contains__(self, key) -> bool:
+        """Whether ``key`` is resident, without touching its LRU order."""
+        return key in self._d
 
     def discard(self, key) -> None:
         """Drop ``key`` (and any pin on it), keeping the byte count exact;
@@ -260,12 +272,12 @@ def _aggregate_scores(id_chunks, score_chunks, n_required: int = 0):
 
     doc_ids are DENSE (engine-assigned, §2.5), so a [min, max] range
     accumulator replaces the old stable-argsort + np.unique (two full
-    sorts of every posting for a top-10 query). Within one chunk ids are
-    unique (a term's postings) so fancy `+=` is safe; chunks arrive in
-    sorted-term order and each doc's additions happen chunk-by-chunk in
-    that order — the same sequential per-doc summation order as the old
-    reduceat, so float results are bit-identical and stay pinned to the
-    oracle's (sorted unique terms) order.
+    sorts of every posting for a top-10 query). The accumulator is one
+    weighted ``np.bincount`` over the concatenated chunks: bincount adds
+    in input order, chunks arrive in sorted-term order, so each doc's
+    sum is built in the same sequential per-doc order as the old
+    reduceat, and float results are bit-identical and stay pinned to
+    the oracle's (sorted unique terms) order.
 
     Disjunctive (OR, ``n_required`` 0): exact-zero sums are dropped by
     the nonzero scan — for TF-IDF this IS quirk P8 (tree.rs:456-459);
@@ -276,9 +288,9 @@ def _aggregate_scores(id_chunks, score_chunks, n_required: int = 0):
     in exactly ``n_required`` chunks, zero sums included. Chunks are per
     (term, shard) and shards partition doc_ids, so a doc appears in at
     most one chunk per term — chunk-membership count == distinct-query-
-    term count. An int32 membership counter runs beside the accumulator
-    (the sparse fallback counts via reduceat group sizes); the sums are
-    the OR path's, bit for bit, for surviving docs."""
+    term count. An unweighted bincount counts memberships beside the
+    accumulator (the sparse fallback counts via reduceat group sizes);
+    the sums are the OR path's, bit for bit, for surviving docs."""
     nonempty = [c for c in id_chunks if c.size]
     if not nonempty or len(nonempty) < n_required:
         z = np.zeros(0, dtype=np.int64)
@@ -286,13 +298,12 @@ def _aggregate_scores(id_chunks, score_chunks, n_required: int = 0):
     lo = min(int(c[0]) for c in nonempty)  # chunks are doc_id-sorted
     hi = max(int(c[-1]) for c in nonempty)
     span = hi - lo + 1
-    n_total = sum(c.size for c in nonempty)
-    if span > max(4 * n_total, 1 << 20):
+    ids = np.concatenate(id_chunks)
+    sc = np.concatenate(score_chunks)
+    if span > max(4 * ids.size, 1 << 20):
         # sparse hits across a huge id range (possible only on the
         # driver path of a very large index): sort-based aggregation
         # instead of a span-sized accumulator
-        ids = np.concatenate(id_chunks)
-        sc = np.concatenate(score_chunks)
         order = np.argsort(ids, kind="stable")  # stable keeps term order
         ids, sc = ids[order], sc[order]
         firsts = np.empty(ids.size, dtype=bool)
@@ -305,14 +316,13 @@ def _aggregate_scores(id_chunks, score_chunks, n_required: int = 0):
         else:
             keep = sums != 0.0
         return ids[starts][keep], sums[keep]
-    acc = np.zeros(span, dtype=np.float64)
-    cnt = np.zeros(span, dtype=np.int32) if n_required else None
-    for d, s in zip(id_chunks, score_chunks):
-        if d.size:
-            acc[d - lo] += s
-            if cnt is not None:
-                cnt[d - lo] += 1
-    hit = np.nonzero(acc if cnt is None else cnt == n_required)[0]
+    ids -= lo
+    acc = np.bincount(ids, weights=sc, minlength=span)
+    # acc != 0.0 selects what nonzero(acc) does (NaN kept, -0.0 dropped)
+    # at a fraction of the cost of nonzero's float scan
+    hit = np.flatnonzero(
+        np.bincount(ids, minlength=span) == n_required if n_required
+        else acc != 0.0)
     return hit + lo, acc[hit]
 
 
@@ -693,14 +703,6 @@ def _positions_slice(pos: np.ndarray, starts: np.ndarray,
     return pos[gather], starts_out
 
 
-#: cache the FULL decoded positions of a (shard, term) once candidates
-#: cover at least 1/this of its postings: hot-term phrase/near queries
-#: (where the conjunction leaves a large candidate set) then skip the
-#: varint work on every repeat, while selective queries keep the cheap
-#: candidate-driven decode and never pollute the cache
-_POSS_CACHE_MIN_FRACTION = 4
-
-
 class _FastCacheMiss(Exception):
     """A cache-fed scorer pass hit a row whose payload was LRU-evicted;
     the caller falls back to the (always-correct) reading path."""
@@ -718,140 +720,177 @@ def _decode_rows(rows: list) -> list:
             for docs, tfs, lens, df in rows]
 
 
-def _decode_merged_terms(rows: _Rows, epoch, positional: bool):
-    """Decode every postings row of ``rows`` (cache-aware, slot -1) and
-    MERGE same-term rows across shards into one entry per term with
-    globally sorted doc arrays — valid because shards partition the
-    doc-id space in shard order (offset[s+1] = offset[s] + count[s]), so
-    concatenating a term's per-shard lists in numeric shard order yields
-    one sorted unique doc array (guarded: a non-monotonic merge fails
-    loudly). This is what lets the driver fast path evaluate a
-    many-shard index in ONE pass instead of per-shard (at 306 shards the
-    per-group fixed cost dominated the whole query); the distributed
-    per-shard tasks hit the same code as the degenerate one-row case.
+def _merged_key(epoch, term: str, shard_rows) -> tuple:
+    """The decoded-LRU key of a term's merged entry: one (epoch, shard,
+    term, df, payload length) per (shard, df, payload length) of
+    ``shard_rows``, in shard order. A one-shard task's key has one
+    element."""
+    return tuple((epoch, sh, term, df, plen) for sh, df, plen in shard_rows)
 
-    Returns (cache, entries): entries is term -> dict(docs/tfs/dls
-    merged, rows=[(poss_raw, tfs, key, n_docs)] for lazy positions,
-    bounds=doc-count prefix per row) in ascending-term order."""
+
+def _joined(blobs: list) -> bytes:
+    """A term's positions payload over all its shard rows: the rows'
+    blobs joined in shard order. Each blob is the doc-ordered
+    concatenation of per-doc lists and shards partition the doc ids in
+    shard order, so the join is the merged term's payload for its merged
+    tfs. A cache-fed pass (no payload) raises _FastCacheMiss."""
+    if any(b is None for b in blobs):
+        raise _FastCacheMiss()
+    return blobs[0] if len(blobs) == 1 else b"".join(blobs)
+
+
+def _positions_for(key: tuple, blobs: list, tfs: np.ndarray, cache):
+    """Full (positions, starts) of a merged term: ONE decode_positions
+    over its joined shard blobs with the merged tfs, stored in the
+    decoded LRU (slot -3) beside the term's entry."""
+    pos = decode_positions(_joined(blobs), tfs)
+    cache.put((key, -3), pos)
+    return pos
+
+
+def _decode_merged_terms(rows: _Rows, epoch, pos_terms=()) -> dict:
+    """Decode the postings rows of ``rows`` and MERGE same-term rows
+    across shards into one entry per term with globally sorted doc
+    arrays — valid because shards partition the doc-id space in shard
+    order (offset[s+1] = offset[s] + count[s]), so concatenating a
+    term's per-shard lists in numeric shard order yields one sorted
+    unique doc array (guarded: a non-monotonic merge fails loudly). This
+    is what lets the driver fast path evaluate a many-shard index in ONE
+    pass instead of per-shard (at 306 shards the per-group fixed cost
+    dominated the whole query); a distributed per-shard task runs the
+    same code with one row per term.
+
+    With ``epoch`` set, a term's merged (docs, tfs, dls) is ONE
+    decoded-LRU entry (slot -1 under _merged_key), so a repeat does no
+    per-row lookup, no concatenation and no monotonicity check; the
+    missed rows decode in one _decode_rows batch. Each term of
+    ``pos_terms`` also gets its full decoded positions up front (slot
+    -3, _positions_for), so a pass that read the payload leaves every
+    slot a replay of the same query needs. Without a cache a term keeps
+    its joined raw blob, decoded per selection (_entry_positions).
+
+    Returns term -> dict(docs/tfs/dls, and for the terms of
+    ``pos_terms`` ``pos`` (positions, starts) or ``blob``) in
+    ascending-term order."""
     cache = None
     if epoch is not None:
         from indexer_spark.query import _DECODED_CACHE as cache
-    looked, misses = [], []
+    groups: dict[str, list] = {}
     for shard, term, df, docs, tfs, lens, poss, plen in _term_rows(
             rows, _POST_COLS + ("poss", "plen"), by_shard=True):
-        if docs is not None:
-            plen = len(docs)
-        base_key = (
-            (epoch, -1 if shard is None else shard, term, df, plen)
-            if cache is not None else None
-        )
-        cached = cache.get(base_key + (-1,)) if base_key else None
-        miss = None
-        if cached is None:
+        groups.setdefault(term, []).append((
+            -1 if shard is None else shard, df,
+            plen if docs is None else len(docs), (docs, tfs, lens, df),
+            poss))
+    looked, misses = [], []
+    for term, grp in groups.items():  # dict order == ascending term
+        key = hit = None
+        if cache is not None:
+            key = _merged_key(epoch, term, [g[:3] for g in grp])
+            hit = cache.get((key, -1))
+        if hit is None:
             # a None payload (cache-fed pass, entry evicted) raises
             # _FastCacheMiss in _decode_rows
-            miss = len(misses)
-            misses.append((docs, tfs, lens, df))
-        looked.append((term, base_key, cached,
-                       poss if positional else None, miss))
-    decoded = _decode_rows(misses)
-    per_term: dict[str, list] = {}
-    for term, base_key, cached, poss_raw, miss in looked:
-        if cached is None:
-            cached = decoded[miss]
-            if base_key is not None:
-                cache.put(base_key + (-1,), cached)
-        docs, tfs, dls = cached
-        per_term.setdefault(term, []).append(
-            (docs, tfs, dls, poss_raw, base_key)
-        )
+            misses += [g[3] for g in grp]
+        looked.append((term, grp, key, hit))
+    decoded = iter(_decode_rows(misses))
     entries: dict[str, dict] = {}
-    for t, rows in per_term.items():  # dict order == ascending term
-        if len(rows) == 1:
-            d, tf, dl, praw, key = rows[0]
-            entries[t] = {
-                "docs": d, "tfs": tf, "dls": dl,
-                "rows": [(praw, tf, key, d.size)], "bounds": None,
-            }
-        else:
-            d = np.concatenate([r[0] for r in rows])
-            if d.size > 1 and (np.diff(d) <= 0).any():
-                raise RuntimeError(
-                    "per-shard doc ranges overlap or are out of order; "
-                    "cannot merge postings across shards"
-                )
-            entries[t] = {
-                "docs": d,
-                "tfs": np.concatenate([r[1] for r in rows]),
-                "dls": np.concatenate([r[2] for r in rows]),
-                "rows": [(r[3], r[1], r[4], r[0].size) for r in rows],
-                "bounds": np.concatenate(
-                    ([0], np.cumsum([r[0].size for r in rows]))
-                ).astype(np.int64),
-            }
-    return cache, entries
+    for term, grp, key, hit in looked:
+        if hit is None:
+            parts = [next(decoded) for _ in grp]
+            hit = parts[0]
+            if len(parts) > 1:
+                d = np.concatenate([p[0] for p in parts])
+                if (np.diff(d) <= 0).any():
+                    raise RuntimeError(
+                        "per-shard doc ranges overlap or are out of order; "
+                        "cannot merge postings across shards"
+                    )
+                hit = (d, np.concatenate([p[1] for p in parts]),
+                       np.concatenate([p[2] for p in parts]))
+            if cache is not None:
+                cache.put((key, -1), hit)
+        e = entries[term] = dict(zip(("docs", "tfs", "dls"), hit))
+        if term in pos_terms:
+            blobs = [g[4] for g in grp]
+            if cache is None:
+                e["blob"] = _joined(blobs)
+            else:
+                e["pos"] = (cache.get((key, -3))
+                            or _positions_for(key, blobs, e["tfs"], cache))
+    return entries
 
 
-def _entry_positions(entry: dict, sel: np.ndarray, cache):
-    """(positions, starts) for the ``sel``-indexed docs of a (possibly
-    merged) term entry: each selected doc's list decodes from its own
-    shard row via _positions_for, and ascending ``sel`` keeps the
-    concatenation in candidate order — value-identical to a single-row
-    decode_positions_select."""
-    rows = entry["rows"]
-    if len(rows) == 1:
-        praw, tfs, key, n = rows[0]
-        return _positions_for(praw, tfs, sel, key, cache, n)
-    bounds = entry["bounds"]
-    # ascending sel: each row's docs are one contiguous run of it
-    cuts = np.searchsorted(sel, bounds)
-    pos_parts = []
-    for i, (praw, tfs, key, n) in enumerate(rows):
-        lsel = sel[cuts[i]:cuts[i + 1]] - bounds[i]
-        p, _st = _positions_for(praw, tfs, lsel, key, cache, n)
-        pos_parts.append(p)
-    pos = (
-        np.concatenate(pos_parts) if pos_parts
-        else np.zeros(0, dtype=np.int64)
-    )
-    out_tfs = (
-        entry["tfs"][sel] if sel.size else np.zeros(0, dtype=np.int64)
-    )
-    starts = np.concatenate(([0], np.cumsum(out_tfs))).astype(np.int64)
-    return pos, starts
+def _entry_positions(entry: dict, sel: np.ndarray):
+    """(positions, starts) of the ``sel``-indexed docs of a term entry,
+    in ``sel`` order: one gather from the term's full decoded positions
+    (_positions_slice), or, with no cache, a candidate-driven decode of
+    its raw blob (decode_positions_select) — value-identical."""
+    if "pos" in entry:
+        return _positions_slice(*entry["pos"], entry["tfs"], sel)
+    return decode_positions_select(entry["blob"], entry["tfs"], sel)
 
 
-def _positions_for(poss_raw, tfs, sel, base_key, cache, df: int):
-    """(positions, starts) for the ``sel``-indexed docs of one
-    (shard, term) payload, through the decoded-positions LRU slot (-3)
-    when present or worth creating (see _POSS_CACHE_MIN_FRACTION).
-    ``poss_raw=None`` means a cache-fed pass (no payload read): the raw
-    blob is recovered from slot (-4) — stored on every reading pass — or
-    _FastCacheMiss sends the caller back to the reading path."""
-    if cache is not None and base_key is not None:
-        hit = cache.get(base_key + (-3,))
-        if hit is not None:
-            return _positions_slice(hit[0], hit[1], tfs, sel)
-        if poss_raw is None:
-            raw = cache.get(base_key + (-4,))
-            if raw is None:
-                raise _FastCacheMiss()
-            poss_raw = raw[0]
-        elif cache.get(base_key + (-4,)) is None:
-            # raw compressed blob: lets repeat queries skip the parquet
-            # read even when candidates stay too selective for the
-            # decoded (-3) slot (np.frombuffer wraps, no copy)
-            cache.put(
-                base_key + (-4,),
-                (np.frombuffer(poss_raw, dtype=np.uint8),),
-            )
-        if sel.size * _POSS_CACHE_MIN_FRACTION >= df:
-            pos, starts = decode_positions(poss_raw, tfs)
-            cache.put(base_key + (-3,), (pos, starts))
-            return _positions_slice(pos, starts, tfs, sel)
-    if poss_raw is None:
-        raise _FastCacheMiss()
-    return decode_positions_select(poss_raw, tfs, sel)
+def _conjunction(entries: dict):
+    """The docs every term entry holds, ascending, and per term the
+    index of each of them in the term's docs. Intersects smallest term
+    first, by binary search into each wider term's sorted docs."""
+    by_size = sorted(entries.values(), key=lambda e: e["docs"].size)
+    cand = by_size[0]["docs"]
+    for e in by_size[1:]:
+        d = e["docs"]
+        if cand.size == 0 or d.size == 0:
+            cand = cand[:0]
+            break
+        i = np.minimum(np.searchsorted(d, cand), d.size - 1)
+        cand = cand[d[i] == cand]
+    return cand, {t: np.searchsorted(e["docs"], cand)
+                  for t, e in entries.items()}
+
+
+def _conjunction_scores(entries: dict, sel: dict, idf, k1, b,
+                        avgdl) -> np.ndarray:
+    """BM25 of the conjunction's docs (_conjunction) over every term,
+    in sorted-term addition order with the arithmetic of every other
+    mode."""
+    score = np.zeros(next(iter(sel.values())).size, dtype=np.float64)
+    for t, e in entries.items():  # ascending term pins float order
+        s = sel[t]
+        score += idf[t] * _bm25_normpart(
+            e["tfs"][s].astype(np.float64), e["dls"][s], k1, b, avgdl)
+    return score
+
+
+def _verified_top_k(cand: np.ndarray, score: np.ndarray, k, verify):
+    """Top-k by (score desc, doc_id asc) of the candidates that
+    ``verify`` keeps (it takes indices into ``cand`` and returns a keep
+    mask), verifying in that same order: the best 8·k candidates first,
+    then growing prefixes ×4 per pass (a partition plus a lexsort of the
+    prefix, _top_order), until k match or none is left. Exact: every
+    unverified candidate ranks after every verified one, so none can
+    displace the k-th match. ``cand`` is ascending, so the index
+    tiebreak is the doc_id one. ``k`` None, or k >= the candidate count,
+    verifies everything in one pass."""
+    n = cand.size
+    if k is None or k >= n:
+        keep = verify(np.arange(n))
+        return _topk_merge(cand[keep], score[keep], None)
+    found, n_found = [], 0
+    top, m = np.zeros(0, dtype=np.int64), 8 * k
+    while n_found < k and top.size < n:
+        if m < n:
+            nxt = _top_order(cand, score, m)
+            new = nxt[top.size:]
+        else:  # the last pass: every candidate not yet verified
+            rest = np.ones(n, dtype=bool)
+            rest[top] = False
+            new, nxt = np.flatnonzero(rest), np.arange(n)
+        hit = new[verify(new)]
+        found.append(hit)
+        n_found += hit.size
+        top, m = nxt, 4 * m
+    hit = np.concatenate([top[:0], *found])
+    return _topk_merge(cand[hit], score[hit], k)
 
 
 def _phrase_keep(cand_size: int, p_of: dict, qoff: dict,
@@ -863,7 +902,7 @@ def _phrase_keep(cand_size: int, p_of: dict, qoff: dict,
     every (term, offset) pair present at start+offset in the same doc.
 
     ``p_of``: term -> (positions, starts) in CANDIDATE order
-    (decode_positions_select); ``qoff``: term -> query offsets. Negative
+    (_entry_positions); ``qoff``: term -> query offsets. Negative
     phrase starts are legal (a stop-word-led phrase can overhang
     position 0 — same semantics as the oracle's phrase_match); the
     max_off shift keeps every key non-negative."""
@@ -896,6 +935,34 @@ def _phrase_keep(cand_size: int, p_of: dict, qoff: dict,
     return keep
 
 
+def _near_keep(cand_size: int, p_of: list, window: int) -> np.ndarray:
+    """Vectorized NEAR verification ACROSS candidates (no per-doc Python
+    loop — measured 8k-candidate loops already cost ~0.25 s, a
+    non-starter at engine scale): span(min-cover) <= window iff some
+    occurrence p (the cover's minimum) has every term occurring in
+    [p, p+window]. Each occurrence is encoded as candidate_label*stride
+    + pos; stride > max_pos + window keeps windows from leaking across
+    docs, so one searchsorted per term answers "does t occur in
+    [p, p+window] of the same doc" for ALL start candidates at once.
+
+    ``p_of``: one (positions, starts) per term, in CANDIDATE order."""
+    labels = np.arange(cand_size, dtype=np.int64)
+    lbls = [np.repeat(labels, np.diff(st)) for _p, st in p_of]
+    max_pos = max((int(p.max()) for p, _st in p_of if p.size), default=0)
+    w_eff = min(int(window), max_pos + 1)  # span never exceeds it
+    stride = np.int64(max_pos + w_eff + 2)
+    keys = [lbl * stride + p for lbl, (p, _st) in zip(lbls, p_of)]
+    starts_all = np.concatenate(keys)
+    ok = np.ones(starts_all.size, dtype=bool)
+    for key in keys:
+        i = np.searchsorted(key, starts_all)
+        ic = np.minimum(i, key.size - 1)
+        ok &= (i < key.size) & (key[ic] <= starts_all + w_eff)
+    keep = np.zeros(cand_size, dtype=bool)
+    keep[starts_all[ok] // stride] = True
+    return keep
+
+
 def _make_phrase_scorer(
     idf: dict[str, float], k1, b, avgdl, k, qoffsets: dict,
     epoch: tuple | None = None,
@@ -912,13 +979,13 @@ def _make_phrase_scorer(
 
     Shard-local like the AND scorer (doc-range sharding keeps a doc's
     postings together): candidate docs come from the conjunction
-    (intersect ascending-df), then each candidate verifies positionally —
-    anchor occurrences of the rarest term shift to phrase-start
-    candidates and every other (term, offset) pair intersects them. Only
-    candidate docs' positions are ever touched after the single
-    vectorized per-term payload decode. Survivors score standard BM25
-    over the phrase terms (sorted-term addition order, same arithmetic
-    as every other mode)."""
+    (_conjunction), every candidate scores standard BM25 over the
+    phrase terms (sorted-term addition order, same arithmetic as every
+    other mode), and candidates then verify positionally in score order
+    until k match (_verified_top_k): anchor occurrences of the rarest
+    term shift to phrase-start candidates and every other (term, offset)
+    pair intersects them (_phrase_keep), on one gather per term from
+    the term's decoded positions."""
     n_required = len(qoffsets)
 
     def fn(rows: _Rows):
@@ -927,49 +994,19 @@ def _make_phrase_scorer(
         # decode + merge same-term rows across shards (one entry per
         # term, globally sorted docs): the driver fast path feeds this
         # fn the WHOLE matched table in one call on many-shard indexes
-        cache, entries = _decode_merged_terms(rows, epoch, True)
-        terms = [
-            {"term": t, **e, "w": idf[t], "qoffs": qoffsets[t]}
-            for t, e in entries.items()
-        ]
-        by_df = sorted(range(len(terms)), key=lambda i: terms[i]["docs"].size)
-        cand = terms[by_df[0]]["docs"]
-        for ti in by_df[1:]:
-            if cand.size == 0:
-                return _no_hits()
-            cand = cand[np.isin(cand, terms[ti]["docs"], assume_unique=True)]
+        entries = _decode_merged_terms(rows, epoch, qoffsets)
+        cand, sel = _conjunction(entries)
         if cand.size == 0:
             return _no_hits()
-        # candidate-driven positions decode: only surviving candidates'
-        # lists are ever varint-decoded (decode_positions_select) — on a
-        # hot term the conjunction is typically orders of magnitude
-        # smaller than its df. Selected arrays are in cand order, so
-        # candidate ci's slice is pstarts[ci]:pstarts[ci+1] directly.
-        # Wide candidate sets go through the decoded-positions LRU
-        # (_positions_for): repeats then skip the varint work entirely.
-        for t in terms:
-            sel = np.searchsorted(t["docs"], cand)
-            t["pos"], t["pstarts"] = _entry_positions(t, sel, cache)
+        anchor = min(entries, key=lambda t: entries[t]["docs"].size)
 
-        # vectorized positional verification; anchor = fewest postings
-        keep = _phrase_keep(
-            cand.size,
-            {t["term"]: (t["pos"], t["pstarts"]) for t in terms},
-            {t["term"]: t["qoffs"] for t in terms},
-            terms[by_df[0]]["term"],
-        )
-        cand = cand[keep]
-        if cand.size == 0:
-            return _no_hits()
+        def verify(sub):
+            p_of = {t: _entry_positions(e, sel[t][sub])
+                    for t, e in entries.items()}
+            return _phrase_keep(sub.size, p_of, qoffsets, anchor)
 
-        score = np.zeros(cand.size, dtype=np.float64)
-        for t in terms:  # sorted-term order pins float addition order
-            pos_in = np.searchsorted(t["docs"], cand)
-            tfv = t["tfs"][pos_in].astype(np.float64)
-            score += t["w"] * _bm25_normpart(
-                tfv, t["dls"][pos_in], k1, b, avgdl
-            )
-        return _topk_merge(cand, score, k)
+        score = _conjunction_scores(entries, sel, idf, k1, b, avgdl)
+        return _verified_top_k(cand, score, k, verify)
 
     return fn
 
@@ -987,127 +1024,71 @@ def _make_near_scorer(
     degenerates to AND. Requires ``BuildConfig(positions=True)``; no
     reference analog (the reference is OR-only, SURVEY §2.7).
 
-    Shard-local like the phrase scorer: conjunction first
-    (intersect ascending-df), positions decoded only when the
-    conjunction survives, then a per-candidate minimal-window sweep over
-    the merged occurrence stream. Survivors score standard BM25 over
-    the distinct terms (sorted-term addition order, same arithmetic as
-    every other mode)."""
+    Shard-local like the phrase scorer, and like it scores every
+    conjunction candidate (standard BM25 over the distinct terms) before
+    verifying them in score order until k match (_verified_top_k,
+    _near_keep)."""
     n_required = len(idf)
+    pos_terms = idf if n_required > 1 else ()
 
     def fn(rows: _Rows):
         if rows.num_rows == 0 or len(set(rows["term"])) < n_required:
             return _no_hits()
-        cache, entries = _decode_merged_terms(rows, epoch, True)
-        terms = [
-            {"term": t, **e, "w": idf[t]} for t, e in entries.items()
-        ]
-        by_df = sorted(range(len(terms)), key=lambda i: terms[i]["docs"].size)
-        cand = terms[by_df[0]]["docs"]
-        for ti in by_df[1:]:
-            if cand.size == 0:
-                return _no_hits()
-            cand = cand[np.isin(cand, terms[ti]["docs"], assume_unique=True)]
+        entries = _decode_merged_terms(rows, epoch, pos_terms)
+        cand, sel = _conjunction(entries)
         if cand.size == 0:
             return _no_hits()
-        if n_required > 1:
-            # candidate-driven positions decode (decode_positions_select:
-            # only surviving candidates' lists are varint-decoded, in
-            # cand order), then the verify is vectorized ACROSS
-            # candidates (no per-doc Python loop — measured 8k-candidate
-            # loops already cost ~0.25 s, a non-starter at engine scale):
-            # span(min-cover) <= window  iff  some occurrence p (the
-            # cover's minimum) has every term occurring in [p, p+window].
-            # Encode each occurrence as candidate_label*stride + pos;
-            # stride > max_pos + window keeps windows from leaking
-            # across docs, so one searchsorted per term answers "does t
-            # occur in [p, p+window] of the same doc" for ALL start
-            # candidates at once.
-            lbl_of = np.arange(cand.size, dtype=np.int64)
-            max_pos = 0
-            for t in terms:
-                sel = np.searchsorted(t["docs"], cand)
-                t["cpos"], pst = _entry_positions(t, sel, cache)
-                t["clbl"] = np.repeat(lbl_of, np.diff(pst))
-                if t["cpos"].size:
-                    max_pos = max(max_pos, int(t["cpos"].max()))
-            w_eff = min(int(window), max_pos + 1)  # span never exceeds it
-            stride = np.int64(max_pos + w_eff + 2)
-            for t in terms:
-                t["key"] = t["clbl"] * stride + t["cpos"]
-            starts_all = np.concatenate([t["key"] for t in terms])
-            ok = np.ones(starts_all.size, dtype=bool)
-            for t in terms:
-                i = np.searchsorted(t["key"], starts_all)
-                ic = np.minimum(i, t["key"].size - 1)
-                ok &= (i < t["key"].size) & \
-                    (t["key"][ic] <= starts_all + w_eff)
-            matched = np.unique(starts_all[ok] // stride)
-            cand = cand[matched]
-        if cand.size == 0:
-            return _no_hits()
+        score = _conjunction_scores(entries, sel, idf, k1, b, avgdl)
+        if not pos_terms:
+            return _topk_merge(cand, score, k)
 
-        score = np.zeros(cand.size, dtype=np.float64)
-        for t in terms:  # sorted-term order pins float addition order
-            pos_in = np.searchsorted(t["docs"], cand)
-            tfv = t["tfs"][pos_in].astype(np.float64)
-            score += t["w"] * _bm25_normpart(
-                tfv, t["dls"][pos_in], k1, b, avgdl
-            )
-        return _topk_merge(cand, score, k)
+        def verify(sub):
+            return _near_keep(sub.size, [_entry_positions(e, sel[t][sub])
+                                         for t, e in entries.items()],
+                              window)
+
+        return _verified_top_k(cand, score, k, verify)
 
     return fn
 
 
 def _make_bool_scorer(
-    pq, idf: dict[str, float], k1, b, avgdl, k, positional: bool,
+    pq, idf: dict[str, float], k1, b, avgdl, k,
     epoch: tuple | None = None,
 ):
     """Boolean-query scorer (see boolquery.py for the language): shard-
     local set algebra over decoded doc arrays — intersect AND groups
     ascending-size, union OR branches, setdiff NOT restrictions — with
-    quoted phrases positionally verified exactly like mode='phrase'.
-    Exact per shard because doc-range sharding keeps a doc's postings
-    together: a doc's membership of ANY term (negated ones included) is
-    decidable inside its own shard. Matching docs score standard BM25
-    over the distinct positive terms they contain (sorted-term addition
-    order); negated terms never score. No reference analog (the
-    reference is OR-only, SURVEY §2.7)."""
+    quoted phrases positionally verified exactly like mode='phrase'
+    (every conjunction candidate of the phrase: a phrase under NOT has
+    no score order to stop by). Exact per shard because doc-range
+    sharding keeps a doc's postings together: a doc's membership of ANY
+    term (negated ones included) is decidable inside its own shard.
+    Matching docs score standard BM25 over the distinct positive terms
+    they contain (sorted-term addition order); negated terms never
+    score. No reference analog (the reference is OR-only, SURVEY §2.7)."""
     from .boolquery import eval_docs
 
     def fn(rows: _Rows):
         if rows.num_rows == 0:
             return _no_hits()
-        cache, data = _decode_merged_terms(rows, epoch, positional)
+        data = _decode_merged_terms(rows, epoch, pq.phrase_terms)
         term_docs = {t: e["docs"] for t, e in data.items()}
         no_docs = np.empty(0, dtype=np.int64)
 
         def phrase_fn(ph):
-            ents = [data.get(t) for t in ph.terms]
-            if any(e is None for e in ents):
+            if any(t not in data for t in ph.terms):
                 return no_docs
-            by_size = sorted(ph.terms, key=lambda t: data[t]["docs"].size)
-            cand = data[by_size[0]]["docs"]
-            for t in by_size[1:]:
-                if cand.size == 0:
-                    return no_docs
-                cand = cand[np.isin(cand, data[t]["docs"],
-                                    assume_unique=True)]
+            ents = {t: data[t] for t in sorted(set(ph.terms))}
+            cand, sel = _conjunction(ents)
             if cand.size == 0:
                 return no_docs
-            # candidate-driven positions decode (selected arrays arrive
-            # in cand order), then the same vectorized verification the
-            # phrase mode uses (_phrase_keep)
-            p_of = {}
-            for t in ph.terms:
-                e = data[t]
-                sel = np.searchsorted(e["docs"], cand)
-                p_of[t] = _entry_positions(e, sel, cache)
             qoff: dict[str, list[int]] = {}
             for t, o in ph.qoffsets:
                 qoff.setdefault(t, []).append(o)
-            keep = _phrase_keep(cand.size, p_of, qoff, by_size[0])
-            return cand[keep]
+            anchor = min(ents, key=lambda t: ents[t]["docs"].size)
+            p_of = {t: _entry_positions(e, sel[t]) for t, e in ents.items()}
+            return cand[_phrase_keep(cand.size, p_of, qoff, anchor)]
 
         cand = eval_docs(pq.root, term_docs, phrase_fn)
         if cand.size == 0:
@@ -1894,6 +1875,7 @@ class _Plan(NamedTuple):
     cols: list  # the stored postings columns that scorer reads
     grouped: bool  # phrase / near / bool: the shard-grouped scorers
     bound: int  # df-derived upper bound on the matching docs
+    pos_terms: tuple  # present terms whose positions the scorer reads
 
 
 class IndexReader:
@@ -2665,40 +2647,31 @@ class IndexReader:
         (poss_nbytes from term_stats). Then a point read of the plan's
         columns whose _Rows go to the SAME scorer a distributed task
         runs per shard, called ONCE on all the matched rows: it merges
-        each term's shard rows
-        into one sorted doc array (_decode_merged_terms, which fails
-        loudly on overlapping shard ranges) after decoding the uncached
-        rows (_decode_rows), so one scorer pass serves the terms whether
-        they span 1 shard or 300. The answer is the scorer's (score
-        desc, doc_id asc) top-k.
+        each term's shard rows into one sorted doc array
+        (_decode_merged_terms, which fails loudly on overlapping shard
+        ranges), so one scorer pass serves the terms whether they span
+        1 shard or 300. The answer is the scorer's (score desc, doc_id
+        asc) top-k.
 
         Repeats skip the parquet read entirely: every reading pass
         records its rows in the _cached_terms bookkeeping, and a later
-        call whose terms are all recorded replays the scorer over
-        payload-less _Rows (None payload columns, plus the recorded
-        payload length ``plen``) served from the decoded LRU
-        (slots -1 postings, -3/-4 positions); any evicted entry raises
-        _FastCacheMiss and the call falls back to the reading path.
-        Result-identical to the distributed plan on every path."""
+        call replays the scorer over payload-less _Rows
+        (_replay_rows) when every slot that scorer reads is resident.
+        Rows the BM25 routes recorded (they cache only the normpart
+        slot) therefore go straight to the read; an entry evicted after
+        the check raises _FastCacheMiss and the call falls back to the
+        reading path. Result-identical to the distributed plan on every
+        path."""
         present, scorer, cols = plan.present, plan.scorer, plan.cols
         if not self._fits(present, "poss" in cols):
             return None
-        # cache-fed replay: all terms' rows known from a previous read
-        known = {t: self._cached_terms.get(t) for t in present}
+        replay = self._replay_rows(plan)
         hits = None
-        if all(v is not None for v in known.values()):
-            rows = [(sh, t, df_r, plen) for t in present
-                    for sh, df_r, plen in sorted(known[t])]
-            n = len(rows)
-            replay = _Rows(
-                {c: [r[i] for r in rows]
-                 for i, c in enumerate(("shard", "term", "df", "plen"))}
-                | {c: [None] * n
-                   for c in cols if c not in ("shard", "term", "df")}, n)
+        if replay is not None:
             try:
                 hits = scorer(replay)
             except _FastCacheMiss:
-                pass  # evicted somewhere: take the reading path
+                pass  # evicted since the check: take the reading path
         if hits is None:
             read = self._post_table(cols, present)
             # record rows so repeats can replay from the cache (same
@@ -2708,6 +2681,31 @@ class IndexReader:
             hits = scorer(read)
         uids, sums = hits
         return list(zip(uids.tolist(), sums.tolist()))
+
+    def _replay_rows(self, plan: _Plan) -> _Rows | None:
+        """The plan's postings rows as recorded in _cached_terms, with
+        None payload columns and the recorded payload length ``plen``,
+        for a cache-fed pass of the plan's shard-grouped scorer. None
+        unless every term has recorded rows, its merged entry (slot -1,
+        _decode_merged_terms) is resident and, for the plan's
+        ``pos_terms``, so are its decoded positions (slot -3)."""
+        rows = []
+        for t in plan.present:
+            known = self._cached_terms.get(t)
+            if known is None:
+                return None
+            trows = sorted(known)  # shard order
+            key = _merged_key(self._epoch, t, trows)
+            if (key, -1) not in _DECODED_CACHE or (
+                    t in plan.pos_terms and (key, -3) not in _DECODED_CACHE):
+                return None
+            rows += [(sh, t, df, plen) for sh, df, plen in trows]
+        n = len(rows)
+        return _Rows(
+            {c: [r[i] for r in rows]
+             for i, c in enumerate(("shard", "term", "df", "plen"))}
+            | {c: [None] * n
+               for c in plan.cols if c not in ("shard", "term", "df")}, n)
 
     def _postings_for(self, terms: list[str], cols: list[str]) -> DataFrame:
         """The postings rows of ``terms`` as a DataFrame of the stored
@@ -3105,7 +3103,7 @@ class IndexReader:
             bound = sum(dfs.values())
         if pq is not None:
             scorer = _make_bool_scorer(pq, weights, k1, b, avgdl, k,
-                                       pq.has_phrase, epoch=self._epoch)
+                                       epoch=self._epoch)
         elif mode == "phrase":
             scorer = _make_phrase_scorer(weights, k1, b, avgdl, k, qoffsets,
                                          epoch=self._epoch)
@@ -3123,10 +3121,16 @@ class IndexReader:
                 weights, k1, b, avgdl, k, kind, epoch=self._epoch,
                 require_all=require,
             )
+        if pq is not None:
+            pos_terms = set(pq.phrase_terms)
+        else:  # a one-term near query verifies no positions
+            pos_terms = set(terms) if mode == "phrase" or (
+                mode == "near" and len(terms) > 1) else set()
         return _Plan(
             mode, kind, k, present, weights, require, scorer,
             [*_POST_COLS, "poss"] if positional else list(_POST_COLS),
             mode in ("phrase", "near", "bool"), bound,
+            tuple(t for t in present if t in pos_terms),
         )
 
     def _top_k(self, plan: _Plan | None) -> list[tuple[int, float]]:

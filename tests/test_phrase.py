@@ -333,9 +333,9 @@ def test_phrase_survives_streaming(spark, tmp_path):
 
 
 def test_positions_slice_matches_select():
-    """_positions_for's full-decode+gather path must produce exactly what
-    the candidate-driven varint decode produces, for random payloads and
-    selections (the decoded-positions LRU serves the gather path)."""
+    """The full-decode+gather path (_positions_slice over a term's cached
+    decode_positions) must produce exactly what the candidate-driven
+    varint decode produces, for random payloads and selections."""
     from indexer_spark.compress import decode_positions_select
     from indexer_spark.query import _positions_slice
 
