@@ -834,18 +834,23 @@ def _entry_positions(entry: dict, sel: np.ndarray):
 def _conjunction(entries: dict):
     """The docs every term entry holds, ascending, and per term the
     index of each of them in the term's docs. Intersects smallest term
-    first, by binary search into each wider term's sorted docs."""
-    by_size = sorted(entries.values(), key=lambda e: e["docs"].size)
-    cand = by_size[0]["docs"]
-    for e in by_size[1:]:
-        d = e["docs"]
+    first, by binary search into each wider term's sorted docs; each
+    search's indices are kept (and narrowed with the candidates), so
+    every term is searched once."""
+    order = sorted(entries, key=lambda t: entries[t]["docs"].size)
+    cand = entries[order[0]]["docs"]
+    sel = {order[0]: np.arange(cand.size)}
+    for t in order[1:]:
+        d = entries[t]["docs"]
         if cand.size == 0 or d.size == 0:
-            cand = cand[:0]
-            break
+            return cand[:0], {u: np.zeros(0, dtype=np.int64)
+                              for u in entries}
         i = np.minimum(np.searchsorted(d, cand), d.size - 1)
-        cand = cand[d[i] == cand]
-    return cand, {t: np.searchsorted(e["docs"], cand)
-                  for t, e in entries.items()}
+        hit = d[i] == cand
+        cand = cand[hit]
+        sel = {u: v[hit] for u, v in sel.items()}
+        sel[t] = i[hit]
+    return cand, sel
 
 
 def _conjunction_scores(entries: dict, sel: dict, idf, k1, b,
