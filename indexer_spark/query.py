@@ -728,24 +728,24 @@ def _merged_key(epoch, term: str, shard_rows) -> tuple:
     return tuple((epoch, sh, term, df, plen) for sh, df, plen in shard_rows)
 
 
+#: decode a positional term's WHOLE payload (and keep it, slot -3) only
+#: once its conjunction holds at least 1/this of the term's docs: hot-term
+#: queries whose candidates cover the term then gather every pass and
+#: every repeat from one decode, while a selective conjunction decodes
+#: only its candidates' lists (decode_positions_select) from the raw blob
+_POSS_FULL_MIN_FRACTION = 4
+#: ... and only while that decode stays within 1/this of the decoded
+#: LRU's cap, so one term's positions never flush the cache
+_POSS_FULL_MAX_SHARE = 8
+
+
 def _joined(blobs: list) -> bytes:
     """A term's positions payload over all its shard rows: the rows'
     blobs joined in shard order. Each blob is the doc-ordered
     concatenation of per-doc lists and shards partition the doc ids in
     shard order, so the join is the merged term's payload for its merged
-    tfs. A cache-fed pass (no payload) raises _FastCacheMiss."""
-    if any(b is None for b in blobs):
-        raise _FastCacheMiss()
+    tfs."""
     return blobs[0] if len(blobs) == 1 else b"".join(blobs)
-
-
-def _positions_for(key: tuple, blobs: list, tfs: np.ndarray, cache):
-    """Full (positions, starts) of a merged term: ONE decode_positions
-    over its joined shard blobs with the merged tfs, stored in the
-    decoded LRU (slot -3) beside the term's entry."""
-    pos = decode_positions(_joined(blobs), tfs)
-    cache.put((key, -3), pos)
-    return pos
 
 
 def _decode_merged_terms(rows: _Rows, epoch, pos_terms=()) -> dict:
@@ -763,15 +763,16 @@ def _decode_merged_terms(rows: _Rows, epoch, pos_terms=()) -> dict:
     With ``epoch`` set, a term's merged (docs, tfs, dls) is ONE
     decoded-LRU entry (slot -1 under _merged_key), so a repeat does no
     per-row lookup, no concatenation and no monotonicity check; the
-    missed rows decode in one _decode_rows batch. Each term of
-    ``pos_terms`` also gets its full decoded positions up front (slot
-    -3, _positions_for), so a pass that read the payload leaves every
-    slot a replay of the same query needs. Without a cache a term keeps
-    its joined raw blob, decoded per selection (_entry_positions).
+    missed rows decode in one _decode_rows batch. A term of
+    ``pos_terms`` carries its decoded positions (slot -3) when those are
+    resident, else its shard rows' raw blobs, which a reading pass also
+    keeps (slot -4, uint8 views, no copy) so a repeat reads no parquet.
+    Nothing decodes positions here: verification does, on demand
+    (_entry_positions), so an empty conjunction never touches them.
 
     Returns term -> dict(docs/tfs/dls, and for the terms of
-    ``pos_terms`` ``pos`` (positions, starts) or ``blob``) in
-    ascending-term order."""
+    ``pos_terms`` ``key``, ``pos`` (positions, starts) or None, and
+    ``blobs``) in ascending-term order."""
     cache = None
     if epoch is not None:
         from indexer_spark.query import _DECODED_CACHE as cache
@@ -812,23 +813,47 @@ def _decode_merged_terms(rows: _Rows, epoch, pos_terms=()) -> dict:
                 cache.put((key, -1), hit)
         e = entries[term] = dict(zip(("docs", "tfs", "dls"), hit))
         if term in pos_terms:
-            blobs = [g[4] for g in grp]
-            if cache is None:
-                e["blob"] = _joined(blobs)
-            else:
-                e["pos"] = (cache.get((key, -3))
-                            or _positions_for(key, blobs, e["tfs"], cache))
+            e["key"], e["pos"] = key, None
+            e["blobs"] = blobs = [g[4] for g in grp]
+            if cache is not None:
+                e["pos"] = cache.get((key, -3))
+                if e["pos"] is not None:
+                    continue
+                if any(b is None for b in blobs):  # cache-fed pass
+                    blobs = cache.get((key, -4))
+                    if blobs is None:
+                        raise _FastCacheMiss()
+                    e["blobs"] = list(blobs)
+                else:
+                    cache.put((key, -4), tuple(
+                        np.frombuffer(b, dtype=np.uint8) for b in blobs))
     return entries
 
 
-def _entry_positions(entry: dict, sel: np.ndarray):
+def _entry_positions(entry: dict, sel: np.ndarray, n_cand: int):
     """(positions, starts) of the ``sel``-indexed docs of a term entry,
-    in ``sel`` order: one gather from the term's full decoded positions
-    (_positions_slice), or, with no cache, a candidate-driven decode of
-    its raw blob (decode_positions_select) — value-identical."""
-    if "pos" in entry:
-        return _positions_slice(*entry["pos"], entry["tfs"], sel)
-    return decode_positions_select(entry["blob"], entry["tfs"], sel)
+    in ``sel`` order, for a verification over ``n_cand`` conjunction
+    candidates: one gather (_positions_slice) from the term's decoded
+    positions. A term without them decodes its raw payload: whole, once,
+    when the candidates cover enough of its docs and the result fits
+    the LRU (_POSS_FULL_MIN_FRACTION, _POSS_FULL_MAX_SHARE), kept on the
+    entry and, with a cache ``key``, in the decoded LRU's slot -3 in
+    place of the raw blobs' slot -4; otherwise only the selected docs'
+    lists (decode_positions_select). Value-identical either way."""
+    tfs = entry["tfs"]
+    if entry["pos"] is None:
+        blob = _joined(entry["blobs"])
+        entry["blobs"] = [blob]
+        n_docs = entry["docs"].size
+        if (n_cand * _POSS_FULL_MIN_FRACTION < n_docs
+                or 8 * (len(blob) + n_docs + 1) * _POSS_FULL_MAX_SHARE
+                > _DECODED_CACHE.max_bytes):
+            return decode_positions_select(blob, tfs, sel)
+        entry["pos"] = decode_positions(blob, tfs)
+        if entry["key"] is not None:
+            _DECODED_CACHE.put((entry["key"], -3), entry["pos"])
+            _DECODED_CACHE.discard((entry["key"], -4))
+    return _positions_slice(*entry["pos"], tfs, sel)
 
 
 def _conjunction(entries: dict):
@@ -989,9 +1014,13 @@ def _make_phrase_scorer(
     other mode), and candidates then verify positionally in score order
     until k match (_verified_top_k): anchor occurrences of the rarest
     term shift to phrase-start candidates and every other (term, offset)
-    pair intersects them (_phrase_keep), on one gather per term from
-    the term's decoded positions."""
+    pair intersects them (_phrase_keep), on the candidates' positions
+    of each term (_entry_positions).
+
+    The returned scorer's ``pos_terms`` names the terms whose positions
+    it reads; the positional scorers below carry the same attribute."""
     n_required = len(qoffsets)
+    pos_terms = frozenset(qoffsets)
 
     def fn(rows: _Rows):
         if rows.num_rows == 0 or len(set(rows["term"])) < n_required:
@@ -999,20 +1028,21 @@ def _make_phrase_scorer(
         # decode + merge same-term rows across shards (one entry per
         # term, globally sorted docs): the driver fast path feeds this
         # fn the WHOLE matched table in one call on many-shard indexes
-        entries = _decode_merged_terms(rows, epoch, qoffsets)
+        entries = _decode_merged_terms(rows, epoch, pos_terms)
         cand, sel = _conjunction(entries)
         if cand.size == 0:
             return _no_hits()
         anchor = min(entries, key=lambda t: entries[t]["docs"].size)
 
         def verify(sub):
-            p_of = {t: _entry_positions(e, sel[t][sub])
+            p_of = {t: _entry_positions(e, sel[t][sub], cand.size)
                     for t, e in entries.items()}
             return _phrase_keep(sub.size, p_of, qoffsets, anchor)
 
         score = _conjunction_scores(entries, sel, idf, k1, b, avgdl)
         return _verified_top_k(cand, score, k, verify)
 
+    fn.pos_terms = pos_terms
     return fn
 
 
@@ -1034,7 +1064,7 @@ def _make_near_scorer(
     verifying them in score order until k match (_verified_top_k,
     _near_keep)."""
     n_required = len(idf)
-    pos_terms = idf if n_required > 1 else ()
+    pos_terms = frozenset(idf) if n_required > 1 else frozenset()
 
     def fn(rows: _Rows):
         if rows.num_rows == 0 or len(set(rows["term"])) < n_required:
@@ -1048,12 +1078,13 @@ def _make_near_scorer(
             return _topk_merge(cand, score, k)
 
         def verify(sub):
-            return _near_keep(sub.size, [_entry_positions(e, sel[t][sub])
-                                         for t, e in entries.items()],
-                              window)
+            return _near_keep(sub.size,
+                              [_entry_positions(e, sel[t][sub], cand.size)
+                               for t, e in entries.items()], window)
 
         return _verified_top_k(cand, score, k, verify)
 
+    fn.pos_terms = pos_terms
     return fn
 
 
@@ -1074,10 +1105,12 @@ def _make_bool_scorer(
     score. No reference analog (the reference is OR-only, SURVEY §2.7)."""
     from .boolquery import eval_docs
 
+    pos_terms = frozenset(pq.phrase_terms)
+
     def fn(rows: _Rows):
         if rows.num_rows == 0:
             return _no_hits()
-        data = _decode_merged_terms(rows, epoch, pq.phrase_terms)
+        data = _decode_merged_terms(rows, epoch, pos_terms)
         term_docs = {t: e["docs"] for t, e in data.items()}
         no_docs = np.empty(0, dtype=np.int64)
 
@@ -1092,7 +1125,8 @@ def _make_bool_scorer(
             for t, o in ph.qoffsets:
                 qoff.setdefault(t, []).append(o)
             anchor = min(ents, key=lambda t: ents[t]["docs"].size)
-            p_of = {t: _entry_positions(e, sel[t]) for t, e in ents.items()}
+            p_of = {t: _entry_positions(e, sel[t], cand.size)
+                    for t, e in ents.items()}
             return cand[_phrase_keep(cand.size, p_of, qoff, anchor)]
 
         cand = eval_docs(pq.root, term_docs, phrase_fn)
@@ -1114,6 +1148,7 @@ def _make_bool_scorer(
             score += np.where(mask, contrib, 0.0)
         return _topk_merge(cand, score, k)
 
+    fn.pos_terms = pos_terms
     return fn
 
 
@@ -1880,7 +1915,6 @@ class _Plan(NamedTuple):
     cols: list  # the stored postings columns that scorer reads
     grouped: bool  # phrase / near / bool: the shard-grouped scorers
     bound: int  # df-derived upper bound on the matching docs
-    pos_terms: tuple  # present terms whose positions the scorer reads
 
 
 class IndexReader:
@@ -2692,9 +2726,10 @@ class IndexReader:
         None payload columns and the recorded payload length ``plen``,
         for a cache-fed pass of the plan's shard-grouped scorer. None
         unless every term has recorded rows, its merged entry (slot -1,
-        _decode_merged_terms) is resident and, for the plan's
-        ``pos_terms``, so are its decoded positions (slot -3)."""
-        rows = []
+        _decode_merged_terms) is resident and, for the terms whose
+        positions the scorer reads (its ``pos_terms``), so are their
+        decoded positions (slot -3) or raw blobs (slot -4)."""
+        rows, pos_terms = [], plan.scorer.pos_terms
         for t in plan.present:
             known = self._cached_terms.get(t)
             if known is None:
@@ -2702,7 +2737,8 @@ class IndexReader:
             trows = sorted(known)  # shard order
             key = _merged_key(self._epoch, t, trows)
             if (key, -1) not in _DECODED_CACHE or (
-                    t in plan.pos_terms and (key, -3) not in _DECODED_CACHE):
+                    t in pos_terms and (key, -3) not in _DECODED_CACHE
+                    and (key, -4) not in _DECODED_CACHE):
                 return None
             rows += [(sh, t, df, plen) for sh, df, plen in trows]
         n = len(rows)
@@ -3126,16 +3162,10 @@ class IndexReader:
                 weights, k1, b, avgdl, k, kind, epoch=self._epoch,
                 require_all=require,
             )
-        if pq is not None:
-            pos_terms = set(pq.phrase_terms)
-        else:  # a one-term near query verifies no positions
-            pos_terms = set(terms) if mode == "phrase" or (
-                mode == "near" and len(terms) > 1) else set()
         return _Plan(
             mode, kind, k, present, weights, require, scorer,
             [*_POST_COLS, "poss"] if positional else list(_POST_COLS),
             mode in ("phrase", "near", "bool"), bound,
-            tuple(t for t in present if t in pos_terms),
         )
 
     def _top_k(self, plan: _Plan | None) -> list[tuple[int, float]]:

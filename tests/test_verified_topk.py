@@ -4,12 +4,14 @@ entries it reads.
 Phrase and near scorers score every conjunction candidate first and
 verify positions only down the (score desc, doc_id asc) order until k
 match (_verified_top_k); the driver path keeps ONE merged decoded entry
-and ONE positions decode per term. These tests pin the answers to
+per term, and a term's positions decode whole at most once, when its
+candidates cover enough of it. These tests pin the answers to
 exhaustive verification, the driver route to the distributed plan, and
 the cache behaviour of repeats. Also here: the bincount aggregation of
 _aggregate_scores and the partitioned _topk_merge."""
 
 import itertools
+from unittest import mock
 
 import numpy as np
 import pyarrow.dataset as pads
@@ -92,10 +94,14 @@ _EPOCHS = itertools.count()
 def _answers(make, rows, k):
     """The scorer's answer without a cache, then through the decoded
     LRU: a reading pass and a cache-fed replay (fresh epoch, so keys of
-    other examples never collide)."""
-    epoch = ("verified_topk", next(_EPOCHS))
-    cached = make(k, epoch)
-    out = [make(k, None)(rows), cached(rows), cached(_replay(rows))]
+    other examples never collide). Each of the three runs twice: with
+    the default decode policy, and with every term's positions decoded
+    per candidate (_POSS_FULL_MIN_FRACTION 0)."""
+    out = []
+    for frac in (Q._POSS_FULL_MIN_FRACTION, 0):
+        with mock.patch.object(Q, "_POSS_FULL_MIN_FRACTION", frac):
+            cached = make(k, ("verified_topk", next(_EPOCHS)))
+            out += [make(k, None)(rows), cached(rows), cached(_replay(rows))]
     return [(ids.tolist(), scores.tobytes()) for ids, scores in out]
 
 
@@ -105,14 +111,14 @@ def _check_mode(docs, lens, n_shards, terms, make, match, k):
     desc, doc_id asc)."""
     rows = _rows(docs, lens, n_shards, terms)
     full = _answers(make, rows, None)
-    assert full[1:] == full[:1] * 2
+    assert full[1:] == full[:1] * (len(full) - 1)
     ids, raw = full[0]
     scores = np.frombuffer(raw, dtype=np.float64)
     assert sorted(ids) == [d for d in range(len(docs)) if match(docs[d])]
     assert sorted(zip(-scores, ids)) == list(zip(-scores, ids))
     for kk in k:
         want = (ids[:kk], scores[:kk].tobytes())
-        assert _answers(make, rows, kk) == [want] * 3, kk
+        assert _answers(make, rows, kk) == [want] * len(full), kk
 
 
 def _idf(docs, terms):
@@ -248,6 +254,34 @@ def test_topk_merge_keeps_ties_at_the_kth_score(seed, n, k):
     assert list(zip(-got_sc, got_ids)) == want
 
 
+@pytest.mark.parametrize("cap, whole", [(20_000, False), (1 << 27, True)])
+def test_positions_larger_than_the_lru_share_stay_undecoded(monkeypatch, cap,
+                                                            whole):
+    """Two terms in all of 200 docs over two shards (every doc a phrase
+    match): a whole decode of either would take ~38 KB, more than a
+    20 KB LRU can spare, so only the candidates' lists decode, and the
+    merged entries and raw blobs (~10 KB) stay cached. A 128 MiB LRU
+    keeps the decoded positions instead. The answer is the uncached
+    one either way."""
+    cache = Q._DecodedLRU(cap)
+    monkeypatch.setattr(Q, "_DECODED_CACHE", cache)
+    docs = [{"ant": np.array([0, 5]), "bee": np.array([1, 9]),
+             "cat": np.zeros(0, dtype=np.int64)} for _ in range(200)]
+    rows = _rows(docs, np.full(200, 12, dtype=np.int32), 2, ["ant", "bee"])
+    idf = _idf(docs, ["ant", "bee"])
+    qoff = {"ant": [0], "bee": [1]}
+
+    def make(epoch):
+        return Q._make_phrase_scorer(idf, K1, B, 12.0, 10, qoff, epoch=epoch)
+
+    want = make(None)(rows)
+    got = make(("lru_share", cap))(rows)
+    assert got[0].tolist() == want[0].tolist() == list(range(10))
+    assert got[1].tobytes() == want[1].tobytes()
+    slots = sorted(key[-1] for key in cache._d)
+    assert slots == ([-3, -3, -1, -1] if whole else [-4, -4, -1, -1])
+
+
 # -- driver route on a multi-shard index ----------------------------------
 
 
@@ -278,27 +312,67 @@ def fresh_cache(monkeypatch):
 
 def test_repeated_phrase_reads_no_parquet_and_decodes_no_positions(
         spark, pos_index, corpus_pdf, fresh_cache, monkeypatch):
-    """The first phrase query reads and decodes each term once; its
+    """Once a phrase query has decoded each term's positions whole (its
+    conjunction covers the terms: the coverage bar is lifted here), its
     repeat gathers from the cached entries: no point read, no positions
-    decode."""
+    decode, and no raw blob is kept beside the decoded positions."""
     index_dir, _ = pos_index
     q = _every_shard_pair(index_dir, corpus_pdf)
+    monkeypatch.setattr(Q, "_POSS_FULL_MIN_FRACTION", 1 << 30)
     reader = IndexReader(spark, index_dir)
     try:
         decodes = []
-        real = Q._positions_for
-        monkeypatch.setattr(Q, "_positions_for",
-                            lambda key, *a: decodes.append(key)
-                            or real(key, *a))
+        for name in ("decode_positions", "decode_positions_select"):
+            monkeypatch.setattr(Q, name, lambda *a, _f=getattr(Q, name),
+                                _n=name: decodes.append(_n) or _f(*a))
         first = reader.search(q, k=5, mode="phrase")
         assert reader.last_path == "fast_phrase" and first
-        assert len(decodes) == 2 and all(len(key) > 1 for key in decodes)
+        assert decodes == ["decode_positions"] * 2
+        slots = [key for key in fresh_cache._d if key[-1] in (-3, -4)]
+        assert sorted(k[-1] for k in slots) == [-3, -3]
+        assert all(len(k[0]) > 1 for k in slots)  # merged over shards
         decodes.clear()
         monkeypatch.setattr(
             reader, "_post_table",
             lambda *a: pytest.fail("the repeat read parquet"))
         assert reader.search(q, k=5, mode="phrase") == first
         assert reader.last_path == "fast_phrase" and decodes == []
+    finally:
+        reader.close()
+
+
+@pytest.mark.parametrize("knob, value", [
+    ("_POSS_FULL_MIN_FRACTION", 0),  # a conjunction too selective
+    ("_POSS_FULL_MAX_SHARE", 1 << 40),  # a decode too large for the LRU
+])
+def test_positions_decode_per_candidate_unless_worth_keeping(
+        spark, pos_index, corpus_pdf, fresh_cache, monkeypatch, knob, value):
+    """When the whole decode does not pay (candidates cover too little
+    of a term) or would not fit the decoded LRU, only the candidates'
+    lists decode: nothing decodes whole, no positions entry is cached,
+    the raw blobs are, and the repeat reads no parquet. Answers match
+    the whole-decode policy's."""
+    index_dir, _ = pos_index
+    q = _every_shard_pair(index_dir, corpus_pdf)
+    reader = IndexReader(spark, index_dir)
+    try:
+        want = {mode: reader.search(q, k=5, mode=mode)
+                for mode in ("phrase", "near")}
+        fresh_cache.clear()
+        reader._cached_terms.clear()
+        monkeypatch.setattr(Q, knob, value)
+        monkeypatch.setattr(Q, "decode_positions",
+                            lambda *a: pytest.fail("decoded whole"))
+        for mode in ("phrase", "near"):
+            assert reader.search(q, k=5, mode=mode) == want[mode]
+        keys = [k for k in fresh_cache._d if k[-1] in (-3, -4)]
+        assert keys and all(k[-1] == -4 for k in keys)
+        monkeypatch.setattr(
+            reader, "_post_table",
+            lambda *a: pytest.fail("the repeat read parquet"))
+        for mode in ("phrase", "near"):
+            assert reader.search(q, k=5, mode=mode) == want[mode]
+            assert reader.last_path == f"fast_{mode}"
     finally:
         reader.close()
 
